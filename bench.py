@@ -181,7 +181,7 @@ def main() -> None:
     # contaminated-r13 pattern (everything uniformly 1.7-7x slower)
     # would show inflated probes and/or steal growth instead.
     env = {
-        "cpus": os.cpu_count(),
+        "cpus": spark.sparkContext.defaultParallelism,
         "loadavg_before": [round(x, 2) for x in load_before],
         "loadavg_after": [round(x, 2) for x in os.getloadavg()],
         "steal_ticks_delta": (

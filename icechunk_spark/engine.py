@@ -26,12 +26,11 @@ def local_df(spark: SparkSession, rows, schema):
     taken by name from dict/Row items and laid out in schema order.
     """
     import pandas as pd
+    from pyspark.sql.types import _parse_datatype_string
 
     rows = list(rows)
-    if isinstance(schema, str):
-        names = [c.strip().split(" ")[0] for c in schema.split(",")]
-    else:
-        names = list(schema.fieldNames())
+    struct = _parse_datatype_string(schema) if isinstance(schema, str) else schema
+    names = list(struct.fieldNames())
     if not rows:
         # empty frames must ALSO avoid the RDD path: createDataFrame
         # over an empty python list (or an empty pandas frame — the
@@ -39,9 +38,12 @@ def local_df(spark: SparkSession, rows, schema):
         # defaultParallelism EMPTY slices, and every consumer still
         # schedules python workers for them.  A one-NULL-row Arrow
         # frame + limit(0) optimizes to LocalRelation <empty> — no
-        # tasks anywhere downstream.
+        # tasks anywhere downstream.  That row cannot exist under a
+        # non-nullable field, so such schemas take the RDD path.
+        if not all(f.nullable for f in struct.fields):
+            return spark.createDataFrame([], struct)
         pdf = pd.DataFrame({n: pd.Series([None], dtype=object) for n in names})
-        return spark.createDataFrame(pdf, schema).limit(0)
+        return spark.createDataFrame(pdf, struct).limit(0)
     data = [
         r.asDict()
         if hasattr(r, "asDict")
@@ -52,7 +54,7 @@ def local_df(spark: SparkSession, rows, schema):
     pdf = pd.DataFrame(
         {n: pd.Series([d.get(n) for d in data], dtype=object) for n in names}
     )
-    return spark.createDataFrame(pdf, schema)
+    return spark.createDataFrame(pdf, struct)
 
 
 def get_spark(app_name: str = "icechunk_spark", shuffle_partitions: int | None = None) -> SparkSession:

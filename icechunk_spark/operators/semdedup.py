@@ -108,7 +108,7 @@ def _dups_blocked(emb: DataFrame) -> DataFrame:
     pass), merged across tasks, then the ORIGINAL JVM rounding/filter
     decides — no rounding ever happens in Python."""
     tasks = block_pair_tasks(packed_blocks(emb))
-    per_task = tasks.mapInPandas(semdedup_kernel, SEMDEDUP_KERNEL_SCHEMA)
+    per_task = tasks.mapInPandas(semdedup_kernel(SEMDEDUP_THRESHOLD), SEMDEDUP_KERNEL_SCHEMA)
     return (
         per_task.groupBy("label", "dup_id")
         .agg(F.max("vmax").alias("vmax"))

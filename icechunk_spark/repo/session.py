@@ -37,6 +37,7 @@ from icechunk_spark.repo import manifests as mf
 from icechunk_spark.repo.arrays import (
     decode_chunks_to_rows,
     encode_array_chunks,
+    read_native_payload,
     slice_chunk_filter,
     staged_manifest_from_chunk_dir,
 )
@@ -700,11 +701,27 @@ class Session:
 
         Zarr ARRAY semantics: a write that only partially covers a
         chunk read-modify-writes that chunk — pre-existing cells the
-        incoming rows don't touch keep their values.  Fully covered
-        chunks skip the read (the common bulk-ingest case pays
-        nothing).  Found by repo_branch_divergence: an unaligned
-        region write used to clobber the untouched remainder of its
-        boundary chunks with the fill value.
+        incoming rows don't touch keep their values.  The merge is part
+        of the encode (arrays.encode_array_chunks): one shuffle
+        cogroups the rows with the array's pre-dedup manifest rows of
+        the chunks they touch (base files pruned to this node, plus
+        this transaction's staged overlay, semi-joined on the rows'
+        chunk keys), and the pack reads the latest ref's bytes only for
+        chunks its rows partly cover.  Invariants:
+
+        - stray rows are dropped at the source, so coverage and encode
+          see the same rows and an all-stray chunk is never rewritten;
+        - coverage counts distinct cells, so duplicate rows cannot
+          make a partly covered chunk look full;
+        - incoming cells win over existing ones;
+        - fileless refs (inline payloads, virtual refs) merge like
+          native ones, and a tombstone merges as fill.
+
+        Buffered set/delete ops are flushed to a staged item first, so
+        this write's cells shadow them.  When the base snapshot has no
+        manifest file for this node and nothing is staged, no existing
+        ref can exist: that driver-only check skips the cogroup (the
+        same pack runs over a plain groupBy).
 
         Out-of-shape rows (any i{d} < 0 or >= shape[d]) are silently
         DROPPED, not errored — the documented contract (ADVICE r11).
@@ -718,147 +735,32 @@ class Session:
         self._require_data_writable()
         meta = self.array_meta(path)
         self._require_regular_grid(meta, "write_array_df")
-        src = df.select(*[f"i{d}" for d in range(len(meta.shape))], "value")
-        merged, cache = self._merge_partial_chunks(src, meta)
-        try:
-            rel = self._new_chunk_rel()
-            encode_array_chunks(merged, meta, _dp(self.root, rel))
-        finally:
-            if cache is not None:
-                cache.unpersist()
+        # earlier buffered set/delete ops become a staged item BEFORE
+        # this write's, so its cells shadow them (the buffer otherwise
+        # overlays every staged item, and flushes last at commit)
+        self._flush_chunk_buffer()
+        ndim = len(meta.shape)
+        # stray rows dropped at the source (a lazy filter, no job)
+        inb = F.lit(True)
+        for d in range(ndim):
+            inb = inb & (F.col(f"i{d}") >= 0) & (F.col(f"i{d}") < F.lit(int(meta.shape[d])))
+        src = df.select(*[f"i{d}" for d in range(ndim)], "value").filter(inb)
+        base_files = mf.prune_manifest_paths(self._base.manifests, meta.node_id)
+        refs = None
+        if base_files or self._staged:
+            base = mf.read_manifest_files(self.spark, self.root, base_files)
+            refs = self._overlay_staged(
+                base.filter(F.col("node_id") == meta.node_id), meta.node_id, None
+            )
+        rel = self._new_chunk_rel()
+        encode_array_chunks(
+            src, meta, _dp(self.root, rel), refs,
+            data_root=fmt.data_path(self.root), vcc_map=self._virtual_container_names,
+        )
         staged = staged_manifest_from_chunk_dir(
             self.spark, _dp(self.root, rel), rel, meta.node_id
         )
         self._stage_manifest(staged)
-
-    def _merge_partial_chunks(self, df: DataFrame, meta):
-        """Union the incoming rows with the existing cells of every
-        PARTIALLY covered chunk (see write_array_df).  All distributed:
-        per-chunk coverage counts (map-side combine), a semi-join that
-        restricts the existing-cell decode to exactly the partial
-        chunks, and a coordinate anti-join so incoming rows win.
-
-        Returns ``(frame_to_encode, cache_or_None)`` — the caller
-        unpersists the cache after the encode materializes."""
-        ndim = len(meta.shape)
-        cols = [f"i{d}" for d in range(ndim)]
-        # out-of-shape rows are dropped AT THE SOURCE (a lazy filter,
-        # no job): they must neither count toward chunk coverage nor
-        # reach the encoder — a chunk whose incoming rows were ALL
-        # out-of-bounds would otherwise skip the RMW yet still emit a
-        # fill-initialized chunk file that clobbers the existing cells
-        # (array-row analog of the reference's out-of-grid write
-        # rejection, PR #2312; cell rows are ignored, not errored,
-        # because the check must stay job-free on the hot write path)
-        inb = F.lit(True)
-        for d in range(ndim):
-            inb = inb & (F.col(f"i{d}") >= 0) & (
-                F.col(f"i{d}") < F.lit(int(meta.shape[d]))
-            )
-        src = df.filter(inb)
-        # cheap fast paths FIRST, ordered by cost (guard-ordering
-        # lesson: a correctness check on a hot write path earns its
-        # keep only with a metadata-cheap fast path for the common
-        # case).  Level 1 is DRIVER-ONLY — no Spark job at all: when
-        # the base snapshot has no manifest file that could contain
-        # this node and this transaction has staged/buffered nothing,
-        # no existing ref can exist (the bulk-ingest first write, and
-        # the headline roundtrip's only write).
-        if (
-            not mf.prune_manifest_paths(self._base.manifests, meta.node_id)
-            and not self._staged
-            and not self._chunk_buffer
-        ):
-            return src, None
-        # slow path: the write set is consumed by BOTH the coverage
-        # check and the encode — cache it so the caller's input plan
-        # runs once.  (r15: the former level-2 probe — a limit(1) over
-        # the RESOLVED manifest, run before the coverage check — was
-        # dropped: when coverage says no chunk is partial the manifest
-        # never needs probing at all, and when some chunk IS partial
-        # the decode below handles an empty resolve for free, since
-        # the pruned file list is empty and no payload scan exists in
-        # the plan.  One probe job per RMW write instead of two.)
-        src = src.persist()
-        keyed = src.select(
-            "*",
-            *[
-                F.expr(f"CAST(i{d} AS BIGINT) div {meta.chunk_shape[d]}")
-                .cast("int")
-                .alias(f"__ck{d}")
-                for d in range(ndim)
-            ],
-        )
-        # full extent of a chunk, clamped at the array boundary
-        ext = F.lit(1)
-        for d in range(ndim):
-            ext = ext * F.least(
-                F.lit(meta.chunk_shape[d]),
-                F.lit(meta.shape[d])
-                - F.col(f"__ck{d}").cast("bigint") * meta.chunk_shape[d],
-            )
-        # coverage = DISTINCT coordinates per chunk (src is already
-        # in-bounds-filtered above): duplicate (i0..ik) rows in the
-        # input must not let a partially covered chunk pass as full
-        # (which would skip the RMW and clobber untouched cells)
-        partial = (
-            keyed.groupBy(*[f"__ck{d}" for d in range(ndim)])
-            .agg(F.count_distinct(*[F.col(c) for c in cols]).alias("__n"))
-            .filter(F.col("__n") < ext)
-            .select(
-                *[
-                    F.col(f"__ck{d}").alias(f"c{d}")
-                    for d in range(ndim)
-                ]
-            )
-        )
-        # ONE probe job decides the RMW and enumerates the payload
-        # files (r15; was: a partial.limit(1) probe plus a hidden
-        # full-resolve collect inside decode just to list files): the
-        # PRE-dedup manifest rows (+ staged/buffered overlays) of the
-        # partial chunks, distinct on file — with fileless refs
-        # (inline payloads, virtual refs: file IS NULL) kept as a
-        # marker row so "no rows at all" really means "no existing
-        # ref can touch any partial chunk" and the merge can skip.
-        # Pre-dedup is a harmless superset on both axes: a tombstoned
-        # chunk's file only adds payload rows the decode's left join
-        # drops, and the per-partial-chunk semi join keeps the file
-        # list SCALE-pruned (a write touching k chunks reads the
-        # files covering those k chunks, not the whole node).
-        ccols = [f"c{d}" for d in range(ndim)]
-        cand = mf.read_manifest_files(
-            self.spark,
-            self.root,
-            mf.prune_manifest_paths(self._base.manifests, meta.node_id),
-        )
-        for overlay in (self._staged_manifest_df(), self._buffer_manifest_df()):
-            if overlay is not None:
-                cand = cand.unionByName(overlay.select(*cand.columns))
-        probe = (
-            cand.filter(F.col("node_id") == meta.node_id)
-            .join(partial, ccols, "left_semi")
-            .select(F.coalesce(F.col("file"), F.lit("")).alias("f"))
-            .distinct()
-            .collect()
-        )
-        if not probe:
-            return src, src
-        manifest = self._resolved_manifest(meta.node_id, None).join(
-            partial, ccols, "left_semi"
-        )
-        existing = decode_chunks_to_rows(
-            self.spark,
-            self.root,
-            manifest,
-            meta,
-            None,
-            vcc_map=self._virtual_container_names,
-            files=[r["f"] for r in probe if r["f"]],
-        )
-        keep = existing.join(src.select(*cols), cols, "left_anti").select(
-            *cols, "value"
-        )
-        return src.unionByName(keep), src
 
     def read_array_df(
         self, path: str, slices: list[tuple[int, int]] | None = None
@@ -1184,13 +1086,7 @@ class Session:
         if r["inline"] is not None:
             return bytes(r["inline"])
         if not self._has_spark:  # executor-side: pyarrow point read
-            import pyarrow.compute as pc
-            import pyarrow.dataset as ds
-
-            tbl = ds.dataset(_dp(self.root, r["file"]), format="parquet").to_table(
-                filter=pc.field("chunk_id") == r["chunk_id"], columns=["payload"]
-            )
-            return tbl["payload"][0].as_py() if tbl.num_rows else None
+            return read_native_payload(_dp(self.root, r["file"]), r["chunk_id"])
         payload = (
             self.spark.read.parquet(_dp(self.root, r["file"]))
             .filter(F.col("chunk_id") == r["chunk_id"])
@@ -1521,28 +1417,34 @@ class Session:
                     pass  # spark may already be stopped at teardown
             cache.clear()
 
-    def _resolved_manifest(self, node_id, chunk_filter) -> DataFrame:
-        """Base-snapshot manifest overlaid with staged (uncommitted)
-        writes — read-your-writes inside the transaction."""
-        base = self._cached_base_manifest(node_id, chunk_filter)
-        staged = self._staged_manifest_df()
-        buffered = self._buffer_manifest_df()
-        overlays = []
-        if staged is not None:
-            overlays.append(staged.withColumn("seq", F.col("seq") + F.lit(10**15)))
-        if buffered is not None:
-            overlays.append(buffered.withColumn("seq", F.col("seq") + F.lit(2 * 10**15)))
-        if not overlays:
-            return base
-        from pyspark.sql import Window
-
-        union = base
-        for o in overlays:
+    def _overlay_staged(self, base: DataFrame, node_id, chunk_filter) -> DataFrame:
+        """``base`` plus this transaction's staged and buffered manifest
+        rows (filtered like ``base``), pre-dedup.  Seq offsets order the
+        layers for a latest-by-seq pick: base < staged (+10**15) <
+        buffered (+2*10**15)."""
+        for overlay, offset in (
+            (self._staged_manifest_df(), 10**15),
+            (self._buffer_manifest_df(), 2 * 10**15),
+        ):
+            if overlay is None:
+                continue
+            o = overlay.withColumn("seq", F.col("seq") + F.lit(offset))
             if node_id is not None:
                 o = o.filter(F.col("node_id") == node_id)
             if chunk_filter is not None:
                 o = o.filter(chunk_filter)
-            union = union.unionByName(o)
+            base = base.unionByName(o)
+        return base
+
+    def _resolved_manifest(self, node_id, chunk_filter) -> DataFrame:
+        """Base-snapshot manifest overlaid with staged (uncommitted)
+        writes — read-your-writes inside the transaction."""
+        base = self._cached_base_manifest(node_id, chunk_filter)
+        if not self._staged and not self._chunk_buffer:
+            return base
+        from pyspark.sql import Window
+
+        union = self._overlay_staged(base, node_id, chunk_filter)
         w = Window.partitionBy("node_id", "chunk_key").orderBy(F.desc("seq"))
         return (
             union.withColumn("__rn", F.row_number().over(w))

@@ -5,7 +5,7 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from icechunk_spark.engine import get_spark  # noqa: E402
 
@@ -20,7 +20,7 @@ SF_DIR = "/root/testdata/sf0.001"
 #: model tests with a reduced example count via ``scaled_examples``.
 #: Set ICS_FULL_SUITE=1 to run everything at full depth (the tier the
 #: optimization rounds run before shipping).
-FULL_SUITE = bool(os.environ.get("ICS_FULL_SUITE"))
+FULL_SUITE = os.environ.get("ICS_FULL_SUITE", "").strip().lower() not in ("", "0", "false")
 
 
 def scaled_examples(n: int) -> int:

@@ -1,10 +1,12 @@
-"""Focused pins for the r15 fused RMW probe (_merge_partial_chunks):
-one job now decides the merge AND enumerates payload files from the
-pre-dedup manifest rows of the partial chunks.  The subtle case is a
-FILELESS existing ref (a committed virtual ref, or an inline payload:
-their manifest rows have file IS NULL), which the probe must still
-count as "an existing ref touches a partial chunk" — skipping the
-merge there would clobber the untouched cells with fill.
+"""Pins for the read-modify-write (RMW) merge of ``write_array_df``:
+a chunk the incoming rows only partly cover must keep the cells they
+do not touch.  The merge runs inside the encode — one shuffle
+cogroups the rows with the pre-dedup manifest rows of the chunks they
+touch, and the
+pack reads the latest ref's bytes for partly covered chunks.  The
+subtle cases are FILELESS existing refs (a committed virtual ref, or
+an inline/buffered payload: their manifest rows have file IS NULL),
+tombstones, boundary chunks, duplicate and out-of-bounds rows.
 """
 
 from __future__ import annotations
@@ -34,6 +36,25 @@ def _rows(spark, coords_vals):
         [{"i0": int(i), "value": float(v)} for i, v in coords_vals],
         "i0 bigint, value double",
     )
+
+
+def _read(session, path="/a"):
+    return {int(r["i0"]): r["value"] for r in session.read_array_df(path).collect()}
+
+
+def _chunk_ids(session, path="/a"):
+    return {
+        r["chunk_key"]: r["chunk_id"]
+        for r in session.chunk_manifest_df(path).select("chunk_key", "chunk_id").collect()
+    }
+
+
+def _committed_0_to_7(spark, root, shape=8):
+    repo = Repository.create(spark, root)
+    with repo.transaction(message="v1") as s:
+        s.create_array("/a", shape=[shape], chunk_shape=[4], fill_value=-1.0)
+        s.write_array_df("/a", _rows(spark, [(i, float(i)) for i in range(shape)]))
+    return repo
 
 
 def test_partial_write_over_committed_virtual_ref_still_merges(
@@ -97,3 +118,168 @@ def test_fully_covering_write_skips_merge_without_probe_regression(spark, root):
     }
     assert all(got[i] == 2.0 for i in range(4))
     assert all(got[i] == 1.0 for i in range(4, 8))
+
+
+def test_duplicate_rows_cannot_fake_full_coverage(spark, root):
+    """Four rows for chunk 0 (of size 4) but only two distinct cells:
+    the chunk is partly covered and must merge."""
+    repo = _committed_0_to_7(spark, root)
+    with repo.transaction(message="v2") as s:
+        s.write_array_df("/a", _rows(spark, [(0, 50.0), (1, 51.0), (1, 51.0), (1, 51.0)]))
+    got = _read(repo.readonly_session())
+    assert [got[i] for i in range(8)] == [50.0, 51.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0]
+
+
+def test_boundary_chunk_of_uneven_shape(spark, root):
+    """shape 5x6 over 4x4 chunks: chunk (1, 1) holds only cells
+    (4, 4) and (4, 5).  Writing one of them is partial (the other
+    keeps its value); writing both covers the clamped chunk fully."""
+    repo = Repository.create(spark, root)
+    cells = [(a, b) for a in range(5) for b in range(6)]
+    schema = "i0 bigint, i1 bigint, value double"
+
+    def frame(vals):
+        return local_df(spark, [{"i0": a, "i1": b, "value": v} for (a, b), v in vals], schema)
+
+    with repo.transaction(message="v1") as s:
+        s.create_array("/b", shape=[5, 6], chunk_shape=[4, 4])
+        s.write_array_df("/b", frame([(c, float(10 * c[0] + c[1])) for c in cells]))
+    with repo.transaction(message="v2") as s:
+        s.write_array_df("/b", frame([((4, 4), -44.0)]))
+    got = {(int(r["i0"]), int(r["i1"])): r["value"]
+           for r in repo.readonly_session().read_array_df("/b").collect()}
+    assert got[(4, 4)] == -44.0 and got[(4, 5)] == 45.0
+    assert all(got[c] == float(10 * c[0] + c[1]) for c in cells if c[0] < 4 or c[1] < 4)
+    with repo.transaction(message="v3") as s:
+        s.write_array_df("/b", frame([((4, 4), 1.0), ((4, 5), 2.0)]))
+    got = {(int(r["i0"]), int(r["i1"])): r["value"]
+           for r in repo.readonly_session().read_array_df("/b").collect()}
+    assert got[(4, 4)] == 1.0 and got[(4, 5)] == 2.0 and len(got) == 30
+
+
+def test_out_of_bounds_rows_dropped_and_their_chunk_not_rewritten(spark, root):
+    """shape 6 over chunks of 4: rows i=6, 7 fall in chunk 1's grid
+    cell but outside the array.  They are dropped, so chunk 1 keeps
+    its ref, while the in-bounds row still merges into chunk 0."""
+    repo = _committed_0_to_7(spark, root, shape=6)
+    before = _chunk_ids(repo.readonly_session())
+    with repo.transaction(message="v2") as s:
+        s.write_array_df("/a", _rows(spark, [(6, 60.0), (7, 70.0), (-1, -10.0), (2, 20.0)]))
+    ro = repo.readonly_session()
+    after = _chunk_ids(ro)
+    assert after["1"] == before["1"]
+    assert after["0"] != before["0"]
+    got = _read(ro)
+    assert sorted(got) == list(range(6))
+    assert [got[i] for i in range(6)] == [0.0, 1.0, 20.0, 3.0, 4.0, 5.0]
+
+
+def test_partial_write_over_chunk_deleted_in_same_txn_gives_fill(spark, root):
+    repo = _committed_0_to_7(spark, root)
+    with repo.transaction(message="v2") as s:
+        s.delete_chunk("/a", "0")
+        s.write_array_df("/a", _rows(spark, [(1, 11.0)]))
+    got = _read(repo.readonly_session())
+    assert [got[i] for i in range(4)] == [-1.0, 11.0, -1.0, -1.0]
+    assert [got[i] for i in range(4, 8)] == [4.0, 5.0, 6.0, 7.0]
+
+
+def test_partial_write_over_earlier_write_in_same_txn(spark, root):
+    """No committed manifest for the array: the only existing ref is
+    the transaction's own staged write."""
+    repo = Repository.create(spark, root)
+    with repo.transaction(message="v1") as s:
+        s.create_array("/a", shape=[8], chunk_shape=[4], fill_value=-1.0)
+        s.write_array_df("/a", _rows(spark, [(i, float(i)) for i in range(4)]))
+        s.write_array_df("/a", _rows(spark, [(2, 22.0)]))
+    got = _read(repo.readonly_session())
+    assert got == {0: 0.0, 1: 1.0, 2: 22.0, 3: 3.0}  # chunk 1 never written
+
+
+def test_partial_write_over_buffered_set_chunk_bytes(spark, root):
+    """The earlier buffered chunk keeps its untouched cells, and the
+    later write's cell shadows it."""
+    repo = Repository.create(spark, root)
+    with repo.transaction(message="v1") as s:
+        s.create_array("/a", shape=[8], chunk_shape=[4], fill_value=-1.0)
+        s.set_chunk_bytes("/a", "1", np.array([10.0, 11.0, 12.0, 13.0]).tobytes())
+        s.write_array_df("/a", _rows(spark, [(6, 66.0)]))
+    got = _read(repo.readonly_session())
+    assert [got[i] for i in range(4, 8)] == [10.0, 11.0, 66.0, 13.0]
+
+
+def test_chunk_with_refs_but_no_rows_gets_no_new_ref(spark, root):
+    repo = _committed_0_to_7(spark, root)
+    before = _chunk_ids(repo.readonly_session())
+    with repo.transaction(message="v2") as s:
+        s.write_array_df("/a", _rows(spark, [(1, 101.0)]))
+        staged = s._staged_manifest_df().select("chunk_key").collect()
+    assert [r["chunk_key"] for r in staged] == ["0"]
+    after = _chunk_ids(repo.readonly_session())
+    assert after["1"] == before["1"] and after["0"] != before["0"]
+
+
+def test_unaligned_write_commit_job_count(spark, root):
+    """An unaligned write that partly covers 2x2 chunks, plus its
+    commit, runs the merge inside the encode's one cogroup: at most 8
+    Spark jobs (the coverage aggregate + probe + decode design took 19)."""
+    repo = Repository.create(spark, root)
+    schema = "i0 bigint, i1 bigint, value double"
+    with repo.transaction(message="v1") as s:
+        s.create_array("/g", shape=[64, 64], chunk_shape=[32, 32])
+        s.write_array_df("/g", local_df(
+            spark, [{"i0": a, "i1": b, "value": 1.0} for a in range(64) for b in range(64)], schema))
+    block = local_df(
+        spark, [{"i0": a, "i1": b, "value": 2.0} for a in range(20, 44) for b in range(20, 44)], schema)
+    sc = spark.sparkContext
+    group = f"rmw-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        with repo.transaction(message="v2") as s:
+            s.write_array_df("/g", block)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 8, n_jobs
+    got = repo.readonly_session().read_array_df("/g").groupBy("value").count().collect()
+    assert {r["value"]: r["count"] for r in got} == {1.0: 64 * 64 - 24 * 24, 2.0: 24 * 24}
+
+
+def test_partial_write_merges_native_ref_under_uri_root(spark, tmp_path):
+    """A URI data root (here file://): the pack's point read of the
+    existing native payload resolves the URI like the rest of fsio."""
+    repo = _committed_0_to_7(spark, f"file://{tmp_path}/repo")
+    with repo.transaction(message="v2") as s:
+        s.write_array_df("/a", _rows(spark, [(5, 55.0)]))
+    got = _read(repo.readonly_session())
+    assert [got[i] for i in range(8)] == [0.0, 1.0, 2.0, 3.0, 4.0, 55.0, 6.0, 7.0]
+
+
+def test_native_point_read_maps_hadoop_schemes(tmp_path, monkeypatch):
+    """``s3a://`` (Hadoop's S3 scheme, which object-store data roots
+    keep) is unknown to pyarrow: the point read must go through
+    ``fsio._fs_path``, which maps it.  The mapping is stubbed onto a
+    local directory so no object store is contacted."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+
+    from icechunk_spark.repo import fsio
+    from icechunk_spark.repo.arrays import read_native_payload
+
+    os.makedirs(tmp_path / "chunks")
+    pq.write_table(
+        pa.table({"chunk_id": ["x", "y"], "payload": [b"xx", b"yy"]}),
+        tmp_path / "chunks" / "part-0.parquet",
+    )
+    real = fsio._fs_path
+
+    def fake(path):
+        if path.startswith("s3a://bucket/"):
+            return pafs.LocalFileSystem(), str(tmp_path / path[len("s3a://bucket/"):])
+        return real(path)
+
+    monkeypatch.setattr(fsio, "_fs_path", fake)
+    assert read_native_payload("s3a://bucket/chunks", "y") == b"yy"
+    assert read_native_payload("s3a://bucket/chunks", "z") is None

@@ -3,7 +3,8 @@
 
 Instruments, per trial:
   1. repo_branch_divergence's write path, phase by phase — each
-     write_array_df split into merge-probe vs encode, plus commit.
+     write_array_df with its encode (which carries the read-modify-write
+     merge) timed separately, plus commit.
   2. A metadata-only commit (create_group) microbench — the floor the
      model/property tests pay hundreds of times.
 
@@ -42,7 +43,7 @@ def main() -> None:
     warm.groupBy("g").applyInPandas(lambda p: p, "id long, g int").count()
 
     # monkey-patch timers around the merge internals
-    orig_merge = sess_mod.Session._merge_partial_chunks
+    orig_encode = sess_mod.encode_array_chunks
     orig_write = sess_mod.Session.write_array_df
     orig_commit = sess_mod.Session._commit_impl
     phases: dict[str, list[float]] = {}
@@ -50,11 +51,10 @@ def main() -> None:
     def rec(key: str, dt: float) -> None:
         phases.setdefault(key, []).append(round(dt, 3))
 
-    def timed_merge(self, df, meta):
+    def timed_encode(*a, **k):
         t0 = time.perf_counter()
-        out = orig_merge(self, df, meta)
-        rec("merge_partial_chunks", time.perf_counter() - t0)
-        return out
+        orig_encode(*a, **k)
+        rec("encode_array_chunks", time.perf_counter() - t0)
 
     def timed_write(self, path, df):
         t0 = time.perf_counter()
@@ -67,7 +67,7 @@ def main() -> None:
         rec("commit", time.perf_counter() - t0)
         return out
 
-    sess_mod.Session._merge_partial_chunks = timed_merge
+    sess_mod.encode_array_chunks = timed_encode
     sess_mod.Session.write_array_df = timed_write
     sess_mod.Session._commit_impl = timed_commit
 
