@@ -14,7 +14,7 @@ import shutil
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass
-from typing import Any, Iterator
+from typing import Any, Container, Iterator, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -261,6 +261,27 @@ class GCSummary:
     manifests_deleted: int = 0
     snapshots_deleted: int = 0
     txlogs_deleted: int = 0
+
+
+class _SnapNode(NamedTuple):
+    """One vertex of the history graph: what expiration and GC read of
+    a snapshot (never its node table)."""
+
+    id: str
+    parent_id: str | None
+    written_at: float
+    pruned_ancestor_tx_logs: tuple[str, ...]
+    manifests: tuple[str, ...]
+
+    @classmethod
+    def of(cls, s: SnapshotInfo, include_manifests: bool = True) -> "_SnapNode":
+        return cls(
+            s.id,
+            s.parent_id,
+            s.written_at,
+            tuple(s.pruned_ancestor_tx_logs),
+            tuple(s.manifests) if include_manifests else (),
+        )
 
 
 class Repository:
@@ -929,21 +950,6 @@ class Repository:
             self, plain=plain, branch=branch, tag=tag, snapshot_id=snapshot_id
         )
 
-    def _parent_map(self) -> dict[str, str | None]:
-        """snapshot_id -> parent_id over all refs' histories."""
-        out: dict[str, str | None] = {}
-        for ref in self.list_branches():
-            for s in self.ancestry(branch=ref):
-                if s.id in out:
-                    break
-                out[s.id] = s.parent_id
-        for ref in self.list_tags():
-            for s in self.ancestry(tag=ref):
-                if s.id in out:
-                    break
-                out[s.id] = s.parent_id
-        return out
-
     def inspect_snapshot(self, snapshot_id: str) -> dict[str, Any]:
         snap = fmt.read_snapshot(self.root, snapshot_id)
         man = mf.read_manifest_files(self.spark, self.root, snap.manifests)
@@ -1181,7 +1187,12 @@ class Repository:
 
         With ``delete_expired_branches`` / ``delete_expired_tags`` (the
         reference's flags), refs other than main whose TIP falls behind
-        the cutoff are themselves deleted along with their history."""
+        the cutoff are themselves deleted along with their history.
+
+        The history graph is read once — one read per listed snapshot
+        through the same driver/executor dispatch garbage_collect uses
+        (``_map_names``) — and every ref's chain is walked in memory
+        (``_chain``); an id the graph lacks is read fresh."""
         now = time.time() if now is None else now
         cutoff = _resolve_cutoff(older_than_seconds, older_than, now, "expire_snapshots")
         # tips are pinned unless their ref is allowed to be deleted
@@ -1193,95 +1204,49 @@ class Repository:
             if not delete_expired_tags:
                 pinned.add(fmt.read_tag(self.root, t))
         expired: set[str] = set()
-        # large histories: build the (id, parent, written_at, pruned)
-        # graph with ONE executor-parallel read wave and reconstruct
-        # each ref's chain in memory — the serial per-ref ancestry walk
-        # costs O(history) driver round-trips per ref
-        graph: dict[str, Any] | None = None
-        metas = self._snapshot_meta_parallel(fmt.list_snapshot_ids(self.root))
-        if metas is not None:
-            from types import SimpleNamespace
-
-            graph = {
-                sid: SimpleNamespace(
-                    id=sid,
-                    parent_id=pid,
-                    written_at=w,
-                    pruned_ancestor_tx_logs=list(pr),
-                )
-                for sid, pid, _m, pr, w in metas
-            }
-        for ref_kind, names in (("branch", self.list_branches()), ("tag", self.list_tags())):
-            for name in names:
-                if graph is not None:
-                    tip_id = (
-                        fmt.branch_tip(self.root, name)[1]
-                        if ref_kind == "branch"
-                        else fmt.read_tag(self.root, name)
-                    )
-                    chain, cur = [], tip_id
-                    while cur is not None:
-                        node = graph.get(cur)
-                        if node is None:
-                            # tip moved (or graph is stale) — read fresh
-                            # instead of KeyError-ing the whole expire
-                            from types import SimpleNamespace
-
-                            s = fmt.read_snapshot(self.root, cur)
-                            node = SimpleNamespace(
-                                id=s.id,
-                                parent_id=s.parent_id,
-                                written_at=s.written_at,
-                                pruned_ancestor_tx_logs=list(s.pruned_ancestor_tx_logs),
-                            )
-                            graph[cur] = node
-                        chain.append(node)
-                        cur = node.parent_id
+        # one graph read serves every ref's chain (_snapshot_graph)
+        graph = self._snapshot_graph()
+        for tip_id in self._ref_tips():
+            chain = self._chain(graph, tip_id)
+            # root snapshot is never expired; walk upward from the
+            # oldest non-root entry (tip included only when its ref
+            # is deletable — otherwise it's pinned anyway)
+            keep_up_to = len(chain) - 1
+            for i in range(len(chain) - 2, -1, -1):
+                if chain[i].written_at < cutoff and chain[i].id not in pinned:
+                    expired.add(chain[i].id)
                 else:
-                    chain = list(
-                        self.ancestry(branch=name)
-                        if ref_kind == "branch"
-                        else self.ancestry(tag=name)
-                    )
-                # root snapshot is never expired; walk upward from the
-                # oldest non-root entry (tip included only when its ref
-                # is deletable — otherwise it's pinned anyway)
-                keep_up_to = len(chain) - 1
-                for i in range(len(chain) - 2, -1, -1):
-                    if chain[i].written_at < cutoff and chain[i].id not in pinned:
-                        expired.add(chain[i].id)
-                    else:
-                        keep_up_to = i
-                        break
-                # re-parent the oldest kept snapshot onto the root.
-                # chain[keep_up_to] IS the oldest kept (the walk broke
-                # there); re-parenting anything newer would unlink a
-                # non-expired snapshot from history and hand it to GC.
-                if expired & {s.id for s in chain}:
-                    oldest_kept = chain[keep_up_to]
-                    root_snap = chain[-1]
-                    if oldest_kept.id != root_snap.id and oldest_kept.id not in expired:
-                        # the rewrite always starts from a FRESH read of
-                        # the full doc: the graph may be a (stale)
-                        # parallel snapshot, and a previous ref in this
-                        # same call may already have re-parented this
-                        # snapshot — union, never overwrite
-                        fresh = fmt.read_snapshot(self.root, oldest_kept.id)
-                        if fresh.parent_id != root_snap.id:
-                            # design-doc 016: carry the txlog ids of every
-                            # ancestor dropped from this path (oldest
-                            # first, each preceded by its own carried
-                            # list), so diff/rebase across the pruned gap
-                            # stay exact and GC keeps those logs.
-                            carried = list(fresh.pruned_ancestor_tx_logs)
-                            for x in reversed(chain[keep_up_to + 1 : -1]):
-                                carried.extend(x.pruned_ancestor_tx_logs)
-                                carried.append(x.id)
-                            fresh.pruned_ancestor_tx_logs = list(
-                                dict.fromkeys(carried)
-                            )
-                            fresh.parent_id = root_snap.id
-                            fmt.write_snapshot(self.root, fresh)
+                    keep_up_to = i
+                    break
+            # re-parent the oldest kept snapshot onto the root.
+            # chain[keep_up_to] IS the oldest kept (the walk broke
+            # there); re-parenting anything newer would unlink a
+            # non-expired snapshot from history and hand it to GC.
+            if expired & {s.id for s in chain}:
+                oldest_kept = chain[keep_up_to]
+                root_snap = chain[-1]
+                if oldest_kept.id != root_snap.id and oldest_kept.id not in expired:
+                    # the rewrite always starts from a FRESH read of
+                    # the full doc: the graph may be stale, and a
+                    # previous ref in this same call may already have
+                    # re-parented this snapshot — union, never
+                    # overwrite
+                    fresh = fmt.read_snapshot(self.root, oldest_kept.id)
+                    if fresh.parent_id != root_snap.id:
+                        # design-doc 016: carry the txlog ids of every
+                        # ancestor dropped from this path (oldest
+                        # first, each preceded by its own carried
+                        # list), so diff/rebase across the pruned gap
+                        # stay exact and GC keeps those logs.
+                        carried = list(fresh.pruned_ancestor_tx_logs)
+                        for x in reversed(chain[keep_up_to + 1 : -1]):
+                            carried.extend(x.pruned_ancestor_tx_logs)
+                            carried.append(x.id)
+                        fresh.pruned_ancestor_tx_logs = list(
+                            dict.fromkeys(carried)
+                        )
+                        fresh.parent_id = root_snap.id
+                        fmt.write_snapshot(self.root, fresh)
         if delete_expired_branches:
             for b in self.list_branches():
                 if b != MAIN and fmt.branch_tip(self.root, b)[1] in expired:
@@ -1293,8 +1258,8 @@ class Repository:
         self._log_update({"type": "SnapshotsExpired", "n_expired": len(expired)})
         return expired
 
-    # histories shorter than this read serially — executor round-trips
-    # cost more than a handful of driver GETs
+    # _map_names loops on the driver below this many names — executor
+    # round-trips cost more than a handful of driver GETs
     _PARALLEL_SNAPSHOT_READ_MIN = 64
     # design-doc 011: max reachability recomputations when refs are
     # created concurrently with GC before the GC aborts
@@ -1331,11 +1296,28 @@ class Repository:
                 pass
         return skew
 
+    def _map_names(self, fn, names: list[str]) -> list:
+        """``[fn(n) for n in names]``: the one driver/executor dispatch of
+        the history plane.  Short lists (and process-local memory://
+        roots, which executors cannot read) loop on the driver; longer
+        ones run as one ``parallelize(names).map(fn)`` wave, so a
+        10^5-commit history costs one parallel wave of object GETs, not
+        10^5 serial driver round-trips.  ``fn`` runs on either side, so
+        it may close over plain values only (never ``self``) and must
+        import what it uses."""
+        if (
+            not isinstance(self.root, str)
+            or self.root.startswith("memory://")
+            or len(names) < self._PARALLEL_SNAPSHOT_READ_MIN
+        ):
+            return [fn(n) for n in names]
+        sc = self.spark.sparkContext
+        n_parts = max(1, min(len(names) // 8, sc.defaultParallelism))
+        return sc.parallelize(names, n_parts).map(fn).collect()
+
     def _reap_paths(self, paths: list[str], cutoff: float, dry_run: bool) -> int:
         """Age-gated delete of a list of files/dirs, counting actual
-        outcomes.  Large backlogs run per-candidate inside executor
-        tasks (only the path NAMES ship); small or process-local repos
-        loop on the driver."""
+        outcomes (only the path NAMES ship to executors)."""
 
         def _one(path: str) -> int:
             from icechunk_spark.repo import fsio as _fsio
@@ -1345,97 +1327,65 @@ class Repository:
                 return 0
             return 1 if (dry_run or _fsio.delete_dir(path)) else 0
 
-        if (
-            not isinstance(self.root, str)
-            or self.root.startswith("memory://")
-            or len(paths) < self._PARALLEL_SNAPSHOT_READ_MIN
-        ):
-            return sum(_one(p) for p in paths)
-        n_parts = max(1, min(len(paths) // 8, self.spark.sparkContext.defaultParallelism))
-        return sum(self.spark.sparkContext.parallelize(paths, n_parts).map(_one).collect())
+        return sum(self._map_names(_one, paths))
 
-    def _snapshot_meta_parallel(
-        self, ids: list[str], include_manifests: bool = False
-    ) -> "list[tuple[str, str | None, list[str], list[str], float]] | None":
-        """(id, parent_id, manifests, pruned_ancestor_tx_logs,
-        written_at) for the given snapshot ids, read INSIDE executor
-        tasks so a 10^5-commit history costs one parallel wave of
-        object GETs instead of 10^5 serial driver round-trips (the r4
-        GC-driver-bottleneck fix, applied to the snapshot plane).
-
-        ``include_manifests=False`` (default) ships an empty manifests
-        list — parent-graph callers must not pull every snapshot's
-        split-manifest leaf paths onto the driver.  A snapshot deleted
-        between LIST and read (concurrent GC from another driver)
-        yields no tuple instead of failing the task.  Returns None when
-        the root is not executor-readable (process-local memory://
-        store) or the history is too small to be worth a Spark job."""
+    def _snapshot_graph(self, include_manifests: bool = False) -> dict[str, _SnapNode]:
+        """Every listed snapshot as a graph node, keyed by id: one read
+        per snapshot through ``_map_names``.  ``include_manifests=False``
+        leaves the manifest lists out (parent-graph callers must not
+        pull every snapshot's split-manifest paths onto the driver).  A
+        snapshot deleted between LIST and read (a concurrent GC from
+        another driver) is dropped instead of failing the wave."""
         root = self.root
-        if (
-            not isinstance(root, str)
-            or root.startswith("memory://")
-            or len(ids) < self._PARALLEL_SNAPSHOT_READ_MIN
-        ):
-            return None
 
         def _read(sid: str):
             from icechunk_spark.repo import format as _fmt
 
             try:
-                s = _fmt.read_snapshot(root, sid)
+                return _SnapNode.of(_fmt.read_snapshot(root, sid), include_manifests)
             except (_fmt.RefError, FileNotFoundError, OSError):
                 return None  # vanished between LIST and read
-            return (
-                s.id,
-                s.parent_id,
-                list(s.manifests) if include_manifests else [],
-                list(s.pruned_ancestor_tx_logs),
-                s.written_at,
-            )
 
-        n_parts = max(1, min(len(ids) // 8, self.spark.sparkContext.defaultParallelism))
-        out = self.spark.sparkContext.parallelize(ids, n_parts).map(_read).collect()
-        return [m for m in out if m is not None]
+        nodes = self._map_names(_read, fmt.list_snapshot_ids(root))
+        return {n.id: n for n in nodes if n is not None}
+
+    def _chain(
+        self, graph: dict[str, _SnapNode], tip: str, stop: Container[str] = ()
+    ) -> list[_SnapNode]:
+        """One ref's ancestry, tip first, through ``graph``, ending at the
+        root or before the first id in ``stop``.  An id the graph does
+        not know (a ref that moved after the graph was read) is read
+        fresh and memoised into ``graph``: the chain is NEVER truncated
+        (truncation would hand live history to GC)."""
+        chain: list[_SnapNode] = []
+        cur: str | None = tip
+        while cur is not None and cur not in stop:
+            node = graph.get(cur)
+            if node is None:
+                node = graph[cur] = _SnapNode.of(fmt.read_snapshot(self.root, cur))
+            chain.append(node)
+            cur = node.parent_id
+        return chain
 
     def _ref_tips(self) -> list[str]:
-        """Current snapshot ids of every branch and tag.  Read these
-        BEFORE any snapshot listing/parallel wave: tips captured first
-        are guaranteed present (snapshots are immutable and tips are
-        never deleted), which closes the list-then-walk race window."""
+        """Current snapshot ids of every branch and tag.  GC reads these
+        BEFORE the snapshot listing: tips captured first are guaranteed
+        present (snapshots are immutable and tips are never deleted),
+        which closes the list-then-walk race window."""
         tips = [fmt.branch_tip(self.root, b)[1] for b in self.list_branches()]
         tips += [fmt.read_tag(self.root, t) for t in self.list_tags()]
         return tips
 
-    def _walk_live(
-        self, tips: list[str], parent: dict[str, "str | None"]
-    ) -> set[str]:
-        """BFS over the (possibly stale) parent graph; any id the graph
-        does not know — a ref that moved after the graph was read — is
-        resolved with a fresh driver read so reachability is NEVER
-        truncated (truncation would hand live history to GC)."""
-        live: set[str] = set()
+    def _reachable_snapshots(self, include_manifests: bool = False) -> dict[str, _SnapNode]:
+        """Snapshots reachable from any branch/tag, keyed by id: the
+        tips (read before the listing, see _ref_tips) walked through one
+        ``_snapshot_graph``."""
+        tips = self._ref_tips()
+        graph = self._snapshot_graph(include_manifests)
+        live: dict[str, _SnapNode] = {}
         for tip in tips:
-            cur: str | None = tip
-            while cur is not None and cur not in live:
-                live.add(cur)
-                if cur in parent:
-                    cur = parent[cur]
-                else:
-                    cur = fmt.read_snapshot(self.root, cur).parent_id
+            live.update((n.id, n) for n in self._chain(graph, tip, stop=live))
         return live
-
-    def _reachable_snapshots(self) -> set[str]:
-        """Snapshot ids reachable from any branch/tag.  Large histories
-        build the parent graph with one executor-parallel read over ALL
-        snapshot files, then walk it in memory; small/process-local
-        repos fall back to the serial ref walk."""
-        tips = self._ref_tips()  # before the listing — see _ref_tips
-        ids = fmt.list_snapshot_ids(self.root)
-        metas = self._snapshot_meta_parallel(ids)
-        if metas is None:
-            return set(self._parent_map().keys())
-        parent = {sid: pid for sid, pid, _m, _p, _w in metas}
-        return self._walk_live(tips, parent)
 
     @_traced("icechunk.garbage_collect")
     def garbage_collect(
@@ -1471,11 +1421,20 @@ class Repository:
         while its manifest is still staged, so an un-aged GC would
         delete data a concurrent commit is about to reference.
 
+        The history plane has one dispatch (``_map_names``): the
+        snapshot-graph read and the snapshot/txlog, orphan-txlog and
+        dead-manifest reaps run the same per-name function either in a
+        driver loop (short lists, process-local memory:// roots) or as
+        one executor wave over the names — both modes reap exactly the
+        same objects.  The chunk-file shard listing and anti-join is
+        always a Spark job.
+
         ``max_snapshots_in_memory`` / ``max_compressed_manifest_mem_bytes``
         / ``max_concurrent_manifest_fetches`` are accepted for reference
-        signature compatibility but are advisory here: snapshots and
-        manifests stream through Spark executor tasks, so driver memory
-        never holds them regardless of these caps."""
+        signature compatibility but are advisory here: the driver holds
+        the snapshot graph (ids, parents, manifest paths) and manifests
+        stream through Spark executor tasks, so driver memory never
+        holds manifest contents regardless of these caps."""
         del max_snapshots_in_memory, max_compressed_manifest_mem_bytes
         del max_concurrent_manifest_fetches
         now = time.time() if now is None else now
@@ -1504,17 +1463,9 @@ class Repository:
             return ts is not None and ts < cutoff
 
         summary = GCSummary()
-        live_manifests: set[str] = set()
-        # design-doc 016 retention rule: txlogs named in any live
-        # snapshot's pruned_ancestor_tx_logs stay, even though their
-        # snapshots are gone/going — diff/rebase across the expired
-        # gap still read them.
-        pruned_keep: set[str] = set()
-        # ONE parallel wave (with manifests) serves both reachability
-        # and the live-manifest/pruned-txlog collection.  Tips are read
-        # BEFORE the listing (_ref_tips); any id the stale graph does
-        # not know resolves with a fresh driver read — reachability is
-        # never truncated (truncation would hand live history to GC).
+        # ONE graph read (with manifests) serves both reachability and
+        # the live-manifest/pruned-txlog collection (_reachable_snapshots:
+        # tips before the listing, fresh reads for ids the graph lacks).
         #
         # design-doc 011 (GC/expiration consistency): a branch or tag
         # CREATED while reachability is computed may point at a
@@ -1524,131 +1475,62 @@ class Repository:
         # live set.  Bounded retries; exhausting them aborts the GC
         # (never delete a snapshot a ref now names).
         for _attempt in range(self._GC_MAX_RETRIES):
-            live_manifests.clear()
-            pruned_keep.clear()
-            tips = self._ref_tips()
-            metas = self._snapshot_meta_parallel(
-                fmt.list_snapshot_ids(self.root), include_manifests=True
-            )
-            if metas is None:
-                live_snaps = self._reachable_snapshots()
-                for sid in live_snaps:
-                    snap = fmt.read_snapshot(self.root, sid)
-                    live_manifests.update(snap.manifests)
-                    pruned_keep.update(snap.pruned_ancestor_tx_logs)
-            else:
-                info = {
-                    sid: (pid, mans, pruned) for sid, pid, mans, pruned, _w in metas
-                }
-                live_snaps = set()
-                for tip in tips:
-                    cur: str | None = tip
-                    while cur is not None and cur not in live_snaps:
-                        live_snaps.add(cur)
-                        if cur not in info:
-                            s = fmt.read_snapshot(self.root, cur)
-                            info[cur] = (
-                                s.parent_id,
-                                list(s.manifests),
-                                list(s.pruned_ancestor_tx_logs),
-                            )
-                        cur = info[cur][0]
-                for sid in live_snaps:
-                    _pid, mans, pruned = info[sid]
-                    live_manifests.update(mans)
-                    pruned_keep.update(pruned)
+            live = self._reachable_snapshots(include_manifests=True)
             self._gc_prevalidate_hook()
-            fresh_tips = self._ref_tips()
-            if all(t in live_snaps for t in fresh_tips):
+            if all(t in live for t in self._ref_tips()):
                 break
         else:
-            err = IcechunkError(
+            raise IcechunkError(
                 f"garbage_collect aborted: refs moved onto snapshots outside "
                 f"the computed live set in each of {self._GC_MAX_RETRIES} "
                 "attempts; re-run when ref churn settles"
             )
-            raise err
-
-        def _old_snap(sid: str) -> bool:
-            try:
-                return fmt.snapshot_mtime(self.root, sid) < cutoff
-            except (OSError, FileNotFoundError):
-                return False
-
-        # drop unreachable snapshots + their txlogs (counting actual
-        # outcomes — a failed delete is not a reclaimed object).  Large
-        # backlogs run the mtime-check + delete per-candidate INSIDE
-        # executor tasks (only the candidate NAME list — already
-        # driver-side — and two small sets ship in the closure); small
-        # or process-local repos keep the serial loop.
-        candidates = [s for s in fmt.list_snapshot_ids(self.root) if s not in live_snaps]
-        parallel_ok = (
-            isinstance(self.root, str)
-            and not self.root.startswith("memory://")
-            and len(candidates) >= self._PARALLEL_SNAPSHOT_READ_MIN
+        live_manifests = {m for n in live.values() for m in n.manifests}
+        # design-doc 016 retention rule: txlogs named in any live
+        # snapshot's pruned_ancestor_tx_logs stay, even though their
+        # snapshots are gone/going — diff/rebase across the expired
+        # gap still read them.
+        pruned_keep = frozenset(
+            t for n in live.values() for t in n.pruned_ancestor_tx_logs
         )
-        if parallel_ok:
-            root, keep = self.root, frozenset(pruned_keep)
-            txdir = _dp(self.root, "txlogs")
 
-            def _reap(sid: str):
-                from icechunk_spark.repo import format as _fmt
-                from icechunk_spark.repo import fsio as _fsio
+        # drop unreachable snapshots + their txlogs, counting actual
+        # outcomes (a failed delete is not a reclaimed object).  The
+        # mtime check + delete run per candidate through _map_names:
+        # only the candidate NAMES and two small sets ship.
+        root, txdir = self.root, _dp(self.root, "txlogs")
 
-                snaps = logs = 0
-                try:
-                    if _fmt.snapshot_mtime(root, sid) >= cutoff:
-                        return (0, 0)
-                except (OSError, FileNotFoundError):
+        def _reap(sid: str) -> tuple[int, int]:
+            from icechunk_spark.repo import format as _fmt
+            from icechunk_spark.repo import fsio as _fsio
+
+            try:
+                if _fmt.snapshot_mtime(root, sid) >= cutoff:
                     return (0, 0)
-                if dry_run:
-                    snaps = 1
-                else:
-                    try:
-                        _fmt.delete_snapshot(root, sid)
-                        snaps = 1
-                    except OSError:
-                        return (0, 0)
-                if sid not in keep:
-                    tx = f"{txdir}/{sid}.parquet"
-                    if _fsio.exists(tx) and (dry_run or _fsio.delete_dir(tx)):
-                        logs = 1
-                return (snaps, logs)
+            except (OSError, FileNotFoundError):
+                return (0, 0)
+            if not dry_run:
+                try:
+                    _fmt.delete_snapshot(root, sid)
+                except OSError:
+                    return (0, 0)
+            if sid in pruned_keep:
+                return (1, 0)  # txlog carried by a live boundary snapshot
+            tx = f"{txdir}/{sid}.parquet"
+            return (1, int(_fsio.exists(tx) and (dry_run or _fsio.delete_dir(tx))))
 
-            n_parts = max(1, min(len(candidates) // 8, self.spark.sparkContext.defaultParallelism))
-            for snaps, logs in (
-                self.spark.sparkContext.parallelize(candidates, n_parts).map(_reap).collect()
-            ):
-                summary.snapshots_deleted += snaps
-                summary.txlogs_deleted += logs
-        else:
-            for sid in candidates:
-                if _old_snap(sid):
-                    if dry_run:
-                        summary.snapshots_deleted += 1
-                    else:
-                        try:
-                            fmt.delete_snapshot(self.root, sid)
-                            summary.snapshots_deleted += 1
-                        except OSError:
-                            continue
-                    if sid in pruned_keep:
-                        continue  # txlog carried by a live boundary snapshot
-                    tx = _dp(self.root, "txlogs", f"{sid}.parquet")
-                    if fsio.exists(tx):
-                        if dry_run or fsio.delete_dir(tx):
-                            summary.txlogs_deleted += 1
+        candidates = [s for s in fmt.list_snapshot_ids(self.root) if s not in live]
+        for snaps, logs in self._map_names(_reap, candidates):
+            summary.snapshots_deleted += snaps
+            summary.txlogs_deleted += logs
         # orphan txlogs: their snapshot file is already gone (expired +
-        # reclaimed in an earlier GC) so the loop above never sees them;
+        # reclaimed in an earlier GC) so the reap above never sees them;
         # enumerate txlogs/ directly and apply the same keep rules.
-        # Like the snapshot reap, large backlogs age-check + delete per
-        # candidate inside executor tasks — the NAME list (already
-        # driver-side) is all that ships.
         all_snap_ids = set(fmt.list_snapshot_ids(self.root))
         orphan_tx = [
             name
             for name in fsio.list_child_names(_dp(self.root, "txlogs"))
-            if name.removesuffix(".parquet") not in live_snaps
+            if name.removesuffix(".parquet") not in live
             and name.removesuffix(".parquet") not in pruned_keep
             and name.removesuffix(".parquet") not in all_snap_ids
         ]
@@ -1658,7 +1540,7 @@ class Repository:
         # drop unreferenced manifest files.  Liveness is a driver-side
         # set test on top-level NAMES (live_manifests is bounded by the
         # live snapshots' manifest lists, which GC already holds); the
-        # age-check + delete of the dead ones parallelizes.
+        # age-check + delete of the dead ones goes through _map_names.
         mdir = _dp(self.root, "manifests")
         live_tops = {m.split("/", 2)[1] for m in live_manifests if m.startswith("manifests/")}
         dead = [

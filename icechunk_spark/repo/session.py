@@ -1319,9 +1319,7 @@ class Session:
                     "ForkSession (eager staging)"
                 )
             if rows:
-                _write_parquet_rows(
-                    _dp(self.root, rel), rows, _PAYLOAD_ARROW_SCHEMA
-                )
+                _write_parquet_rows(_dp(self.root, rel), rows, _payload_arrow_schema())
             mrel = os.path.join(
                 "staging", self.session_id, f"m{len(self._staged):05d}.parquet"
             )
@@ -2083,8 +2081,6 @@ class Session:
         """A picklable writer session for cooperative multi-writer jobs
         (session.py:fork / ForkSession).  Forks stage independently;
         ``merge`` folds their staged manifests back before one commit."""
-        if self.has_uncommitted_changes() and self._node_ops:
-            pass  # node table is copied; chunk staging stays separate
         return ForkSession(
             spark=self.spark,
             root=self.root,
@@ -2203,14 +2199,6 @@ class ForkSession(Session):
         self._config_override = None
 
 
-def _arrow_fs(path: str):
-    import pyarrow.fs as pafs
-
-    if "://" in path:
-        return pafs.FileSystem.from_uri(path)
-    return pafs.LocalFileSystem(), path
-
-
 def _manifest_arrow_schema():
     import pyarrow as pa
 
@@ -2251,19 +2239,16 @@ def _txlog_arrow_schema():
     )
 
 
-_PAYLOAD_ARROW_SCHEMA = None  # resolved lazily (pyarrow import cost)
-
-
 def _write_parquet_rows(path: str, rows: list[dict], schema) -> None:
     """Write rows as a single-part parquet DIRECTORY (the same layout
     Spark's coalesce(1).write.parquet produces) using only pyarrow —
-    usable inside executors where no SparkSession exists."""
+    usable inside executors where no SparkSession exists.  The path
+    resolves through fsio._fs_path, which maps Hadoop schemes (s3a://)
+    that pyarrow does not know."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    if schema is None:
-        schema = _payload_arrow_schema()
-    fs, p = _arrow_fs(path)
+    fs, p = fsio._fs_path(path)
     fs.create_dir(p, recursive=True)
     keyed = [
         {k: r.get(k) for k in schema.names} for r in rows

@@ -127,3 +127,41 @@ def test_fork_merge_overlap_is_merge_order_wins(spark, tmp_path):
     w2.merge(g2, g1)  # reversed order -> g1 wins
     w2.commit("overlap2")
     assert repo.readonly_session().get_chunk_bytes("/a", "0") == b"G1" * 512
+
+
+def test_pyarrow_parquet_write_maps_hadoop_schemes(tmp_path, monkeypatch):
+    """The pure-pyarrow parquet writer (node-only commit txlogs, the
+    executor-side fork buffer flush) must resolve ``s3a://`` data roots
+    through ``fsio._fs_path``: pyarrow itself rejects the Hadoop scheme.
+    The mapping is stubbed onto a local directory so no object store is
+    contacted."""
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+
+    from icechunk_spark.repo import fsio
+    from icechunk_spark.repo import session as sess
+
+    real = fsio._fs_path
+
+    def fake(path):
+        if path.startswith("s3a://bucket/"):
+            return pafs.LocalFileSystem(), str(tmp_path / path[len("s3a://bucket/"):])
+        return real(path)
+
+    monkeypatch.setattr(fsio, "_fs_path", fake)
+    sess._write_parquet_rows(
+        "s3a://bucket/txlogs/s1.parquet",
+        [{"node_id": "n", "chunk_key": None, "op": "create"}],
+        sess._txlog_arrow_schema(),
+    )
+    sess._write_parquet_rows(
+        "s3a://bucket/chunks/ab/c1",
+        [{"chunk_id": "c1", "payload": b"xy"}],
+        sess._payload_arrow_schema(),
+    )
+    assert pq.read_table(tmp_path / "txlogs" / "s1.parquet").to_pylist() == [
+        {"node_id": "n", "chunk_key": None, "op": "create"}
+    ]
+    assert pq.read_table(tmp_path / "chunks" / "ab" / "c1").to_pylist() == [
+        {"chunk_id": "c1", "payload": b"xy"}
+    ]

@@ -16,13 +16,24 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+# AQE off, and the file-index location printed in full: Spark cuts
+# plan metadata at spark.sql.maxMetadataStringLength (default 100), so
+# with a long temp-dir path the pinned directory names would fall off
+PLAN_CONF = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.maxMetadataStringLength": "100000",
+}
+
+
 def _no_aqe_plan(spark, fn):
-    old = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    old = {k: spark.conf.get(k) for k in PLAN_CONF}
+    for k, v in PLAN_CONF.items():
+        spark.conf.set(k, v)
     try:
         return plan_of(fn(spark, SF_DIR))
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
+        for k, v in old.items():
+            spark.conf.set(k, v)
 
 
 def test_q5_plan_prunes_orders_to_one_year_and_elides_fact_exchanges(spark):

@@ -45,12 +45,22 @@ def test_tight_plan_prunes_to_one_year_and_elides_exchanges(spark):
     """PartitionFilters must pin BOTH fact scans to exactly the 1996
     directory while the bucket layout elides both fact exchanges —
     the composed layout earning its keep at tight selectivity."""
-    old = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    # AQE off, and the file-index location printed in full: Spark cuts
+    # plan metadata at spark.sql.maxMetadataStringLength (default 100),
+    # so with a long temp-dir path the pinned directory names would
+    # fall off
+    conf = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.maxMetadataStringLength": "100000",
+    }
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
     try:
         plan = plan_of(q3_partitioned_tight(spark, SF_DIR))
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
+        for k, v in old.items():
+            spark.conf.set(k, v)
     # the strongest pin: each fact's file index is pruned to exactly
     # ONE year directory at planning time
     assert "InMemoryFileIndex(1 paths)" in plan and "/lineitem/l_year=1996]" in plan, plan

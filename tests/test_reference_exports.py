@@ -477,94 +477,196 @@ def test_compaction_preserves_split_layout(spark, tmp_path):
         assert ro.get_chunk_bytes("/a", str(i)) == bytes([i]) * 4096
 
 
-def test_parallel_snapshot_reachability_matches_serial(spark, tmp_path):
-    """Above the parallel threshold, _reachable_snapshots builds the
-    parent graph with an executor-parallel read; the result must equal
-    the serial ref-walk, including tag-only reachability and orphans
-    excluded."""
+def _parent_map(repo) -> dict:
+    """snapshot id -> parent id over every ref's history, walked with
+    the public ``ancestry()``: the oracle for the history-graph helpers."""
+    out: dict = {}
+    refs = [{"branch": b} for b in repo.list_branches()]
+    refs += [{"tag": t} for t in repo.list_tags()]
+    for ref in refs:
+        for s in repo.ancestry(**ref):
+            if s.id in out:
+                break
+            out[s.id] = s.parent_id
+    return out
+
+
+@pytest.fixture(scope="module")
+def history_template(spark, tmp_path_factory):
+    """A history with every shape the graph helpers must handle:
+
+    * main: root <- m1 <- m2 <- m3 <- m4, each commit writing one native
+      chunk (m2 and m4 overwrite m1's and m3's chunk);
+    * a tag-only chain: ``keep`` -> s2 <- s1 <- m2 (its branch deleted),
+      plus s3 past the tag, reachable from no ref;
+    * an orphan txlog: a txlog whose snapshot file does not exist.
+
+    Expiring everything older than now drops m1..m3 and s1, so m4 and s2
+    become expiration boundaries that carry txlogs.  Tests copy the
+    template (mtimes preserved) instead of rebuilding it."""
+    import shutil
+
+    from icechunk_spark.repo.format import new_id
+
+    root = str(tmp_path_factory.mktemp("history") / "r")
+    repo = ics.Repository.create(spark, root)
+    ids: dict = {}
+
+    def commit(branch, name, key, fill):
+        with repo.transaction(branch, message=name) as s:
+            if name == "m1":
+                s.create_array("/a", shape=[16], chunk_shape=[4])
+            s.set_chunk_bytes("/a", key, bytes([fill]) * 1024)
+        ids[name] = repo.lookup_branch(branch)
+
+    commit("main", "m1", "0", 1)
+    commit("main", "m2", "0", 2)
+    repo.create_branch("feat", ids["m2"])
+    commit("feat", "s1", "2", 11)
+    commit("feat", "s2", "2", 12)
+    repo.create_tag("keep", ids["s2"])
+    commit("feat", "s3", "3", 13)
+    repo.delete_branch("feat")
+    commit("main", "m3", "1", 3)
+    commit("main", "m4", "1", 4)
+    ids["root"] = next(
+        s.id for s in repo.ancestry(branch="main") if s.parent_id is None
+    )
+    ids["orphan"] = new_id()
+    shutil.copytree(
+        f"{root}/txlogs/{ids['m1']}.parquet", f"{root}/txlogs/{ids['orphan']}.parquet"
+    )
+    return root, ids
+
+
+@pytest.fixture(params=["driver", "executor"])
+def history(request, spark, tmp_path, monkeypatch, history_template):
+    """A fresh copy of the template history, with ``Repository._map_names``
+    forced onto the executor side (threshold 1) for ``executor``."""
+    import shutil
+
     from icechunk_spark.repo.repository import Repository
 
+    if request.param == "executor":
+        monkeypatch.setattr(Repository, "_PARALLEL_SNAPSHOT_READ_MIN", 1)
+    src, ids = history_template
     root = str(tmp_path / "r")
-    repo = ics.Repository.create(spark, root)
-    for i in range(3):
-        with repo.transaction(message=f"c{i}") as s:
-            s.create_group(f"/g{i}")
-    repo.create_tag("keep", repo.lookup_branch("main"))
-    with repo.transaction(message="tip") as s:
-        s.create_group("/tip")
-    serial = set(repo._parent_map().keys())
-    old_min = Repository._PARALLEL_SNAPSHOT_READ_MIN
-    Repository._PARALLEL_SNAPSHOT_READ_MIN = 1  # force the parallel path
+    shutil.copytree(src, root)
+    return request.param, ics.Repository.open(spark, root), ids
+
+
+def _names(root: str, sub: str) -> set:
+    import os
+
+    if sub != "chunks":
+        return set(os.listdir(f"{root}/{sub}"))
+    return {
+        f"{shard}/{name}"
+        for shard in os.listdir(f"{root}/chunks")
+        for name in os.listdir(f"{root}/chunks/{shard}")
+    }
+
+
+def _count_jobs(spark, fn):
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"history-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
     try:
-        parallel = repo._reachable_snapshots()
+        out = fn()
     finally:
-        Repository._PARALLEL_SNAPSHOT_READ_MIN = old_min
-    assert parallel == serial
-    # GC over the parallel path still works end to end
-    Repository._PARALLEL_SNAPSHOT_READ_MIN = 1
-    try:
-        summary = repo.garbage_collect(dry_run=True, older_than_seconds=0)
-    finally:
-        Repository._PARALLEL_SNAPSHOT_READ_MIN = old_min
-    assert summary.snapshots_deleted == 0  # everything reachable
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_expire_parallel_graph_matches_serial(spark, tmp_path):
-    """Forcing the executor-parallel snapshot graph, expire_snapshots
-    must expire exactly what the serial ancestry walk expires, and a
-    rebase across the pruned gap must still see carried txlogs."""
-    from icechunk_spark.repo.repository import Repository
-
-    root = str(tmp_path / "r")
-    repo = ics.Repository.create(spark, root)
-    ids = []
-    for i in range(5):
-        with repo.transaction(message=f"c{i}") as s:
-            s.create_group(f"/g{i}")
-        ids.append(repo.lookup_branch("main"))
-    old_min = Repository._PARALLEL_SNAPSHOT_READ_MIN
-    Repository._PARALLEL_SNAPSHOT_READ_MIN = 1  # force the parallel path
-    try:
-        # everything but the tip is older than cutoff=now
-        expired = repo.expire_snapshots(older_than_seconds=0)
-    finally:
-        Repository._PARALLEL_SNAPSHOT_READ_MIN = old_min
-    assert expired == set(ids[:-1]), (expired, ids)
-    tip = repo.lookup_snapshot(repo.lookup_branch("main"))
-    # tip re-parented onto the root with the dropped commits carried
-    assert tip.parent_id is not None
-    # the dropped commits are carried exactly (design-doc 016)
-    assert set(tip.pruned_ancestor_tx_logs) == set(ids[:-1])
-    assert repo.lookup_snapshot(tip.parent_id).parent_id is None
+def test_snapshot_reachability_matches_ancestry(history):
+    """_reachable_snapshots (one graph read + _chain per ref) equals the
+    ancestry() oracle in both dispatch modes: the tag-only chain is
+    reachable, the dangling s3 is not."""
+    _mode, repo, ids = history
+    live = repo._reachable_snapshots()
+    oracle = _parent_map(repo)
+    assert set(live) == set(oracle)
+    assert {i: n.parent_id for i, n in live.items()} == oracle
+    assert {ids["s1"], ids["s2"]} <= set(live)
+    assert ids["s3"] not in live
 
 
-def test_gc_parallel_snapshot_reaping_matches_serial(spark, tmp_path):
-    """Forcing the parallel reap path, GC deletes exactly the expired
-    unreachable snapshots (+ their txlogs) that the serial loop would."""
-    from icechunk_spark.repo.repository import Repository
+def test_expire_matches_ancestry_oracle(spark, history):
+    """expire_snapshots expires exactly the non-tip, non-root snapshots
+    of every ref's chain, re-parents both boundaries onto the root with
+    the dropped txlogs carried in order (design-doc 016), and runs a
+    Spark job only on the executor side."""
+    mode, repo, ids = history
+    oracle = _parent_map(repo)
+    tips = {repo.lookup_branch("main"), repo.lookup_tag("keep")}
+    expected = {i for i, p in oracle.items() if p is not None} - tips
+    expired, n_jobs = _count_jobs(spark, lambda: repo.expire_snapshots(older_than_seconds=0))
+    assert expired == expected == {ids[k] for k in ("m1", "m2", "m3", "s1")}
+    assert (n_jobs == 0) == (mode == "driver"), n_jobs
+    m4, s2 = repo.lookup_snapshot(ids["m4"]), repo.lookup_snapshot(ids["s2"])
+    assert m4.parent_id == s2.parent_id == ids["root"]
+    assert list(m4.pruned_ancestor_tx_logs) == [ids["m1"], ids["m2"], ids["m3"]]
+    assert list(s2.pruned_ancestor_tx_logs) == [ids["m1"], ids["m2"], ids["s1"]]
+    assert set(_parent_map(repo)) == {ids["root"], ids["m4"], ids["s2"]}
 
-    root = str(tmp_path / "r")
-    repo = ics.Repository.create(spark, root)
-    for i in range(4):
-        with repo.transaction(message=f"c{i}") as s:
-            s.create_group(f"/g{i}")
+
+def test_gc_reaps_exact_sets(history):
+    """After expiration, GC deletes exactly the unreachable snapshots,
+    and the surviving txlogs/, manifests/ and chunks/ names are exactly
+    what the live snapshots need (their own and carried txlogs, their
+    manifests, the chunk files those manifests name), in both dispatch
+    modes.  A dry run reports the same counts and changes nothing."""
+    import pyarrow.parquet as pq
+
+    _mode, repo, ids = history
+    root = repo.root
     repo.expire_snapshots(older_than_seconds=0)
-    old_min = Repository._PARALLEL_SNAPSHOT_READ_MIN
-    Repository._PARALLEL_SNAPSHOT_READ_MIN = 1
-    try:
-        dry = repo.garbage_collect(dry_run=True, older_than_seconds=0)
-        real = repo.garbage_collect(dry_run=False, older_than_seconds=0)
-    finally:
-        Repository._PARALLEL_SNAPSHOT_READ_MIN = old_min
-    assert dry.snapshots_deleted == real.snapshots_deleted == 3
-    # history still works after the reap
-    assert repo.lookup_snapshot(repo.lookup_branch("main")).message == "c3"
+    live = {i: repo.lookup_snapshot(i) for i in _parent_map(repo)}
+    keep_tx = set(live) | {t for s in live.values() for t in s.pruned_ancestor_tx_logs}
+    live_manifests = {m for s in live.values() for m in s.manifests}
+    before = {sub: _names(root, sub) for sub in ("snapshots", "txlogs", "manifests", "chunks")}
+    expected = {
+        "snapshots": {f"{i}.json" for i in live},
+        "txlogs": {n for n in before["txlogs"] if n.removesuffix(".parquet") in keep_tx},
+        "manifests": {m.split("/", 1)[1] for m in live_manifests},
+        "chunks": {
+            f.split("/", 1)[1]
+            for m in live_manifests
+            for f in pq.read_table(f"{root}/{m}", columns=["file"]).column("file").to_pylist()
+            if f is not None
+        },
+    }
+    # every kind of object has something to reap
+    for sub in expected:
+        assert expected[sub] < before[sub], sub
+    assert f"{ids['orphan']}.parquet" not in expected["txlogs"]
+    assert {f"{ids[k]}.parquet" for k in ("m1", "m2", "m3", "s1")} <= expected["txlogs"]
+
+    dry = repo.garbage_collect(dry_run=True, older_than_seconds=0)
+    assert {sub: _names(root, sub) for sub in before} == before
+    real = repo.garbage_collect(dry_run=False, older_than_seconds=0)
+    assert dry == real
+    after = {sub: _names(root, sub) for sub in before}
+    assert after == expected
+    assert before["snapshots"] - after["snapshots"] == {
+        f"{ids[k]}.json" for k in ("m1", "m2", "m3", "s1", "s3")
+    }
+    assert real.snapshots_deleted == 5
+    assert real.txlogs_deleted == len(before["txlogs"] - after["txlogs"])
+    assert real.manifests_deleted == len(before["manifests"] - after["manifests"])
+    assert real.chunk_files_deleted == len(before["chunks"] - after["chunks"])
+    ro = repo.readonly_session(tag="keep")
+    assert ro.get_chunk_bytes("/a", "2") == bytes([12]) * 1024
+    assert repo.readonly_session().get_chunk_bytes("/a", "1") == bytes([4]) * 1024
 
 
 def test_walk_live_resolves_ids_missing_from_stale_graph(spark, tmp_path):
-    """A ref tip absent from the (stale) parallel parent graph must be
-    resolved with a fresh read — truncating reachability there would
-    hand live history to GC."""
+    """A ref tip absent from the (stale) snapshot graph must be resolved
+    by _chain with a fresh read, and memoised into the graph —
+    truncating the chain there would hand live history to GC."""
     repo = ics.Repository.create(spark, str(tmp_path / "r"))
     ids = []
     for i in range(3):
@@ -572,8 +674,10 @@ def test_walk_live_resolves_ids_missing_from_stale_graph(spark, tmp_path):
             s.create_group(f"/g{i}")
         ids.append(repo.lookup_branch("main"))
     root_id = next(s.id for s in repo.ancestry(branch="main") if s.parent_id is None)
-    full = repo._parent_map()
+    graph = repo._snapshot_graph()
+    assert {i: n.parent_id for i, n in graph.items()} == _parent_map(repo)
     # simulate a tip that landed after the graph was read
-    stale = {k: v for k, v in full.items() if k != ids[-1]}
-    live = repo._walk_live([ids[-1]], stale)
-    assert live == set(ids) | {root_id}
+    del graph[ids[-1]]
+    chain = repo._chain(graph, ids[-1])
+    assert [n.id for n in chain] == ids[::-1] + [root_id]
+    assert graph[ids[-1]].parent_id == ids[-2]
