@@ -36,15 +36,21 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from icechunk_spark.repo.format import ArrayMeta, data_path
+from icechunk_spark.repo.manifests import ChunkRange
 
 CHUNK_FILE_SCHEMA_SUFFIX = (
     "chunk_key string, c0 int, c1 int, c2 int, c3 int, chunk_id string, "
     "n_bytes bigint, payload binary"
 )
+
+#: the payload columns every chunk file has (encode dirs add the
+#: manifest columns, buffer flushes write only these); pinned on every
+#: Spark payload read so it skips the footer schema-inference job
+PAYLOAD_SCHEMA = "chunk_id string, payload binary"
 
 
 def coord_cols(ndim: int) -> list[str]:
@@ -185,15 +191,15 @@ def staged_manifest_from_chunk_dir(
     )
 
 
-def slice_chunk_filter(meta: ArrayMeta, slices: list[tuple[int, int]] | None) -> Column | None:
-    """Chunk-grid pruning predicate over c0..c3 for a coordinate slice."""
+def slice_chunk_range(meta: ArrayMeta, slices: list[tuple[int, int]] | None) -> ChunkRange | None:
+    """The chunk range of a coordinate slice: per dimension, the
+    inclusive chunk indices ``[start // cs, (stop - 1) // cs]``."""
     if slices is None:
         return None
-    cond = F.lit(True)
-    for d, (start, stop) in enumerate(slices):
-        cs = meta.chunk_shape[d]
-        cond = cond & (F.col(f"c{d}") >= start // cs) & (F.col(f"c{d}") <= (max(stop - 1, start)) // cs)
-    return cond
+    return tuple(
+        (start // cs, max(stop - 1, start) // cs)
+        for (start, stop), cs in zip(slices, meta.chunk_shape)
+    )
 
 
 def decode_chunks_to_rows(
@@ -203,35 +209,27 @@ def decode_chunks_to_rows(
     meta: ArrayMeta,
     slices: list[tuple[int, int]] | None = None,
     vcc_map: dict[str, str] | None = None,
-    files: list[str] | None = None,
+    *,
+    files: list[str],
 ) -> DataFrame:
     """Unpack chunk payloads back into (i0..ik, value) rows.
     ``vcc_map`` (name -> url_prefix) resolves ``vcc://`` relative
     virtual refs inside executor tasks (design-doc 014).
 
-    ``files`` (optional) is the chunk-file list to open; a SUPERSET of
-    the live files is harmless (extra payload rows simply find no
-    match in the left join on chunk_id), which lets callers list
-    files from a column-pruned pre-dedup manifest scan instead of
-    executing the full latest-row-per-chunk window here — that
-    default path below re-runs the caller's whole resolve plan just
-    to enumerate files (measured 2.3 s of the sf0.1 roundtrip read)."""
+    ``files`` is the chunk-file list to open; a SUPERSET of the live
+    files is harmless (extra payload rows simply find no match in the
+    left join on chunk_id), so callers list them from manifest
+    summaries instead of executing the resolve plan to enumerate them.
+    The payload schema is pinned, so the scan infers nothing."""
     ndim = len(meta.shape)
-    if files is None:
-        files = [
-            r["file"]
-            for r in manifest.select("file").distinct().collect()
-            if r["file"] is not None
-        ]
-    else:
-        files = [f for f in files if f is not None]
+    files = [f for f in files if f is not None]
     refs = manifest.select(
         "chunk_key", "chunk_id", "is_virtual", "vpath", "voffset", "vlength", "inline",
         "vchecksum",
     )
     if files:
-        payloads = spark.read.parquet(*[data_path(root, f) for f in files]).select(
-            "chunk_id", "payload"
+        payloads = spark.read.schema(PAYLOAD_SCHEMA).parquet(
+            *[data_path(root, f) for f in files]
         )
         joined = refs.join(payloads, "chunk_id", "left")
     else:

@@ -18,6 +18,29 @@ node_id (so `move` never rewrites manifests — same reason icechunk
 keys manifests by NodeId), with materialized chunk-grid coordinates
 c0..c3 as plain int columns so slice pruning pushes down to the
 parquet scan.
+
+Snapshot doc (``snapshots/<id>.json``, one JSON object, optionally
+zlib-compressed behind the ``ICZ1`` magic)::
+
+    {"id", "parent_id", "message", "metadata", "written_at", "seq",
+     "manifests": [relpath, ...],            # oldest first; later shadow
+     "nodes": {path: node dict},
+     "pruned_ancestor_tx_logs": [id, ...],    # design-doc 016
+     "manifest_summaries": {relpath: {        # additive; {} when absent
+         "extents": [[lo, hi] | null] * 4,    # c0..c3 min/max; null = no values
+         "refs": n,                           # manifest row count
+         "files": [chunk-file relpath, ...]}},
+     ...unknown top-level keys of a future writer (design-doc 015)}
+
+``manifest_summaries`` is the analog of icechunk's ``ManifestRef {
+object_id, extents }`` (design-doc 005): readers plan an array read —
+which manifests to open and which payload files to join — from it
+alone.  A summary is looked up only for relpaths listed in
+``manifests``; a listed manifest without one is always kept and its
+payload files come from a scan.  Manifest files are immutable with
+unique ids, so a summary can never describe different rows than its
+file holds.  ``files`` may over-list (a harmless superset) but never
+under-lists.
 """
 
 from __future__ import annotations
@@ -161,6 +184,10 @@ class SnapshotInfo:
     # after the snapshots themselves are reclaimed.  Additive field:
     # old snapshot docs parse fine (default []).
     pruned_ancestor_tx_logs: list[str] = field(default_factory=list)
+    # relpath -> {"extents", "refs", "files"} per manifest written by
+    # this version (see the module docstring).  Additive: old docs
+    # parse with {} and every manifest is then kept and scanned.
+    manifest_summaries: dict[str, dict[str, Any]] = field(default_factory=dict)
     # Reserved extensibility (design-docs/015, "extra data in
     # manifests and snapshots"): top-level JSON keys this version does
     # not know are collected here on read and re-emitted AT TOP LEVEL
@@ -312,12 +339,16 @@ def inspect_metadata_file(root: "str | Storage", relpath: str) -> dict[str, Any]
         import pyarrow.dataset as ds
         import pyarrow.parquet as pq
 
-        dataset = ds.dataset(data_path(s, relpath), format="parquet")
+        from icechunk_spark.repo import fsio
+
+        fs, p = fsio._fs_path(data_path(s, relpath))
+        dataset = ds.dataset(p, filesystem=fs, format="parquet")
         cols = set(dataset.schema.names)
         files = list(dataset.files)
         comp = None
         if files:
-            md = pq.ParquetFile(files[0]).metadata
+            with fs.open_input_file(files[0]) as f:
+                md = pq.ParquetFile(f).metadata
             if md.num_row_groups:
                 comp = md.row_group(0).column(0).compression
         out["format"] = "parquet"

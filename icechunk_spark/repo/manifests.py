@@ -7,16 +7,76 @@ re-expression of icechunk's manifest-split design, design-docs/005).
 sorted file.  Resolution is a window-dedup — a single shuffle on
 (node_id, chunk_key) — and chunk-grid pruning happens BEFORE the
 shuffle via plain int columns c0..c3 that push down to parquet.
+
+Pruning rules (one rule, ``prune_manifest_paths``, shared by every
+reader: ``resolve_manifests``, ``resolve_manifest_rows_local``, the
+session's payload-file list and ``write_array_df``):
+
+- a read is described by ONE :data:`ChunkRange` (per-dimension
+  inclusive chunk-index bounds, or None for the whole array); its
+  row filter (``chunk_range_filter``) and its manifest-file test
+  (``_may_hold``) both derive from it, so they cannot disagree;
+- node: a split file of another node (``/__node=<id>/`` in its path)
+  is skipped; unsplit files may hold any node and are kept;
+- summary: a listed manifest whose snapshot summary has no rows, or
+  whose extents miss the range in some dimension, is skipped (rows
+  with a NULL coordinate never pass a range filter on it either);
+- a listed manifest WITHOUT a summary (older writers, hand-appended
+  files) is always kept, and its payload files come from a scan.
+
+``write_manifests`` builds the summaries in the write's own job: an
+``Observation`` collects the distinct payload files per output file,
+and the extents and row counts come from the written parquet footers.
+A summary's ``files`` may over-list but must never under-list: a read
+opens only the payload files its kept summaries name.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from icechunk_spark.repo import fsio
 from icechunk_spark.repo.format import MANIFEST_SCHEMA, SnapshotInfo, data_path, new_id
+
+#: per-dimension inclusive chunk-index bounds ``((lo, hi), ...)`` over
+#: c0, c1, ... of one read or lookup; None means the whole array
+ChunkRange = tuple[tuple[int, int], ...]
+
+
+def chunk_range_filter(rng: ChunkRange | None) -> Column | None:
+    """The c0..c3 row predicate of a chunk range (pushes down to the
+    parquet scan)."""
+    if rng is None:
+        return None
+    cond = F.lit(True)
+    for d, (lo, hi) in enumerate(rng):
+        cond = cond & (F.col(f"c{d}") >= lo) & (F.col(f"c{d}") <= hi)
+    return cond
+
+
+def key_chunk_range(chunk_key: str) -> ChunkRange | None:
+    """The one-chunk range of a ``"i.j.k"`` chunk key; None when the key
+    does not spell grid coordinates (then only the key string filters)."""
+    try:
+        coords = [int(x) for x in chunk_key.split(".")]
+    except ValueError:
+        return None
+    return tuple((c, c) for c in coords) if 0 < len(coords) <= 4 else None
+
+
+def _may_hold(summary: dict, rng: ChunkRange | None) -> bool:
+    """Whether a summarized manifest can hold a row of ``rng``."""
+    if not summary["refs"]:
+        return False
+    if rng is None:
+        return True
+    for ext, (lo, hi) in zip(summary["extents"], rng):
+        if ext is None or ext[1] < lo or ext[0] > hi:
+            return False
+    return True
 
 
 def manifest_dir(root: str) -> str:
@@ -79,22 +139,24 @@ def resolve_manifests(
     root: str,
     snap: SnapshotInfo,
     node_id: str | None = None,
-    chunk_filter: Column | None = None,
+    chunk_range: ChunkRange | None = None,
     with_extra_columns: bool = False,
 ) -> DataFrame:
     """Live chunk refs at a snapshot: latest row per (node_id,
-    chunk_key), tombstones dropped.  ``chunk_filter`` (over c0..c3)
-    prunes before the dedup shuffle and pushes down to the scan."""
+    chunk_key), tombstones dropped.  ``chunk_range`` prunes manifest
+    files by their summaries, then rows (over c0..c3) before the dedup
+    shuffle, pushed down to the scan."""
     df = read_manifest_files(
         spark,
         root,
-        prune_manifest_paths(snap.manifests, node_id),
+        prune_manifest_paths(snap.manifests, node_id, snap.manifest_summaries, chunk_range),
         with_extra_columns=with_extra_columns,
     )
     if node_id is not None:
         df = df.filter(F.col("node_id") == node_id)
-    if chunk_filter is not None:
-        df = df.filter(chunk_filter)
+    flt = chunk_range_filter(chunk_range)
+    if flt is not None:
+        df = df.filter(flt)
     w = Window.partitionBy("node_id", "chunk_key").orderBy(F.desc("seq"))
     return (
         df.withColumn("__rn", F.row_number().over(w))
@@ -103,14 +165,19 @@ def resolve_manifests(
     )
 
 
-def write_manifest(df: DataFrame, root: str, n_files: int = 1) -> str:
+def write_manifest(
+    df: DataFrame, root: str, n_files: int = 1
+) -> tuple[list[str], dict[str, dict]]:
     """Write manifest rows as a new immutable manifest file (dir of
-    parquet parts); returns the snapshot-relative path."""
+    parquet parts); returns ``([relpath], {relpath: summary})``."""
     rel = os.path.join("manifests", f"{new_id()}.parquet")
     out = df.select(*_manifest_out_columns(df))
     writer = out.repartition(n_files) if n_files else out
-    writer.write.parquet(data_path(root, rel))
-    return rel
+    full = data_path(root, rel)
+    seen = _observed_write(writer, [], lambda o: o.write.parquet(full))
+    # an empty write may leave no part file: the file then has no rows
+    stats = _footer_stats(full, rel) or {rel: _no_rows()}
+    return [rel], _with_files(stats, {rel: {f for (f,) in seen}})
 
 
 def write_manifests(
@@ -119,7 +186,7 @@ def write_manifests(
     splitting: dict | None = None,
     n_files: int = 1,
     node_paths: dict[str, str] | None = None,
-) -> list[str]:
+) -> tuple[list[str], dict[str, dict]]:
     """Write manifest rows as one or more immutable manifest files.
 
     With ``splitting`` (the persisted form of the reference's
@@ -134,12 +201,11 @@ def write_manifests(
     (``partitionBy`` on a copied node column + a range-ordered bucket),
     not N driver-side writes.  Buckets are ordered by chunk grid
     coordinates so parquet min/max stats on c0..c3 still prune inside
-    each split file.  Returns the list of snapshot-relative paths
-    (leaf partition dirs), which ``SnapshotInfo.manifests`` stores and
-    ``resolve_manifests`` prunes by node before reading.
+    each split file.  Returns the snapshot-relative paths (leaf
+    partition dirs), which ``SnapshotInfo.manifests`` stores and
+    ``resolve_manifests`` prunes before reading, and their summaries
+    (``SnapshotInfo.manifest_summaries``), built without another job.
     """
-    from icechunk_spark.repo import fsio
-
     splitting = splitting or {}
     # ``is None`` (not falsy) checks: max_refs_per_manifest=0 is a
     # configured value (clamped to the smallest real cap, 1 ref/file),
@@ -150,7 +216,7 @@ def write_manifests(
     max_refs = splitting.get("max_refs_per_manifest")
     rules = splitting.get("rules")
     if not splitting.get("split_by_array") and max_refs is None and not rules:
-        return [write_manifest(df, root, n_files)]
+        return write_manifest(df, root, n_files)
     base = os.path.join("manifests", f"{new_id()}.parquet")
     out = df.select(*_manifest_out_columns(df)).withColumn("__node", F.col("node_id"))
     if rules and node_paths:
@@ -196,24 +262,101 @@ def write_manifests(
     else:
         out = out.withColumn("__split", F.lit(0))
     full = data_path(root, base)
-    out.write.partitionBy("__node", "__split").parquet(full)
-    # partition-dir discovery via the URI-aware bulk plane (fsio), not
-    # os.listdir — data_root may be an object-store URI
-    rels: list[str] = []
-    for nd in fsio.list_child_names(full):
-        if not nd.startswith("__node="):
+    seen = _observed_write(
+        out, ["__node", "__split"], lambda o: o.write.partitionBy("__node", "__split").parquet(full)
+    )
+    files: dict[str, set[str]] = {}
+    for node, split, f in seen:
+        leaf = f"{base}/__node={_escape_partition_value(node)}/__split={split}"
+        files.setdefault(leaf, set()).add(f)
+    stats = _footer_stats(full, base)
+    if not stats:  # empty change set still needs a (single) manifest file
+        if not fsio.exists(full):
+            return [], {}
+        stats = {base: _no_rows()}
+    return sorted(stats), _with_files(stats, files)
+
+
+def _observed_write(out: DataFrame, part_cols: list[str], write) -> set[tuple]:
+    """Run ``write(frame)`` on ``out`` observed by an ``Observation``
+    that collects the distinct ``(*part_cols, file)`` of its rows with a
+    payload file — inside the write's own job, no extra scan."""
+    obs = Observation()
+    key = F.struct(*[F.col(c) for c in part_cols], F.col("file"))
+    write(out.observe(obs, F.collect_set(F.when(F.col("file").isNotNull(), key)).alias("k")))
+    return {tuple(r) for r in obs.get["k"] or ()}
+
+
+def _no_rows() -> dict:
+    return {"extents": [None] * 4, "refs": 0}
+
+
+def _with_files(stats: dict[str, dict | None], files: dict[str, set]) -> dict[str, dict]:
+    """Summaries from footer stats plus the observed payload files; a
+    file whose stats are unknown gets none (readers keep and scan it)."""
+    return {
+        rel: {**st, "files": sorted(files.get(rel, ()))}
+        for rel, st in stats.items()
+        if st is not None
+    }
+
+
+def _footer_stats(full: str, base: str) -> dict[str, dict | None]:
+    """Row count and c0..c3 min/max of each manifest file just written
+    under ``full`` (relpath ``base``): one recursive listing, then the
+    parquet footers of its part files, keyed by the leaf dir's relpath
+    (``base`` itself for an unsplit write).  None for a leaf whose
+    footers lack the coordinate statistics."""
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+
+    fs, p = fsio._fs_path(full)
+    p = p.rstrip("/")
+    try:
+        infos = fs.get_file_info(pafs.FileSelector(p, recursive=True))
+    except (FileNotFoundError, OSError):
+        return {}
+    stats: dict[str, dict | None] = {}
+    for info in infos:
+        name = info.base_name
+        if info.type != pafs.FileType.File or not name.endswith(".parquet") or name[0] in "._":
             continue
-        for sd in fsio.list_child_names(f"{full}/{nd}"):
-            if sd.startswith("__split="):
-                rels.append(f"{base}/{nd}/{sd}")
-    if not rels:  # empty change set still needs a (single) manifest file
-        return [base] if fsio.exists(full) else []
-    return rels
+        sub = info.path[len(p) + 1 :].rpartition("/")[0]
+        if sub and not all(c.startswith(("__node=", "__split=")) for c in sub.split("/")):
+            continue  # not a partition dir of this write
+        rel = f"{base}/{sub}" if sub else base
+        if stats.setdefault(rel, _no_rows()) is None:
+            continue
+        with fs.open_input_file(info.path) as f:
+            md = pq.read_metadata(f)
+        if not _add_footer(stats[rel], md):
+            stats[rel] = None
+    return stats
+
+
+def _add_footer(st: dict, md) -> bool:
+    """Fold one part file's parquet footer into a summary's row count
+    and c0..c3 extents.  False when a row group holds coordinate values
+    without min/max statistics (or lacks a coordinate column)."""
+    names = md.schema.names
+    st["refs"] += md.num_rows
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        for d in range(4):
+            cs = rg.column(names.index(f"c{d}")).statistics if f"c{d}" in names else None
+            if cs is not None and cs.has_min_max:
+                ext = st["extents"][d]
+                st["extents"][d] = (
+                    [cs.min, cs.max] if ext is None else [min(ext[0], cs.min), max(ext[1], cs.max)]
+                )
+            elif cs is None or not cs.has_null_count or cs.null_count != rg.num_rows:
+                return False
+    return True
 
 
 def resolve_manifest_rows_local(
     root,
-    manifests: list[str],
+    snap: SnapshotInfo,
     node_id: str | None = None,
     chunk_key: str | None = None,
 ) -> list[dict]:
@@ -222,21 +365,25 @@ def resolve_manifest_rows_local(
     gateway, so the advertised read-scaling path (pickle a readonly
     session into a UDF, fetch chunk bytes per row) must not launch
     Spark jobs.  Same LSM semantics as ``resolve_manifests``: latest
-    seq per (node_id, chunk_key) wins, tombstones dropped.  Pushdown
-    via pyarrow dataset filters; split manifests prune at file level
-    first (``prune_manifest_paths``)."""
+    seq per (node_id, chunk_key) wins, tombstones dropped.  Manifest
+    files prune first (``prune_manifest_paths`` with the key's chunk
+    range), then pyarrow dataset filters on the key string and its
+    c0..c3 push down to row-group statistics."""
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
-    flt = None
+    rng = key_chunk_range(chunk_key) if chunk_key is not None else None
+    flt = pc.scalar(True)
     if node_id is not None:
-        flt = pc.field("node_id") == node_id
+        flt = flt & (pc.field("node_id") == node_id)
     if chunk_key is not None:
-        k = pc.field("chunk_key") == chunk_key
-        flt = k if flt is None else (flt & k)
+        flt = flt & (pc.field("chunk_key") == chunk_key)
+    for d, (lo, _) in enumerate(rng or ()):
+        flt = flt & (pc.field(f"c{d}") == lo)
     rows: list[dict] = []
-    for rel in prune_manifest_paths(manifests, node_id):
-        dataset = ds.dataset(data_path(root, rel), format="parquet")
+    for rel in prune_manifest_paths(snap.manifests, node_id, snap.manifest_summaries, rng):
+        fs, p = fsio._fs_path(data_path(root, rel))
+        dataset = ds.dataset(p, filesystem=fs, format="parquet")
         rows.extend(dataset.to_table(filter=flt).to_pylist())
     best: dict[tuple[str, str], dict] = {}
     for r in rows:
@@ -258,11 +405,22 @@ def _escape_partition_value(value: str) -> str:
     return "".join(f"%{ord(c):02X}" if c in _HIVE_ESCAPE else c for c in value)
 
 
-def prune_manifest_paths(relpaths: list[str], node_id: str | None) -> list[str]:
-    """File-level pruning for split manifests: when resolving a single
-    node, skip split files belonging to other nodes entirely (unsplit
-    manifests are always kept — they may contain any node)."""
-    if node_id is None:
-        return list(relpaths)
-    marker = f"/__node={_escape_partition_value(node_id)}/"
-    return [p for p in relpaths if "/__node=" not in p or marker in p]
+def prune_manifest_paths(
+    relpaths: list[str],
+    node_id: str | None,
+    summaries: dict[str, dict] | None = None,
+    chunk_range: ChunkRange | None = None,
+) -> list[str]:
+    """File-level pruning (the module docstring's rules): when
+    resolving a single node, skip split files belonging to other nodes
+    (unsplit manifests are kept — they may contain any node); then skip
+    files whose summary shows no row in ``chunk_range``.  Files without
+    a summary are always kept."""
+    summaries = summaries or {}
+    marker = f"/__node={_escape_partition_value(node_id)}/" if node_id is not None else None
+    return [
+        p
+        for p in relpaths
+        if (marker is None or "/__node=" not in p or marker in p)
+        and (p not in summaries or _may_hold(summaries[p], chunk_range))
+    ]

@@ -1662,20 +1662,18 @@ class Repository:
             "node_id", "c0", "c1", "c2", "c3"
         )
         cfg = self.config()
-        splitting = cfg.manifest.splitting if cfg.manifest else None
-        if splitting:
-            # a repo configured with manifest splitting must stay split
-            # through compaction (reference: rewrite_manifests honors
-            # ManifestSplittingConfig, design-docs/005) — collapsing to
-            # a monolith here would undo the layout the config asked for
-            rels = mf.write_manifests(
-                compacted,
-                self.root,
-                splitting=splitting,
-                node_paths={n["node_id"]: p for p, n in tip.nodes.items()},
-            )
-        else:
-            rels = [mf.write_manifest(compacted, self.root, n_files=cfg.manifest_split_files)]
+        # a repo configured with manifest splitting must stay split
+        # through compaction (reference: rewrite_manifests honors
+        # ManifestSplittingConfig, design-docs/005) — collapsing to a
+        # monolith here would undo the layout the config asked for.
+        # The write recomputes the summaries of the new files exactly.
+        rels, summaries = mf.write_manifests(
+            compacted,
+            self.root,
+            splitting=cfg.manifest.splitting if cfg.manifest else None,
+            n_files=cfg.manifest_split_files,
+            node_paths={n["node_id"]: p for p, n in tip.nodes.items()},
+        )
         if commit_method == "amend" and tip.parent_id is None:
             raise RefError("cannot amend the root snapshot; use commit_method='new_commit'")
         if commit_method == "amend":
@@ -1690,6 +1688,7 @@ class Repository:
                 seq=tip.seq,
                 manifests=rels,
                 nodes=tip.nodes,
+                manifest_summaries=summaries,
                 pruned_ancestor_tx_logs=list(tip.pruned_ancestor_tx_logs),
                 # design-docs/015: an amend REWRITES the tip — carry a
                 # future writer's unknown fields through untouched
@@ -1705,6 +1704,7 @@ class Repository:
                 seq=tip.seq + 1,
                 manifests=rels,
                 nodes=tip.nodes,
+                manifest_summaries=summaries,
             )
         fmt.write_snapshot(self.root, snap)
         fmt.update_branch(self.root, branch, snap.id, expected_gen=gen)

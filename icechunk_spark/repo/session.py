@@ -35,10 +35,11 @@ from icechunk_spark.repo import format as fmt
 from icechunk_spark.repo import fsio
 from icechunk_spark.repo import manifests as mf
 from icechunk_spark.repo.arrays import (
+    PAYLOAD_SCHEMA,
     decode_chunks_to_rows,
     encode_array_chunks,
     read_native_payload,
-    slice_chunk_filter,
+    slice_chunk_range,
     staged_manifest_from_chunk_dir,
 )
 from icechunk_spark.repo.errbase import ErrorKind, IcechunkError
@@ -745,7 +746,9 @@ class Session:
         for d in range(ndim):
             inb = inb & (F.col(f"i{d}") >= 0) & (F.col(f"i{d}") < F.lit(int(meta.shape[d])))
         src = df.select(*[f"i{d}" for d in range(ndim)], "value").filter(inb)
-        base_files = mf.prune_manifest_paths(self._base.manifests, meta.node_id)
+        base_files = mf.prune_manifest_paths(
+            self._base.manifests, meta.node_id, self._base.manifest_summaries
+        )
         refs = None
         if base_files or self._staged:
             base = mf.read_manifest_files(self.spark, self.root, base_files)
@@ -768,7 +771,8 @@ class Session:
         """Distributed read of an array region as coordinate rows."""
         meta = self.array_meta(path)
         self._require_regular_grid(meta, "read_array_df")
-        manifest = self._resolved_manifest(meta.node_id, slice_chunk_filter(meta, slices))
+        rng = slice_chunk_range(meta, slices)
+        manifest = self._resolved_manifest(meta.node_id, rng)
         if self._virtual_containers is not None:
             # container scoping is active: refuse the read if any chunk
             # in range points outside an authorized prefix (one cheap
@@ -788,42 +792,37 @@ class Session:
         return decode_chunks_to_rows(
             self.spark, self.root, manifest, meta, slices,
             vcc_map=self._virtual_container_names,
-            files=self._manifest_file_list(
-                meta.node_id, slice_chunk_filter(meta, slices)
-            ),
+            files=self._manifest_file_list(meta.node_id, rng),
         )
 
-    def _manifest_file_list(self, node_id, chunk_filter) -> list[str]:
-        """Distinct chunk-file relpaths that could hold payloads for a
-        read — listed from the column-pruned PRE-dedup manifest scan
-        (+ staged overlays), not the resolved manifest.  A superset is
-        harmless (decode's left join on chunk_id drops payload rows no
-        live ref points at), and skipping the latest-row-per-chunk
-        window here avoids executing the whole resolve plan a second
-        time per read just to enumerate files (r14: 2.3 s of the
-        sf0.1 roundtrip read was this hidden job)."""
-        df = mf.read_manifest_files(
-            self.spark,
-            self.root,
-            mf.prune_manifest_paths(self._base.manifests, node_id),
+    def _manifest_file_list(self, node_id, rng) -> list[str]:
+        """Chunk-file relpaths that may hold payloads for a read of
+        ``rng``: the ``files`` of the kept manifests' snapshot
+        summaries, with no Spark job.  Kept manifests WITHOUT a
+        summary (older writers) and the staged overlay are listed by
+        one column-pruned pre-dedup scan, only when present.  A
+        superset is harmless (decode's left join on chunk_id drops
+        payload rows no live ref points at)."""
+        summaries = self._base.manifest_summaries
+        kept = mf.prune_manifest_paths(self._base.manifests, node_id, summaries, rng)
+        files = {f for m in kept if m in summaries for f in summaries[m]["files"]}
+        unsummarized = [m for m in kept if m not in summaries]
+        staged = self._staged_manifest_df()
+        if not unsummarized and staged is None:
+            return sorted(files)
+        df = mf.read_manifest_files(self.spark, self.root, unsummarized).select(
+            "node_id", "c0", "c1", "c2", "c3", "file"
         )
+        if staged is not None:
+            df = df.unionByName(staged.select(*df.columns))
         if node_id is not None:
             df = df.filter(F.col("node_id") == node_id)
-        if chunk_filter is not None:
-            df = df.filter(chunk_filter)
-        parts = [df.select("file")]
-        staged = self._staged_manifest_df()
-        if staged is not None:
-            s = staged
-            if node_id is not None:
-                s = s.filter(F.col("node_id") == node_id)
-            if chunk_filter is not None:
-                s = s.filter(chunk_filter)
-            parts.append(s.select("file"))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return [r["file"] for r in out.distinct().collect() if r["file"] is not None]
+        flt = mf.chunk_range_filter(rng)
+        if flt is not None:
+            df = df.filter(flt)
+        files.update(r["file"] for r in df.select("file").distinct().collect())
+        files.discard(None)
+        return sorted(files)
 
     def chunk_manifest_df(self, path: str | None = None) -> DataFrame:
         """The live chunk-ref manifest (optionally for one node) as a
@@ -1004,9 +1003,7 @@ class Session:
         if not self._has_spark:  # executor-side unpickled session
             keys = sorted(
                 r["chunk_key"]
-                for r in mf.resolve_manifest_rows_local(
-                    self.root, self._base.manifests, meta.node_id
-                )
+                for r in mf.resolve_manifest_rows_local(self.root, self._base, meta.node_id)
             )
             for k in keys:
                 yield tuple(int(x) for x in k.split("."))
@@ -1046,18 +1043,18 @@ class Session:
         return ChunkType.native
 
     def _point_manifest_rows(self, node_id: str, chunk_key: str) -> list[dict]:
-        """Resolved manifest rows for ONE chunk.  Driver-side this is a
-        pruned Spark scan (read-your-writes via the staged overlay);
+        """Resolved manifest rows for ONE chunk, pruned like a read of
+        that chunk's range (manifest files by their summaries, rows by
+        c0..c3) and filtered on the key string.  Driver-side this is a
+        Spark scan (read-your-writes via the staged overlay);
         executor-side (no JVM gateway) it is a pyarrow point lookup —
         read-only sessions have nothing staged, so base-only resolution
         is exact there."""
         if not self._has_spark:
-            return mf.resolve_manifest_rows_local(
-                self.root, self._base.manifests, node_id, chunk_key
-            )
+            return mf.resolve_manifest_rows_local(self.root, self._base, node_id, chunk_key)
         return [
             r.asDict()
-            for r in self._resolved_manifest(node_id, None)
+            for r in self._resolved_manifest(node_id, mf.key_chunk_range(chunk_key))
             .filter(F.col("chunk_key") == chunk_key)
             .collect()
         ]
@@ -1088,7 +1085,8 @@ class Session:
         if not self._has_spark:  # executor-side: pyarrow point read
             return read_native_payload(_dp(self.root, r["file"]), r["chunk_id"])
         payload = (
-            self.spark.read.parquet(_dp(self.root, r["file"]))
+            self.spark.read.schema(PAYLOAD_SCHEMA)
+            .parquet(_dp(self.root, r["file"]))
             .filter(F.col("chunk_id") == r["chunk_id"])
             .select("payload")
             .collect()
@@ -1301,7 +1299,7 @@ class Session:
             )
         if self._has_spark:
             if rows:
-                local_df(self.spark, rows, "chunk_id string, payload binary").coalesce(
+                local_df(self.spark, rows, PAYLOAD_SCHEMA).coalesce(
                     1
                 ).write.parquet(_dp(self.root, rel))
             self._stage_manifest(local_df(self.spark, refs, MANIFEST_SCHEMA))
@@ -1380,7 +1378,7 @@ class Session:
             )
         return local_df(self.spark, entries, MANIFEST_SCHEMA)
 
-    def _cached_base_manifest(self, node_id, chunk_filter) -> DataFrame:
+    def _cached_base_manifest(self, node_id, rng) -> DataFrame:
         """Resolve (and, when the caching config enables it, persist)
         the base snapshot's manifest.  Caching is keyed per node with
         no chunk filter — pruned reads still filter the cached frame,
@@ -1390,7 +1388,7 @@ class Session:
         doc = self._config_doc()
         caching = (doc or {}).get("caching") or {}
         if int(caching.get("num_chunk_refs", 0) or 0) <= 0:
-            return mf.resolve_manifests(self.spark, self.root, self._base, node_id, chunk_filter)
+            return mf.resolve_manifests(self.spark, self.root, self._base, node_id, rng)
         if not hasattr(self, "_manifest_cache"):
             self._manifest_cache: dict[Any, DataFrame] = {}
         if node_id not in self._manifest_cache:
@@ -1398,7 +1396,8 @@ class Session:
                 self.spark, self.root, self._base, node_id, None
             ).persist()
         base = self._manifest_cache[node_id]
-        return base.filter(chunk_filter) if chunk_filter is not None else base
+        flt = mf.chunk_range_filter(rng)
+        return base.filter(flt) if flt is not None else base
 
     def _drop_manifest_cache(self) -> None:
         """Invalidate (and unpersist) cached base manifests.  MUST run
@@ -1415,11 +1414,12 @@ class Session:
                     pass  # spark may already be stopped at teardown
             cache.clear()
 
-    def _overlay_staged(self, base: DataFrame, node_id, chunk_filter) -> DataFrame:
+    def _overlay_staged(self, base: DataFrame, node_id, rng) -> DataFrame:
         """``base`` plus this transaction's staged and buffered manifest
         rows (filtered like ``base``), pre-dedup.  Seq offsets order the
         layers for a latest-by-seq pick: base < staged (+10**15) <
         buffered (+2*10**15)."""
+        flt = mf.chunk_range_filter(rng)
         for overlay, offset in (
             (self._staged_manifest_df(), 10**15),
             (self._buffer_manifest_df(), 2 * 10**15),
@@ -1429,20 +1429,21 @@ class Session:
             o = overlay.withColumn("seq", F.col("seq") + F.lit(offset))
             if node_id is not None:
                 o = o.filter(F.col("node_id") == node_id)
-            if chunk_filter is not None:
-                o = o.filter(chunk_filter)
+            if flt is not None:
+                o = o.filter(flt)
             base = base.unionByName(o)
         return base
 
-    def _resolved_manifest(self, node_id, chunk_filter) -> DataFrame:
+    def _resolved_manifest(self, node_id, rng) -> DataFrame:
         """Base-snapshot manifest overlaid with staged (uncommitted)
-        writes — read-your-writes inside the transaction."""
-        base = self._cached_base_manifest(node_id, chunk_filter)
+        writes — read-your-writes inside the transaction — pruned to
+        the chunk range ``rng`` (None = all chunks)."""
+        base = self._cached_base_manifest(node_id, rng)
         if not self._staged and not self._chunk_buffer:
             return base
         from pyspark.sql import Window
 
-        union = self._overlay_staged(base, node_id, chunk_filter)
+        union = self._overlay_staged(base, node_id, rng)
         w = Window.partitionBy("node_id", "chunk_key").orderBy(F.desc("seq"))
         return (
             union.withColumn("__rn", F.row_number().over(w))
@@ -1524,18 +1525,9 @@ class Session:
                 parent = fmt.read_snapshot(self.root, tip_id)
             snap_id = new_id()
             staged = self._staged_manifest_df()
-            manifests = list(parent.manifests)
             if staged is not None:
                 staged = staged.persist()  # one scan feeds manifest + txlog
-                seq_base = (parent.seq + 1) * 100_000
-                manifests.extend(
-                    mf.write_manifests(
-                        staged.withColumn("seq", F.col("seq") + seq_base),
-                        self.root,
-                        splitting=((doc or {}).get("manifest") or {}).get("splitting"),
-                        node_paths=self._node_paths(),
-                    )
-                )
+            manifests, summaries = self._manifests_after(parent, staged, doc)
             self._write_txlog(snap_id, staged)
             snap = SnapshotInfo(
                 id=snap_id,
@@ -1546,6 +1538,7 @@ class Session:
                 seq=parent.seq + 1,
                 manifests=manifests,
                 nodes=self._nodes,
+                manifest_summaries=summaries,
             )
             fmt.write_snapshot(self.root, snap)
             try:
@@ -1578,22 +1571,12 @@ class Session:
         self._require_writable()
         self._require_repo_online()
         self._flush_chunk_buffer()
-        doc = self._config_doc()
         parent = self._base
         snap_id = new_id()
         staged = self._staged_manifest_df()
-        manifests = list(parent.manifests)
         if staged is not None:
             staged = staged.persist()
-            seq_base = (parent.seq + 1) * 100_000
-            manifests.extend(
-                mf.write_manifests(
-                    staged.withColumn("seq", F.col("seq") + seq_base),
-                    self.root,
-                    splitting=((doc or {}).get("manifest") or {}).get("splitting"),
-                    node_paths=self._node_paths(),
-                )
-            )
+        manifests, summaries = self._manifests_after(parent, staged, self._config_doc())
         self._write_txlog(snap_id, staged)
         snap = SnapshotInfo(
             id=snap_id,
@@ -1604,6 +1587,7 @@ class Session:
             seq=parent.seq + 1,
             manifests=manifests,
             nodes=self._nodes,
+            manifest_summaries=summaries,
         )
         fmt.write_snapshot(self.root, snap)
         if staged is not None:
@@ -1655,18 +1639,7 @@ class Session:
             raise RefError("session base is not the branch tip; rebase first")
         snap_id = new_id()
         staged = self._staged_manifest_df()
-        manifests = list(tip.manifests)
-        if staged is not None:
-            seq_base = (tip.seq + 1) * 100_000
-            doc = self._config_doc()
-            manifests.extend(
-                mf.write_manifests(
-                    staged.withColumn("seq", F.col("seq") + seq_base),
-                    self.root,
-                    splitting=((doc or {}).get("manifest") or {}).get("splitting"),
-                    node_paths=self._node_paths(),
-                )
-            )
+        manifests, summaries = self._manifests_after(tip, staged, self._config_doc())
         self._write_txlog(snap_id, staged, carry_from=tip_id)
         snap = SnapshotInfo(
             id=snap_id,
@@ -1677,6 +1650,7 @@ class Session:
             seq=tip.seq + 1,
             manifests=manifests,
             nodes=self._nodes,
+            manifest_summaries=summaries,
             pruned_ancestor_tx_logs=list(tip.pruned_ancestor_tx_logs),
             # amend REPLACES the tip: a future writer's unknown fields
             # (design-docs/015) and the expire carry-list must survive
@@ -1701,6 +1675,27 @@ class Session:
         _, tip_id = fmt.branch_tip(self.root, self._branch or "")
         if tip_id != self._base.id:
             self._rebase_onto(tip_id, solver)
+
+    def _manifests_after(
+        self, parent: SnapshotInfo, staged: DataFrame | None, doc: dict | None
+    ) -> tuple[list[str], dict[str, dict]]:
+        """The manifest list and summaries of a snapshot on top of
+        ``parent``: the parent's, plus ``staged`` written as new
+        manifest files (split per the config ``doc``) whose seqs order
+        above every parent row — one write job; the summaries cost no
+        extra job."""
+        manifests = list(parent.manifests)
+        summaries = dict(parent.manifest_summaries)
+        if staged is not None:
+            rels, new = mf.write_manifests(
+                staged.withColumn("seq", F.col("seq") + (parent.seq + 1) * 100_000),
+                self.root,
+                splitting=((doc or {}).get("manifest") or {}).get("splitting"),
+                node_paths=self._node_paths(),
+            )
+            manifests += rels
+            summaries.update(new)
+        return manifests, {m: summaries[m] for m in manifests if m in summaries}
 
     def _node_paths(self) -> dict[str, str]:
         """node_id -> array path for the session's current node set —

@@ -526,8 +526,6 @@ class ChunkStore:
     def getsize(self, key: str) -> int:
         """Byte size of one key WITHOUT fetching chunk payloads —
         native/virtual sizes come from the manifest."""
-        from pyspark.sql import functions as F
-
         path, chunk = self._parse(key)
         if chunk is None:
             return len(self._doc_bytes(self.session._node(path)))
@@ -539,12 +537,7 @@ class ChunkStore:
                 if c.get("is_virtual"):
                     return int(c["vlength"])
                 return len(c["payload"])
-        row = (
-            self.session._resolved_manifest(meta.node_id, None)
-            .filter(F.col("chunk_key") == chunk)
-            .select("n_bytes", "is_virtual", "vlength", "inline")
-            .collect()
-        )
+        row = self.session._point_manifest_rows(meta.node_id, chunk)
         if not row:
             raise RefError(f"no chunk at {key}")
         r = row[0]

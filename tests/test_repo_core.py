@@ -89,10 +89,11 @@ def test_slice_read_prunes(spark, repo):
     assert len(rows) == 16
     assert all(r["i0"] < 4 and r["i1"] >= 4 for r in rows)
     # pruning: only 1 of 4 chunks survives the manifest filter
-    from icechunk_spark.repo.arrays import slice_chunk_filter
+    from icechunk_spark.repo.arrays import slice_chunk_range
+    from icechunk_spark.repo.manifests import chunk_range_filter
 
     meta = s.array_meta("/a")
-    man = s.chunk_manifest_df("/a").filter(slice_chunk_filter(meta, [(0, 4), (4, 8)]))
+    man = s.chunk_manifest_df("/a").filter(chunk_range_filter(slice_chunk_range(meta, [(0, 4), (4, 8)])))
     assert man.count() == 1
 
 

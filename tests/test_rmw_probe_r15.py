@@ -246,6 +246,55 @@ def test_unaligned_write_commit_job_count(spark, root):
     assert {r["value"]: r["count"] for r in got} == {1.0: 64 * 64 - 24 * 24, 2.0: 24 * 24}
 
 
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted under its own job group."""
+    sc = spark.sparkContext
+    group = f"pin-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cold_read_reread_and_lookup_job_counts(spark, root):
+    """A region read plans from the snapshot's manifest summaries: the
+    kept manifests and the payload files to join are known without a
+    Spark job, and the payload scan's schema is pinned.  A cold read
+    to the noop sink runs at most 3 jobs, a reread too (the file-list
+    collect and the footer-inference job made 6), and a one-chunk
+    lookup at most 3 (was 4)."""
+    from icechunk_spark.repo import ManifestConfig, RepositoryConfig
+
+    cfg = RepositoryConfig(manifest=ManifestConfig(splitting={"max_refs_per_manifest": 4}))
+    repo = Repository.create(spark, root, config=cfg)
+    with repo.transaction(message="base") as s:
+        s.create_array("/h", shape=[64, 64], chunk_shape=[16, 16])
+        for ci in range(4):
+            for cj in range(4):
+                s.set_chunk_bytes("/h", f"{ci}.{cj}", np.full(256, ci * 4 + cj, "<f8").tobytes())
+    with repo.transaction(message="update") as s:
+        s.set_chunk_bytes("/h", "1.1", np.full(256, 99.0, "<f8").tobytes())
+    slices = [(8, 40), (8, 40)]
+
+    def noop(session):
+        session.read_array_df("/h", slices=slices).write.format("noop").mode("overwrite").save()
+
+    ro = repo.readonly_session()
+    assert _jobs(spark, lambda: noop(ro)) <= 3
+    assert _jobs(spark, lambda: noop(ro)) <= 3
+    got = repo.readonly_session().read_array_df("/h", slices=slices).groupBy("value").count().collect()
+    assert {r["value"]: r["count"] for r in got} == {
+        0.0: 64, 1.0: 128, 2.0: 64, 4.0: 128, 99.0: 256, 6.0: 128, 8.0: 64, 9.0: 128, 10.0: 64,
+    }
+    box = {}
+    n = _jobs(spark, lambda: box.update(b=repo.readonly_session().get_chunk_bytes("/h", "1.1")))
+    assert n <= 3, n
+    assert box["b"] == np.full(256, 99.0, "<f8").tobytes()
+
+
 def test_partial_write_merges_native_ref_under_uri_root(spark, tmp_path):
     """A URI data root (here file://): the pack's point read of the
     existing native payload resolves the URI like the rest of fsio."""
