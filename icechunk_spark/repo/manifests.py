@@ -24,18 +24,20 @@ session's payload-file list and ``write_array_df``):
 - a listed manifest WITHOUT a summary (older writers, hand-appended
   files) is always kept, and its payload files come from a scan.
 
-``write_manifests`` builds the summaries in the write's own job: an
-``Observation`` collects the distinct payload files per output file,
-and the extents and row counts come from the written parquet footers.
-A summary's ``files`` may over-list but must never under-list: a read
-opens only the payload files its kept summaries name.
+``write_manifests`` builds the summaries after its one write job,
+with no further Spark job: the driver opens the parquet part files it
+just wrote (pyarrow, through ``fsio._fs_path``) and takes the row
+count and c0..c3 extents from their footers and the distinct payload
+files from their ``file`` column.  A summary's ``files`` may over-list
+but must never under-list: a read opens only the payload files its
+kept summaries name.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from icechunk_spark.repo import fsio
@@ -174,10 +176,9 @@ def write_manifest(
     out = df.select(*_manifest_out_columns(df))
     writer = out.repartition(n_files) if n_files else out
     full = data_path(root, rel)
-    seen = _observed_write(writer, [], lambda o: o.write.parquet(full))
+    writer.write.parquet(full)
     # an empty write may leave no part file: the file then has no rows
-    stats = _footer_stats(full, rel) or {rel: _no_rows()}
-    return [rel], _with_files(stats, {rel: {f for (f,) in seen}})
+    return [rel], _known(_written_summaries(full, rel) or {rel: _no_rows()})
 
 
 def write_manifests(
@@ -262,51 +263,28 @@ def write_manifests(
     else:
         out = out.withColumn("__split", F.lit(0))
     full = data_path(root, base)
-    seen = _observed_write(
-        out, ["__node", "__split"], lambda o: o.write.partitionBy("__node", "__split").parquet(full)
-    )
-    files: dict[str, set[str]] = {}
-    for node, split, f in seen:
-        leaf = f"{base}/__node={_escape_partition_value(node)}/__split={split}"
-        files.setdefault(leaf, set()).add(f)
-    stats = _footer_stats(full, base)
-    if not stats:  # empty change set still needs a (single) manifest file
+    out.write.partitionBy("__node", "__split").parquet(full)
+    summaries = _written_summaries(full, base)
+    if not summaries:  # empty change set still needs a (single) manifest file
         if not fsio.exists(full):
             return [], {}
-        stats = {base: _no_rows()}
-    return sorted(stats), _with_files(stats, files)
-
-
-def _observed_write(out: DataFrame, part_cols: list[str], write) -> set[tuple]:
-    """Run ``write(frame)`` on ``out`` observed by an ``Observation``
-    that collects the distinct ``(*part_cols, file)`` of its rows with a
-    payload file — inside the write's own job, no extra scan."""
-    obs = Observation()
-    key = F.struct(*[F.col(c) for c in part_cols], F.col("file"))
-    write(out.observe(obs, F.collect_set(F.when(F.col("file").isNotNull(), key)).alias("k")))
-    return {tuple(r) for r in obs.get["k"] or ()}
+        summaries = {base: _no_rows()}
+    return sorted(summaries), _known(summaries)
 
 
 def _no_rows() -> dict:
-    return {"extents": [None] * 4, "refs": 0}
+    return {"extents": [None] * 4, "refs": 0, "files": []}
 
 
-def _with_files(stats: dict[str, dict | None], files: dict[str, set]) -> dict[str, dict]:
-    """Summaries from footer stats plus the observed payload files; a
-    file whose stats are unknown gets none (readers keep and scan it)."""
-    return {
-        rel: {**st, "files": sorted(files.get(rel, ()))}
-        for rel, st in stats.items()
-        if st is not None
-    }
-
-
-def _footer_stats(full: str, base: str) -> dict[str, dict | None]:
-    """Row count and c0..c3 min/max of each manifest file just written
-    under ``full`` (relpath ``base``): one recursive listing, then the
-    parquet footers of its part files, keyed by the leaf dir's relpath
-    (``base`` itself for an unsplit write).  None for a leaf whose
-    footers lack the coordinate statistics."""
+def _written_summaries(full: str, base: str) -> dict[str, dict | None]:
+    """The summary of each manifest file just written under ``full``
+    (relpath ``base``), keyed by the leaf dir's relpath (``base`` itself
+    for an unsplit write): one recursive listing, then per parquet part
+    its footer (row count, c0..c3 min/max) and the distinct values of
+    its ``file`` column — exactly the payload files its rows name.
+    None for a leaf whose footers lack the coordinate statistics
+    (readers then keep and scan it)."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
     from pyarrow import fs as pafs
 
@@ -317,6 +295,7 @@ def _footer_stats(full: str, base: str) -> dict[str, dict | None]:
     except (FileNotFoundError, OSError):
         return {}
     stats: dict[str, dict | None] = {}
+    files: dict[str, set[str]] = {}
     for info in infos:
         name = info.base_name
         if info.type != pafs.FileType.File or not name.endswith(".parquet") or name[0] in "._":
@@ -328,10 +307,22 @@ def _footer_stats(full: str, base: str) -> dict[str, dict | None]:
         if stats.setdefault(rel, _no_rows()) is None:
             continue
         with fs.open_input_file(info.path) as f:
-            md = pq.read_metadata(f)
-        if not _add_footer(stats[rel], md):
-            stats[rel] = None
+            pf = pq.ParquetFile(f)
+            if not _add_footer(stats[rel], pf.metadata):
+                stats[rel] = None
+                continue
+            seen = files.setdefault(rel, set())
+            for g in range(pf.num_row_groups):  # one row group in memory at a time
+                col = pf.read_row_group(g, columns=["file"], use_threads=False).column(0)
+                seen.update(pc.unique(col).to_pylist())
+    for rel, st in stats.items():
+        if st is not None:
+            st["files"] = sorted(files.get(rel, set()) - {None})
     return stats
+
+
+def _known(summaries: dict[str, dict | None]) -> dict[str, dict]:
+    return {rel: st for rel, st in summaries.items() if st is not None}
 
 
 def _add_footer(st: dict, md) -> bool:

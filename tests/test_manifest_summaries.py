@@ -354,5 +354,6 @@ def test_pyarrow_manifest_reads_map_hadoop_schemes(spark, tmp_path, monkeypatch)
     assert [(r["chunk_key"], r["n_bytes"]) for r in rows] == [("2", 1024)]
     (rel,) = snap.manifests
     assert fmt.inspect_metadata_file(storage, rel)["kind"] == "manifest"
-    stats = mf._footer_stats(fmt.data_path(storage, rel), rel)
-    assert stats == {rel: {k: snap.manifest_summaries[rel][k] for k in ("extents", "refs")}}
+    assert mf._written_summaries(fmt.data_path(storage, rel), rel) == {
+        rel: snap.manifest_summaries[rel]
+    }
