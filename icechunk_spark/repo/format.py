@@ -70,6 +70,21 @@ MANIFEST_SCHEMA = (
 
 TXLOG_SCHEMA = "node_id string, chunk_key string, op string"
 
+
+def arrow_schema(ddl: str):
+    """The pyarrow schema of a DDL string above (``MANIFEST_SCHEMA``,
+    ``TXLOG_SCHEMA``, ``arrays.PAYLOAD_SCHEMA``), for the parquet
+    readers and writers that run without a SparkSession."""
+    import pyarrow as pa
+
+    types = {
+        "string": pa.string(), "int": pa.int32(), "bigint": pa.int64(),
+        "boolean": pa.bool_(), "binary": pa.binary(),
+    }
+    return pa.schema([
+        (name, types[typ]) for name, typ in (c.split() for c in ddl.split(","))
+    ])
+
 DTYPES = {"float64": 8, "float32": 4, "int64": 8, "int32": 4}
 
 

@@ -9,8 +9,10 @@ sorted file.  Resolution is a window-dedup — a single shuffle on
 shuffle via plain int columns c0..c3 that push down to parquet.
 
 Pruning rules (one rule, ``prune_manifest_paths``, shared by every
-reader: ``resolve_manifests``, ``resolve_manifest_rows_local``, the
-session's payload-file list and ``write_array_df``):
+reader: ``resolve_manifests`` for Spark reads, ``resolve_manifest_rows_local``
+for every point read — the base layer of ``Session._live_refs``, on
+the driver and in executors — the session's payload-file list and
+``write_array_df``):
 
 - a read is described by ONE :data:`ChunkRange` (per-dimension
   inclusive chunk-index bounds, or None for the whole array); its
@@ -41,7 +43,13 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from icechunk_spark.repo import fsio
-from icechunk_spark.repo.format import MANIFEST_SCHEMA, SnapshotInfo, data_path, new_id
+from icechunk_spark.repo.format import (
+    MANIFEST_SCHEMA,
+    SnapshotInfo,
+    arrow_schema,
+    data_path,
+    new_id,
+)
 
 #: per-dimension inclusive chunk-index bounds ``((lo, hi), ...)`` over
 #: c0, c1, ... of one read or lookup; None means the whole array
@@ -345,37 +353,52 @@ def _add_footer(st: dict, md) -> bool:
     return True
 
 
+def read_manifest_rows_local(
+    root, relpaths: list[str], node_id: str | None = None, chunk_key: str | None = None
+) -> list[dict]:
+    """Pre-dedup rows of manifest-layout parquet dirs (manifest files,
+    staged items) read with pyarrow, no Spark job: filtered on the node
+    and the key, whose string and c0..c3 push down to row-group
+    statistics.  Read with ``MANIFEST_SCHEMA``, like the Spark reader:
+    absent columns read as NULL and additive ones are not read."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    flt = pc.scalar(True)
+    if node_id is not None:
+        flt = flt & (pc.field("node_id") == node_id)
+    if chunk_key is not None:
+        flt = flt & (pc.field("chunk_key") == chunk_key)
+        for d, (lo, _) in enumerate(key_chunk_range(chunk_key) or ()):
+            flt = flt & (pc.field(f"c{d}") == lo)
+    schema = arrow_schema(MANIFEST_SCHEMA)
+    rows: list[dict] = []
+    for rel in relpaths:
+        fs, p = fsio._fs_path(data_path(root, rel))
+        dataset = ds.dataset(p, schema=schema, filesystem=fs, format="parquet")
+        rows.extend(dataset.to_table(filter=flt).to_pylist())
+    return rows
+
+
 def resolve_manifest_rows_local(
     root,
     snap: SnapshotInfo,
     node_id: str | None = None,
     chunk_key: str | None = None,
 ) -> list[dict]:
-    """Spark-free manifest resolution (pyarrow) for executor-side point
-    reads: a read-only Session unpickled inside a task has no JVM
-    gateway, so the advertised read-scaling path (pickle a readonly
-    session into a UDF, fetch chunk bytes per row) must not launch
-    Spark jobs.  Same LSM semantics as ``resolve_manifests``: latest
-    seq per (node_id, chunk_key) wins, tombstones dropped.  Manifest
-    files prune first (``prune_manifest_paths`` with the key's chunk
-    range), then pyarrow dataset filters on the key string and its
-    c0..c3 push down to row-group statistics."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as ds
-
+    """Spark-free manifest resolution (pyarrow): the base-snapshot layer
+    of every point read (``Session._live_refs``), on the driver and in
+    executors.  Same LSM semantics as ``resolve_manifests``: latest seq
+    per (node_id, chunk_key) wins, tombstones dropped.  Manifest files
+    prune first (``prune_manifest_paths`` with the key's chunk range),
+    then ``read_manifest_rows_local`` filters rows."""
     rng = key_chunk_range(chunk_key) if chunk_key is not None else None
-    flt = pc.scalar(True)
-    if node_id is not None:
-        flt = flt & (pc.field("node_id") == node_id)
-    if chunk_key is not None:
-        flt = flt & (pc.field("chunk_key") == chunk_key)
-    for d, (lo, _) in enumerate(rng or ()):
-        flt = flt & (pc.field(f"c{d}") == lo)
-    rows: list[dict] = []
-    for rel in prune_manifest_paths(snap.manifests, node_id, snap.manifest_summaries, rng):
-        fs, p = fsio._fs_path(data_path(root, rel))
-        dataset = ds.dataset(p, filesystem=fs, format="parquet")
-        rows.extend(dataset.to_table(filter=flt).to_pylist())
+    rows = read_manifest_rows_local(
+        root,
+        prune_manifest_paths(snap.manifests, node_id, snap.manifest_summaries, rng),
+        node_id,
+        chunk_key,
+    )
     best: dict[tuple[str, str], dict] = {}
     for r in rows:
         key = (r["node_id"], r["chunk_key"])

@@ -39,6 +39,7 @@ from icechunk_spark.repo.arrays import (
     decode_chunks_to_rows,
     encode_array_chunks,
     read_native_payload,
+    ref_bytes,
     slice_chunk_range,
     staged_manifest_from_chunk_dir,
 )
@@ -53,6 +54,13 @@ from icechunk_spark.repo.format import (
     new_id,
     node_from_dict,
 )
+
+
+#: ``seq`` offsets that order a transaction's layers above the base
+#: snapshot's rows (whose seq stays far below): staged items, then
+#: the chunk buffer
+_STAGED_SEQ = 10**15
+_BUFFERED_SEQ = 2 * 10**15
 
 
 def _dp(root: str, *parts: str) -> str:
@@ -280,13 +288,16 @@ class Session:
         return f"chunks/{cid}.parquet"
 
     # --- spark handle (lazy: executor-side sessions have none) -------------
-    # An unpickled read-only session inside a Spark task has no JVM
-    # gateway: ``getActiveSession()`` is None there, so ``spark`` must
-    # not be resolved eagerly at unpickle time and DataFrame APIs must
-    # fail with a clear error while the point-read APIs
-    # (get_chunk_bytes / chunk_type / chunk_coordinates) fall back to
-    # pyarrow (reference parity: readonly sessions are pickled into
-    # tasks for read scaling — icechunk-python session.py:39-60).
+    # An unpickled session inside a Spark task has no JVM gateway:
+    # ``getActiveSession()`` is None there, so ``spark`` must not be
+    # resolved eagerly at unpickle time, and DataFrame APIs fail with a
+    # clear error.  The point reads (get_chunk_bytes / chunk_type /
+    # ChunkStore.getsize) need no Spark on either side: they resolve
+    # buffer -> staged -> base with pyarrow (``_live_refs``).  Only
+    # ``chunk_coordinates`` (streams from Spark on the driver) and the
+    # buffer flush (pyarrow writes in a task) branch on ``_has_spark``
+    # (reference parity: sessions are pickled into tasks for read
+    # scaling — icechunk-python session.py:39-60).
 
     @property
     def spark(self) -> SparkSession:
@@ -997,14 +1008,13 @@ class Session:
     def chunk_coordinates(self, array_path: str, batch_size: int = 1000):
         """Iterator over the grid coordinates of every initialized
         chunk of an array (reference parity: Session.chunk_coordinates,
-        icechunk-python session.py:327).  Streams the resolved manifest
-        partition-by-partition — never materializes it on the driver."""
+        icechunk-python session.py:327).  On the driver it streams the
+        resolved manifest partition-by-partition — never materializes
+        it there; a session unpickled in a task lists its layered
+        refs (``_live_refs``) instead."""
         meta = self.array_meta(array_path)
-        if not self._has_spark:  # executor-side unpickled session
-            keys = sorted(
-                r["chunk_key"]
-                for r in mf.resolve_manifest_rows_local(self.root, self._base, meta.node_id)
-            )
+        if not self._has_spark:
+            keys = sorted(r["chunk_key"] for r in self._live_refs(meta.node_id))
             for k in keys:
                 yield tuple(int(x) for x in k.split("."))
             return
@@ -1020,78 +1030,96 @@ class Session:
     def chunk_type(self, array_path: str, chunk_coordinates) -> "ChunkType":
         """The storage kind of one chunk (reference parity:
         Session.chunk_type, session.py:343): uninitialized / native /
-        virtual / inline."""
+        virtual / inline.  A buffered native payload reports inline
+        only when its flush will inline it (<= the threshold)."""
         meta = self.array_meta(array_path)
         key = ".".join(str(int(x)) for x in chunk_coordinates)
-        for c in reversed(self._chunk_buffer):
-            if c["node_id"] == meta.node_id and c["chunk_key"] == key:
-                if c["op"] != "set":
-                    return ChunkType.uninitialized
-                if c.get("is_virtual"):
-                    return ChunkType.virtual
-                payload = c.get("payload")
-                if payload is not None and len(payload) <= self._inline_threshold():
-                    return ChunkType.inline
-                return ChunkType.native
-        row = self._point_manifest_rows(meta.node_id, key)
-        if not row:
+        ref = self._point_ref(meta.node_id, key)
+        if ref is None:
             return ChunkType.uninitialized
-        if row[0]["is_virtual"]:
+        if ref["is_virtual"]:
             return ChunkType.virtual
-        if row[0]["inline"] is not None:
+        if ref["inline"] is not None and (
+            ref["seq"] < _BUFFERED_SEQ or len(ref["inline"]) <= self._inline_threshold()
+        ):
             return ChunkType.inline
         return ChunkType.native
 
-    def _point_manifest_rows(self, node_id: str, chunk_key: str) -> list[dict]:
-        """Resolved manifest rows for ONE chunk, pruned like a read of
-        that chunk's range (manifest files by their summaries, rows by
-        c0..c3) and filtered on the key string.  Driver-side this is a
-        Spark scan (read-your-writes via the staged overlay);
-        executor-side (no JVM gateway) it is a pyarrow point lookup —
-        read-only sessions have nothing staged, so base-only resolution
-        is exact there."""
-        if not self._has_spark:
-            return mf.resolve_manifest_rows_local(self.root, self._base, node_id, chunk_key)
-        return [
-            r.asDict()
-            for r in self._resolved_manifest(node_id, mf.key_chunk_range(chunk_key))
-            .filter(F.col("chunk_key") == chunk_key)
-            .collect()
+    def _point_ref(self, node_id: str, chunk_key: str) -> dict | None:
+        """The live manifest ref of one chunk, or None (never written,
+        or deleted): the one lookup behind get_chunk_bytes, chunk_type
+        and ChunkStore.getsize."""
+        refs = self._live_refs(node_id, chunk_key)
+        return refs[0] if refs else None
+
+    def _live_refs(self, node_id: str, chunk_key: str | None = None) -> list[dict]:
+        """Live refs of one node (of one key, or of all keys), resolved
+        layer by layer, newest first; a key's newest row decides it, so
+        a tombstone in a newer layer shadows the older ones:
+
+        1. the chunk buffer (``_buffer_entries``, later entries first);
+        2. staged items, newest index first: ``file`` items read with
+           pyarrow, lazy ``df`` plans (driver sessions only) with ONE
+           Spark filter+collect on the key, run only when one is
+           present and the buffer did not decide the key;
+        3. the base snapshot (``mf.resolve_manifest_rows_local``).
+
+        No Spark job otherwise, on the driver and in executors alike.
+        ``seq`` carries ``_overlay_staged``'s layer offsets."""
+        best: dict[str, dict] = {}
+        for rows in self._ref_layers(node_id, chunk_key):
+            for r in rows:
+                best.setdefault(r["chunk_key"], r)
+            if chunk_key in best:
+                break
+        return [r for r in best.values() if r["op"] == "set"]
+
+    def _ref_layers(self, node_id, chunk_key):
+        """The rows of each layer of ``_live_refs``, newest first."""
+        yield [
+            {**e, "seq": _BUFFERED_SEQ + e["seq"]}
+            for e in reversed(self._buffer_entries())
+            if e["node_id"] == node_id and chunk_key in (None, e["chunk_key"])
         ]
+        lazy: dict[int, list[dict]] = {}
+        plans = self._staged_manifest_df(lazy_only=True)
+        if plans is not None:
+            plans = plans.filter(F.col("node_id") == node_id)
+            if chunk_key is not None:
+                flt = mf.chunk_range_filter(mf.key_chunk_range(chunk_key))
+                plans = plans.filter(F.col("chunk_key") == chunk_key)
+                plans = plans.filter(flt) if flt is not None else plans
+            for r in plans.collect():
+                d = r.asDict()
+                if d["inline"] is not None:
+                    d["inline"] = bytes(d["inline"])
+                lazy.setdefault(d["seq"], []).append(d)
+        for i in reversed(range(len(self._staged))):
+            kind, item = self._staged[i]
+            rows = (
+                lazy.get(i, [])
+                if kind == "df"
+                else mf.read_manifest_rows_local(self.root, [item], node_id, chunk_key)
+            )
+            yield [{**r, "seq": _STAGED_SEQ + i} for r in rows]
+        yield mf.resolve_manifest_rows_local(self.root, self._base, node_id, chunk_key)
 
     def get_chunk_bytes(self, path: str, chunk_key: str) -> bytes | None:
+        """One chunk's bytes (read-your-writes), or None: the newest
+        ref (``_point_ref``) and one payload read, no Spark job unless
+        a lazy staged plan is present."""
         meta = self.array_meta(path)
-        for c in reversed(self._chunk_buffer):
-            if c["node_id"] == meta.node_id and c["chunk_key"] == chunk_key:
-                if c["op"] != "set":
-                    return None
-                if c["is_virtual"]:
-                    vp = self._resolve_vcc(c["vpath"])
-                    self._check_virtual_read(vp)
-                    check_virtual_checksum(vp, c.get("vchecksum"))
-                    return fsio.read_range(vp, c["voffset"], c["vlength"])
-                return c["payload"]
-        row = self._point_manifest_rows(meta.node_id, chunk_key)
-        if not row:
+        ref = self._point_ref(meta.node_id, chunk_key)
+        if ref is None:
             return None
-        r = row[0]
-        if r["is_virtual"]:
-            vp = self._resolve_vcc(r["vpath"])
-            self._check_virtual_read(vp)
-            check_virtual_checksum(vp, r.get("vchecksum"))
-            return fsio.read_range(vp, r["voffset"], r["vlength"])
-        if r["inline"] is not None:
-            return bytes(r["inline"])
-        if not self._has_spark:  # executor-side: pyarrow point read
-            return read_native_payload(_dp(self.root, r["file"]), r["chunk_id"])
-        payload = (
-            self.spark.read.schema(PAYLOAD_SCHEMA)
-            .parquet(_dp(self.root, r["file"]))
-            .filter(F.col("chunk_id") == r["chunk_id"])
-            .select("payload")
-            .collect()
+        if ref["is_virtual"]:
+            self._check_virtual_read(self._resolve_vcc(ref["vpath"]))
+        return ref_bytes(
+            ref,
+            self._virtual_container_names,
+            set(),
+            lambda r: read_native_payload(_dp(self.root, r["file"]), r["chunk_id"]),
         )
-        return bytes(payload[0]["payload"]) if payload else None
 
     # --- array reorganization (rearrange sessions) ------------------------
 
@@ -1257,46 +1285,23 @@ class Session:
         if not self._chunk_buffer:
             return
         rel = self._new_chunk_rel()
-        rows = []
-        refs = []
         # overlay semantics WITHIN the buffer: the last op per chunk key
         # wins (set-after-delete must resurrect the chunk); manifest seq
         # can't express intra-buffer order because the whole flush is one
         # staging item, so collapse before writing
         last: dict[tuple[str, str], dict] = {}
-        for c in self._chunk_buffer:
-            last[(c["node_id"], c["chunk_key"])] = c
+        for e in self._buffer_entries():
+            last[(e["node_id"], e["chunk_key"])] = e
         threshold = self._inline_threshold()
-        for c in last.values():
-            ck = [int(x) for x in c["chunk_key"].split(".")] if c["chunk_key"] else []
-            coords = {f"c{i}": (ck[i] if i < len(ck) else None) for i in range(4)}
-            is_native_set = c["op"] == "set" and not c["is_virtual"]
-            inline = (
-                c["payload"]
-                if is_native_set and c.get("payload") is not None and len(c["payload"]) <= threshold
-                else None
-            )
-            chunk_id = new_id() if (is_native_set and inline is None) else None
-            if chunk_id:
-                rows.append({"chunk_id": chunk_id, "payload": c["payload"]})
-            refs.append(
-                {
-                    "node_id": c["node_id"],
-                    "chunk_key": c["chunk_key"],
-                    **coords,
-                    "chunk_id": chunk_id,
-                    "file": rel if chunk_id else None,
-                    "n_bytes": len(c["payload"]) if c.get("payload") else None,
-                    "op": c["op"],
-                    "is_virtual": bool(c.get("is_virtual")),
-                    "vpath": c.get("vpath"),
-                    "voffset": c.get("voffset"),
-                    "vlength": c.get("vlength"),
-                    "inline": inline,
-                    "seq": 0,
-                    "vchecksum": c.get("vchecksum"),
-                }
-            )
+        rows = []
+        refs = []
+        for e in last.values():
+            e = {**e, "seq": 0}
+            if e["inline"] is not None and len(e["inline"]) > threshold:
+                chunk_id = new_id()
+                rows.append({"chunk_id": chunk_id, "payload": e["inline"]})
+                e.update(chunk_id=chunk_id, file=rel, inline=None)
+            refs.append(e)
         if self._has_spark:
             if rows:
                 local_df(self.spark, rows, PAYLOAD_SCHEMA).coalesce(
@@ -1317,52 +1322,47 @@ class Session:
                     "ForkSession (eager staging)"
                 )
             if rows:
-                _write_parquet_rows(_dp(self.root, rel), rows, _payload_arrow_schema())
+                _write_parquet_rows(_dp(self.root, rel), rows, fmt.arrow_schema(PAYLOAD_SCHEMA))
             mrel = os.path.join(
                 "staging", self.session_id, f"m{len(self._staged):05d}.parquet"
             )
-            _write_parquet_rows(_dp(self.root, mrel), refs, _manifest_arrow_schema())
+            _write_parquet_rows(_dp(self.root, mrel), refs, fmt.arrow_schema(MANIFEST_SCHEMA))
             self._staged.append(("file", mrel))
         self._chunk_buffer.clear()
 
-    def _staged_manifest_df(self) -> DataFrame | None:
-        if not self._staged:
-            return None
+    def _staged_manifest_df(self, lazy_only: bool = False) -> DataFrame | None:
+        """The staged items (only the lazy ``df`` plans with
+        ``lazy_only``) as one frame whose ``seq`` is the staging index
+        (the intra-commit sub-sequence); None when there are none."""
         cols = [c.strip().split(" ")[0] for c in MANIFEST_SCHEMA.split(",")]
-        dfs = []
+        out = None
         for i, (kind, item) in enumerate(self._staged):
-            d = (
-                self.spark.read.schema(MANIFEST_SCHEMA).parquet(_dp(self.root, item))
-                if kind == "file"
-                else item
-            )
-            # staging index becomes the intra-commit sub-sequence
-            dfs.append(d.select(*cols).withColumn("seq", F.lit(i).cast("bigint")))
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
+            if kind == "file":
+                if lazy_only:
+                    continue
+                item = self.spark.read.schema(MANIFEST_SCHEMA).parquet(_dp(self.root, item))
+            d = item.select(*cols).withColumn("seq", F.lit(i).cast("bigint"))
+            out = d if out is None else out.unionByName(d)
         return out
 
-    def _buffer_manifest_df(self) -> DataFrame | None:
-        """Uncommitted ``set_chunk_bytes``/virtual-ref buffer as manifest
-        rows.  Native payloads ride in the ``inline`` column so the
-        decode/read paths see them without any flush — full
+    def _buffer_entries(self) -> list[dict]:
+        """The uncommitted ``set_chunk_bytes``/virtual-ref buffer as
+        manifest rows, oldest first (``seq`` is the buffer index, so
+        later entries win).  Native payloads ride in the ``inline``
+        column, so readers see them without any flush — full
         read-your-writes inside the transaction."""
-        if not self._chunk_buffer:
-            return None
         entries = []
         for i, c in enumerate(self._chunk_buffer):
             ck = [int(x) for x in c["chunk_key"].split(".")] if c["chunk_key"] else []
-            coords = {f"c{d}": (ck[d] if d < len(ck) else None) for d in range(4)}
             payload = c.get("payload")
             entries.append(
                 {
                     "node_id": c["node_id"],
                     "chunk_key": c["chunk_key"],
-                    **coords,
+                    **{f"c{d}": (ck[d] if d < len(ck) else None) for d in range(4)},
                     "chunk_id": None,
                     "file": None,
-                    "n_bytes": len(payload) if payload else c.get("vlength"),
+                    "n_bytes": len(payload) if payload else None,
                     "op": c["op"],
                     "is_virtual": bool(c.get("is_virtual")),
                     "vpath": c.get("vpath"),
@@ -1370,13 +1370,15 @@ class Session:
                     "vlength": c.get("vlength"),
                     "vchecksum": c.get("vchecksum"),
                     "inline": payload if c["op"] == "set" and not c.get("is_virtual") else None,
-                    # buffer flushes as the LAST staging item at commit,
-                    # so it shadows staged rows; within the buffer later
-                    # entries win
                     "seq": i,
                 }
             )
-        return local_df(self.spark, entries, MANIFEST_SCHEMA)
+        return entries
+
+    def _buffer_manifest_df(self) -> DataFrame | None:
+        if not self._chunk_buffer:
+            return None
+        return local_df(self.spark, self._buffer_entries(), MANIFEST_SCHEMA)
 
     def _cached_base_manifest(self, node_id, rng) -> DataFrame:
         """Resolve (and, when the caching config enables it, persist)
@@ -1417,12 +1419,12 @@ class Session:
     def _overlay_staged(self, base: DataFrame, node_id, rng) -> DataFrame:
         """``base`` plus this transaction's staged and buffered manifest
         rows (filtered like ``base``), pre-dedup.  Seq offsets order the
-        layers for a latest-by-seq pick: base < staged (+10**15) <
-        buffered (+2*10**15)."""
+        layers for a latest-by-seq pick: base < staged (+_STAGED_SEQ) <
+        buffered (+_BUFFERED_SEQ), as in the point path (``_live_refs``)."""
         flt = mf.chunk_range_filter(rng)
         for overlay, offset in (
-            (self._staged_manifest_df(), 10**15),
-            (self._buffer_manifest_df(), 2 * 10**15),
+            (self._staged_manifest_df(), _STAGED_SEQ),
+            (self._buffer_manifest_df(), _BUFFERED_SEQ),
         ):
             if overlay is None:
                 continue
@@ -1731,7 +1733,7 @@ class Session:
             # Spark form cost ~4.8 s per metadata commit, nearly all of
             # it scheduling empty python tasks for the RDD-path empty
             # base frame.
-            _write_parquet_rows(out, node_rows, _txlog_arrow_schema())
+            _write_parquet_rows(out, node_rows, fmt.arrow_schema(TXLOG_SCHEMA))
             return
         parts = []
         if staged is not None:
@@ -2192,46 +2194,6 @@ class ForkSession(Session):
         self._virtual_authorized = set()
         self._virtual_container_names = None
         self._config_override = None
-
-
-def _manifest_arrow_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("node_id", pa.string()),
-            ("chunk_key", pa.string()),
-            ("c0", pa.int32()),
-            ("c1", pa.int32()),
-            ("c2", pa.int32()),
-            ("c3", pa.int32()),
-            ("chunk_id", pa.string()),
-            ("file", pa.string()),
-            ("n_bytes", pa.int64()),
-            ("op", pa.string()),
-            ("is_virtual", pa.bool_()),
-            ("vpath", pa.string()),
-            ("voffset", pa.int64()),
-            ("vlength", pa.int64()),
-            ("inline", pa.binary()),
-            ("seq", pa.int64()),
-            ("vchecksum", pa.string()),
-        ]
-    )
-
-
-def _payload_arrow_schema():
-    import pyarrow as pa
-
-    return pa.schema([("chunk_id", pa.string()), ("payload", pa.binary())])
-
-
-def _txlog_arrow_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [("node_id", pa.string()), ("chunk_key", pa.string()), ("op", pa.string())]
-    )
 
 
 def _write_parquet_rows(path: str, rows: list[dict], schema) -> None:

@@ -530,21 +530,13 @@ class ChunkStore:
         if chunk is None:
             return len(self._doc_bytes(self.session._node(path)))
         meta = self.session.array_meta(path)
-        for c in reversed(self.session._chunk_buffer):
-            if c["node_id"] == meta.node_id and c["chunk_key"] == chunk:
-                if c["op"] != "set":
-                    raise RefError(f"no chunk at {key}")
-                if c.get("is_virtual"):
-                    return int(c["vlength"])
-                return len(c["payload"])
-        row = self.session._point_manifest_rows(meta.node_id, chunk)
-        if not row:
+        r = self.session._point_ref(meta.node_id, chunk)
+        if r is None:
             raise RefError(f"no chunk at {key}")
-        r = row[0]
         if r["is_virtual"]:
             return int(r["vlength"])
         if r["inline"] is not None:
-            return len(bytes(r["inline"]))
+            return len(r["inline"])
         return int(r["n_bytes"])
 
     def getsize_prefix(self, prefix: str) -> int:

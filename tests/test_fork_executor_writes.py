@@ -138,8 +138,10 @@ def test_pyarrow_parquet_write_maps_hadoop_schemes(tmp_path, monkeypatch):
     import pyarrow.parquet as pq
     from pyarrow import fs as pafs
 
+    from icechunk_spark.repo import format as fmt
     from icechunk_spark.repo import fsio
     from icechunk_spark.repo import session as sess
+    from icechunk_spark.repo.arrays import PAYLOAD_SCHEMA
 
     real = fsio._fs_path
 
@@ -152,12 +154,12 @@ def test_pyarrow_parquet_write_maps_hadoop_schemes(tmp_path, monkeypatch):
     sess._write_parquet_rows(
         "s3a://bucket/txlogs/s1.parquet",
         [{"node_id": "n", "chunk_key": None, "op": "create"}],
-        sess._txlog_arrow_schema(),
+        fmt.arrow_schema(fmt.TXLOG_SCHEMA),
     )
     sess._write_parquet_rows(
         "s3a://bucket/chunks/ab/c1",
         [{"chunk_id": "c1", "payload": b"xy"}],
-        sess._payload_arrow_schema(),
+        fmt.arrow_schema(PAYLOAD_SCHEMA),
     )
     assert pq.read_table(tmp_path / "txlogs" / "s1.parquet").to_pylist() == [
         {"node_id": "n", "chunk_key": None, "op": "create"}
@@ -165,3 +167,68 @@ def test_pyarrow_parquet_write_maps_hadoop_schemes(tmp_path, monkeypatch):
     assert pq.read_table(tmp_path / "chunks" / "ab" / "c1").to_pylist() == [
         {"chunk_id": "c1", "payload": b"xy"}
     ]
+
+
+def _point_view(f):
+    """Every point API over chunks 0..3 of ``/a``: bytes, kind, store
+    size (None for a missing chunk) and the initialized coordinates."""
+
+    def size(i):
+        try:
+            return f.store.getsize(f"a/c/{i}")
+        except RefError:
+            return None
+
+    return (
+        [f.get_chunk_bytes("/a", str(i)) for i in range(4)],
+        [f.chunk_type("/a", (i,)).name for i in range(4)],
+        [size(i) for i in range(4)],
+        list(f.chunk_coordinates("/a")),
+    )
+
+
+def test_fork_point_reads_agree_on_driver_and_in_tasks(spark, tmp_path):
+    """Read-your-writes of a pickled ForkSession: every point API sees
+    the fork's staged writes (a set over a base chunk, a new chunk, a
+    tombstone over a base chunk), chunks set and flushed inside the
+    task, and buffered ones, and agrees with the same fork on the
+    driver."""
+    root = str(tmp_path / "repo_ryw")
+    repo = Repository.create(spark, root)
+    with repo.transaction(message="base") as s:
+        s.create_array("/a", shape=[4], chunk_shape=[1])
+        s.set_chunk_bytes("/a", "0", b"a")
+        s.set_chunk_bytes("/a", "3", b"z" * 1024)
+    fork = repo.writable_session("main").fork()
+    fork.set_chunk_bytes("/a", "0", b"b")
+    fork.set_chunk_bytes("/a", "1", b"n" * 8192)
+    fork.delete_chunk("/a", "3")
+    blob = pickle.dumps(fork)  # flushes the buffer to a staged file
+
+    def work(b):
+        import pickle as pkl
+
+        from tests.test_fork_executor_writes import _point_view as view
+
+        g = pkl.loads(b)
+        before = view(g)
+        g.set_chunk_bytes("/a", "2", b"t" * 1024)
+        g._flush_chunk_buffer()  # pyarrow: no SparkSession here
+        g.set_chunk_bytes("/a", "0", b"u")  # stays buffered
+        return before, view(g), pkl.dumps(g)
+
+    before, after, back = spark.sparkContext.parallelize([blob], 1).map(work).collect()[0]
+    assert before == (
+        [b"b", b"n" * 8192, None, None],
+        ["inline", "native", "uninitialized", "uninitialized"],
+        [1, 8192, None, None],
+        [(0,), (1,)],
+    )
+    assert after == (
+        [b"u", b"n" * 8192, b"t" * 1024, None],
+        ["inline", "native", "native", "uninitialized"],
+        [1, 8192, 1024, None],
+        [(0,), (1,), (2,)],
+    )
+    assert _point_view(pickle.loads(blob)) == before
+    assert _point_view(pickle.loads(back)) == after

@@ -231,8 +231,6 @@ def _append_unsummarized(root, node_id, chunk_key, payload):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from icechunk_spark.repo.session import _manifest_arrow_schema
-
     tip_id = fmt.branch_tip(root, "main")[1]
     snap = fmt.read_snapshot(root, tip_id)
     cid = uuid.uuid4().hex
@@ -250,7 +248,7 @@ def _append_unsummarized(root, node_id, chunk_key, payload):
     }
     mrel = f"manifests/{fmt.new_id()}.parquet"
     os.makedirs(fmt.data_path(root, mrel))
-    schema = _manifest_arrow_schema()
+    schema = fmt.arrow_schema(fmt.MANIFEST_SCHEMA)
     table = pa.Table.from_pylist([{k: row.get(k) for k in schema.names}], schema=schema)
     pq.write_table(table, os.path.join(fmt.data_path(root, mrel), "part-0.parquet"))
     snap.manifests = [*snap.manifests, mrel]

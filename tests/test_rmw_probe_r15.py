@@ -264,8 +264,11 @@ def test_cold_read_reread_and_lookup_job_counts(spark, root):
     kept manifests and the payload files to join are known without a
     Spark job, and the payload scan's schema is pinned.  A cold read
     to the noop sink runs at most 3 jobs, a reread too (the file-list
-    collect and the footer-inference job made 6), and a one-chunk
-    lookup at most 3 (was 4)."""
+    collect and the footer-inference job made 6).  Point lookups
+    (get_chunk_bytes, chunk_type, store.getsize) run no job at all when
+    nothing lazy is staged: a read-only session's, and a writable
+    session's whose staged items are files and buffered entries (the
+    Spark point path took 3)."""
     from icechunk_spark.repo import ManifestConfig, RepositoryConfig
 
     cfg = RepositoryConfig(manifest=ManifestConfig(splitting={"max_refs_per_manifest": 4}))
@@ -290,9 +293,65 @@ def test_cold_read_reread_and_lookup_job_counts(spark, root):
         0.0: 64, 1.0: 128, 2.0: 64, 4.0: 128, 99.0: 256, 6.0: 128, 8.0: 64, 9.0: 128, 10.0: 64,
     }
     box = {}
-    n = _jobs(spark, lambda: box.update(b=repo.readonly_session().get_chunk_bytes("/h", "1.1")))
-    assert n <= 3, n
-    assert box["b"] == np.full(256, 99.0, "<f8").tobytes()
+
+    def lookups(session):
+        box.update(
+            b=[session.get_chunk_bytes("/h", k) for k in ("1.1", "2.2", "3.3")],
+            t=[session.chunk_type("/h", (i, i)).name for i in (1, 2, 3)],
+            n=[session.store.getsize(f"h/c/{i}/{i}") for i in (1, 2, 3)],
+        )
+
+    n = _jobs(spark, lambda: lookups(repo.readonly_session()))
+    assert n == 0, n
+    assert box["b"] == [np.full(256, v, "<f8").tobytes() for v in (99.0, 10.0, 15.0)]
+    assert box["t"] == ["native"] * 3 and box["n"] == [2048] * 3
+    # a writable session whose staged items are files (a merged fork's
+    # flush) and buffered entries still looks up without a job
+    w = repo.writable_session("main")
+    f = w.fork()
+    f.set_chunk_bytes("/h", "2.2", b"F" * 1024)
+    w.merge(f)
+    w.set_chunk_bytes("/h", "3.3", b"B" * 16)
+    assert [kind for kind, _ in w._staged] == ["file"] and w._chunk_buffer
+    n = _jobs(spark, lambda: lookups(w))
+    assert n == 0, n
+    assert box["b"] == [np.full(256, 99.0, "<f8").tobytes(), b"F" * 1024, b"B" * 16]
+    assert box["t"] == ["native", "native", "inline"] and box["n"] == [2048, 1024, 16]
+
+
+def test_lookups_see_lazy_staged_plans(spark, root):
+    """A driver session's lazy staged plans (write_array_df's chunk-dir
+    scan, delete_chunks_prefix tombstones, shift_array's remap) are
+    resolved by one Spark collect on the key: each lookup sees the
+    newest plan, and agrees with the committed result."""
+    repo = Repository.create(spark, root)
+
+    def full(v):
+        return np.full(4, v, "<f8").tobytes()
+
+    with repo.transaction(message="base") as s:
+        s.create_array("/h", shape=[4, 4], chunk_shape=[2, 2])
+        for ci in range(2):
+            for cj in range(2):
+                s.set_chunk_bytes("/h", f"{ci}.{cj}", full(ci * 2 + cj))
+    s = repo.writable_session("main")
+    s.write_array_df("/h", local_df(
+        spark, [{"i0": a, "i1": b, "value": 7.0} for a in range(2) for b in range(2)],
+        "i0 bigint, i1 bigint, value double"))
+    assert [kind for kind, _ in s._staged] == ["df"]
+    assert s.get_chunk_bytes("/h", "0.0") == full(7.0)
+    assert s.store.getsize("h/c/0/0") == 32
+    s.delete_chunks_prefix("/h", (1,))
+    assert s.get_chunk_bytes("/h", "1.0") is None and s.get_chunk_bytes("/h", "1.1") is None
+    assert s.chunk_type("/h", (1, 1)).name == "uninitialized"
+    assert s.get_chunk_bytes("/h", "0.1") == full(1.0)
+    s.shift_array("/h", [0, 1])  # 0.0 -> 0.1; 0.1 falls off the grid
+    want = {"0.0": None, "0.1": full(7.0), "1.0": None, "1.1": None}
+    assert {k: s.get_chunk_bytes("/h", k) for k in want} == want
+    assert list(s.chunk_coordinates("/h")) == [(0, 1)]
+    s.commit("lazy plans")
+    ro = repo.readonly_session()
+    assert {k: ro.get_chunk_bytes("/h", k) for k in want} == want
 
 
 def test_partial_write_merges_native_ref_under_uri_root(spark, tmp_path):
