@@ -71,6 +71,15 @@ MANIFEST_SCHEMA = (
 TXLOG_SCHEMA = "node_id string, chunk_key string, op string"
 
 
+def ddl_fields(ddl: str) -> list[tuple[str, str]]:
+    """The ``(name, type)`` pairs of a DDL string above, in order."""
+    return [tuple(c.split()) for c in ddl.split(",")]
+
+
+#: MANIFEST_SCHEMA's column names, in order
+MANIFEST_COLUMNS = [name for name, _ in ddl_fields(MANIFEST_SCHEMA)]
+
+
 def arrow_schema(ddl: str):
     """The pyarrow schema of a DDL string above (``MANIFEST_SCHEMA``,
     ``TXLOG_SCHEMA``, ``arrays.PAYLOAD_SCHEMA``), for the parquet
@@ -81,9 +90,7 @@ def arrow_schema(ddl: str):
         "string": pa.string(), "int": pa.int32(), "bigint": pa.int64(),
         "boolean": pa.bool_(), "binary": pa.binary(),
     }
-    return pa.schema([
-        (name, types[typ]) for name, typ in (c.split() for c in ddl.split(","))
-    ])
+    return pa.schema([(name, types[typ]) for name, typ in ddl_fields(ddl)])
 
 DTYPES = {"float64": 8, "float32": 4, "int64": 8, "int32": 4}
 
@@ -397,7 +404,7 @@ def _classify_parquet_columns(cols: set) -> str:
     # SUBSET test (manifest already ruled out above): additive nullable
     # columns are the extensibility mechanism, so a future txlog column
     # must not demote the kind to unknown (review r13)
-    if {c.strip().split(" ")[0] for c in TXLOG_SCHEMA.split(",")} <= cols:
+    if {name for name, _ in ddl_fields(TXLOG_SCHEMA)} <= cols:
         return "transaction-log"
     if {"chunk_id", "payload"} <= cols:
         return "chunk-data"

@@ -44,10 +44,12 @@ from pyspark.sql import functions as F
 
 from icechunk_spark.repo import fsio
 from icechunk_spark.repo.format import (
+    MANIFEST_COLUMNS,
     MANIFEST_SCHEMA,
     SnapshotInfo,
     arrow_schema,
     data_path,
+    ddl_fields,
     new_id,
 )
 
@@ -100,9 +102,8 @@ def _manifest_out_columns(df: DataFrame) -> list[str]:
     layout — the virtual-ref checksum column set the precedent).
     "__"-prefixed columns are internal helpers (never persisted
     data), so they are excluded."""
-    known = [c.strip().split(" ")[0] for c in MANIFEST_SCHEMA.split(",")]
-    extras = [c for c in df.columns if c not in known and not c.startswith("__")]
-    return known + extras
+    extras = [c for c in df.columns if c not in MANIFEST_COLUMNS and not c.startswith("__")]
+    return MANIFEST_COLUMNS + extras
 
 
 def read_manifest_files(
@@ -136,8 +137,7 @@ def read_manifest_files(
         # a fixed-schema read fills ABSENT known columns (e.g. a
         # pre-vchecksum manifest) with NULLs; the union read must do
         # the same or compaction of old repos would fail to select
-        for spec in MANIFEST_SCHEMA.split(","):
-            name, typ = spec.strip().split(" ", 1)
+        for name, typ in ddl_fields(MANIFEST_SCHEMA):
             if name not in df.columns:
                 df = df.withColumn(name, F.lit(None).cast(typ))
         return df

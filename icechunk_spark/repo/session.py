@@ -45,6 +45,7 @@ from icechunk_spark.repo.arrays import (
 )
 from icechunk_spark.repo.errbase import ErrorKind, IcechunkError
 from icechunk_spark.repo.format import (
+    MANIFEST_COLUMNS,
     MANIFEST_SCHEMA,
     TXLOG_SCHEMA,
     ArrayMeta,
@@ -84,6 +85,20 @@ class ChunkType(IntEnum):
     native = 1
     virtual = 2
     inline = 3
+
+
+def ref_kind(ref: dict, inline_threshold: int) -> ChunkType:
+    """The storage kind of a live manifest ref (with ``seq`` offsets
+    as ``_overlay_staged`` sets them).  The chunk buffer carries native
+    payloads in the ``inline`` column, so a buffered one is inline only
+    when its flush will inline it (<= ``inline_threshold``)."""
+    if ref["is_virtual"]:
+        return ChunkType.virtual
+    if ref["inline"] is not None and (
+        ref["seq"] < _BUFFERED_SEQ or len(ref["inline"]) <= inline_threshold
+    ):
+        return ChunkType.inline
+    return ChunkType.native
 
 
 class ConflictError(IcechunkError):
@@ -891,25 +906,7 @@ class Session:
         live = self._resolved_manifest(meta.node_id, None)
         for d, v in enumerate(coord_prefix):
             live = live.filter(F.col(f"c{d}") == int(v))
-        tombs = live.select(
-            "node_id", "chunk_key", "c0", "c1", "c2", "c3"
-        ).withColumn("op", F.lit("del"))
-        for col, typ in [
-            ("chunk_id", "string"),
-            ("file", "string"),
-            ("n_bytes", "bigint"),
-            ("vpath", "string"),
-            ("voffset", "bigint"),
-            ("vlength", "bigint"),
-            ("inline", "binary"),
-            ("vchecksum", "string"),
-        ]:
-            tombs = tombs.withColumn(col, F.lit(None).cast(typ))
-        tombs = tombs.withColumn("is_virtual", F.lit(False)).withColumn(
-            "seq", F.lit(0).cast("bigint")
-        )
-        cols = [c.strip().split(" ")[0] for c in MANIFEST_SCHEMA.split(",")]
-        self._stage_manifest(tombs.select(*cols))
+        self._stage_manifest(_tombstones(live))
 
     def set_virtual_ref(
         self,
@@ -1037,13 +1034,7 @@ class Session:
         ref = self._point_ref(meta.node_id, key)
         if ref is None:
             return ChunkType.uninitialized
-        if ref["is_virtual"]:
-            return ChunkType.virtual
-        if ref["inline"] is not None and (
-            ref["seq"] < _BUFFERED_SEQ or len(ref["inline"]) <= self._inline_threshold()
-        ):
-            return ChunkType.inline
-        return ChunkType.native
+        return ref_kind(ref, self._inline_threshold())
 
     def _point_ref(self, node_id: str, chunk_key: str) -> dict | None:
         """The live manifest ref of one chunk, or None (never written,
@@ -1145,28 +1136,10 @@ class Session:
         moved = moved.withColumn(
             "chunk_key", F.concat_ws(".", *[F.col(f"c{d}").cast("string") for d in range(ndim)])
         ).withColumn("op", F.lit("set"))
-        # vacate every previously occupied position not re-covered
-        tombs = live.select(
-            "node_id", "chunk_key", "c0", "c1", "c2", "c3"
-        ).withColumn("op", F.lit("del"))
-        for col, typ in [
-            ("chunk_id", "string"),
-            ("file", "string"),
-            ("n_bytes", "bigint"),
-            ("vpath", "string"),
-            ("voffset", "bigint"),
-            ("vlength", "bigint"),
-            ("inline", "binary"),
-            ("vchecksum", "string"),
-        ]:
-            tombs = tombs.withColumn(col, F.lit(None).cast(typ))
-        tombs = tombs.withColumn("is_virtual", F.lit(False)).withColumn(
-            "seq", F.lit(0).cast("bigint")
-        )
-        cols = [c.strip().split(" ")[0] for c in MANIFEST_SCHEMA.split(",")]
+        # vacate every previously occupied position not re-covered:
         # tombstones first, then moved rows (higher staged idx shadows)
-        self._stage_manifest(tombs.select(*cols))
-        self._stage_manifest(moved.select(*cols))
+        self._stage_manifest(_tombstones(live))
+        self._stage_manifest(moved.select(*MANIFEST_COLUMNS))
 
     def reindex_array(self, array_path: str, forward, backward=None) -> None:
         """Remap chunk coordinates with a Python function — applied
@@ -1230,32 +1203,16 @@ class Session:
                 live.select(F.col("chunk_key").alias("src_key")), "src_key", "left_anti"
             )
             parts = F.split(F.col("pos_key"), "\\.")
-            tombs = missing.select(
+            keys = missing.select(
                 F.lit(meta.node_id).alias("node_id"),
                 F.col("pos_key").alias("chunk_key"),
                 *[
-                    (
-                        F.element_at(parts, i + 1).cast("int")
-                        if i < ndim
-                        else F.lit(None).cast("int")
-                    ).alias(f"c{i}")
+                    (F.element_at(parts, i + 1) if i < ndim else F.lit(None)).alias(f"c{i}")
                     for i in range(4)
                 ],
-                F.lit(None).cast("string").alias("chunk_id"),
-                F.lit(None).cast("string").alias("file"),
-                F.lit(None).cast("bigint").alias("n_bytes"),
-                F.lit("del").alias("op"),
-                F.lit(False).alias("is_virtual"),
-                F.lit(None).cast("string").alias("vpath"),
-                F.lit(None).cast("bigint").alias("voffset"),
-                F.lit(None).cast("bigint").alias("vlength"),
-                F.lit(None).cast("binary").alias("inline"),
-                F.lit(0).cast("bigint").alias("seq"),
-                F.lit(None).cast("string").alias("vchecksum"),
             )
-            self._stage_manifest(tombs)
-        cols = [c.strip().split(" ")[0] for c in MANIFEST_SCHEMA.split(",")]
-        self._stage_manifest(moved.select(*cols))
+            self._stage_manifest(_tombstones(keys))
+        self._stage_manifest(moved.select(*MANIFEST_COLUMNS))
 
     # --- staging ----------------------------------------------------------
 
@@ -1273,11 +1230,15 @@ class Session:
     def _staging_dir(self) -> str:
         return _dp(self.root, "staging", self.session_id)
 
+    def _staging_rel(self) -> str:
+        """Relpath of the next eager staged item's parquet."""
+        return os.path.join("staging", self.session_id, f"m{len(self._staged):05d}.parquet")
+
     def _stage_manifest(self, df: DataFrame) -> None:
         if not self._eager_staging:
             self._staged.append(("df", df))
             return
-        rel = os.path.join("staging", self.session_id, f"m{len(self._staged):05d}.parquet")
+        rel = self._staging_rel()
         df.write.parquet(_dp(self.root, rel))
         self._staged.append(("file", rel))
 
@@ -1302,48 +1263,44 @@ class Session:
                 rows.append({"chunk_id": chunk_id, "payload": e["inline"]})
                 e.update(chunk_id=chunk_id, file=rel, inline=None)
             refs.append(e)
-        if self._has_spark:
-            if rows:
-                local_df(self.spark, rows, PAYLOAD_SCHEMA).coalesce(
-                    1
-                ).write.parquet(_dp(self.root, rel))
-            self._stage_manifest(local_df(self.spark, refs, MANIFEST_SCHEMA))
-        else:
-            # executor-side ForkSession (reference dask.py:store_dask
-            # worker shape): no SparkSession exists in this process, so
-            # payloads and the staged manifest are written as parquet
-            # directly through pyarrow — byte-compatible with the Spark
-            # writer (readers apply MANIFEST_SCHEMA explicitly).  Only
-            # eager staging can ship files; a lazy session has nowhere
-            # to put a DataFrame without a driver.
-            if not self._eager_staging:
-                raise RefError(
-                    "buffered writes without a SparkSession require a "
-                    "ForkSession (eager staging)"
-                )
-            if rows:
-                _write_parquet_rows(_dp(self.root, rel), rows, fmt.arrow_schema(PAYLOAD_SCHEMA))
-            mrel = os.path.join(
-                "staging", self.session_id, f"m{len(self._staged):05d}.parquet"
+        # payloads and an eager session's refs are driver-resident rows:
+        # one pyarrow write each, no Spark job, the same on the driver
+        # and in an executor-side ForkSession (reference
+        # dask.py:store_dask worker shape), where no SparkSession
+        # exists.  A lazy session stages its refs as a LocalRelation,
+        # so it needs a driver.
+        if not self._eager_staging and not self._has_spark:
+            raise RefError(
+                "buffered writes without a SparkSession require a "
+                "ForkSession (eager staging)"
             )
+        if rows:
+            _write_parquet_rows(_dp(self.root, rel), rows, fmt.arrow_schema(PAYLOAD_SCHEMA))
+        if self._eager_staging:
+            mrel = self._staging_rel()
             _write_parquet_rows(_dp(self.root, mrel), refs, fmt.arrow_schema(MANIFEST_SCHEMA))
             self._staged.append(("file", mrel))
+        else:
+            self._stage_manifest(local_df(self.spark, refs, MANIFEST_SCHEMA))
         self._chunk_buffer.clear()
 
     def _staged_manifest_df(self, lazy_only: bool = False) -> DataFrame | None:
         """The staged items (only the lazy ``df`` plans with
         ``lazy_only``) as one frame whose ``seq`` is the staging index
         (the intra-commit sub-sequence); None when there are none."""
-        cols = [c.strip().split(" ")[0] for c in MANIFEST_SCHEMA.split(",")]
         out = None
         for i, (kind, item) in enumerate(self._staged):
-            if kind == "file":
-                if lazy_only:
-                    continue
-                item = self.spark.read.schema(MANIFEST_SCHEMA).parquet(_dp(self.root, item))
-            d = item.select(*cols).withColumn("seq", F.lit(i).cast("bigint"))
+            if kind == "file" and lazy_only:
+                continue
+            d = self._item_df(kind, item).withColumn("seq", F.lit(i).cast("bigint"))
             out = d if out is None else out.unionByName(d)
         return out
+
+    def _item_df(self, kind: str, item) -> DataFrame:
+        """One staged item as a manifest frame."""
+        if kind == "file":
+            item = self.spark.read.schema(MANIFEST_SCHEMA).parquet(_dp(self.root, item))
+        return item.select(*MANIFEST_COLUMNS)
 
     def _buffer_entries(self) -> list[dict]:
         """The uncommitted ``set_chunk_bytes``/virtual-ref buffer as
@@ -1521,45 +1478,15 @@ class Session:
                     "(repo_update_retries); branch is too contended"
                 )
             gen, tip_id = fmt.branch_tip(self.root, self._branch)
-            parent = self._base
             if tip_id != self._base.id:
-                self._rebase_onto(tip_id, rebase_with)
-                parent = fmt.read_snapshot(self.root, tip_id)
-            snap_id = new_id()
-            staged = self._staged_manifest_df()
-            if staged is not None:
-                staged = staged.persist()  # one scan feeds manifest + txlog
-            manifests, summaries = self._manifests_after(parent, staged, doc)
-            self._write_txlog(snap_id, staged)
-            snap = SnapshotInfo(
-                id=snap_id,
-                parent_id=parent.id,
-                message=message,
-                metadata=metadata or {},
-                written_at=time.time(),
-                seq=parent.seq + 1,
-                manifests=manifests,
-                nodes=self._nodes,
-                manifest_summaries=summaries,
-            )
-            fmt.write_snapshot(self.root, snap)
+                self._rebase_onto(tip_id, rebase_with)  # the base becomes the tip
+            snap = self._write_snapshot(self._base, message, metadata, doc)
             try:
-                fmt.update_branch(self.root, self._branch, snap_id, expected_gen=gen)
+                fmt.update_branch(self.root, self._branch, snap.id, expected_gen=gen)
             except RefError:
-                # lost the CAS race: re-detect conflicts against new tip.
-                # Unpersist first or the cached staged DF leaks executor
-                # memory on every retry.
-                if staged is not None:
-                    staged.unpersist()
-                continue
-            if staged is not None:
-                staged.unpersist()
-            fsio.delete_dir(self._staging_dir())
-            self._staged.clear()
-            self._node_ops.clear()
-            self._base = snap
-            self._drop_manifest_cache()
-            return snap_id
+                continue  # lost the CAS race: re-detect conflicts against the new tip
+            self._published(snap)
+            return snap.id
 
     @_traced("icechunk.flush")
     def flush(self, message: str, *, metadata: dict | None = None) -> str:
@@ -1573,35 +1500,11 @@ class Session:
         self._require_writable()
         self._require_repo_online()
         self._flush_chunk_buffer()
-        parent = self._base
-        snap_id = new_id()
-        staged = self._staged_manifest_df()
-        if staged is not None:
-            staged = staged.persist()
-        manifests, summaries = self._manifests_after(parent, staged, self._config_doc())
-        self._write_txlog(snap_id, staged)
-        snap = SnapshotInfo(
-            id=snap_id,
-            parent_id=parent.id,
-            message=message,
-            metadata=metadata or {},
-            written_at=time.time(),
-            seq=parent.seq + 1,
-            manifests=manifests,
-            nodes=self._nodes,
-            manifest_summaries=summaries,
-        )
-        fmt.write_snapshot(self.root, snap)
-        if staged is not None:
-            staged.unpersist()
-        fsio.delete_dir(self._staging_dir())
-        self._staged.clear()
-        self._node_ops.clear()
-        self._base = snap
+        snap = self._write_snapshot(self._base, message, metadata, self._config_doc())
+        self._published(snap)
         self._branch = None
         self._read_only = True
-        self._drop_manifest_cache()
-        return snap_id
+        return snap.id
 
     def amend(
         self,
@@ -1639,32 +1542,69 @@ class Session:
             raise RefError("cannot amend the root snapshot")
         if tip_id != self._base.id:
             raise RefError("session base is not the branch tip; rebase first")
+        snap = self._write_snapshot(
+            tip,
+            message if message is not None else tip.message,
+            metadata if metadata is not None else tip.metadata,
+            self._config_doc(),
+            replace=True,
+        )
+        fmt.update_branch(self.root, self._branch, snap.id, expected_gen=gen)
+        self._published(snap)
+        return snap.id
+
+    def _write_snapshot(
+        self,
+        parent: SnapshotInfo,
+        message: str,
+        metadata: dict | None,
+        doc: dict | None,
+        *,
+        replace: bool = False,
+    ) -> SnapshotInfo:
+        """Write the staged changes as a new snapshot on top of
+        ``parent`` — the one publish step of commit, flush and amend;
+        no ref moves.  The staged frame is persisted, so one scan feeds
+        the new manifest files (split per the config ``doc``) and the
+        txlog; then the snapshot doc is written.  ``replace`` (amend)
+        makes the snapshot REPLACE ``parent``: it takes ``parent``'s
+        parent and carries its txlog, its expire carry-list and a
+        future writer's unknown fields (design-docs/015, 016)."""
         snap_id = new_id()
         staged = self._staged_manifest_df()
-        manifests, summaries = self._manifests_after(tip, staged, self._config_doc())
-        self._write_txlog(snap_id, staged, carry_from=tip_id)
+        if staged is not None:
+            staged = staged.persist()
+        try:
+            manifests, summaries = self._manifests_after(parent, staged, doc)
+            self._write_txlog(snap_id, staged, carry_from=parent.id if replace else None)
+        finally:
+            if staged is not None:
+                staged.unpersist()  # a cached frame per CAS retry would leak
         snap = SnapshotInfo(
             id=snap_id,
-            parent_id=tip.parent_id,
-            message=message if message is not None else tip.message,
-            metadata=metadata if metadata is not None else tip.metadata,
+            parent_id=parent.parent_id if replace else parent.id,
+            message=message,
+            metadata=metadata or {},
             written_at=time.time(),
-            seq=tip.seq + 1,
+            seq=parent.seq + 1,
             manifests=manifests,
             nodes=self._nodes,
             manifest_summaries=summaries,
-            pruned_ancestor_tx_logs=list(tip.pruned_ancestor_tx_logs),
-            # amend REPLACES the tip: a future writer's unknown fields
-            # (design-docs/015) and the expire carry-list must survive
-            extra=dict(tip.extra),
         )
+        if replace:
+            snap.pruned_ancestor_tx_logs = list(parent.pruned_ancestor_tx_logs)
+            snap.extra = dict(parent.extra)
         fmt.write_snapshot(self.root, snap)
-        fmt.update_branch(self.root, self._branch, snap_id, expected_gen=gen)
+        return snap
+
+    def _published(self, snap: SnapshotInfo) -> None:
+        """The staged changes now live in ``snap``: it becomes the base
+        and the staging state is cleared."""
+        fsio.delete_dir(self._staging_dir())
         self._staged.clear()
         self._node_ops.clear()
         self._base = snap
         self._drop_manifest_cache()
-        return snap_id
 
     @_traced("icechunk.rebase")
     def rebase(self, solver: ConflictSolver) -> None:
@@ -1910,52 +1850,70 @@ class Session:
             scoped = [c for c in conflicts if c["kind"] in fail_kinds]
             if scoped:
                 raise ConflictError(scoped)
-            if mode == "fail" and any(c["kind"] == "chunk" for c in conflicts):
+            chunk_conflicts = any(c["kind"] == "chunk" for c in conflicts)
+            if mode == "fail" and chunk_conflicts:
                 raise ConflictError([c for c in conflicts if c["kind"] == "chunk"])
-            if mode == "use_theirs" and staged is not None:
-                kept = staged.join(chunk_conf, ["node_id", "chunk_key"], "left_anti")
-                self._replace_staging(kept)
-            # use_ours: nothing to do — our staged rows get a higher seq
-            if node_conflicts and solver.on_node_conflict == "use_theirs":
-                # metadata double-update (or update-vs-delete) where
-                # THEIR op wins: drop OUR node ops on the conflicted
-                # nodes so the merge below keeps tip's entry — or its
-                # absence, when their op was the delete.  Without this
-                # the merge loop replayed our op regardless, so
-                # use_theirs silently behaved as use_ours for the
-                # plain "node" kind (found by the r14 model-based
-                # conflict sequence test).
+            # what the resolutions drop from our staged rows, applied in
+            # one pass at the end: whole nodes, and (use_theirs) the
+            # conflicted chunk keys, collected once — they are bounded
+            # by the conflicts, not by everything we staged.  use_ours
+            # drops nothing: our staged rows get a higher seq.
+            drop_nodes: set[str] = set()
+            drop_chunks = None
+            if mode == "use_theirs" and chunk_conflicts:
+                drop_chunks = local_df(
+                    self.spark, chunk_conf.collect(), "node_id string, chunk_key string"
+                )
+            if solver.on_node_conflict == "use_theirs":
+                # their side wins every node conflict; the merge below
+                # then keeps tip's entry (or its absence).  We drop:
+                # - our node ops on conflicted nodes (a metadata
+                #   double-update or update-vs-delete; replaying them
+                #   made use_theirs behave as use_ours, found by the
+                #   r14 model-based conflict test);
+                # - our ops at paths they also changed and under
+                #   groups they deleted, and those nodes from our view;
+                # - our delete ops on nodes they wrote chunks into
+                #   (their chunks stay reachable).
+                # Our staged chunks drop with the nodes that lose: a
+                # conflicted node they deleted or resized (node-level
+                # use_theirs supersedes chunk-level keeps, review r14),
+                # a node they deleted or resized under our writes (the
+                # writes would orphan or fall out of bounds), and the
+                # node ids at the contested paths.
+                contested = set(path_conflicts) | set(invalid_group)
+                lost = {
+                    op["node_id"]
+                    for p in contested
+                    for op in ours_by_path[p]
+                    if op.get("node_id")
+                }
+                drop_nodes = (
+                    (node_conflicts & (their_deleted | their_updated))
+                    | set(deleted_write)
+                    | set(updated_write)
+                    | lost
+                )
+                kept_deletes = set(delete_of_written)
                 self._node_ops = [
                     op
                     for op in self._node_ops
                     if op["node_id"] not in node_conflicts
+                    and op["path"] not in contested
+                    and not (op["op"] == "delete" and op["node_id"] in kept_deletes)
                 ]
-                # our staged chunk writes into a conflicted node THEY
-                # deleted (unreachable orphans once the id leaves the
-                # merged table) or THEY resized (possibly out of the
-                # winning bounds) drop too, mirroring the
-                # deleted_node_write and updated_node_write
-                # resolutions — node-level use_theirs supersedes
-                # chunk-level keeps on that node (review r14)
-                doomed_ids = sorted(
-                    node_conflicts & (their_deleted | their_updated) & ours_chunk_nodes
-                )
-                if doomed_ids and self._staged:
-                    doomed = local_df(
-                        self.spark, [(n,) for n in doomed_ids], "node_id string"
-                    )
-                    self._replace_staging(
-                        self._staged_manifest_df().join(doomed, "node_id", "left_anti")
-                    )
-            if deleted_write and solver.on_node_conflict == "use_theirs" and self._staged:
-                # their delete wins: drop our writes into deleted nodes
-                doomed = local_df(
-                    self.spark, [(n,) for n in deleted_write], "node_id string"
-                )
-                remaining = self._staged_manifest_df().join(doomed, "node_id", "left_anti")
-                self._replace_staging(remaining)
-            elif deleted_write and solver.on_node_conflict == "use_ours":
-                # our writes win: resurrect the node meta from our view
+                for p in contested:
+                    self._nodes.pop(p, None)
+            elif solver.on_node_conflict == "use_ours":
+                # our side wins.  A node they deleted under our writes,
+                # and the groups they deleted above our creates, are
+                # resurrected from our view so the hierarchy stays
+                # consistent.  Otherwise the merge below replays our
+                # ops over tip: at a contested path our node wins; our
+                # delete of a node they wrote makes their chunk refs
+                # unreachable (reclaimed by GC, like a post-commit
+                # delete); our writes into a node they resized stay
+                # (reads crop to the new shape).
                 for nid in deleted_write:
                     for path, node in self._nodes.items():
                         if node["node_id"] == nid:
@@ -1963,79 +1921,6 @@ class Session:
                                 {"op": "create", "path": path, "node_id": nid}
                             )
                             break
-            if path_conflicts and solver.on_node_conflict == "use_theirs":
-                # their node wins at the contested paths: drop our node
-                # ops there (the merge below then keeps tip's entry)
-                # and our staged chunks into the now-dead node ids
-                doomed_ids = [
-                    op["node_id"]
-                    for p in path_conflicts
-                    for op in ours_by_path[p]
-                    if op.get("node_id")
-                ]
-                contested = set(path_conflicts)
-                self._node_ops = [
-                    op for op in self._node_ops if op["path"] not in contested
-                ]
-                for p in contested:
-                    self._nodes.pop(p, None)
-                if doomed_ids and self._staged:
-                    doomed = local_df(
-                        self.spark, [(n,) for n in doomed_ids], "node_id string"
-                    )
-                    remaining = self._staged_manifest_df().join(
-                        doomed, "node_id", "left_anti"
-                    )
-                    self._replace_staging(remaining)
-            # path_conflicts + use_ours: nothing to do — the merge loop
-            # below replays our op over tip's node at that path
-            if delete_of_written and solver.on_node_conflict == "use_theirs":
-                # their writes win: cancel our delete ops so the merge
-                # keeps tip's node (their chunks stay reachable)
-                doomed_del = set(delete_of_written)
-                self._node_ops = [
-                    op
-                    for op in self._node_ops
-                    if not (op["op"] == "delete" and op["node_id"] in doomed_del)
-                ]
-            # delete_of_written + use_ours: nothing to do — our delete
-            # replays over tip and their chunk refs become unreachable
-            # (reclaimed by GC), exactly like a post-commit delete
-            if updated_write and solver.on_node_conflict == "use_theirs" and self._staged:
-                # their metadata update wins: drop our chunk writes
-                # into the updated node (they may be out of bounds)
-                doomed = local_df(
-                    self.spark, [(n,) for n in updated_write], "node_id string"
-                )
-                self._replace_staging(
-                    self._staged_manifest_df().join(doomed, "node_id", "left_anti")
-                )
-            # updated_write + use_ours: keep our chunks — reads crop to
-            # the (new) shape, so out-of-bounds writes never surface
-            if invalid_group and solver.on_node_conflict == "use_theirs":
-                # the group delete wins: drop our creates underneath it
-                contested = set(invalid_group)
-                doomed_ids = [
-                    op["node_id"]
-                    for p in contested
-                    for op in ours_by_path[p]
-                    if op.get("node_id")
-                ]
-                self._node_ops = [
-                    op for op in self._node_ops if op["path"] not in contested
-                ]
-                for p in contested:
-                    self._nodes.pop(p, None)
-                if doomed_ids and self._staged:
-                    doomed = local_df(
-                        self.spark, [(n,) for n in doomed_ids], "node_id string"
-                    )
-                    self._replace_staging(
-                        self._staged_manifest_df().join(doomed, "node_id", "left_anti")
-                    )
-            elif invalid_group and solver.on_node_conflict == "use_ours":
-                # our creates win: resurrect the deleted ancestor groups
-                # from our view so the hierarchy stays consistent
                 for p in invalid_group:
                     for anc in _strict_ancestors(p):
                         if anc in their_deleted_paths and anc in self._nodes:
@@ -2046,6 +1931,8 @@ class Session:
                                     "node_id": self._nodes[anc]["node_id"],
                                 }
                             )
+            if drop_nodes or drop_chunks is not None:
+                self._drop_staged_rows(drop_nodes, drop_chunks)
         # merge their node table with our ops replayed on top
         merged = dict(tip.nodes)
         for op in self._node_ops:
@@ -2063,14 +1950,18 @@ class Session:
         self._base = tip
         self._drop_manifest_cache()
 
-    def _replace_staging(self, df: DataFrame) -> None:
-        materialized = df.collect()  # conflict remainders are small
-        schema = df.schema
-        stage = self._staging_dir()
-        fsio.delete_dir(stage)
-        self._staged.clear()
-        if materialized:
-            self._stage_manifest(local_df(self.spark, materialized, schema))
+    def _drop_staged_rows(self, node_ids: set[str], chunks: DataFrame | None) -> None:
+        """Drop the staged rows of ``node_ids`` and of the (node_id,
+        chunk_key) pairs in ``chunks`` from each staged item in place
+        (lazily).  Items are never merged: an item's list index is its
+        seq, so rows of different items would tie."""
+        for i, (kind, item) in enumerate(self._staged):
+            df = self._item_df(kind, item)
+            if node_ids:
+                df = df.filter(~F.col("node_id").isin(sorted(node_ids)))
+            if chunks is not None:
+                df = df.join(chunks, ["node_id", "chunk_key"], "left_anti")
+            self._staged[i] = ("df", df)
 
     # --- fork/merge (distributed cooperative writes) ----------------------
 
@@ -2213,6 +2104,20 @@ def _write_parquet_rows(path: str, rows: list[dict], schema) -> None:
     table = pa.Table.from_pylist(keyed, schema=schema)
     with fs.open_output_stream(f"{p}/part-00000.parquet") as f:
         pq.write_table(table, f)
+
+
+_TOMBSTONE_KEYS = ("node_id", "chunk_key", "c0", "c1", "c2", "c3")
+
+
+def _tombstones(keys: DataFrame) -> DataFrame:
+    """Tombstone manifest rows (``op='del'``, every ref column NULL)
+    for the chunks of ``keys`` (columns node_id, chunk_key, c0..c3)."""
+    fill = {"op": F.lit("del"), "is_virtual": F.lit(False), "seq": F.lit(0)}
+    return keys.select(*[
+        (F.col(name) if name in _TOMBSTONE_KEYS else fill.get(name, F.lit(None)))
+        .cast(typ).alias(name)
+        for name, typ in fmt.ddl_fields(MANIFEST_SCHEMA)
+    ])
 
 
 def _norm(path: str) -> str:

@@ -596,13 +596,17 @@ class ChunkStore:
         import numpy as np
         from pyspark.sql import functions as F
 
-        from icechunk_spark.repo.session import ChunkType
+        from icechunk_spark.repo.session import ChunkType, ref_kind
 
         meta = self.session.array_meta(array_path)
         ndim = len(meta.shape)
+        threshold = self.session._inline_threshold()
         rows = (
             self.session._resolved_manifest(meta.node_id, None)
-            .select("chunk_key", "chunk_id", "n_bytes", "is_virtual", "vpath", "voffset", "vlength", "inline")
+            .select(
+                "chunk_key", "chunk_id", "n_bytes", "is_virtual", "vpath", "voffset",
+                "vlength", "inline", "seq",
+            )
             .orderBy("chunk_key")
             .toLocalIterator()
         )
@@ -617,18 +621,17 @@ class ChunkStore:
             inlined: dict[int, bytes] = {}
             for i, r in enumerate(batch):
                 coords[i] = [int(x) for x in r["chunk_key"].split(".")]
-                if r["is_virtual"]:
-                    kinds[i] = int(ChunkType.virtual)
+                kind = ref_kind(r, threshold)
+                kinds[i] = int(kind)
+                if kind == ChunkType.virtual:
                     paths.append(r["vpath"])
                     offsets[i] = int(r["voffset"] or 0)
                     lengths[i] = int(r["vlength"] or 0)
-                elif r["inline"] is not None:
-                    kinds[i] = int(ChunkType.inline)
+                elif kind == ChunkType.inline:
                     paths.append("")
                     inlined[i] = bytes(r["inline"])
                     lengths[i] = len(inlined[i])
                 else:
-                    kinds[i] = int(ChunkType.native)
                     paths.append(r["chunk_id"] or "")
                     lengths[i] = int(r["n_bytes"] or 0)
             return coords, kinds, paths, offsets, lengths, inlined

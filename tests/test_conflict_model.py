@@ -18,12 +18,17 @@ metadata double-updates and update-vs-delete.
 Session op bundles are ordered (writes → resize | delete) so every
 generated sequence is individually valid; the randomness explores the
 cross-session conflict matrix — 3 op kinds × 3 resolutions × 2 arrays
-per example, as the verdict asked.
+per example, as the verdict asked.  The "WD" bundle writes chunks and
+then deletes some of them (the first through delete_chunks_prefix,
+which stages the writes and its tombstones as separate items, the rest
+through delete_chunk), so one transaction stages several items whose
+order decides each chunk: a rebase that re-staged them as one item
+brought deleted chunks back.
 """
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 
 from tests.conftest import scaled_examples
 from hypothesis import strategies as st
@@ -49,6 +54,13 @@ _bundle_st = st.one_of(
         st.sampled_from([4, 10, 12]),
     ),
     st.just(("D",)),
+    st.frozensets(st.sampled_from(CHUNKS), min_size=1, max_size=4).flatmap(
+        lambda w: st.tuples(
+            st.just("WD"),
+            st.just(w),
+            st.frozensets(st.sampled_from(sorted(w)), min_size=1),
+        )
+    ),
 )
 _side_st = st.tuples(_bundle_st, _bundle_st)  # one bundle per array
 _mode_st = st.sampled_from(["fail", "use_ours", "use_theirs"])
@@ -60,8 +72,13 @@ def _kind(b):
 
 
 def _writes(b):
+    """Chunks the bundle stages rows for (a deleted write too)."""
     k = _kind(b)
-    return set(b[1]) if k in ("W", "WR") else set()
+    return set(b[1]) if k in ("W", "WR", "WD") else set()
+
+
+def _deletes(b):
+    return set(b[2]) if _kind(b) == "WD" else set()
 
 
 def _shape(b):
@@ -72,6 +89,11 @@ def _shape(b):
 def _apply_bundle(session, path, bundle, who):
     for c in sorted(_writes(bundle)):
         session.set_chunk_bytes(path, str(c), PAY[who])
+    for i, c in enumerate(sorted(_deletes(bundle))):
+        if i == 0:
+            session.delete_chunks_prefix(path, (c,))
+        else:
+            session.delete_chunk(path, str(c))
     k = _kind(bundle)
     if k in ("R", "WR"):
         session.update_array(path, shape=[_shape(bundle)])
@@ -88,9 +110,9 @@ def _predict_conflicts(a, b) -> dict[str, object]:
     return {
         "node": node_c,
         "chunk": _writes(a) & _writes(b),
-        "deleted_node_write": ka == "W" and kb == "D",
-        "delete_of_written": ka == "D" and kb == "W",
-        "updated_node_write": ka == "W" and kb in ("R", "WR"),
+        "deleted_node_write": ka in ("W", "WD") and kb == "D",
+        "delete_of_written": ka == "D" and kb in ("W", "WD"),
+        "updated_node_write": ka in ("W", "WD") and kb in ("R", "WR"),
     }
 
 
@@ -137,11 +159,11 @@ def _predict_final(a, b, conf, on_chunk, on_node):
         else:
             present, shape = True, _shape(side) or BASE_SHAPE
         resurrected = False
-    elif conf["deleted_node_write"]:  # A=W, B=D
+    elif conf["deleted_node_write"]:  # A=W|WD, B=D
         present = on_node == "use_ours"
         shape = BASE_SHAPE if present else None
         resurrected = present  # revived from OUR base view: B never wrote
-    elif conf["delete_of_written"]:  # A=D, B=W
+    elif conf["delete_of_written"]:  # A=D, B=W|WD
         present = on_node == "use_theirs"
         shape = BASE_SHAPE if present else None
         resurrected = False
@@ -171,12 +193,13 @@ def _predict_final(a, b, conf, on_chunk, on_node):
         # chunk-level keeps (conf["node"] implies their node op exists)
         kept = set()
 
+    # a kept chunk A deleted after writing it is A's tombstone
     owners = {}
     for c in CHUNKS:
         if c in kept:
-            owners[c] = "A"
+            owners[c] = None if c in _deletes(a) else "A"
         elif c in _writes(b) and not resurrected:
-            owners[c] = "B"
+            owners[c] = None if c in _deletes(b) else "B"
         else:
             owners[c] = None
     return (True, shape, owners)
@@ -188,6 +211,12 @@ def _predict_final(a, b, conf, on_chunk, on_node):
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
 @given(a_side=_side_st, b_side=_side_st, solver=_solver_st)
+@example(
+    # A writes 0..2 and deletes 0 and 2 (three staged items); B commits 1
+    a_side=(("WD", frozenset({0, 1, 2}), frozenset({0, 2})), None),
+    b_side=(("W", frozenset({1})), None),
+    solver=("use_theirs", "fail"),
+)
 def test_two_session_conflicts_match_model(spark, tmp_path_factory, a_side, b_side, solver):
     root = str(tmp_path_factory.mktemp("confmodel"))
     repo = Repository.create(spark, root)

@@ -1,0 +1,155 @@
+"""Pins for how a session publishes and rewrites its staged changes.
+
+- commit, flush and amend share one publish step: each writes the
+  manifest files and the snapshot doc exactly once, through the module
+  attributes ``fmt.write_snapshot`` / ``mf.write_manifests`` (the
+  names the benchmark's trace hook wraps);
+- a rebase drops conflicted rows from each staged item in place, so an
+  item's list index (its seq) still orders a write and a later delete
+  of the same chunk;
+- ``ChunkStore.array_chunk_iterator`` reports the kinds and lengths of
+  ``chunk_type`` and ``store.getsize``;
+- a buffered write writes its payloads with pyarrow, not a Spark job.
+"""
+
+from __future__ import annotations
+
+import os
+import shutil
+import tempfile
+import uuid
+
+import pytest
+
+from icechunk_spark.repo import Repository
+from icechunk_spark.repo import format as fmt
+from icechunk_spark.repo import manifests as mf
+from icechunk_spark.repo.session import ChunkType, ConflictSolver
+
+W = b"W" * 4096
+T = b"T" * 4096
+
+
+@pytest.fixture()
+def root():
+    d = os.path.join(tempfile.gettempdir(), f"icpub_{uuid.uuid4().hex}")
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def _repo_with_two_chunks(spark, root):
+    repo = Repository.create(spark, root)
+    with repo.transaction(message="base") as s:
+        s.create_array("/a", shape=[16], chunk_shape=[4])
+        s.set_chunk_bytes("/a", "0", b"0" * 4096)
+        s.set_chunk_bytes("/a", "1", b"1" * 4096)
+    return repo
+
+
+def test_use_theirs_rebase_keeps_a_deleted_chunk_deleted(spark, root):
+    """A write, a prefix delete of that chunk and another write stage
+    three items; a use_theirs rebase that drops the conflicted chunk
+    must not bring the deleted chunk back (re-staging the remainder as
+    one item tied the write and the tombstone at one seq)."""
+    repo = _repo_with_two_chunks(spark, root)
+    w = repo.writable_session("main")
+    w.set_chunk_bytes("/a", "0", W)
+    w.delete_chunks_prefix("/a", (0,))
+    w.set_chunk_bytes("/a", "1", W)
+    assert w.get_chunk_bytes("/a", "0") is None
+    with repo.transaction(message="theirs") as t:
+        t.set_chunk_bytes("/a", "1", T)
+    w.rebase(ConflictSolver(on_chunk_conflict="use_theirs"))
+    assert w.get_chunk_bytes("/a", "0") is None
+    assert w.get_chunk_bytes("/a", "1") == T
+    w.commit("ours")
+    ro = repo.readonly_session()
+    assert ro.get_chunk_bytes("/a", "0") is None
+    assert ro.get_chunk_bytes("/a", "1") == T
+
+
+def test_commit_flush_and_amend_publish_once(spark, root, monkeypatch):
+    """Each publishing method reaches the snapshot and manifest writers
+    exactly once through their module attributes — the benchmark's
+    ``repo.format.*``/``repo.manifests.*`` counters cannot go silent
+    through a local import."""
+    repo = _repo_with_two_chunks(spark, root)
+    calls: list[str] = []
+
+    def counted(name, fn):
+        def wrapper(*args, **kwargs):
+            calls.append(name)
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    monkeypatch.setattr(fmt, "write_snapshot", counted("write_snapshot", fmt.write_snapshot))
+    monkeypatch.setattr(mf, "write_manifests", counted("write_manifests", mf.write_manifests))
+
+    def publish(op):
+        calls.clear()
+        op()
+        return sorted(calls)
+
+    both = ["write_manifests", "write_snapshot"]
+    s = repo.writable_session("main")
+    s.set_chunk_bytes("/a", "2", W)
+    assert publish(lambda: s.commit("c")) == both
+    s = repo.writable_session("main")
+    s.set_chunk_bytes("/a", "3", W)
+    assert publish(lambda: s.amend("amended")) == both
+    s = repo.writable_session("main")
+    s.set_chunk_bytes("/a", "2", T)
+    assert publish(lambda: s.flush("flushed")) == both
+    assert s.read_only
+
+
+def test_chunk_iterator_kinds_match_chunk_type_and_getsize(spark, root):
+    """Before and after commit the iterator's kind and length of each
+    chunk equal ``chunk_type`` and ``store.getsize``: a buffered native
+    payload over the inline threshold is native, not inline."""
+    repo = _repo_with_two_chunks(spark, root)
+    s = repo.writable_session("main")
+    s.set_chunk_bytes("/a", "2", W)  # native once flushed
+    s.set_chunk_bytes("/a", "3", b"tiny")  # inline
+
+    def check(session):
+        store = session.store
+        (coords, kinds, _, _, lengths, inlined), = store.array_chunk_iterator("/a")
+        got = {int(c[0]): (int(k), int(n)) for c, k, n in zip(coords, kinds, lengths)}
+        want = {
+            c: (int(session.chunk_type("/a", (c,))), store.getsize(f"a/c/{c}"))
+            for c in range(4)
+        }
+        assert got == want
+        assert got[2] == (int(ChunkType.native), 4096)
+        assert got[3] == (int(ChunkType.inline), 4)
+        assert list(inlined.values()) == [b"tiny"]
+
+    check(s)
+    s.commit("c")
+    check(repo.readonly_session())
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted under its own job group."""
+    sc = spark.sparkContext
+    group = f"pin-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_buffered_write_commit_job_count(spark, root):
+    """A driver-side buffered native write plus commit runs 4 jobs, all
+    for the manifest and txlog writes: the payload file is a pyarrow
+    write (as a Spark write it was a fifth job)."""
+    repo = _repo_with_two_chunks(spark, root)
+    s = repo.writable_session("main")
+    s.set_chunk_bytes("/a", "2", W)
+    assert _jobs(spark, lambda: s.commit("c")) == 4
+    assert repo.readonly_session().get_chunk_bytes("/a", "2") == W
