@@ -9,6 +9,7 @@ factor via SPARK_GRAFT_CPUS.
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import SparkSession
@@ -55,6 +56,47 @@ def local_df(spark: SparkSession, rows, schema):
         {n: pd.Series([d.get(n) for d in data], dtype=object) for n in names}
     )
     return spark.createDataFrame(pdf, struct)
+
+
+def size_conf_bytes(s: str) -> int:
+    """Parse Spark size-conf strings ('134217728b', '128m', '1gb').
+    Two-letter suffixes are matched FIRST (ADVICE r14: '128mb' used to
+    strip only the 'b', raise on float('128m'), and silently fall back
+    to the eager .rdd probe)."""
+    s = s.strip().lower()
+    mult = 1
+    for suf, m in (
+        ("kb", 1024),
+        ("mb", 1024**2),
+        ("gb", 1024**3),
+        ("tb", 1024**4),
+        ("k", 1024),
+        ("m", 1024**2),
+        ("g", 1024**3),
+        ("t", 1024**4),
+        ("b", 1),
+    ):
+        if s.endswith(suf):
+            s = s[: -len(suf)]
+            mult = m
+            break
+    return int(float(s) * mult)
+
+
+def file_split_count(spark: SparkSession, sizes) -> int:
+    """The number of input splits Spark's file scan makes of files of
+    ``sizes`` bytes — the one partition-sizing rule here.  It mirrors
+    FilePartition sizing: each file costs its bytes plus
+    ``openCostInBytes``, and the split size is
+    min(maxPartitionBytes, max(openCostInBytes, bytesPerCore)) with
+    bytesPerCore = total / defaultParallelism, so Spark SHRINKS splits
+    to fill the cores.  Raises ValueError on an unparsable size conf."""
+    mpb = size_conf_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    open_cost = size_conf_bytes(spark.conf.get("spark.sql.files.openCostInBytes", "4194304"))
+    total = sum(s + open_cost for s in sizes)
+    bytes_per_core = total / max(1, spark.sparkContext.defaultParallelism)
+    max_split = min(mpb, max(open_cost, bytes_per_core))
+    return max(1, math.ceil(total / max(1.0, max_split)))
 
 
 def get_spark(app_name: str = "icechunk_spark", shuffle_partitions: int | None = None) -> SparkSession:

@@ -83,31 +83,6 @@ def normalized_text(text: Column | str) -> Column:
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
 
 
-def _size_str_to_bytes(s: str) -> int:
-    """Parse Spark size-conf strings ('134217728b', '128m', '1gb').
-    Two-letter suffixes are matched FIRST (ADVICE r14: '128mb' used to
-    strip only the 'b', raise on float('128m'), and silently fall back
-    to the eager .rdd probe)."""
-    s = s.strip().lower()
-    mult = 1
-    for suf, m in (
-        ("kb", 1024),
-        ("mb", 1024**2),
-        ("gb", 1024**3),
-        ("tb", 1024**4),
-        ("k", 1024),
-        ("m", 1024**2),
-        ("g", 1024**3),
-        ("t", 1024**4),
-        ("b", 1),
-    ):
-        if s.endswith(suf):
-            s = s[: -len(suf)]
-            mult = m
-            break
-    return int(float(s) * mult)
-
-
 @_contextlib.contextmanager
 def scoped_shuffle_partitions(spark, n: int):
     """Scope ``spark.sql.shuffle.partitions`` to ``n`` for the jobs
@@ -159,31 +134,21 @@ def ensure_min_partitions_files(df, files: list[str], min_factor: float = 0.5):
     probe, which plans the subtree eagerly (~0.2-0.3 s per fresh
     DataFrame) — a cost a count()-pruned consumer of the spread branch
     would otherwise never pay (found on decontaminate's bench line).
-    Split estimate mirrors Spark's FilePartitions sizing: the split
-    size is min(maxPartitionBytes, max(openCostInBytes, bytesPerCore))
-    with bytesPerCore = (total + nfiles*openCost)/defaultParallelism —
-    Spark SHRINKS splits to fill the cores, so a mid-size multi-file
-    table (e.g. an 85 MB 32-part sf10 replica) scans as ~32 splits,
-    not total/128MB (the first bin-of-128MB estimate here wrongly
-    repartitioned exactly that case, measured ~10% slower at sf10).
-    Same decision rule and same repartition as the .rdd form."""
-    import math
+    Split estimate: ``engine.file_split_count`` (Spark's FilePartition
+    sizing, which SHRINKS splits to fill the cores, so a mid-size
+    multi-file table — e.g. an 85 MB 32-part sf10 replica — scans as
+    ~32 splits, not total/128MB; the first bin-of-128MB estimate here
+    wrongly repartitioned exactly that case, measured ~10% slower at
+    sf10).  Same decision rule and same repartition as the .rdd form."""
     import os
 
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    target = sc.defaultParallelism
+    from icechunk_spark.engine import file_split_count
+
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
-        mpb = _size_str_to_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-        open_cost = _size_str_to_bytes(
-            spark.conf.get("spark.sql.files.openCostInBytes", "4194304")
-        )
-        total = sum(os.path.getsize(f) + open_cost for f in files)
+        est = file_split_count(df.sparkSession, [os.path.getsize(f) for f in files])
     except (OSError, ValueError):
         return ensure_min_partitions(df, min_factor)
-    bytes_per_core = total / max(1, target)
-    max_split = min(mpb, max(open_cost, bytes_per_core))
-    est = max(1, math.ceil(total / max(1.0, max_split)))
     if est < max(2, int(target * min_factor)):
         return df.repartition(target)
     return df

@@ -44,8 +44,9 @@ def _materialize(spark: SparkSession, df: DataFrame, schema: str) -> DataFrame:
     """Pin a FINAL, bounded result (<= a few hundred rows) to a
     LocalRelation so the returned DataFrame outlives the temp repo the
     query built it from.  This is never on the chunk-data path — chunk
-    payloads are packed/decoded executor-side (encode_array_chunks /
-    decode_chunks_to_rows); the 100 TB ingest shape is
+    payloads are packed executor-side (encode_array_chunks), and a
+    region read's tasks resolve their refs and fetch and decode the
+    payloads themselves (decode_chunks_to_rows); the 100 TB ingest shape is
     ``array_store_roundtrip_distributed`` below (fork/merge, no
     driver materialization of anything data-sized)."""
     rows = df.collect()

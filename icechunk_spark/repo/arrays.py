@@ -19,9 +19,10 @@ coverage; incoming cells win; chunks with refs but no rows emit
 nothing (a semi-join on the rows' distinct chunk keys keeps their refs
 out of the cogroup).  No driver collect or persist.
 
-Read path: resolved manifest (pruned on c0..c3) → join payload files
-on chunk_id → ``mapInPandas`` unpacks buffers back to coordinate rows,
-applying slice bounds per chunk before emitting.
+Read path: ONE job of one stage, no shuffle or join (store.rs: resolve
+the refs, then fetch each chunk's bytes from storage): one task per
+chunk-range tile resolves the tile's live refs with pyarrow, reads each
+payload file once and unpacks the buffers to coordinate rows.
 
 This is the Spark-native equivalent of icechunk's Zarr chunk I/O
 (icechunk/src/store.rs): same chunk-grid model, but the codec runs
@@ -30,6 +31,7 @@ data-parallel on executors instead of in a client process.
 
 from __future__ import annotations
 
+import math
 import os
 import uuid
 from collections.abc import Iterator
@@ -39,7 +41,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from icechunk_spark.repo.format import ArrayMeta, data_path
+from icechunk_spark.engine import file_split_count, local_df
+from icechunk_spark.repo.format import ArrayMeta
 from icechunk_spark.repo.manifests import ChunkRange
 
 CHUNK_FILE_SCHEMA_SUFFIX = (
@@ -48,8 +51,7 @@ CHUNK_FILE_SCHEMA_SUFFIX = (
 )
 
 #: the payload columns every chunk file has (encode dirs add the
-#: manifest columns, buffer flushes write only these); pinned on every
-#: Spark payload read so it skips the footer schema-inference job
+#: manifest columns, buffer flushes write only these)
 PAYLOAD_SCHEMA = "chunk_id string, payload binary"
 
 
@@ -191,92 +193,105 @@ def staged_manifest_from_chunk_dir(
     )
 
 
-def slice_chunk_range(meta: ArrayMeta, slices: list[tuple[int, int]] | None) -> ChunkRange | None:
-    """The chunk range of a coordinate slice: per dimension, the
-    inclusive chunk indices ``[start // cs, (stop - 1) // cs]``."""
-    if slices is None:
-        return None
+def slice_chunk_range(meta: ArrayMeta, slices: list[tuple[int, int]] | None) -> ChunkRange:
+    """The chunk range of a coordinate slice (None: the whole array):
+    per dimension, the inclusive chunk indices ``[start // cs,
+    (stop - 1) // cs]`` clamped to the grid (empty when lo > hi)."""
     return tuple(
-        (start // cs, max(stop - 1, start) // cs)
-        for (start, stop), cs in zip(slices, meta.chunk_shape)
+        (max(start // cs, 0), min(max(stop - 1, start) // cs, g - 1))
+        for (start, stop), cs, g in zip(
+            slices or [(0, n) for n in meta.shape], meta.chunk_shape, meta.grid_shape()
+        )
     )
+
+
+def chunk_tiles(rng: ChunkRange, n: int) -> list[ChunkRange]:
+    """``rng`` cut into at most ``n`` near-equal boxes along its longest
+    dimension (of the first four: those have c0..c3 columns)."""
+    if not rng:
+        return [rng]
+    d = max(range(min(len(rng), 4)), key=lambda i: rng[i][1] - rng[i][0])
+    lo, hi = rng[d]
+    n = max(1, min(n, hi - lo + 1))
+    cuts = [lo + (hi - lo + 1) * i // n for i in range(n + 1)]
+    return [rng[:d] + ((cuts[i], cuts[i + 1] - 1),) + rng[d + 1 :] for i in range(n)]
 
 
 def decode_chunks_to_rows(
     spark: SparkSession,
-    root: str,
-    manifest: DataFrame,
+    data_root: str,
     meta: ArrayMeta,
+    layers: list[tuple],
     slices: list[tuple[int, int]] | None = None,
     vcc_map: dict[str, str] | None = None,
-    *,
-    files: list[str],
 ) -> DataFrame:
-    """Unpack chunk payloads back into (i0..ik, value) rows.
-    ``vcc_map`` (name -> url_prefix) resolves ``vcc://`` relative
-    virtual refs inside executor tasks (design-doc 014).
-
-    ``files`` is the chunk-file list to open; a SUPERSET of the live
-    files is harmless (extra payload rows simply find no match in the
-    left join on chunk_id), so callers list them from manifest
-    summaries instead of executing the resolve plan to enumerate them.
-    The payload schema is pinned, so the scan infers nothing."""
-    ndim = len(meta.shape)
-    files = [f for f in files if f is not None]
-    refs = manifest.select(
-        "chunk_key", "chunk_id", "is_virtual", "vpath", "voffset", "vlength", "inline",
-        "vchecksum",
-    )
-    if files:
-        payloads = spark.read.schema(PAYLOAD_SCHEMA).parquet(
-            *[data_path(root, f) for f in files]
-        )
-        joined = refs.join(payloads, "chunk_id", "left")
-    else:
-        joined = refs.withColumn("payload", F.lit(None).cast("binary"))
-
-    shape = list(meta.shape)
-    chunk_shape = list(meta.chunk_shape)
-    dtype = meta.dtype
-    bounds = slices
+    """An array region as (i0..ik, value) rows: a ``mapInPandas`` over a
+    ``local_df`` of chunk-range tiles (as many as Spark's file-split rule
+    makes of the range's dense bytes), one :func:`decode_tile` each.
+    ``layers``: the session's ref layers (``manifests.live_refs``);
+    ``data_root``: ``fmt.data_path(root)``, resolved on the driver.  The
+    closure holds plain values and imports package functions in-task."""
+    rng = slice_chunk_range(meta, slices)
+    tiles: list[ChunkRange] = []
+    if all(lo <= hi for lo, hi in rng):
+        cells = math.prod((hi - lo + 1) * cs for (lo, hi), cs in zip(rng, meta.chunk_shape))
+        tiles = chunk_tiles(rng, file_split_count(spark, [cells * np.dtype(meta.dtype).itemsize]))
 
     def unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # many refs share one external file: validate each (path,
-        # checksum) pair once per task, not once per chunk row
-        checked: set[tuple[str, str]] = set()
+        from icechunk_spark.repo.arrays import decode_tile
 
         for pdf in batches:
-            for _, row in pdf.iterrows():
-                ck = [int(x) for x in row["chunk_key"].split(".")]
-                raw = ref_bytes(row, vcc_map, checked, lambda r: r["payload"])
-                if raw is None:
-                    continue
-                buf = np.frombuffer(bytes(raw), dtype=dtype).reshape(chunk_shape)
-                grids = np.indices(chunk_shape).reshape(ndim, -1)
-                coords = [grids[d] + ck[d] * chunk_shape[d] for d in range(ndim)]
-                mask = np.ones(coords[0].shape, dtype=bool)
-                for d in range(ndim):
-                    mask &= coords[d] < shape[d]  # crop boundary chunks
-                    if bounds is not None:
-                        mask &= (coords[d] >= bounds[d][0]) & (coords[d] < bounds[d][1])
-                if not mask.any():
-                    continue
-                out = {f"i{d}": coords[d][mask] for d in range(ndim)}
-                out["value"] = buf.reshape(-1)[mask]
-                yield pd.DataFrame(out)
+            for t in pdf["tile"]:
+                yield from decode_tile(tiles[t], data_root, layers, meta, slices, vcc_map)
 
-    value_type = {"float64": "double", "float32": "float", "int64": "bigint", "int32": "int"}[dtype]
-    schema = ", ".join([f"i{d} bigint" for d in range(ndim)] + [f"value {value_type}"])
-    return joined.mapInPandas(unpack, schema)
+    value_type = {"float64": "double", "float32": "float", "int64": "bigint", "int32": "int"}[meta.dtype]
+    schema = ", ".join([f"i{d} bigint" for d in range(len(meta.shape))] + [f"value {value_type}"])
+    tile_rows = [{"tile": i} for i in range(len(tiles))]
+    return local_df(spark, tile_rows, "tile int").mapInPandas(unpack, schema)
+
+
+def decode_tile(tile, data_root, layers, meta, slices, vcc_map) -> Iterator[pd.DataFrame]:
+    """The rows of one tile, in its task: the tile's live refs
+    (``manifests.live_refs``); inline and virtual payloads through
+    :func:`ref_bytes`; native ones file by file, one scan per file with
+    ``chunk_id`` pushed down, a record batch at a time.  Each chunk is
+    cropped to the array shape and the slices."""
+    from icechunk_spark.repo import manifests as mf
+
+    def payloads():
+        # many refs share one external file: each (path, checksum) pair
+        # is validated once per task, not once per chunk
+        checked: set[tuple[str, str]] = set()
+        by_file: dict[str, dict[str, list[str]]] = {}  # file -> chunk_id -> keys
+        for ref in mf.live_refs(layers, data_root, meta.node_id, chunk_range=tile):
+            if ref["is_virtual"] or ref["inline"] is not None:
+                yield ref["chunk_key"], ref_bytes(ref, vcc_map, checked, None)
+            elif ref["file"] is not None:
+                by_file.setdefault(ref["file"], {}).setdefault(ref["chunk_id"], []).append(
+                    ref["chunk_key"]
+                )
+        for rel, keys in by_file.items():
+            for cid, raw in read_native_payloads(os.path.join(data_root, rel), keys):
+                yield from ((key, raw) for key in keys[cid])
+
+    chunk_shape = np.array(meta.chunk_shape)
+    grids = np.indices(meta.chunk_shape).reshape(len(chunk_shape), -1)
+    bounds = [(lo, min(hi, n)) for (lo, hi), n in zip(slices or [(0, n) for n in meta.shape], meta.shape)]
+    for chunk_key, raw in payloads():
+        coords = grids + (np.array([int(x) for x in chunk_key.split(".")]) * chunk_shape)[:, None]
+        mask = np.all([(c >= lo) & (c < hi) for c, (lo, hi) in zip(coords, bounds)], axis=0)
+        if mask.any():
+            out = {f"i{d}": c[mask] for d, c in enumerate(coords)}
+            yield pd.DataFrame({**out, "value": np.frombuffer(raw, dtype=meta.dtype)[mask]})
 
 
 def ref_bytes(ref, vcc_map: dict[str, str] | None, checked: set, native) -> bytes | None:
     """The bytes behind one manifest ref, fetched executor-side (no
     Spark job): a virtual ref reads its byte range after its checksum
     check (once per ``(path, checksum)`` in ``checked``), an inline ref
-    carries them, and a native ref's come from ``native(ref)`` — the
-    read path's joined payload column, the merge's point read.  None
-    when a native payload is missing."""
+    carries them, and a native ref's come from ``native(ref)`` (a point
+    read; the region read fetches native payloads file by file itself
+    and passes None).  None when a native payload is missing."""
     from icechunk_spark.repo import fsio
     from icechunk_spark.repo.session import check_virtual_checksum, resolve_vcc
 
@@ -292,17 +307,24 @@ def ref_bytes(ref, vcc_map: dict[str, str] | None, checked: set, native) -> byte
     return native(ref)
 
 
-def read_native_payload(path: str, chunk_id: str) -> bytes | None:
-    """Pyarrow point read of one native chunk's payload from its chunk
-    file (row-group stats prune on ``chunk_id``); usable where no
-    SparkSession exists.  ``path`` may be a URI (``s3a://`` included)."""
+def read_native_payloads(path: str, chunk_ids) -> Iterator[tuple[str, bytes]]:
+    """``(chunk_id, payload)`` of the native chunks ``chunk_ids`` in one
+    chunk file, read with pyarrow a record batch at a time (row-group
+    stats prune on ``chunk_id``); usable where no SparkSession exists.
+    ``path`` may be a URI (``s3a://`` included)."""
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
     from icechunk_spark.repo import fsio
 
     fs, p = fsio._fs_path(path)
-    tbl = ds.dataset(p, filesystem=fs, format="parquet").to_table(
-        filter=pc.field("chunk_id") == chunk_id, columns=["payload"]
+    batches = ds.dataset(p, filesystem=fs, format="parquet").to_batches(
+        columns=["chunk_id", "payload"], filter=pc.field("chunk_id").isin(list(chunk_ids))
     )
-    return tbl["payload"][0].as_py() if tbl.num_rows else None
+    for batch in batches:
+        yield from zip(*batch.to_pydict().values())
+
+
+def read_native_payload(path: str, chunk_id: str) -> bytes | None:
+    """One native chunk's payload (:func:`read_native_payloads`), or None."""
+    return next((raw for _, raw in read_native_payloads(path, [chunk_id])), None)

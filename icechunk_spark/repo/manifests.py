@@ -8,11 +8,11 @@ sorted file.  Resolution is a window-dedup — a single shuffle on
 (node_id, chunk_key) — and chunk-grid pruning happens BEFORE the
 shuffle via plain int columns c0..c3 that push down to parquet.
 
+Readers: ``resolve_manifests`` (Spark) and ``live_refs`` (pyarrow, over
+a session's ref layers: point reads, and each region-read tile's task).
+
 Pruning rules (one rule, ``prune_manifest_paths``, shared by every
-reader: ``resolve_manifests`` for Spark reads, ``resolve_manifest_rows_local``
-for every point read — the base layer of ``Session._live_refs``, on
-the driver and in executors — the session's payload-file list and
-``write_array_df``):
+reader above):
 
 - a read is described by ONE :data:`ChunkRange` (per-dimension
   inclusive chunk-index bounds, or None for the whole array); its
@@ -24,15 +24,16 @@ the driver and in executors — the session's payload-file list and
   whose extents miss the range in some dimension, is skipped (rows
   with a NULL coordinate never pass a range filter on it either);
 - a listed manifest WITHOUT a summary (older writers, hand-appended
-  files) is always kept, and its payload files come from a scan.
+  files) is always kept.
 
 ``write_manifests`` builds the summaries after its one write job,
 with no further Spark job: the driver opens the parquet part files it
 just wrote (pyarrow, through ``fsio._fs_path``) and takes the row
 count and c0..c3 extents from their footers and the distinct payload
 files from their ``file`` column.  A summary's ``files`` may over-list
-but must never under-list: a read opens only the payload files its
-kept summaries name.
+but must never under-list, so a summary-based GC can keep exactly the
+files they name; reads take payload files from the refs themselves.
+A commit lists no manifest file its staged rows left empty.
 """
 
 from __future__ import annotations
@@ -54,17 +55,16 @@ from icechunk_spark.repo.format import (
 )
 
 #: per-dimension inclusive chunk-index bounds ``((lo, hi), ...)`` over
-#: c0, c1, ... of one read or lookup; None means the whole array
+#: c0, c1, ... of one read or lookup (dimensions past the fourth have
+#: no coordinate column and are not bounded); None means the whole array
 ChunkRange = tuple[tuple[int, int], ...]
 
 
-def chunk_range_filter(rng: ChunkRange | None) -> Column | None:
+def chunk_range_filter(rng: ChunkRange | None) -> Column:
     """The c0..c3 row predicate of a chunk range (pushes down to the
-    parquet scan)."""
-    if rng is None:
-        return None
+    parquet scan; ``true``, which Catalyst drops, for None)."""
     cond = F.lit(True)
-    for d, (lo, hi) in enumerate(rng):
+    for d, (lo, hi) in enumerate((rng or ())[:4]):
         cond = cond & (F.col(f"c{d}") >= lo) & (F.col(f"c{d}") <= hi)
     return cond
 
@@ -89,10 +89,6 @@ def _may_hold(summary: dict, rng: ChunkRange | None) -> bool:
         if ext is None or ext[1] < lo or ext[0] > hi:
             return False
     return True
-
-
-def manifest_dir(root: str) -> str:
-    return data_path(root, "manifests")
 
 
 def _manifest_out_columns(df: DataFrame) -> list[str]:
@@ -164,9 +160,7 @@ def resolve_manifests(
     )
     if node_id is not None:
         df = df.filter(F.col("node_id") == node_id)
-    flt = chunk_range_filter(chunk_range)
-    if flt is not None:
-        df = df.filter(flt)
+    df = df.filter(chunk_range_filter(chunk_range))
     w = Window.partitionBy("node_id", "chunk_key").orderBy(F.desc("seq"))
     return (
         df.withColumn("__rn", F.row_number().over(w))
@@ -354,13 +348,14 @@ def _add_footer(st: dict, md) -> bool:
 
 
 def read_manifest_rows_local(
-    root, relpaths: list[str], node_id: str | None = None, chunk_key: str | None = None
+    data_root: str, relpaths: list[str], node_id=None, chunk_key=None, chunk_range=None
 ) -> list[dict]:
     """Pre-dedup rows of manifest-layout parquet dirs (manifest files,
-    staged items) read with pyarrow, no Spark job: filtered on the node
-    and the key, whose string and c0..c3 push down to row-group
-    statistics.  Read with ``MANIFEST_SCHEMA``, like the Spark reader:
-    absent columns read as NULL and additive ones are not read."""
+    staged items) under ``data_root`` (``fmt.data_path(root)``), read
+    with pyarrow, no Spark job: the node, key and chunk-range filters
+    push down to row-group statistics.  Read with ``MANIFEST_SCHEMA``,
+    like the Spark reader: absent columns read as NULL and additive
+    ones are not read."""
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
@@ -369,42 +364,67 @@ def read_manifest_rows_local(
         flt = flt & (pc.field("node_id") == node_id)
     if chunk_key is not None:
         flt = flt & (pc.field("chunk_key") == chunk_key)
-        for d, (lo, _) in enumerate(key_chunk_range(chunk_key) or ()):
-            flt = flt & (pc.field(f"c{d}") == lo)
+    for d, (lo, hi) in enumerate((chunk_range or ())[:4]):
+        flt = flt & (pc.field(f"c{d}") >= lo) & (pc.field(f"c{d}") <= hi)
     schema = arrow_schema(MANIFEST_SCHEMA)
     rows: list[dict] = []
     for rel in relpaths:
-        fs, p = fsio._fs_path(data_path(root, rel))
+        fs, p = fsio._fs_path(os.path.join(data_root, rel))
         dataset = ds.dataset(p, schema=schema, filesystem=fs, format="parquet")
         rows.extend(dataset.to_table(filter=flt).to_pylist())
     return rows
 
 
 def resolve_manifest_rows_local(
-    root,
-    snap: SnapshotInfo,
-    node_id: str | None = None,
-    chunk_key: str | None = None,
+    data_root: str, manifests: list[str], summaries: dict, node_id=None, chunk_key=None,
+    chunk_range=None,
 ) -> list[dict]:
-    """Spark-free manifest resolution (pyarrow): the base-snapshot layer
-    of every point read (``Session._live_refs``), on the driver and in
-    executors.  Same LSM semantics as ``resolve_manifests``: latest seq
-    per (node_id, chunk_key) wins, tombstones dropped.  Manifest files
-    prune first (``prune_manifest_paths`` with the key's chunk range),
-    then ``read_manifest_rows_local`` filters rows."""
-    rng = key_chunk_range(chunk_key) if chunk_key is not None else None
-    rows = read_manifest_rows_local(
-        root,
-        prune_manifest_paths(snap.manifests, node_id, snap.manifest_summaries, rng),
-        node_id,
-        chunk_key,
-    )
+    """Spark-free resolution (pyarrow) of a snapshot's ``manifests``,
+    the base layer of ``live_refs``, with the LSM semantics of
+    ``resolve_manifests``: latest seq per (node_id, chunk_key) wins,
+    tombstones dropped.  Files prune by ``summaries`` first
+    (``prune_manifest_paths``), then ``read_manifest_rows_local``
+    filters rows."""
+    kept = prune_manifest_paths(manifests, node_id, summaries, chunk_range)
     best: dict[tuple[str, str], dict] = {}
-    for r in rows:
+    for r in read_manifest_rows_local(data_root, kept, node_id, chunk_key, chunk_range):
         key = (r["node_id"], r["chunk_key"])
         if key not in best or r["seq"] > best[key]["seq"]:
             best[key] = r
     return [r for r in best.values() if r["op"] == "set"]
+
+
+def live_refs(layers, data_root: str, node_id: str, chunk_key=None, chunk_range=None) -> list[dict]:
+    """Live refs of one node (one key, or a chunk range) from a session's
+    ref ``layers``, newest first — plain values: ``("rows", rows)``
+    already read, newest first (chunk buffer, lazy staged plans);
+    ``("file", relpath, seq)`` (a staged item); ``("base", manifests,
+    summaries)``.  A key's newest row decides it (a newer tombstone
+    shadows older layers); a lookup stops at the first layer holding
+    its key.  No Spark job."""
+    rng = key_chunk_range(chunk_key) if chunk_key is not None else chunk_range
+    best: dict[str, dict] = {}
+    for kind, *spec in layers:
+        if kind == "rows":
+            rows = [r for r in spec[0] if row_matches(r, node_id, chunk_key, rng)]
+        elif kind == "file":
+            rows = read_manifest_rows_local(data_root, spec[:1], node_id, chunk_key, rng)
+            rows = [{**r, "seq": spec[1]} for r in rows]
+        else:
+            rows = resolve_manifest_rows_local(data_root, *spec, node_id, chunk_key, rng)
+        for r in rows:
+            best.setdefault(r["chunk_key"], r)
+        if chunk_key in best:
+            break
+    return [r for r in best.values() if r["op"] == "set"]
+
+
+def row_matches(row: dict, node_id, chunk_key, rng: ChunkRange | None) -> bool:
+    """``read_manifest_rows_local``'s filter, on a row already read."""
+    return node_id in (None, row["node_id"]) and chunk_key in (None, row["chunk_key"]) and all(
+        row[f"c{d}"] is not None and lo <= row[f"c{d}"] <= hi
+        for d, (lo, hi) in enumerate((rng or ())[:4])
+    )
 
 
 _HIVE_ESCAPE = set('"#%\'*/:=?\\{[]^\x7f') | {chr(c) for c in range(0x20)}

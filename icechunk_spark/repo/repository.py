@@ -1007,9 +1007,9 @@ class Repository:
         s = self._bind_virtual_auth(
             Session(self.spark, self.root, sid, branch=None, read_only=True)
         )
-        # ManifestConfig.preload_paths: eagerly resolve (and, with
-        # caching on, persist) the listed arrays' manifests so the
-        # session's first read skips the resolve shuffle
+        # ManifestConfig.preload_paths: eagerly resolve (and, with caching
+        # on, persist) the listed arrays' Spark manifest frames
+        # (chunk_manifest_df); region reads resolve in their tasks instead
         cfg = self.config()
         preload = list((cfg.manifest.preload_paths if cfg.manifest else None) or [])
         preload_cfg = (cfg.manifest.preload if cfg.manifest else None) or None

@@ -794,11 +794,12 @@ class Session:
     def read_array_df(
         self, path: str, slices: list[tuple[int, int]] | None = None
     ) -> DataFrame:
-        """Distributed read of an array region as coordinate rows."""
+        """Distributed read of an array region as coordinate rows: one
+        Spark job of one stage whose tasks resolve their refs and read
+        the payloads (``decode_chunks_to_rows``)."""
         meta = self.array_meta(path)
         self._require_regular_grid(meta, "read_array_df")
         rng = slice_chunk_range(meta, slices)
-        manifest = self._resolved_manifest(meta.node_id, rng)
         if self._virtual_containers is not None:
             # container scoping is active: refuse the read if any chunk
             # in range points outside an authorized prefix (one cheap
@@ -806,6 +807,7 @@ class Session:
             # refs authorize through their named container's prefix
             # (design-doc 014: auth stays prefix-based, names are only
             # a manifest-compression device).
+            manifest = self._resolved_manifest(meta.node_id, rng)
             ok = F.lit(False)
             for p in sorted(self._virtual_authorized):
                 ok = ok | F.col("vpath").startswith(p)
@@ -816,39 +818,10 @@ class Session:
             if bad:
                 self._check_virtual_read(self._resolve_vcc(bad[0]["vpath"]))  # raises
         return decode_chunks_to_rows(
-            self.spark, self.root, manifest, meta, slices,
+            self.spark, fmt.data_path(self.root), meta,
+            list(self._ref_layers(meta.node_id, chunk_range=rng)), slices,
             vcc_map=self._virtual_container_names,
-            files=self._manifest_file_list(meta.node_id, rng),
         )
-
-    def _manifest_file_list(self, node_id, rng) -> list[str]:
-        """Chunk-file relpaths that may hold payloads for a read of
-        ``rng``: the ``files`` of the kept manifests' snapshot
-        summaries, with no Spark job.  Kept manifests WITHOUT a
-        summary (older writers) and the staged overlay are listed by
-        one column-pruned pre-dedup scan, only when present.  A
-        superset is harmless (decode's left join on chunk_id drops
-        payload rows no live ref points at)."""
-        summaries = self._base.manifest_summaries
-        kept = mf.prune_manifest_paths(self._base.manifests, node_id, summaries, rng)
-        files = {f for m in kept if m in summaries for f in summaries[m]["files"]}
-        unsummarized = [m for m in kept if m not in summaries]
-        staged = self._staged_manifest_df()
-        if not unsummarized and staged is None:
-            return sorted(files)
-        df = mf.read_manifest_files(self.spark, self.root, unsummarized).select(
-            "node_id", "c0", "c1", "c2", "c3", "file"
-        )
-        if staged is not None:
-            df = df.unionByName(staged.select(*df.columns))
-        if node_id is not None:
-            df = df.filter(F.col("node_id") == node_id)
-        flt = mf.chunk_range_filter(rng)
-        if flt is not None:
-            df = df.filter(flt)
-        files.update(r["file"] for r in df.select("file").distinct().collect())
-        files.discard(None)
-        return sorted(files)
 
     def chunk_manifest_df(self, path: str | None = None) -> DataFrame:
         """The live chunk-ref manifest (optionally for one node) as a
@@ -1044,56 +1017,42 @@ class Session:
         return refs[0] if refs else None
 
     def _live_refs(self, node_id: str, chunk_key: str | None = None) -> list[dict]:
-        """Live refs of one node (of one key, or of all keys), resolved
-        layer by layer, newest first; a key's newest row decides it, so
-        a tombstone in a newer layer shadows the older ones:
+        """Live refs of one node (of one key, or of all keys): no Spark
+        job unless a lazy staged plan is present."""
+        return mf.live_refs(
+            self._ref_layers(node_id, chunk_key), fmt.data_path(self.root), node_id, chunk_key
+        )
 
-        1. the chunk buffer (``_buffer_entries``, later entries first);
-        2. staged items, newest index first: ``file`` items read with
-           pyarrow, lazy ``df`` plans (driver sessions only) with ONE
-           Spark filter+collect on the key, run only when one is
-           present and the buffer did not decide the key;
-        3. the base snapshot (``mf.resolve_manifest_rows_local``).
-
-        No Spark job otherwise, on the driver and in executors alike.
-        ``seq`` carries ``_overlay_staged``'s layer offsets."""
-        best: dict[str, dict] = {}
-        for rows in self._ref_layers(node_id, chunk_key):
-            for r in rows:
-                best.setdefault(r["chunk_key"], r)
-            if chunk_key in best:
-                break
-        return [r for r in best.values() if r["op"] == "set"]
-
-    def _ref_layers(self, node_id, chunk_key):
-        """The rows of each layer of ``_live_refs``, newest first."""
-        yield [
-            {**e, "seq": _BUFFERED_SEQ + e["seq"]}
-            for e in reversed(self._buffer_entries())
-            if e["node_id"] == node_id and chunk_key in (None, e["chunk_key"])
-        ]
+    def _ref_layers(self, node_id, chunk_key=None, chunk_range=None):
+        """``mf.live_refs`` layers of one node, newest first, lazily (a
+        lookup stops at the first layer holding its key): the chunk
+        buffer; staged items by index, ``file`` ones by relpath and lazy
+        ``df`` plans as rows of ONE filter+collect, run only when one is
+        present; the base manifests kept for the key or range.  ``seq``
+        carries ``_overlay_staged``'s layer offsets."""
+        rng = mf.key_chunk_range(chunk_key) if chunk_key is not None else chunk_range
+        buffered = [{**e, "seq": _BUFFERED_SEQ + e["seq"]} for e in reversed(self._buffer_entries())]
+        yield ("rows", [e for e in buffered if mf.row_matches(e, node_id, chunk_key, rng)])
         lazy: dict[int, list[dict]] = {}
         plans = self._staged_manifest_df(lazy_only=True)
         if plans is not None:
             plans = plans.filter(F.col("node_id") == node_id)
             if chunk_key is not None:
-                flt = mf.chunk_range_filter(mf.key_chunk_range(chunk_key))
                 plans = plans.filter(F.col("chunk_key") == chunk_key)
-                plans = plans.filter(flt) if flt is not None else plans
-            for r in plans.collect():
+            for r in plans.filter(mf.chunk_range_filter(rng)).collect():
                 d = r.asDict()
                 if d["inline"] is not None:
                     d["inline"] = bytes(d["inline"])
                 lazy.setdefault(d["seq"], []).append(d)
         for i in reversed(range(len(self._staged))):
             kind, item = self._staged[i]
-            rows = (
-                lazy.get(i, [])
-                if kind == "df"
-                else mf.read_manifest_rows_local(self.root, [item], node_id, chunk_key)
-            )
-            yield [{**r, "seq": _STAGED_SEQ + i} for r in rows]
-        yield mf.resolve_manifest_rows_local(self.root, self._base, node_id, chunk_key)
+            if kind == "df":
+                yield ("rows", [{**r, "seq": _STAGED_SEQ + i} for r in lazy.get(i, [])])
+            else:
+                yield ("file", item, _STAGED_SEQ + i)
+        summaries = self._base.manifest_summaries
+        kept = mf.prune_manifest_paths(self._base.manifests, node_id, summaries, rng)
+        yield ("base", kept, {m: summaries[m] for m in kept if m in summaries})
 
     def get_chunk_bytes(self, path: str, chunk_key: str) -> bytes | None:
         """One chunk's bytes (read-your-writes), or None: the newest
@@ -1355,8 +1314,7 @@ class Session:
                 self.spark, self.root, self._base, node_id, None
             ).persist()
         base = self._manifest_cache[node_id]
-        flt = mf.chunk_range_filter(rng)
-        return base.filter(flt) if flt is not None else base
+        return base.filter(mf.chunk_range_filter(rng))
 
     def _drop_manifest_cache(self) -> None:
         """Invalidate (and unpersist) cached base manifests.  MUST run
@@ -1378,7 +1336,6 @@ class Session:
         rows (filtered like ``base``), pre-dedup.  Seq offsets order the
         layers for a latest-by-seq pick: base < staged (+_STAGED_SEQ) <
         buffered (+_BUFFERED_SEQ), as in the point path (``_live_refs``)."""
-        flt = mf.chunk_range_filter(rng)
         for overlay, offset in (
             (self._staged_manifest_df(), _STAGED_SEQ),
             (self._buffer_manifest_df(), _BUFFERED_SEQ),
@@ -1388,9 +1345,7 @@ class Session:
             o = overlay.withColumn("seq", F.col("seq") + F.lit(offset))
             if node_id is not None:
                 o = o.filter(F.col("node_id") == node_id)
-            if flt is not None:
-                o = o.filter(flt)
-            base = base.unionByName(o)
+            base = base.unionByName(o.filter(mf.chunk_range_filter(rng)))
         return base
 
     def _resolved_manifest(self, node_id, rng) -> DataFrame:
@@ -1635,7 +1590,8 @@ class Session:
                 splitting=((doc or {}).get("manifest") or {}).get("splitting"),
                 node_paths=self._node_paths(),
             )
-            manifests += rels
+            # files the staged rows left empty (refs == 0) are not listed
+            manifests += [m for m in rels if m not in new or new[m]["refs"]]
             summaries.update(new)
         return manifests, {m: summaries[m] for m in manifests if m in summaries}
 

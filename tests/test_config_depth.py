@@ -91,12 +91,12 @@ def test_caching_persists_resolved_manifest(spark, repo):
     repo.save_config(RepositoryConfig(caching=CachingConfig(num_chunk_refs=10_000)))
     _write_array(repo, spark)
     sess = repo.readonly_session()
-    first = sess.read_array_df("/a").collect()
+    first = sess.chunk_manifest_df("/a").collect()
     assert hasattr(sess, "_manifest_cache") and len(sess._manifest_cache) == 1
     cached = next(iter(sess._manifest_cache.values()))
     assert cached.storageLevel.useMemory
-    second = sess.read_array_df("/a").collect()
-    assert sorted(r["value"] for r in first) == sorted(r["value"] for r in second)
+    second = sess.chunk_manifest_df("/a").collect()
+    assert sorted(r["chunk_id"] for r in first) == sorted(r["chunk_id"] for r in second)
 
 
 def test_manifest_preload_paths_warm_sessions(spark, repo):

@@ -14,8 +14,11 @@ Pinned here:
   unsummarized parents under a new commit, a manifest appended without
   a summary, and summaries off the manifest list or riding in
   ``extra`` all read exactly what a full scan reads;
+- a commit lists no manifest file its staged rows left empty (a
+  ``use_theirs`` rebase that dropped every row, a ``delete_chunks_prefix``
+  that matched nothing);
 - pruning: a one-chunk read keeps only the files whose extents hold
-  the chunk, and lists its payload files without a Spark job.
+  the chunk, and runs one Spark job.
 """
 
 from __future__ import annotations
@@ -191,6 +194,34 @@ def test_exact_after_shift_and_delete_prefix(spark, repo):
 # --- compatibility -----------------------------------------------------------
 
 
+def test_use_theirs_rebase_dropping_every_row_lists_no_empty_manifest(spark, repo):
+    w = repo.writable_session("main")
+    w.set_chunk_bytes("/g", "0.0", np.full(4, 5.0).tobytes())
+    with repo.transaction(message="theirs") as s:
+        s.set_chunk_bytes("/g", "0.0", np.full(4, 7.0).tobytes())
+    n = len(repo.list_manifest_files(repo.lookup_branch("main")))
+    w.commit("ours", rebase_with=ConflictSolver(on_chunk_conflict="use_theirs"))
+    snap = _assert_exact(spark, repo)
+    assert len(snap.manifests) == n and all(s["refs"] for s in snap.manifest_summaries.values())
+    ro = repo.readonly_session()
+    assert ro.get_chunk_bytes("/g", "0.0") == np.full(4, 7.0).tobytes()
+    assert _grid(ro, slices=[(0, 2), (0, 3)]) == {
+        (0, 0): 7.0, (0, 1): 7.0, (1, 0): 7.0, (1, 1): 7.0, (0, 2): 2.0, (1, 2): 12.0
+    }
+
+
+def test_delete_prefix_matching_nothing_lists_no_empty_manifest(spark, repo):
+    before = _grid(repo.readonly_session())
+    n = len(repo.list_manifest_files(repo.lookup_branch("main")))
+    with repo.transaction(message="delete nothing") as s:
+        s.delete_chunks_prefix("/g", (0, 3))  # chunk 0.3 was never written
+    snap = _assert_exact(spark, repo)
+    assert len(snap.manifests) == n
+    ro = repo.readonly_session()
+    assert _grid(ro) == before
+    assert ro.get_chunk_bytes("/g", "0.1") == np.array([2.0, 3.0, 12.0, 13.0]).tobytes()
+
+
 def test_doc_without_summaries_reads_the_same(spark, repo):
     tip_id = repo.lookup_branch("main")
     ro = repo.readonly_session()
@@ -298,7 +329,7 @@ def test_summaries_off_the_list_or_in_extra_are_ignored(spark, repo):
 # --- pruning -----------------------------------------------------------------
 
 
-def test_one_chunk_read_prunes_files_and_lists_payloads_without_a_job(spark, repo):
+def test_one_chunk_read_prunes_files_and_runs_one_job(spark, repo):
     with repo.transaction(message="second") as s:
         s.write_array_df("/g", _cells(spark, [(6, 6, 1.0), (6, 7, 2.0)]))
     snap = fmt.read_snapshot(repo.root, repo.lookup_branch("main"))
@@ -307,16 +338,17 @@ def test_one_chunk_read_prunes_files_and_lists_payloads_without_a_job(spark, rep
     node_files = mf.prune_manifest_paths(snap.manifests, nid)
     kept = mf.prune_manifest_paths(snap.manifests, nid, snap.manifest_summaries, ((0, 0), (0, 0)))
     assert len(kept) == 1 < len(node_files)
+    layers = list(ro._ref_layers(nid, chunk_range=((0, 0), (0, 0))))
+    assert layers[-1][:2] == ("base", kept)
     sc = spark.sparkContext
-    group = f"files-{uuid.uuid4().hex}"
+    group = f"read-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
-        files = ro._manifest_file_list(nid, ((0, 0), (0, 0)))
+        got = _grid(ro, slices=[(0, 2), (0, 2)])
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
-    assert files and all(f.startswith("chunks/") for f in files)
-    assert _grid(ro, slices=[(0, 2), (0, 2)]) == {(0, 0): 0.0, (0, 1): 1.0, (1, 0): 10.0, (1, 1): 11.0}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert got == {(0, 0): 0.0, (0, 1): 1.0, (1, 0): 10.0, (1, 1): 11.0}
     assert _grid(ro, slices=[(6, 7), (6, 8)]) == {(6, 6): 1.0, (6, 7): 2.0}
 
 
@@ -348,7 +380,9 @@ def test_pyarrow_manifest_reads_map_hadoop_schemes(spark, tmp_path, monkeypatch)
         return real(path)
 
     monkeypatch.setattr(fsio, "_fs_path", fake)
-    rows = mf.resolve_manifest_rows_local(storage, snap, nid, "2")
+    rows = mf.resolve_manifest_rows_local(
+        fmt.data_path(storage), snap.manifests, snap.manifest_summaries, nid, "2"
+    )
     assert [(r["chunk_key"], r["n_bytes"]) for r in rows] == [("2", 1024)]
     (rel,) = snap.manifests
     assert fmt.inspect_metadata_file(storage, rel)["kind"] == "manifest"

@@ -260,11 +260,10 @@ def _jobs(spark, fn) -> int:
 
 
 def test_cold_read_reread_and_lookup_job_counts(spark, root):
-    """A region read plans from the snapshot's manifest summaries: the
-    kept manifests and the payload files to join are known without a
-    Spark job, and the payload scan's schema is pinned.  A cold read
-    to the noop sink runs at most 3 jobs, a reread too (the file-list
-    collect and the footer-inference job made 6).  Point lookups
+    """A region read is one job of one stage: its tasks resolve their
+    tiles' refs and read the payloads themselves, so a cold read to the
+    noop sink runs exactly 1 job, a reread too (the dedup shuffle, the
+    payload scan and the chunk_id join made 3).  Point lookups
     (get_chunk_bytes, chunk_type, store.getsize) run no job at all when
     nothing lazy is staged: a read-only session's, and a writable
     session's whose staged items are files and buffered entries (the
@@ -286,8 +285,8 @@ def test_cold_read_reread_and_lookup_job_counts(spark, root):
         session.read_array_df("/h", slices=slices).write.format("noop").mode("overwrite").save()
 
     ro = repo.readonly_session()
-    assert _jobs(spark, lambda: noop(ro)) <= 3
-    assert _jobs(spark, lambda: noop(ro)) <= 3
+    assert _jobs(spark, lambda: noop(ro)) == 1
+    assert _jobs(spark, lambda: noop(ro)) == 1
     got = repo.readonly_session().read_array_df("/h", slices=slices).groupBy("value").count().collect()
     assert {r["value"]: r["count"] for r in got} == {
         0.0: 64, 1.0: 128, 2.0: 64, 4.0: 128, 99.0: 256, 6.0: 128, 8.0: 64, 9.0: 128, 10.0: 64,
