@@ -20,9 +20,10 @@ nothing (a semi-join on the rows' distinct chunk keys keeps their refs
 out of the cogroup).  No driver collect or persist.
 
 Read path: ONE job of one stage, no shuffle or join (store.rs: resolve
-the refs, then fetch each chunk's bytes from storage): one task per
-chunk-range tile resolves the tile's live refs with pyarrow, reads each
-payload file once and unpacks the buffers to coordinate rows.
+the refs, then fetch each chunk's bytes from storage): the payload part
+files the read touches are dealt into shares, one task each; a task
+resolves the range's live refs with pyarrow, reads each part file of
+its share once and unpacks the buffers to coordinate rows.
 
 This is the Spark-native equivalent of icechunk's Zarr chunk I/O
 (icechunk/src/store.rs): same chunk-grid model, but the codec runs
@@ -31,9 +32,9 @@ data-parallel on executors instead of in a client process.
 
 from __future__ import annotations
 
-import math
 import os
 import uuid
+import zlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -205,18 +206,6 @@ def slice_chunk_range(meta: ArrayMeta, slices: list[tuple[int, int]] | None) -> 
     )
 
 
-def chunk_tiles(rng: ChunkRange, n: int) -> list[ChunkRange]:
-    """``rng`` cut into at most ``n`` near-equal boxes along its longest
-    dimension (of the first four: those have c0..c3 columns)."""
-    if not rng:
-        return [rng]
-    d = max(range(min(len(rng), 4)), key=lambda i: rng[i][1] - rng[i][0])
-    lo, hi = rng[d]
-    n = max(1, min(n, hi - lo + 1))
-    cuts = [lo + (hi - lo + 1) * i // n for i in range(n + 1)]
-    return [rng[:d] + ((cuts[i], cuts[i + 1] - 1),) + rng[d + 1 :] for i in range(n)]
-
-
 def decode_chunks_to_rows(
     spark: SparkSession,
     data_root: str,
@@ -226,35 +215,50 @@ def decode_chunks_to_rows(
     vcc_map: dict[str, str] | None = None,
 ) -> DataFrame:
     """An array region as (i0..ik, value) rows: a ``mapInPandas`` over a
-    ``local_df`` of chunk-range tiles (as many as Spark's file-split rule
-    makes of the range's dense bytes), one :func:`decode_tile` each.
-    ``layers``: the session's ref layers (``manifests.live_refs``);
-    ``data_root``: ``fmt.data_path(root)``, resolved on the driver.  The
-    closure holds plain values and imports package functions in-task."""
+    ``local_df`` of the :func:`read_shares` of the range, one
+    :func:`decode_share` task each.  ``layers``: the session's ref
+    layers (``manifests.live_refs``); ``data_root``:
+    ``fmt.data_path(root)``, resolved on the driver.  The closure holds
+    plain values and imports package functions in-task."""
     rng = slice_chunk_range(meta, slices)
-    tiles: list[ChunkRange] = []
-    if all(lo <= hi for lo, hi in rng):
-        cells = math.prod((hi - lo + 1) * cs for (lo, hi), cs in zip(rng, meta.chunk_shape))
-        tiles = chunk_tiles(rng, file_split_count(spark, [cells * np.dtype(meta.dtype).itemsize]))
+    n, parts = read_shares(spark, data_root, layers, rng)
 
     def unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from icechunk_spark.repo.arrays import decode_tile
+        from icechunk_spark.repo.arrays import decode_share
 
         for pdf in batches:
-            for t in pdf["tile"]:
-                yield from decode_tile(tiles[t], data_root, layers, meta, slices, vcc_map)
+            for share in pdf["share"]:
+                yield from decode_share(share, n, rng, data_root, layers, meta, slices, vcc_map, parts)
 
     value_type = {"float64": "double", "float32": "float", "int64": "bigint", "int32": "int"}[meta.dtype]
     schema = ", ".join([f"i{d} bigint" for d in range(len(meta.shape))] + [f"value {value_type}"])
-    tile_rows = [{"tile": i} for i in range(len(tiles))]
-    return local_df(spark, tile_rows, "tile int").mapInPandas(unpack, schema)
+    return local_df(spark, [{"share": i} for i in range(n)], "share int").mapInPandas(unpack, schema)
 
 
-def decode_tile(tile, data_root, layers, meta, slices, vcc_map) -> Iterator[pd.DataFrame]:
-    """The rows of one tile, in its task: the tile's live refs
-    (``manifests.live_refs``); inline and virtual payloads through
-    :func:`ref_bytes`; native ones file by file, one scan per file with
-    ``chunk_id`` pushed down, a record batch at a time.  Each chunk is
+def read_shares(spark: SparkSession, data_root: str, layers, rng: ChunkRange) -> tuple[int, list]:
+    """``(n, parts)`` of a read of ``rng``: the :func:`payload_parts` the
+    kept base summaries and the driver-side rows name (no Spark job),
+    and ``n`` shares of them — Spark's file-split count of their bytes,
+    at most one per part file, at least 1 (0 for an empty range)."""
+    if not all(lo <= hi for lo, hi in rng):
+        return 0, []
+    rels = set()
+    for kind, *spec in layers:
+        if kind == "rows":
+            rels.update(r["file"] for r in spec[0] if r.get("file"))
+        elif kind == "base":
+            rels.update(f for st in spec[1].values() for f in st["files"])
+    parts = payload_parts(data_root, rels)
+    return max(1, min(len(parts), file_split_count(spark, [size for _, _, size in parts]))), parts
+
+
+def decode_share(share, n, rng, data_root, layers, meta, slices, vcc_map, parts) -> Iterator[pd.DataFrame]:
+    """The rows of share ``share`` of ``n``, in its task.  Every share
+    resolves the range's live refs (``manifests.live_refs``) and decodes
+    the inline and virtual ones whose chunk key hashes to it
+    (:func:`ref_bytes`) and the native ones in its :func:`pack_parts`
+    group of the part files the refs name (``parts`` from the driver,
+    the rest listed here), each part file read once.  Each chunk is
     cropped to the array shape and the slices."""
     from icechunk_spark.repo import manifests as mf
 
@@ -263,26 +267,52 @@ def decode_tile(tile, data_root, layers, meta, slices, vcc_map) -> Iterator[pd.D
         # is validated once per task, not once per chunk
         checked: set[tuple[str, str]] = set()
         by_file: dict[str, dict[str, list[str]]] = {}  # file -> chunk_id -> keys
-        for ref in mf.live_refs(layers, data_root, meta.node_id, chunk_range=tile):
+        for ref in mf.live_refs(layers, data_root, meta.node_id, chunk_range=rng):
             if ref["is_virtual"] or ref["inline"] is not None:
-                yield ref["chunk_key"], ref_bytes(ref, vcc_map, checked, None)
+                if zlib.crc32(ref["chunk_key"].encode()) % n == share:
+                    yield ref["chunk_key"], ref_bytes(ref, vcc_map, checked, None)
             elif ref["file"] is not None:
                 by_file.setdefault(ref["file"], {}).setdefault(ref["chunk_id"], []).append(
                     ref["chunk_key"]
                 )
-        for rel, keys in by_file.items():
-            for cid, raw in read_native_payloads(os.path.join(data_root, rel), keys):
+        found = [p for p in parts if p[0] in by_file]
+        found += payload_parts(data_root, set(by_file) - {p[0] for p in parts})
+        if set(by_file) - {p[0] for p in found}:
+            raise FileNotFoundError(f"payload files missing: {sorted(set(by_file) - {p[0] for p in found})}")
+        for rel, part, _ in pack_parts(found, n)[share]:
+            keys = by_file[rel]
+            for cid, raw in read_native_payloads(os.path.join(data_root, rel, part).rstrip("/"), keys):
                 yield from ((key, raw) for key in keys[cid])
 
     chunk_shape = np.array(meta.chunk_shape)
     grids = np.indices(meta.chunk_shape).reshape(len(chunk_shape), -1)
-    bounds = [(lo, min(hi, n)) for (lo, hi), n in zip(slices or [(0, n) for n in meta.shape], meta.shape)]
+    bounds = [(lo, min(hi, s)) for (lo, hi), s in zip(slices or [(0, s) for s in meta.shape], meta.shape)]
     for chunk_key, raw in payloads():
         coords = grids + (np.array([int(x) for x in chunk_key.split(".")]) * chunk_shape)[:, None]
         mask = np.all([(c >= lo) & (c < hi) for c, (lo, hi) in zip(coords, bounds)], axis=0)
         if mask.any():
             out = {f"i{d}": c[mask] for d, c in enumerate(coords)}
             yield pd.DataFrame({**out, "value": np.frombuffer(raw, dtype=meta.dtype)[mask]})
+
+
+def payload_parts(data_root: str, rels) -> list[tuple[str, str, int]]:
+    """``(rel, part, bytes)`` of the part files (``fsio.parquet_parts``)
+    of the payload files ``rels`` under ``data_root``."""
+    from icechunk_spark.repo import fsio
+
+    return [(rel, *part) for rel in sorted(rels) for part in fsio.parquet_parts(os.path.join(data_root, rel))]
+
+
+def pack_parts(parts, n: int) -> list[list[tuple[str, str, int]]]:
+    """``parts`` dealt into ``n`` groups of near-equal bytes, largest
+    first onto the lightest group: the same groups in every task."""
+    groups: list[list] = [[] for _ in range(n)]
+    load = [0] * n
+    for part in sorted(parts, key=lambda p: (-p[2], p[0], p[1])):
+        g = load.index(min(load))
+        groups[g].append(part)
+        load[g] += part[2]
+    return groups
 
 
 def ref_bytes(ref, vcc_map: dict[str, str] | None, checked: set, native) -> bytes | None:
@@ -309,9 +339,9 @@ def ref_bytes(ref, vcc_map: dict[str, str] | None, checked: set, native) -> byte
 
 def read_native_payloads(path: str, chunk_ids) -> Iterator[tuple[str, bytes]]:
     """``(chunk_id, payload)`` of the native chunks ``chunk_ids`` in one
-    chunk file, read with pyarrow a record batch at a time (row-group
-    stats prune on ``chunk_id``); usable where no SparkSession exists.
-    ``path`` may be a URI (``s3a://`` included)."""
+    chunk file (or dir of part files), read with pyarrow a record batch
+    at a time (row-group stats prune on ``chunk_id``); usable where no
+    SparkSession exists.  ``path`` may be a URI (``s3a://`` included)."""
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 

@@ -175,6 +175,24 @@ def _http_read_range(url: str, offset: int, length: int) -> bytes:
     return data[:length]
 
 
+def parquet_parts(path: str) -> list[tuple[str, int]]:
+    """``(part, bytes)`` of the parquet file ``path`` (part ``""``) or of
+    the parquet files under the dir ``path`` (part: the path inside it;
+    hidden ``.``/``_`` files skipped); [] when ``path`` is missing."""
+    from pyarrow import fs as pafs
+
+    fs, p = _fs_path(path.rstrip("/"))
+    if (info := fs.get_file_info(p)).type == pafs.FileType.File:
+        return [("", info.size)]
+    if info.type != pafs.FileType.Directory:
+        return []
+    return sorted(
+        (i.path[len(p) + 1 :], i.size)
+        for i in fs.get_file_info(pafs.FileSelector(p, recursive=True))
+        if i.is_file and i.extension == "parquet" and i.base_name[0] not in "._"
+    )
+
+
 def dir_size(path: str) -> int:
     """Total bytes of all files under ``path`` (one recursive LIST)."""
     from pyarrow import fs as pafs

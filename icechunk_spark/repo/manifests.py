@@ -9,7 +9,7 @@ sorted file.  Resolution is a window-dedup — a single shuffle on
 shuffle via plain int columns c0..c3 that push down to parquet.
 
 Readers: ``resolve_manifests`` (Spark) and ``live_refs`` (pyarrow, over
-a session's ref layers: point reads, and each region-read tile's task).
+a session's ref layers: point reads, and each region-read task).
 
 Pruning rules (one rule, ``prune_manifest_paths``, shared by every
 reader above):
@@ -288,27 +288,18 @@ def _written_summaries(full: str, base: str) -> dict[str, dict | None]:
     (readers then keep and scan it)."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
-    from pyarrow import fs as pafs
 
-    fs, p = fsio._fs_path(full)
-    p = p.rstrip("/")
-    try:
-        infos = fs.get_file_info(pafs.FileSelector(p, recursive=True))
-    except (FileNotFoundError, OSError):
-        return {}
+    fs, p = fsio._fs_path(full.rstrip("/"))
     stats: dict[str, dict | None] = {}
     files: dict[str, set[str]] = {}
-    for info in infos:
-        name = info.base_name
-        if info.type != pafs.FileType.File or not name.endswith(".parquet") or name[0] in "._":
-            continue
-        sub = info.path[len(p) + 1 :].rpartition("/")[0]
+    for part, _ in fsio.parquet_parts(full):
+        sub = part.rpartition("/")[0]
         if sub and not all(c.startswith(("__node=", "__split=")) for c in sub.split("/")):
             continue  # not a partition dir of this write
         rel = f"{base}/{sub}" if sub else base
         if stats.setdefault(rel, _no_rows()) is None:
             continue
-        with fs.open_input_file(info.path) as f:
+        with fs.open_input_file(f"{p}/{part}".rstrip("/")) as f:
             pf = pq.ParquetFile(f)
             if not _add_footer(stats[rel], pf.metadata):
                 stats[rel] = None

@@ -96,8 +96,8 @@ class CompressionConfig:
 class CachingConfig:
     """Metadata caching (reference: CachingConfig).  In the Spark
     re-expression the one cache that matters is the resolved manifest
-    DataFrame: with num_chunk_refs > 0, sessions persist() it so
-    repeated reads in a session skip the resolve shuffle."""
+    DataFrame: with num_chunk_refs > 0, sessions persist() it so later
+    chunk_manifest_df calls and container probes skip the resolve."""
 
     num_snapshot_nodes: int = 500_000
     num_chunk_refs: int = 15_000_000
@@ -124,8 +124,8 @@ class ManifestConfig:
     """Manifest policies (reference: ManifestConfig).  ``splitting``
     maps to the split-file count used by write_manifest;
     ``preload_paths`` lists node paths whose resolved manifests a
-    readonly session eagerly persists (the reference's
-    ManifestPreloadConfig, re-expressed as Spark caching)."""
+    readonly session eagerly persists when caching is on (the
+    reference's ManifestPreloadConfig, re-expressed as Spark caching)."""
 
     preload_paths: list[str] | None = None
     # Persisted ManifestSplittingConfig (reference:
@@ -1007,10 +1007,13 @@ class Repository:
         s = self._bind_virtual_auth(
             Session(self.spark, self.root, sid, branch=None, read_only=True)
         )
-        # ManifestConfig.preload_paths: eagerly resolve (and, with caching
-        # on, persist) the listed arrays' Spark manifest frames
-        # (chunk_manifest_df); region reads resolve in their tasks instead
+        # ManifestConfig preload: resolve and persist the listed arrays'
+        # Spark manifest frames, for chunk_manifest_df and the container
+        # probe (region reads and lookups resolve in pyarrow).  Without
+        # caching nothing would keep them: skip it.
         cfg = self.config()
+        if cfg.caching is None or cfg.caching.num_chunk_refs <= 0:
+            return s
         preload = list((cfg.manifest.preload_paths if cfg.manifest else None) or [])
         preload_cfg = (cfg.manifest.preload if cfg.manifest else None) or None
         if preload_cfg is not None:

@@ -796,7 +796,12 @@ class Session:
     ) -> DataFrame:
         """Distributed read of an array region as coordinate rows: one
         Spark job of one stage whose tasks resolve their refs and read
-        the payloads (``decode_chunks_to_rows``)."""
+        the payloads (``decode_chunks_to_rows``).  When a lazy
+        ``write_array_df``/``delete_chunks_prefix``/``shift_array`` plan
+        is staged, this call first runs one filter+collect of that
+        plan's in-range refs (inline bytes included) and ships them to
+        the tasks: such a read takes 2 jobs, and its staged refs pass
+        through the driver."""
         meta = self.array_meta(path)
         self._require_regular_grid(meta, "read_array_df")
         rng = slice_chunk_range(meta, slices)

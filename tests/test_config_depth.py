@@ -111,6 +111,26 @@ def test_manifest_preload_paths_warm_sessions(spark, repo):
     assert hasattr(sess, "_manifest_cache") and len(sess._manifest_cache) == 1
 
 
+def test_manifest_preload_without_caching_runs_no_job(spark, repo):
+    """Without caching a preload would resolve a manifest and drop it:
+    opening the session skips it and launches no Spark job."""
+    import uuid
+
+    repo.save_config(RepositoryConfig(manifest=ManifestConfig(preload_paths=["/a"])))
+    _write_array(repo, spark)
+    sc = spark.sparkContext
+    group = f"preload-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        sess = repo.readonly_session()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert not hasattr(sess, "_manifest_cache")
+    assert sorted(r["value"] for r in sess.read_array_df("/a").collect()) == [float(i) for i in range(8)]
+
+
 def test_get_partial_values_concurrency(spark, repo):
     repo.save_config(RepositoryConfig(get_partial_values_concurrency=8))
     _write_array(repo, spark)

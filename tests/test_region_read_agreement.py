@@ -1,9 +1,9 @@
 """A region read and a point read of the same session agree.
 
-``read_array_df`` runs one task per chunk-range tile; each task
-resolves its tile's live refs from the session's ref layers (chunk
-buffer, staged items, base snapshot — ``manifests.live_refs``) and
-reads the payloads itself.  ``get_chunk_bytes`` resolves one key
+``read_array_df`` runs one task per share of the payload part files;
+each task resolves the range's live refs from the session's ref layers
+(chunk buffer, staged items, base snapshot — ``manifests.live_refs``)
+and reads the payloads of its share itself.  ``get_chunk_bytes`` resolves one key
 through the same layers on the driver.  For every chunk in range, the
 cells a region read returns must be exactly the bytes the point read
 returns (cropped to the array shape and the slice), and a chunk the
@@ -55,7 +55,7 @@ def _expected(session, path, slices=None):
 def _agree(session, path="/h", slices=None):
     rows = session.read_array_df(path, slices).collect()
     got = {(r["i0"], r["i1"]): r["value"] for r in rows}
-    assert len(got) == len(rows)  # no cell twice (tiles are disjoint)
+    assert len(got) == len(rows)  # no cell twice (shares are disjoint)
     want, present = _expected(session, path, slices)
     assert got == want
     return present
@@ -188,7 +188,7 @@ def test_task_reads_map_hadoop_schemes(spark, repo, monkeypatch):
     The task body runs here on the driver, where the stub applies."""
     from pyarrow import fs as pafs
 
-    from icechunk_spark.repo import arrays, fsio
+    from icechunk_spark.repo import fsio
 
     w = repo.writable_session("main")
     f = w.fork()
@@ -206,22 +206,75 @@ def test_task_reads_map_hadoop_schemes(spark, repo, monkeypatch):
     monkeypatch.setattr(fsio, "_fs_path", fake)
     meta = w.array_meta("/h")
     layers = list(w._ref_layers(meta.node_id))
-    got = {}
-    for tile in arrays.chunk_tiles(((0, 2), (0, 2)), 2):
-        for pdf in arrays.decode_tile(tile, "s3a://bucket", layers, meta, None, None):
-            got.update({(int(a), int(b)): float(v) for a, b, v in zip(pdf["i0"], pdf["i1"], pdf["value"])})
+    got = _decode_on_driver(spark, "s3a://bucket", meta, layers, ((0, 2), (0, 2)))
     assert got == _expected(w, "/h")[0]
     assert got[(2, 2)] == 3.0 and got[(0, 0)] == 4.0
 
 
-def test_tiles_cover_the_range_once():
-    from icechunk_spark.repo.arrays import chunk_tiles
+def _decode_on_driver(spark, data_root, meta, layers, rng, slices=None):
+    """A region read's task bodies, share by share, run here on the
+    driver (where monkeypatches apply): the cells they return."""
+    from icechunk_spark.repo import arrays
 
-    rng = ((2, 4), (0, 9), (1, 1))
-    for n in (1, 2, 3, 7, 10, 50):
-        tiles = chunk_tiles(rng, n)
-        assert len(tiles) == min(n, 10)
-        cells = [(i, j, k) for t in tiles for i in range(t[0][0], t[0][1] + 1)
-                 for j in range(t[1][0], t[1][1] + 1) for k in range(t[2][0], t[2][1] + 1)]
-        assert sorted(cells) == [(i, j, 1) for i in range(2, 5) for j in range(10)]
-    assert chunk_tiles((), 4) == [()]
+    n, parts = arrays.read_shares(spark, data_root, layers, rng)
+    got = {}
+    for share in range(n):
+        for pdf in arrays.decode_share(share, n, rng, data_root, layers, meta, slices, None, parts):
+            cells = {(int(a), int(b)): float(v) for a, b, v in zip(pdf["i0"], pdf["i1"], pdf["value"])}
+            assert not set(cells) & set(got)
+            got.update(cells)
+    return got
+
+
+def test_each_payload_file_is_read_by_one_share(spark, tmp_path, monkeypatch):
+    """One write's payloads land in several part files, and the read of
+    that write runs several shares.  Each part file is opened by exactly
+    one share, and the whole read still returns every cell."""
+    from icechunk_spark.repo import arrays
+
+    repo = Repository.create(spark, str(tmp_path / "repo"))
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")  # one part file per shuffle partition
+    try:
+        with repo.transaction(message="many parts") as s:
+            s.create_array("/m", shape=[16, 16], chunk_shape=[2, 2])
+            s.write_array_df("/m", local_df(
+                spark, [{"i0": i, "i1": j, "value": float(16 * i + j)} for i in range(16) for j in range(16)],
+                "i0 bigint, i1 bigint, value double",
+            ))
+    finally:
+        spark.conf.set(key, old)
+    ro = repo.readonly_session()
+    meta = ro.array_meta("/m")
+    layers = list(ro._ref_layers(meta.node_id))
+    rng = ((0, 7), (0, 7))
+    n, parts = arrays.read_shares(spark, fmt.data_path(repo.root), layers, rng)
+    assert len(parts) >= 2 and n >= 2, (len(parts), n)
+    opened = []
+    real = arrays.read_native_payloads
+
+    def counting(path, chunk_ids):
+        opened.append(path)
+        return real(path, chunk_ids)
+
+    monkeypatch.setattr(arrays, "read_native_payloads", counting)
+    got = _decode_on_driver(spark, fmt.data_path(repo.root), meta, layers, rng)
+    assert got == {(i, j): float(16 * i + j) for i in range(16) for j in range(16)}
+    assert sorted(opened) == sorted(
+        os.path.join(fmt.data_path(repo.root), rel, part) for rel, part, _ in parts
+    )
+    assert {(r["i0"], r["i1"]): r["value"] for r in ro.read_array_df("/m").collect()} == got
+
+
+def test_pack_parts_deals_every_part_once():
+    from icechunk_spark.repo.arrays import pack_parts
+
+    parts = [("a", f"p{i}", size) for i, size in enumerate([9, 1, 5, 5, 3, 7, 2])]
+    for n in (1, 2, 3, 7, 9):
+        groups = pack_parts(parts, n)
+        assert len(groups) == n
+        assert sorted(p for g in groups for p in g) == sorted(parts)
+        assert groups == pack_parts(list(reversed(parts)), n)  # order-free
+    loads = [sum(p[2] for p in g) for g in pack_parts(parts, 3)]
+    assert max(loads) - min(loads) <= 1

@@ -316,6 +316,15 @@ def test_cold_read_reread_and_lookup_job_counts(spark, root):
     assert n == 0, n
     assert box["b"] == [np.full(256, 99.0, "<f8").tobytes(), b"F" * 1024, b"B" * 16]
     assert box["t"] == ["native", "native", "inline"] and box["n"] == [2048, 1024, 16]
+    # a lazy staged plan (write_array_df's chunk-dir scan) costs a read
+    # one more job: the driver's filter+collect of its in-range refs
+    lazy = repo.writable_session("main")
+    lazy.write_array_df("/h", local_df(
+        spark, [{"i0": 9, "i1": 9, "value": -5.0}], "i0 bigint, i1 bigint, value double"))
+    assert [kind for kind, _ in lazy._staged] == ["df"]
+    assert _jobs(spark, lambda: noop(lazy)) == 2
+    got = lazy.read_array_df("/h", slices=[(9, 10), (8, 11)]).collect()
+    assert sorted((r["i1"], r["value"]) for r in got) == [(8, 0.0), (9, -5.0), (10, 0.0)]
 
 
 def test_lookups_see_lazy_staged_plans(spark, root):
