@@ -277,8 +277,9 @@ def decode_share(share, n, rng, data_root, layers, meta, slices, vcc_map, parts)
                 )
         found = [p for p in parts if p[0] in by_file]
         found += payload_parts(data_root, set(by_file) - {p[0] for p in parts})
-        if set(by_file) - {p[0] for p in found}:
-            raise FileNotFoundError(f"payload files missing: {sorted(set(by_file) - {p[0] for p in found})}")
+        missing = set(by_file) - {p[0] for p in found}
+        if missing:
+            raise FileNotFoundError(f"payload files missing: {sorted(missing)}")
         for rel, part, _ in pack_parts(found, n)[share]:
             keys = by_file[rel]
             for cid, raw in read_native_payloads(os.path.join(data_root, rel, part).rstrip("/"), keys):
