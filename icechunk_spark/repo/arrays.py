@@ -237,17 +237,12 @@ def decode_chunks_to_rows(
 
 def read_shares(spark: SparkSession, data_root: str, layers, rng: ChunkRange) -> tuple[int, list]:
     """``(n, parts)`` of a read of ``rng``: the :func:`payload_parts` the
-    kept base summaries and the driver-side rows name (no Spark job),
-    and ``n`` shares of them — Spark's file-split count of their bytes,
-    at most one per part file, at least 1 (0 for an empty range)."""
+    kept base summaries name (no Spark job), and ``n`` shares of them —
+    Spark's file-split count of their bytes, at most one per part file,
+    at least 1 (0 for an empty range)."""
     if not all(lo <= hi for lo, hi in rng):
         return 0, []
-    rels = set()
-    for kind, *spec in layers:
-        if kind == "rows":
-            rels.update(r["file"] for r in spec[0] if r.get("file"))
-        elif kind == "base":
-            rels.update(f for st in spec[1].values() for f in st["files"])
+    rels = {f for kind, *spec in layers if kind == "base" for st in spec[1].values() for f in st["files"]}
     parts = payload_parts(data_root, rels)
     return max(1, min(len(parts), file_split_count(spark, [size for _, _, size in parts]))), parts
 

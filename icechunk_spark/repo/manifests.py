@@ -4,25 +4,31 @@ and ``op='del'`` rows are tombstones (LSM semantics — the Spark
 re-expression of icechunk's manifest-split design, design-docs/005).
 
 ``rewrite_manifests`` (repository.py) compacts the list back to one
-sorted file.  Resolution is a window-dedup — a single shuffle on
-(node_id, chunk_key) — and chunk-grid pruning happens BEFORE the
-shuffle via plain int columns c0..c3 that push down to parquet.
+sorted file.
 
-Readers: ``resolve_manifests`` (Spark) and ``live_refs`` (pyarrow, over
-a session's ref layers: point reads, and each region-read task).
+One resolver, ``live_refs`` (pyarrow), applies that rule over ref
+layers (a session's chunk buffer and staged files, then a snapshot's
+manifests), the same on the driver and in executors.  Point reads and
+region-read tasks call it directly.  Every other reader goes through
+the resolved-refs frame, ``resolve_manifests``: ONE ``mapInArrow`` over
+a ``local_df`` of work units, no shuffle or join.  A unit is one node's
+tile of c0 values; each node gets ``engine.file_split_count`` tiles of
+the part-file bytes its kept manifests hold.  ``diff_refs`` runs the
+same units over two snapshots.
 
 Pruning rules (one rule, ``prune_manifest_paths``, shared by every
 reader above):
 
 - a read is described by ONE :data:`ChunkRange` (per-dimension
   inclusive chunk-index bounds, or None for the whole array); its
-  row filter (``chunk_range_filter``) and its manifest-file test
-  (``_may_hold``) both derive from it, so they cannot disagree;
+  row filter and its manifest-file test (``_may_hold``) both derive
+  from it, so they cannot disagree;
 - node: a split file of another node (``/__node=<id>/`` in its path)
   is skipped; unsplit files may hold any node and are kept;
 - summary: a listed manifest whose snapshot summary has no rows, or
   whose extents miss the range in some dimension, is skipped (rows
-  with a NULL coordinate never pass a range filter on it either);
+  with a NULL coordinate pass a range only where its lower bound is
+  open, and extents never prune such a dimension);
 - a listed manifest WITHOUT a summary (older writers, hand-appended
   files) is always kept.
 
@@ -55,18 +61,31 @@ from icechunk_spark.repo.format import (
 )
 
 #: per-dimension inclusive chunk-index bounds ``((lo, hi), ...)`` over
-#: c0, c1, ... of one read or lookup (dimensions past the fourth have
-#: no coordinate column and are not bounded); None means the whole array
-ChunkRange = tuple[tuple[int, int], ...]
+#: c0, c1, ... of one read, lookup or tile (dimensions past the fourth
+#: have no coordinate column and are not bounded); None means the whole
+#: array.  A None bound is open, and an open lower bound also admits a
+#: NULL coordinate (NULL sorts first), so open-ended tiles lose no row.
+ChunkRange = tuple[tuple[int | None, int | None], ...]
+
+
+def _range_expr(rng: ChunkRange | None, col, is_null, true):
+    """The c0..c3 predicate of a chunk range over ``col(name)``
+    expressions (Spark columns or pyarrow fields)."""
+    cond = true
+    for d, (lo, hi) in enumerate((rng or ())[:4]):
+        c, b = col(f"c{d}"), true
+        if lo is not None:
+            b = b & (c >= lo)
+        if hi is not None:
+            b = b & (c <= hi)
+        cond = cond & (b | is_null(c) if lo is None else b)
+    return cond
 
 
 def chunk_range_filter(rng: ChunkRange | None) -> Column:
-    """The c0..c3 row predicate of a chunk range (pushes down to the
-    parquet scan; ``true``, which Catalyst drops, for None)."""
-    cond = F.lit(True)
-    for d, (lo, hi) in enumerate((rng or ())[:4]):
-        cond = cond & (F.col(f"c{d}") >= lo) & (F.col(f"c{d}") <= hi)
-    return cond
+    """The c0..c3 row predicate of a chunk range as a Spark column
+    (``true``, which Catalyst drops, for None)."""
+    return _range_expr(rng, F.col, Column.isNull, F.lit(True))
 
 
 def key_chunk_range(chunk_key: str) -> ChunkRange | None:
@@ -83,10 +102,10 @@ def _may_hold(summary: dict, rng: ChunkRange | None) -> bool:
     """Whether a summarized manifest can hold a row of ``rng``."""
     if not summary["refs"]:
         return False
-    if rng is None:
-        return True
-    for ext, (lo, hi) in zip(summary["extents"], rng):
-        if ext is None or ext[1] < lo or ext[0] > hi:
+    for ext, (lo, hi) in zip(summary["extents"], rng or ()):
+        if lo is None:
+            continue  # admits NULL, which extents do not bound
+        if ext is None or ext[1] < lo or (hi is not None and ext[0] > hi):
             return False
     return True
 
@@ -116,7 +135,7 @@ def read_manifest_files(
     union read costs one distributed footer-merge pass over the
     manifest files — acceptable for the maintenance ops that use it
     (compaction); the hot read path keeps the fixed schema and pays
-    nothing (plan-pinned in test_extensibility_015)."""
+    nothing (pinned in test_extensibility_015)."""
     if not relpaths:
         from icechunk_spark.engine import local_df
 
@@ -147,26 +166,140 @@ def resolve_manifests(
     node_id: str | None = None,
     chunk_range: ChunkRange | None = None,
     with_extra_columns: bool = False,
+    *,
+    layers: list | None = None,
+    nodes: dict | None = None,
 ) -> DataFrame:
-    """Live chunk refs at a snapshot: latest row per (node_id,
-    chunk_key), tombstones dropped.  ``chunk_range`` prunes manifest
-    files by their summaries, then rows (over c0..c3) before the dedup
-    shuffle, pushed down to the scan."""
-    df = read_manifest_files(
-        spark,
-        root,
-        prune_manifest_paths(snap.manifests, node_id, snap.manifest_summaries, chunk_range),
-        with_extra_columns=with_extra_columns,
-    )
-    if node_id is not None:
-        df = df.filter(F.col("node_id") == node_id)
-    df = df.filter(chunk_range_filter(chunk_range))
-    w = Window.partitionBy("node_id", "chunk_key").orderBy(F.desc("seq"))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & (F.col("op") == "set"))
-        .drop("__rn")
-    )
+    """The resolved-refs frame: the live chunk refs (``live_refs``) of
+    one node, or of every array, at ``snap`` — or over a session's ref
+    ``layers`` and node table ``nodes``, which then replace the
+    snapshot's manifests and nodes — in ``chunk_range``.  ONE
+    ``mapInArrow`` over the :func:`_units` (no shuffle or join); each
+    task pushes its node and tile down to the summaries and the
+    row-group statistics.  ``with_extra_columns`` reads and returns the
+    union schema of ``read_manifest_files`` (design-docs/015)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from icechunk_spark.engine import local_df
+
+    data_root = data_path(root)
+    layers = [("base", snap.manifests, snap.manifest_summaries)] if layers is None else layers
+    ids = [node_id] if node_id is not None else array_ids(snap.nodes if nodes is None else nodes)
+    schema, arrow = MANIFEST_SCHEMA, arrow_schema(MANIFEST_SCHEMA)
+    if with_extra_columns:
+        schema = read_manifest_files(spark, root, snap.manifests, with_extra_columns=True).schema
+        arrow = to_arrow_schema(schema)
+    units = _units(spark, data_root, [layers], ids, chunk_range)
+
+    def resolve(batches):
+        import pyarrow as pa
+
+        from icechunk_spark.repo.manifests import live_refs
+
+        for i in (i for batch in batches for i in batch.column(0).to_pylist()):
+            nid, rng = units[i]
+            if rows := live_refs(layers, data_root, nid, chunk_range=rng, schema=arrow):
+                yield pa.RecordBatch.from_pylist(rows, schema=arrow)
+
+    return local_df(spark, [{"unit": i} for i in range(len(units))], "unit int").mapInArrow(resolve, schema)
+
+
+def diff_refs(spark: SparkSession, root: str, a: SnapshotInfo, b: SnapshotInfo) -> DataFrame:
+    """``(change, node_id, chunk_key)`` of every chunk whose live ref
+    differs from snapshot ``a`` to ``b``: added, deleted, or updated
+    (another :func:`ref_identity`).  The :func:`_units` of both
+    snapshots, one ``mapInArrow``: each unit resolves its tile on both
+    sides and compares.  A node absent from a snapshot's node table has
+    no chunks there."""
+    from icechunk_spark.engine import local_df
+
+    data_root = data_path(root)
+    sides = [("base", a.manifests, a.manifest_summaries)], [("base", b.manifests, b.manifest_summaries)]
+    ids = set(array_ids(a.nodes)), set(array_ids(b.nodes))
+    units = _units(spark, data_root, sides, sorted(ids[0] | ids[1]), None)
+
+    def diff(batches):
+        import pyarrow as pa
+
+        from icechunk_spark.repo.manifests import live_refs, ref_identity
+
+        for i in (i for batch in batches for i in batch.column(0).to_pylist()):
+            nid, rng = units[i]
+            x, y = [
+                {r["chunk_key"]: ref_identity(r) for r in live_refs(layers, data_root, nid, chunk_range=rng)}
+                if nid in side else {}
+                for layers, side in zip(sides, ids)
+            ]
+            changes = []
+            for key in sorted(x.keys() | y.keys()):
+                old, new = x.get(key), y.get(key)
+                change = "added" if old is None else "deleted" if new is None else "updated" if old != new else None
+                if change:
+                    changes.append({"change": change, "node_id": nid, "chunk_key": key})
+            if changes:
+                yield pa.RecordBatch.from_pylist(changes)
+
+    frame = local_df(spark, [{"unit": i} for i in range(len(units))], "unit int")
+    return frame.mapInArrow(diff, "change string, node_id string, chunk_key string")
+
+
+def ref_identity(ref: dict) -> str | None:
+    """What a live ref points at: its native ``chunk_id``, its virtual
+    ``vpath@voffset``, or the md5 of its inline bytes."""
+    if ref["chunk_id"] is not None:
+        return ref["chunk_id"]
+    if ref["vpath"] is not None:
+        return "@".join(str(v) for v in (ref["vpath"], ref["voffset"]) if v is not None)
+    if ref["inline"] is not None:
+        import hashlib
+
+        return hashlib.md5(ref["inline"]).hexdigest()
+    return None
+
+
+def array_ids(nodes: dict) -> list[str]:
+    """The node ids of the arrays in a node table (path -> node)."""
+    return sorted(n["node_id"] for n in nodes.values() if n.get("kind") == "array")
+
+
+def _units(spark: SparkSession, data_root: str, sides, node_ids, rng: ChunkRange | None) -> list[tuple]:
+    """The ``(node_id, chunk_range)`` work units of a resolved-refs job
+    (no Spark job): per node, tiles of c0.  A node gets
+    ``engine.file_split_count`` tiles of the part files
+    (``fsio.parquet_parts``) of its kept manifests and staged files in
+    ``sides`` (ref-layer lists), at most one per part file and per c0
+    value.  They split the c0 span of the kept summaries (within
+    ``rng``) evenly; the outer bounds are ``rng``'s, or open (NULLs
+    too) without one, so every row falls in exactly one tile."""
+    from icechunk_spark.engine import file_split_count
+
+    parts: dict[str, list] = {}
+    units = []
+    for nid in node_ids:
+        rels, exts = set(), []
+        for layers in sides:
+            for kind, *spec in layers:
+                if kind == "file":
+                    rels.add(spec[0])
+                elif kind == "base":
+                    kept = prune_manifest_paths(spec[0], nid, spec[1], rng)
+                    rels.update(kept)
+                    exts += [spec[1][m]["extents"][0] for m in kept if m in spec[1]]
+        for rel in rels - parts.keys():
+            parts[rel] = fsio.parquet_parts(os.path.join(data_root, rel))
+        sizes = [size for rel in rels for _, size in parts[rel]]
+        exts = [e for e in exts if e is not None]
+        span = (min(e[0] for e in exts), max(e[1] for e in exts)) if exts else (0, -1)
+        if rng:
+            span = (max(span[0], rng[0][0]), min(span[1], rng[0][1]))
+        n = 1
+        if span[0] <= span[1] and len(sizes) > 1:
+            n = min(file_split_count(spark, sizes), len(sizes), span[1] - span[0] + 1)
+        outer = rng[0] if rng else (None, None)
+        cuts = [span[0] + k * (span[1] - span[0] + 1) // n for k in range(1, n)]
+        for lo, hi in zip([outer[0], *cuts], [c - 1 for c in cuts] + [outer[1]]):
+            units.append((nid, rng if (lo, hi) == (None, None) else ((lo, hi), *(rng or ())[1:])))
+    return units
 
 
 def write_manifest(
@@ -339,25 +472,23 @@ def _add_footer(st: dict, md) -> bool:
 
 
 def read_manifest_rows_local(
-    data_root: str, relpaths: list[str], node_id=None, chunk_key=None, chunk_range=None
+    data_root: str, relpaths: list[str], node_id=None, chunk_key=None, chunk_range=None, schema=None
 ) -> list[dict]:
     """Pre-dedup rows of manifest-layout parquet dirs (manifest files,
     staged items) under ``data_root`` (``fmt.data_path(root)``), read
     with pyarrow, no Spark job: the node, key and chunk-range filters
-    push down to row-group statistics.  Read with ``MANIFEST_SCHEMA``,
-    like the Spark reader: absent columns read as NULL and additive
-    ones are not read."""
+    push down to row-group statistics.  Read with the Arrow ``schema``
+    (default ``MANIFEST_SCHEMA``'s), like the Spark reader: absent
+    columns read as NULL and columns outside it are not read."""
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
-    flt = pc.scalar(True)
+    flt = _range_expr(chunk_range, pc.field, pc.Expression.is_null, pc.scalar(True))
     if node_id is not None:
         flt = flt & (pc.field("node_id") == node_id)
     if chunk_key is not None:
         flt = flt & (pc.field("chunk_key") == chunk_key)
-    for d, (lo, hi) in enumerate((chunk_range or ())[:4]):
-        flt = flt & (pc.field(f"c{d}") >= lo) & (pc.field(f"c{d}") <= hi)
-    schema = arrow_schema(MANIFEST_SCHEMA)
+    schema = schema or arrow_schema(MANIFEST_SCHEMA)
     rows: list[dict] = []
     for rel in relpaths:
         fs, p = fsio._fs_path(os.path.join(data_root, rel))
@@ -368,41 +499,43 @@ def read_manifest_rows_local(
 
 def resolve_manifest_rows_local(
     data_root: str, manifests: list[str], summaries: dict, node_id=None, chunk_key=None,
-    chunk_range=None,
+    chunk_range=None, schema=None,
 ) -> list[dict]:
     """Spark-free resolution (pyarrow) of a snapshot's ``manifests``,
-    the base layer of ``live_refs``, with the LSM semantics of
-    ``resolve_manifests``: latest seq per (node_id, chunk_key) wins,
-    tombstones dropped.  Files prune by ``summaries`` first
-    (``prune_manifest_paths``), then ``read_manifest_rows_local``
+    the base layer of ``live_refs``: latest seq per (node_id,
+    chunk_key) wins, tombstones dropped.  Files prune by ``summaries``
+    first (``prune_manifest_paths``), then ``read_manifest_rows_local``
     filters rows."""
     kept = prune_manifest_paths(manifests, node_id, summaries, chunk_range)
     best: dict[tuple[str, str], dict] = {}
-    for r in read_manifest_rows_local(data_root, kept, node_id, chunk_key, chunk_range):
+    for r in read_manifest_rows_local(data_root, kept, node_id, chunk_key, chunk_range, schema):
         key = (r["node_id"], r["chunk_key"])
         if key not in best or r["seq"] > best[key]["seq"]:
             best[key] = r
     return [r for r in best.values() if r["op"] == "set"]
 
 
-def live_refs(layers, data_root: str, node_id: str, chunk_key=None, chunk_range=None) -> list[dict]:
-    """Live refs of one node (one key, or a chunk range) from a session's
-    ref ``layers``, newest first — plain values: ``("rows", rows)``
-    already read, newest first (chunk buffer, lazy staged plans);
-    ``("file", relpath, seq)`` (a staged item); ``("base", manifests,
-    summaries)``.  A key's newest row decides it (a newer tombstone
-    shadows older layers); a lookup stops at the first layer holding
-    its key.  No Spark job."""
+def live_refs(
+    layers, data_root: str, node_id: str, chunk_key=None, chunk_range=None, schema=None
+) -> list[dict]:
+    """Live refs of one node (one key, or a chunk range) from ref
+    ``layers``, newest first — plain values: ``("rows", rows)`` already
+    read, newest first (the chunk buffer); ``("file", relpath, seq)``
+    (a staged item); ``("base", manifests, summaries)``.  A key's
+    newest row decides it (a newer tombstone shadows older layers); a
+    lookup stops at the first layer holding its key.  Files are read
+    with the Arrow ``schema`` (``read_manifest_rows_local``).  No Spark
+    job."""
     rng = key_chunk_range(chunk_key) if chunk_key is not None else chunk_range
     best: dict[str, dict] = {}
     for kind, *spec in layers:
         if kind == "rows":
             rows = [r for r in spec[0] if row_matches(r, node_id, chunk_key, rng)]
         elif kind == "file":
-            rows = read_manifest_rows_local(data_root, spec[:1], node_id, chunk_key, rng)
+            rows = read_manifest_rows_local(data_root, spec[:1], node_id, chunk_key, rng, schema)
             rows = [{**r, "seq": spec[1]} for r in rows]
         else:
-            rows = resolve_manifest_rows_local(data_root, *spec, node_id, chunk_key, rng)
+            rows = resolve_manifest_rows_local(data_root, *spec, node_id, chunk_key, rng, schema)
         for r in rows:
             best.setdefault(r["chunk_key"], r)
         if chunk_key in best:
@@ -413,8 +546,8 @@ def live_refs(layers, data_root: str, node_id: str, chunk_key=None, chunk_range=
 def row_matches(row: dict, node_id, chunk_key, rng: ChunkRange | None) -> bool:
     """``read_manifest_rows_local``'s filter, on a row already read."""
     return node_id in (None, row["node_id"]) and chunk_key in (None, row["chunk_key"]) and all(
-        row[f"c{d}"] is not None and lo <= row[f"c{d}"] <= hi
-        for d, (lo, hi) in enumerate((rng or ())[:4])
+        lo is None if v is None else (lo is None or lo <= v) and (hi is None or v <= hi)
+        for v, (lo, hi) in zip((row[f"c{d}"] for d in range(4)), (rng or ())[:4])
     )
 
 

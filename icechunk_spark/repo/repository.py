@@ -94,10 +94,10 @@ class CompressionConfig:
 
 @dataclass
 class CachingConfig:
-    """Metadata caching (reference: CachingConfig).  In the Spark
-    re-expression the one cache that matters is the resolved manifest
-    DataFrame: with num_chunk_refs > 0, sessions persist() it so later
-    chunk_manifest_df calls and container probes skip the resolve."""
+    """Metadata caching (reference: CachingConfig).  Accepted and
+    persisted for reference parity; no field has an effect here:
+    every reader resolves its refs from the manifest files
+    (``manifests.live_refs``), and no session caches them."""
 
     num_snapshot_nodes: int = 500_000
     num_chunk_refs: int = 15_000_000
@@ -122,10 +122,10 @@ class CachingConfig:
 @dataclass
 class ManifestConfig:
     """Manifest policies (reference: ManifestConfig).  ``splitting``
-    maps to the split-file count used by write_manifest;
-    ``preload_paths`` lists node paths whose resolved manifests a
-    readonly session eagerly persists when caching is on (the
-    reference's ManifestPreloadConfig, re-expressed as Spark caching)."""
+    maps to the split-file count used by write_manifest.
+    ``preload_paths`` and ``preload`` (the reference's
+    ManifestPreloadConfig) are accepted and persisted for reference
+    parity and have no effect: sessions keep no resolved manifests."""
 
     preload_paths: list[str] | None = None
     # Persisted ManifestSplittingConfig (reference:
@@ -137,8 +137,8 @@ class ManifestConfig:
     # scanning.  A typed icechunk_spark.types.ManifestSplittingConfig
     # is accepted and compiled to the persisted form.
     splitting: dict[str, Any] | None = None
-    # Typed preload policy (reference ManifestPreloadConfig) evaluated
-    # at readonly_session open; persists alongside preload_paths.
+    # Typed preload policy (reference ManifestPreloadConfig); persists
+    # alongside preload_paths, no effect.
     preload: Any = None
     # Reference parity #2274: how many manifests may be fetched /
     # updated concurrently during a commit, amend, flush, or
@@ -1004,41 +1004,9 @@ class Repository:
                 )
             branch, tag, snapshot_id = None, None, sid
         sid = VersionSelector(branch, tag, snapshot_id).resolve(self.root)
-        s = self._bind_virtual_auth(
+        return self._bind_virtual_auth(
             Session(self.spark, self.root, sid, branch=None, read_only=True)
         )
-        # ManifestConfig preload: resolve and persist the listed arrays'
-        # Spark manifest frames, for chunk_manifest_df and the container
-        # probe (region reads and lookups resolve in pyarrow).  Without
-        # caching nothing would keep them: skip it.
-        cfg = self.config()
-        if cfg.caching is None or cfg.caching.num_chunk_refs <= 0:
-            return s
-        preload = list((cfg.manifest.preload_paths if cfg.manifest else None) or [])
-        preload_cfg = (cfg.manifest.preload if cfg.manifest else None) or None
-        if preload_cfg is not None:
-            # ManifestPreloadConfig (reference parity): evaluate the
-            # condition over (path, #chunks) pairs — #chunks comes from
-            # the array's chunk grid, driver-side metadata only
-            import math
-
-            pairs = []
-            for p, n in s._nodes.items():
-                if n.get("kind") != "array":
-                    continue
-                shape, cshape = n.get("shape") or [], n.get("chunk_shape") or []
-                nchunks = 1
-                for dim, c in zip(shape, cshape):
-                    nchunks *= max(1, math.ceil(dim / max(1, c)))
-                pairs.append((p, nchunks))
-            preload.extend(preload_cfg.paths_to_preload(sorted(pairs)))
-        for p in preload:
-            try:
-                node_id = s.array_meta(p).node_id
-                s._cached_base_manifest(node_id, None).count()
-            except Exception:
-                pass  # preload is best-effort; a missing path is not an error
-        return s
 
     def writable_session(self, branch: str = MAIN) -> Session:
         self._require_online("open a writable session")
@@ -1135,36 +1103,12 @@ class Repository:
         changed chunk with change ∈ {added, deleted, updated}.  A
         chunk's identity is its native chunk_id, virtual location, or
         inline-payload hash — whichever form it takes (no chunk file is
-        ever read)."""
+        ever read).  One Spark job (``manifests.diff_refs``); every
+        chunk of an array in only one of the snapshots is added or
+        deleted."""
         a = fmt.read_snapshot(self.root, from_snapshot_id)
         b = fmt.read_snapshot(self.root, to_snapshot_id)
-
-        def ident(df: DataFrame, side: str) -> DataFrame:
-            # NB: concat_ws yields '' (not NULL) for all-null inputs,
-            # which would stop coalesce early — gate on vpath instead
-            identity = F.coalesce(
-                F.col("chunk_id"),
-                F.when(
-                    F.col("vpath").isNotNull(),
-                    F.concat_ws("@", "vpath", F.col("voffset").cast("string")),
-                ),
-                F.md5(F.col("inline")),
-            )
-            return df.select("node_id", "chunk_key", identity.alias(f"id_{side}"))
-
-        ma = ident(mf.resolve_manifests(self.spark, self.root, a), "a")
-        mb = ident(mf.resolve_manifests(self.spark, self.root, b), "b")
-        j = ma.join(mb, ["node_id", "chunk_key"], "full_outer")
-        change = (
-            F.when(F.col("id_a").isNull(), "added")
-            .when(F.col("id_b").isNull(), "deleted")
-            .when(F.col("id_a") != F.col("id_b"), "updated")
-        )
-        return (
-            j.withColumn("change", change)
-            .filter(F.col("change").isNotNull())
-            .select("change", "node_id", "chunk_key")
-        )
+        return mf.diff_refs(self.spark, self.root, a, b)
 
     # --- maintenance ops (Spark jobs) -------------------------------------
 

@@ -89,7 +89,7 @@ class ChunkType(IntEnum):
 
 def ref_kind(ref: dict, inline_threshold: int) -> ChunkType:
     """The storage kind of a live manifest ref (with ``seq`` offsets
-    as ``_overlay_staged`` sets them).  The chunk buffer carries native
+    as ``Session._ref_layers`` sets them).  The chunk buffer carries native
     payloads in the ``inline`` column, so a buffered one is inline only
     when its flush will inline it (<= ``inline_threshold``)."""
     if ref["is_virtual"]:
@@ -777,10 +777,11 @@ class Session:
         )
         refs = None
         if base_files or self._staged:
-            base = mf.read_manifest_files(self.spark, self.root, base_files)
-            refs = self._overlay_staged(
-                base.filter(F.col("node_id") == meta.node_id), meta.node_id, None
-            )
+            refs = mf.read_manifest_files(self.spark, self.root, base_files)
+            staged = self._staged_manifest_df()
+            if staged is not None:
+                refs = refs.unionByName(staged.withColumn("seq", F.col("seq") + _STAGED_SEQ))
+            refs = refs.filter(F.col("node_id") == meta.node_id)
         rel = self._new_chunk_rel()
         encode_array_chunks(
             src, meta, _dp(self.root, rel), refs,
@@ -796,12 +797,10 @@ class Session:
     ) -> DataFrame:
         """Distributed read of an array region as coordinate rows: one
         Spark job of one stage whose tasks resolve their refs and read
-        the payloads (``decode_chunks_to_rows``).  When a lazy
+        the payloads (``decode_chunks_to_rows``).  A lazy
         ``write_array_df``/``delete_chunks_prefix``/``shift_array`` plan
-        is staged, this call first runs one filter+collect of that
-        plan's in-range refs (inline bytes included) and ships them to
-        the tasks: such a read takes 2 jobs, and its staged refs pass
-        through the driver."""
+        staged since the last read is first written to its staging file
+        (``_ref_layers``): that read takes 2 jobs, later ones 1."""
         meta = self.array_meta(path)
         self._require_regular_grid(meta, "read_array_df")
         rng = slice_chunk_range(meta, slices)
@@ -1023,41 +1022,37 @@ class Session:
 
     def _live_refs(self, node_id: str, chunk_key: str | None = None) -> list[dict]:
         """Live refs of one node (of one key, or of all keys): no Spark
-        job unless a lazy staged plan is present."""
+        job unless a lazy staged plan must first be written."""
         return mf.live_refs(
             self._ref_layers(node_id, chunk_key), fmt.data_path(self.root), node_id, chunk_key
         )
 
     def _ref_layers(self, node_id, chunk_key=None, chunk_range=None):
-        """``mf.live_refs`` layers of one node, newest first, lazily (a
-        lookup stops at the first layer holding its key): the chunk
-        buffer; staged items by index, ``file`` ones by relpath and lazy
-        ``df`` plans as rows of ONE filter+collect, run only when one is
-        present; the base manifests kept for the key or range.  ``seq``
-        carries ``_overlay_staged``'s layer offsets."""
+        """``mf.live_refs`` layers, newest first, lazily (a lookup stops
+        at the first layer holding its key): the chunk buffer's rows of
+        the node (None: every node); staged items by relpath; the base
+        manifests kept for the node and the key or range.  A lazy
+        ``df`` staged item is first written to its staging file, once
+        (``_write_lazy_items``).  ``seq`` carries the layer offsets."""
+        self._write_lazy_items()
         rng = mf.key_chunk_range(chunk_key) if chunk_key is not None else chunk_range
         buffered = [{**e, "seq": _BUFFERED_SEQ + e["seq"]} for e in reversed(self._buffer_entries())]
         yield ("rows", [e for e in buffered if mf.row_matches(e, node_id, chunk_key, rng)])
-        lazy: dict[int, list[dict]] = {}
-        plans = self._staged_manifest_df(lazy_only=True)
-        if plans is not None:
-            plans = plans.filter(F.col("node_id") == node_id)
-            if chunk_key is not None:
-                plans = plans.filter(F.col("chunk_key") == chunk_key)
-            for r in plans.filter(mf.chunk_range_filter(rng)).collect():
-                d = r.asDict()
-                if d["inline"] is not None:
-                    d["inline"] = bytes(d["inline"])
-                lazy.setdefault(d["seq"], []).append(d)
         for i in reversed(range(len(self._staged))):
-            kind, item = self._staged[i]
-            if kind == "df":
-                yield ("rows", [{**r, "seq": _STAGED_SEQ + i} for r in lazy.get(i, [])])
-            else:
-                yield ("file", item, _STAGED_SEQ + i)
+            yield ("file", self._staged[i][1], _STAGED_SEQ + i)
         summaries = self._base.manifest_summaries
         kept = mf.prune_manifest_paths(self._base.manifests, node_id, summaries, rng)
         yield ("base", kept, {m: summaries[m] for m in kept if m in summaries})
+
+    def _write_lazy_items(self) -> None:
+        """Write each lazy ``df`` staged item to a staging file, in
+        place: it keeps its index, so its seq.  The commit would write
+        it anyway; readers then resolve files only."""
+        for i, (kind, item) in enumerate(self._staged):
+            if kind == "df":
+                rel = self._staging_rel()
+                item.select(*MANIFEST_COLUMNS).write.parquet(_dp(self.root, rel))
+                self._staged[i] = ("file", rel)
 
     def get_chunk_bytes(self, path: str, chunk_key: str) -> bytes | None:
         """One chunk's bytes (read-your-writes), or None: the newest
@@ -1195,8 +1190,8 @@ class Session:
         return _dp(self.root, "staging", self.session_id)
 
     def _staging_rel(self) -> str:
-        """Relpath of the next eager staged item's parquet."""
-        return os.path.join("staging", self.session_id, f"m{len(self._staged):05d}.parquet")
+        """A new relpath for a staged item's parquet."""
+        return os.path.join("staging", self.session_id, f"{new_id()}.parquet")
 
     def _stage_manifest(self, df: DataFrame) -> None:
         if not self._eager_staging:
@@ -1248,14 +1243,12 @@ class Session:
             self._stage_manifest(local_df(self.spark, refs, MANIFEST_SCHEMA))
         self._chunk_buffer.clear()
 
-    def _staged_manifest_df(self, lazy_only: bool = False) -> DataFrame | None:
-        """The staged items (only the lazy ``df`` plans with
-        ``lazy_only``) as one frame whose ``seq`` is the staging index
-        (the intra-commit sub-sequence); None when there are none."""
+    def _staged_manifest_df(self) -> DataFrame | None:
+        """The staged items as one frame whose ``seq`` is the staging
+        index (the intra-commit sub-sequence); None when there are
+        none."""
         out = None
         for i, (kind, item) in enumerate(self._staged):
-            if kind == "file" and lazy_only:
-                continue
             d = self._item_df(kind, item).withColumn("seq", F.lit(i).cast("bigint"))
             out = d if out is None else out.unionByName(d)
         return out
@@ -1296,78 +1289,14 @@ class Session:
             )
         return entries
 
-    def _buffer_manifest_df(self) -> DataFrame | None:
-        if not self._chunk_buffer:
-            return None
-        return local_df(self.spark, self._buffer_entries(), MANIFEST_SCHEMA)
-
-    def _cached_base_manifest(self, node_id, rng) -> DataFrame:
-        """Resolve (and, when the caching config enables it, persist)
-        the base snapshot's manifest.  Caching is keyed per node with
-        no chunk filter — pruned reads still filter the cached frame,
-        trading a wider cache for skipping the resolve shuffle on
-        every subsequent read in this session (CachingConfig
-        num_chunk_refs, reference parity)."""
-        doc = self._config_doc()
-        caching = (doc or {}).get("caching") or {}
-        if int(caching.get("num_chunk_refs", 0) or 0) <= 0:
-            return mf.resolve_manifests(self.spark, self.root, self._base, node_id, rng)
-        if not hasattr(self, "_manifest_cache"):
-            self._manifest_cache: dict[Any, DataFrame] = {}
-        if node_id not in self._manifest_cache:
-            self._manifest_cache[node_id] = mf.resolve_manifests(
-                self.spark, self.root, self._base, node_id, None
-            ).persist()
-        base = self._manifest_cache[node_id]
-        return base.filter(mf.chunk_range_filter(rng))
-
-    def _drop_manifest_cache(self) -> None:
-        """Invalidate (and unpersist) cached base manifests.  MUST run
-        whenever ``self._base`` is reassigned — commit, amend, rebase —
-        or a session with ``CachingConfig.num_chunk_refs > 0`` keeps
-        serving pre-commit manifests after the base moved (and the
-        persisted DataFrames leak executor memory)."""
-        cache = getattr(self, "_manifest_cache", None)
-        if cache:
-            for df in cache.values():
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass  # spark may already be stopped at teardown
-            cache.clear()
-
-    def _overlay_staged(self, base: DataFrame, node_id, rng) -> DataFrame:
-        """``base`` plus this transaction's staged and buffered manifest
-        rows (filtered like ``base``), pre-dedup.  Seq offsets order the
-        layers for a latest-by-seq pick: base < staged (+_STAGED_SEQ) <
-        buffered (+_BUFFERED_SEQ), as in the point path (``_live_refs``)."""
-        for overlay, offset in (
-            (self._staged_manifest_df(), _STAGED_SEQ),
-            (self._buffer_manifest_df(), _BUFFERED_SEQ),
-        ):
-            if overlay is None:
-                continue
-            o = overlay.withColumn("seq", F.col("seq") + F.lit(offset))
-            if node_id is not None:
-                o = o.filter(F.col("node_id") == node_id)
-            base = base.unionByName(o.filter(mf.chunk_range_filter(rng)))
-        return base
-
     def _resolved_manifest(self, node_id, rng) -> DataFrame:
-        """Base-snapshot manifest overlaid with staged (uncommitted)
-        writes — read-your-writes inside the transaction — pruned to
-        the chunk range ``rng`` (None = all chunks)."""
-        base = self._cached_base_manifest(node_id, rng)
-        if not self._staged and not self._chunk_buffer:
-            return base
-        from pyspark.sql import Window
-
-        union = self._overlay_staged(base, node_id, rng)
-        w = Window.partitionBy("node_id", "chunk_key").orderBy(F.desc("seq"))
-        return (
-            union.withColumn("__rn", F.row_number().over(w))
-            .filter((F.col("__rn") == 1) & (F.col("op") == "set"))
-            .drop("__rn")
+        """The live refs of one node (None: every array), read-your-
+        writes, in the chunk range ``rng`` (None = all chunks): the
+        resolved-refs frame (``mf.resolve_manifests``) over
+        ``_ref_layers``."""
+        layers = list(self._ref_layers(node_id, chunk_range=rng))
+        return mf.resolve_manifests(
+            self.spark, self.root, self._base, node_id, rng, layers=layers, nodes=self._nodes
         )
 
     # --- commit machinery -------------------------------------------------
@@ -1564,7 +1493,6 @@ class Session:
         self._staged.clear()
         self._node_ops.clear()
         self._base = snap
-        self._drop_manifest_cache()
 
     @_traced("icechunk.rebase")
     def rebase(self, solver: ConflictSolver) -> None:
@@ -1909,7 +1837,6 @@ class Session:
                     merged[path] = self._nodes[path]
         self._nodes = merged
         self._base = tip
-        self._drop_manifest_cache()
 
     def _drop_staged_rows(self, node_ids: set[str], chunks: DataFrame | None) -> None:
         """Drop the staged rows of ``node_ids`` and of the (node_id,

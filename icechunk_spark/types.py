@@ -294,9 +294,9 @@ DEFAULT_PRELOAD_IF = _Cond(
 @dataclass
 class ManifestPreloadConfig:
     """Session-open manifest preload policy (reference parity:
-    icechunk.ManifestPreloadConfig).  Compiled by
-    ``Repository.readonly_session`` into the engine's eager
-    ``persist()`` of matching arrays' resolved manifests."""
+    icechunk.ManifestPreloadConfig).  Accepted and persisted in
+    ``ManifestConfig.preload``; it has no effect, since sessions keep
+    no resolved manifests (``paths_to_preload`` still evaluates it)."""
 
     max_total_refs: int | None = None
     preload_if: _Cond | None = None

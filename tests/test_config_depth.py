@@ -87,28 +87,56 @@ def test_repo_update_retries_bounds_cas_loop(spark, repo, monkeypatch):
     assert calls["n"] == 2
 
 
-def test_caching_persists_resolved_manifest(spark, repo):
+def _open_jobs(spark, repo):
+    """A readonly session and the Spark jobs its opening launched."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"open-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        sess = repo.readonly_session()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sess, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_caching_config_opens_sessions_without_a_job(spark, repo):
+    """CachingConfig is accepted for reference parity and has no
+    effect: a session opens with no Spark job and resolves the same
+    refs on every call."""
     repo.save_config(RepositoryConfig(caching=CachingConfig(num_chunk_refs=10_000)))
     _write_array(repo, spark)
-    sess = repo.readonly_session()
+    sess, jobs = _open_jobs(spark, repo)
+    assert jobs == 0
     first = sess.chunk_manifest_df("/a").collect()
-    assert hasattr(sess, "_manifest_cache") and len(sess._manifest_cache) == 1
-    cached = next(iter(sess._manifest_cache.values()))
-    assert cached.storageLevel.useMemory
     second = sess.chunk_manifest_df("/a").collect()
+    assert len(first) == 2
     assert sorted(r["chunk_id"] for r in first) == sorted(r["chunk_id"] for r in second)
+    assert sorted(r["value"] for r in sess.read_array_df("/a").collect()) == [float(i) for i in range(8)]
 
 
-def test_manifest_preload_paths_warm_sessions(spark, repo):
+def test_manifest_preload_config_opens_sessions_without_a_job(spark, repo):
+    """With caching and both preload forms (paths, one missing, and the
+    typed ManifestPreloadConfig) a session still opens with no Spark
+    job and reads correct values: the preload has no effect."""
+    from icechunk_spark.types import ManifestPreloadCondition, ManifestPreloadConfig
+
     repo.save_config(
         RepositoryConfig(
             caching=CachingConfig(num_chunk_refs=10_000),
-            manifest=ManifestConfig(preload_paths=["/a", "/does-not-exist"]),
+            manifest=ManifestConfig(
+                preload_paths=["/a", "/does-not-exist"],
+                preload=ManifestPreloadConfig(preload_if=ManifestPreloadCondition.true()),
+            ),
         )
     )
     _write_array(repo, spark)
-    sess = repo.readonly_session()  # preload runs here, missing path ignored
-    assert hasattr(sess, "_manifest_cache") and len(sess._manifest_cache) == 1
+    sess, jobs = _open_jobs(spark, repo)
+    assert jobs == 0
+    assert sorted(r["value"] for r in sess.read_array_df("/a").collect()) == [float(i) for i in range(8)]
+    assert sess.get_chunk_bytes("/a", "1") is not None
 
 
 def test_manifest_preload_without_caching_runs_no_job(spark, repo):

@@ -124,7 +124,8 @@ def test_lazy_write_delete_and_shift_items(spark, repo):
     s.delete_chunks_prefix("/h", (1,))
     assert _agree_everywhere(s) == 6
     s.shift_array("/h", [0, 1])  # column 2 falls off, column 0 is vacated
-    assert {kind for kind, _ in s._staged} == {"df"}
+    # the reads above wrote the earlier lazy items to staging files
+    assert [kind for kind, _ in s._staged] == ["file", "file", "df", "df"]
     assert _agree_everywhere(s) == 4
     s.commit("lazy plans")
     assert _agree_everywhere(repo.readonly_session()) == 4

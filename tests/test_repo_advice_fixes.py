@@ -577,6 +577,7 @@ def test_fresh_first_write_takes_driver_only_fast_path(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from icechunk_spark.repo import manifests as mf
     from icechunk_spark.repo.repository import Repository
 
     repo = Repository.create(spark, str(tmp_path / "fastpath"))
@@ -586,9 +587,9 @@ def test_fresh_first_write_takes_driver_only_fast_path(spark, tmp_path):
     with repo.transaction(message="v1") as s:
         s.create_array("/a", shape=[128], chunk_shape=[64])
         with mock.patch.object(
-            type(s),
-            "_resolved_manifest",
-            side_effect=AssertionError("fresh-array write took the probe path"),
+            mf,
+            "read_manifest_files",
+            side_effect=AssertionError("fresh-array write read manifest files"),
         ):
             s.write_array_df("/a", df)
     got = {

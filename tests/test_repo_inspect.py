@@ -182,6 +182,103 @@ def test_diff_df_chunk_changes(spark, tmp_path):
     assert d.chunks_written == 2 and d.chunks_deleted == 1
 
 
+def _changes(repo, a, b) -> set[tuple[str, str, str]]:
+    return {(r["change"], r["node_id"], r["chunk_key"]) for r in repo.diff_df(a, b).collect()}
+
+
+def test_diff_across_rewrite_manifests_is_empty(spark, tmp_path):
+    """Compaction replaces every manifest file but no live ref: the
+    diff compares refs, not files."""
+    repo = Repository.create(spark, str(tmp_path / "r"))
+    with repo.transaction(message="v1") as s:
+        s.create_array("/a", shape=[8, 8], chunk_shape=[4, 4])
+        s.write_array_df("/a", grid_df(spark))
+    with repo.transaction(message="v2") as s:
+        s.set_chunk_bytes("/a", "1.1", b"y" * 4096)
+        s.delete_chunk("/a", "0.0")
+    before = repo.lookup_branch("main")
+    after = repo.rewrite_manifests()
+    old, new = (repo.list_manifest_files(x) for x in (before, after))
+    assert not set(old) & set(new)
+    assert _changes(repo, before, after) == set()
+    assert _changes(repo, after, before) == set()
+
+
+def test_diff_lists_every_chunk_of_an_array_in_one_snapshot(spark, tmp_path):
+    """An array created after ``a`` has every chunk added, and one
+    deleted before ``b`` every chunk deleted, although a deleted node's
+    refs stay in the manifests ``b`` lists."""
+    repo = Repository.create(spark, str(tmp_path / "r"))
+    with repo.transaction(message="v1") as s:
+        s.create_array("/old", shape=[8, 8], chunk_shape=[4, 4])
+        s.write_array_df("/old", grid_df(spark))
+    v1 = repo.lookup_branch("main")
+    with repo.transaction(message="v2") as s:
+        s.delete_node("/old")
+        s.create_array("/new", shape=[16], chunk_shape=[4])
+        for k in range(3):
+            s.set_chunk_bytes("/new", str(k), bytes([k]) * 32)
+    v2 = repo.lookup_branch("main")
+    old_id = repo.lookup_snapshot(v1).nodes["/old"]["node_id"]
+    new_id = repo.lookup_snapshot(v2).nodes["/new"]["node_id"]
+    grid = {f"{i}.{j}" for i in range(2) for j in range(2)}
+    assert _changes(repo, v1, v2) == (
+        {("deleted", old_id, k) for k in grid} | {("added", new_id, str(k)) for k in range(3)}
+    )
+    assert _changes(repo, v2, v1) == (
+        {("added", old_id, k) for k in grid} | {("deleted", new_id, str(k)) for k in range(3)}
+    )
+    d = repo.diff(from_snapshot_id=v1, to_snapshot_id=v2)
+    assert (d.chunks_written, d.chunks_deleted) == (3, 4)
+    assert d.new_nodes == ["/new"] and d.deleted_nodes == ["/old"]
+
+
+def test_diff_virtual_ref_repointed_is_updated(spark, tmp_path):
+    ext = tmp_path / "external.bin"
+    ext.write_bytes(bytes(range(256)))
+    repo = Repository.create(spark, str(tmp_path / "r"))
+    with repo.transaction(message="v1") as s:
+        s.create_array("/v", shape=[8], chunk_shape=[4])
+        s.set_virtual_ref("/v", "0", str(ext), 0, 32, validate_container=False)
+        s.set_virtual_ref("/v", "1", str(ext), 32, 32, validate_container=False)
+    v1 = repo.lookup_branch("main")
+    with repo.transaction(message="v2") as s:
+        s.set_virtual_ref("/v", "0", str(ext), 64, 32, validate_container=False)
+        s.set_virtual_ref("/v", "1", str(ext), 32, 32, validate_container=False)
+    v2 = repo.lookup_branch("main")
+    assert {(c, k) for c, _, k in _changes(repo, v1, v2)} == {("updated", "0")}
+
+
+def test_diff_df_counts_equal_diff_on_split_manifests(spark, tmp_path):
+    """With manifests split at 4 refs per file, a diff resolves each
+    node in c0 tiles; its per-change counts equal ``Repository.diff``
+    and the chunks each commit touched."""
+    from icechunk_spark.repo.repository import ManifestConfig
+
+    cfg = RepositoryConfig(manifest=ManifestConfig(splitting={"max_refs_per_manifest": 4}))
+    repo = Repository.create(spark, str(tmp_path / "r"), config=cfg)
+    with repo.transaction(message="v1") as s:
+        s.create_array("/a", shape=[64, 64], chunk_shape=[8, 8])
+        for i in range(8):
+            for j in range(8):
+                s.set_chunk_bytes("/a", f"{i}.{j}", bytes([i, j]) * 512)
+    v1 = repo.lookup_branch("main")
+    with repo.transaction(message="v2") as s:
+        for i in range(8):
+            s.set_chunk_bytes("/a", f"{i}.{i}", b"u" * 1024)  # updated
+        for j in range(1, 8):
+            s.delete_chunk("/a", f"0.{j}")  # deleted
+    v2 = repo.lookup_branch("main")
+    assert len(repo.list_manifest_files(v2)) >= 16
+    for a, b, want in ((v1, v2, {"updated": 8, "deleted": 7}), (v2, v1, {"updated": 8, "added": 7})):
+        got = {r["change"]: r["count"] for r in repo.diff_df(a, b).groupBy("change").count().collect()}
+        assert got == want
+        d = repo.diff(from_snapshot_id=a, to_snapshot_id=b)
+        assert (d.chunks_written, d.chunks_deleted) == (
+            got.get("added", 0) + got.get("updated", 0), got.get("deleted", 0)
+        )
+
+
 def test_repr_surface(spark, tmp_path):
     """Notebook ergonomics: Repository/Session/ChunkStore repr and
     _repr_html_ (reference display.rs, _repr_html_ wrappers)."""

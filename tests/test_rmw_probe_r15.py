@@ -316,8 +316,8 @@ def test_cold_read_reread_and_lookup_job_counts(spark, root):
     assert n == 0, n
     assert box["b"] == [np.full(256, 99.0, "<f8").tobytes(), b"F" * 1024, b"B" * 16]
     assert box["t"] == ["native", "native", "inline"] and box["n"] == [2048, 1024, 16]
-    # a lazy staged plan (write_array_df's chunk-dir scan) costs a read
-    # one more job: the driver's filter+collect of its in-range refs
+    # a lazy staged plan (write_array_df's chunk-dir scan) costs the
+    # first read one more job: writing it to its staging file
     lazy = repo.writable_session("main")
     lazy.write_array_df("/h", local_df(
         spark, [{"i0": 9, "i1": 9, "value": -5.0}], "i0 bigint, i1 bigint, value double"))
@@ -327,11 +327,52 @@ def test_cold_read_reread_and_lookup_job_counts(spark, root):
     assert sorted((r["i1"], r["value"]) for r in got) == [(8, 0.0), (9, -5.0), (10, 0.0)]
 
 
+def test_lazy_staged_item_is_written_once(spark, root):
+    """The first reader after a lazy ``write_array_df`` writes the
+    staged plan to its staging file, in place: a lookup then runs 1
+    job (that write) and the next none; a region read runs 2 (the write
+    and the read) and the next 1.  The commit publishes the cells the
+    reads saw."""
+    schema = "i0 bigint, i1 bigint, value double"
+    repo = Repository.create(spark, root)
+    with repo.transaction(message="base") as s:
+        s.create_array("/h", shape=[8, 8], chunk_shape=[4, 4])
+        s.write_array_df("/h", local_df(
+            spark, [{"i0": a, "i1": b, "value": float(a * 8 + b)} for a in range(8) for b in range(8)], schema))
+    block = [{"i0": a, "i1": b, "value": -1.0} for a in range(2, 6) for b in range(2, 6)]
+    want = {(a, b): -1.0 if 2 <= a < 6 and 2 <= b < 6 else float(a * 8 + b) for a in range(8) for b in range(8)}
+    chunk00 = np.array([[want[a, b] for b in range(4)] for a in range(4)]).tobytes()
+
+    lookup = repo.writable_session("main")
+    lookup.write_array_df("/h", local_df(spark, block, schema))
+    assert [kind for kind, _ in lookup._staged] == ["df"]
+    box = {}
+    assert _jobs(spark, lambda: box.update(first=lookup.get_chunk_bytes("/h", "0.0"))) == 1
+    assert _jobs(spark, lambda: box.update(second=lookup.get_chunk_bytes("/h", "0.0"))) == 0
+    assert [kind for kind, _ in lookup._staged] == ["file"]
+    assert box == {"first": chunk00, "second": chunk00}
+
+    read = repo.writable_session("main")
+    read.write_array_df("/h", local_df(spark, block, schema))
+
+    def noop():
+        read.read_array_df("/h").write.format("noop").mode("overwrite").save()
+
+    assert _jobs(spark, noop) == 2
+    assert _jobs(spark, noop) == 1
+    cells = {(r["i0"], r["i1"]): r["value"] for r in read.read_array_df("/h").collect()}
+    assert cells == want
+    read.commit("lazy item written by a reader")
+    committed = repo.readonly_session().read_array_df("/h").collect()
+    assert {(r["i0"], r["i1"]): r["value"] for r in committed} == want
+
+
 def test_lookups_see_lazy_staged_plans(spark, root):
     """A driver session's lazy staged plans (write_array_df's chunk-dir
     scan, delete_chunks_prefix tombstones, shift_array's remap) are
-    resolved by one Spark collect on the key: each lookup sees the
-    newest plan, and agrees with the committed result."""
+    written to staging files by the first lookup after them: each
+    lookup sees the newest plan, and agrees with the committed
+    result."""
     repo = Repository.create(spark, root)
 
     def full(v):
