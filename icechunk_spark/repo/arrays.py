@@ -5,8 +5,10 @@ Write path: rows (i0..ik, value) → chunk-grid assignment (JVM-side
 floor-div) → ONE shuffle that groups the rows by chunk, cogrouped with
 the array's existing manifest refs when it may have any →
 ``applyInPandas`` packs each chunk into a dense numpy buffer (C-order
-bytes) → one parquet dir holds payloads AND the manifest columns, so
-the staged manifest is a column-pruned re-scan (payload never read).
+bytes) → one parquet dir under ``chunks/`` holds the payloads AND the
+complete manifest rows (``manifests.manifest_frame``), so the session
+stages that dir itself as a file item: readers take its manifest
+columns and never read the payload column.
 The pack is also the read-modify-write merge of Zarr array semantics:
 a chunk the rows cover fully starts from the fill value, and a chunk
 they cover partly starts from the bytes of its latest ref (by seq;
@@ -43,9 +45,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from icechunk_spark.engine import file_split_count, local_df
-from icechunk_spark.repo.format import ArrayMeta
-from icechunk_spark.repo.manifests import ChunkRange
+from icechunk_spark.repo.format import MANIFEST_SCHEMA, ArrayMeta
+from icechunk_spark.repo.manifests import ChunkRange, manifest_frame
 
+#: what the pack emits per chunk; the encode adds the constant
+#: manifest columns before writing
 CHUNK_FILE_SCHEMA_SUFFIX = (
     "chunk_key string, c0 int, c1 int, c2 int, c3 int, chunk_id string, "
     "n_bytes bigint, payload binary"
@@ -71,22 +75,25 @@ REF_COLUMNS = [
 def encode_array_chunks(
     df: DataFrame,
     meta: ArrayMeta,
-    out_dir: str,
+    data_root: str,
+    rel: str,
     refs: DataFrame | None = None,
-    data_root: str | None = None,
     vcc_map: dict[str, str] | None = None,
 ) -> None:
-    """Pack coordinate rows into dense chunk payloads and write them
-    (with manifest columns) to ``out_dir``.
+    """Pack coordinate rows into dense chunk payloads and write them to
+    the chunk dir ``rel`` under ``data_root`` (``fmt.data_path(root)``),
+    each next to its manifest row: ``node_id``, ``file`` (``rel``
+    itself), ``op='set'``, ``seq=0`` and NULL ref columns are
+    constants.  The dir is then a staged item as it stands.
 
     ``refs`` are the array's existing manifest rows, pre-dedup (base
     files plus seq-offset overlays).  When given, ONE shuffle cogroups
     them with the incoming rows by chunk coordinates, and a chunk the
     rows only partly cover starts from the bytes of its latest ref
-    (fetched executor-side through :func:`ref_bytes`, relative to
-    ``data_root``) instead of from the fill value.  A lazy semi-join on
-    the rows' distinct chunk keys keeps refs of untouched chunks out
-    of the cogroup, so they emit nothing.  ``df`` must already be
+    (fetched executor-side through :func:`ref_bytes`) instead of from
+    the fill value.  A lazy semi-join on the rows' distinct chunk keys
+    keeps refs of untouched chunks out of the cogroup, so they emit
+    nothing.  ``df`` must already be
     in-bounds: coverage is counted over the rows it holds."""
     ndim = len(meta.shape)
     cols = coord_cols(ndim)
@@ -162,36 +169,17 @@ def encode_array_chunks(
         packed = grouped.cogroup(existing.groupBy(*keys)).applyInPandas(
             pack, CHUNK_FILE_SCHEMA_SUFFIX
         )
-    packed.write.parquet(out_dir)
+    manifest_frame(
+        packed, node_id=meta.node_id, file=rel, op="set", is_virtual=False, seq=0
+    ).write.parquet(os.path.join(data_root, rel))
 
 
-def staged_manifest_from_chunk_dir(
-    spark: SparkSession, chunk_dir_abs: str, chunk_file_rel: str, node_id: str
-) -> DataFrame:
-    """Manifest rows for a freshly written chunk dir — column pruning
-    means the payload column is never read here.  The schema is pinned
-    (it is exactly what encode_array_chunks just wrote), so the read
-    skips the driver-side footer schema-inference pass."""
-    scan = spark.read.schema(CHUNK_FILE_SCHEMA_SUFFIX).parquet(chunk_dir_abs)
-    return scan.select(
-        F.lit(node_id).alias("node_id"),
-        "chunk_key",
-        "c0",
-        "c1",
-        "c2",
-        "c3",
-        "chunk_id",
-        F.lit(chunk_file_rel).alias("file"),
-        "n_bytes",
-        F.lit("set").alias("op"),
-        F.lit(False).alias("is_virtual"),
-        F.lit(None).cast("string").alias("vpath"),
-        F.lit(None).cast("bigint").alias("voffset"),
-        F.lit(None).cast("bigint").alias("vlength"),
-        F.lit(None).cast("binary").alias("inline"),
-        F.lit(0).cast("bigint").alias("seq"),
-        F.lit(None).cast("string").alias("vchecksum"),
-    )
+def staged_manifest_from_chunk_dir(spark: SparkSession, path: str) -> DataFrame:
+    """The one Spark reader of a staged item — a chunk dir
+    (:func:`encode_array_chunks`) or a staging file — as manifest rows:
+    a fixed-schema scan, so the payload column is never read and no
+    footer schema inference runs."""
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
 
 
 def slice_chunk_range(meta: ArrayMeta, slices: list[tuple[int, int]] | None) -> ChunkRange:

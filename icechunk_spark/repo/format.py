@@ -9,9 +9,12 @@ scheme icechunk uses for S3 conditional writes — icechunk/src/refs.rs):
     <repo>/refs/tag.<name>/ref.json        immutable once created
     <repo>/snapshots/<id>.json             snapshot doc (parent, nodes, manifests)
     <repo>/manifests/<id>.parquet          chunk-ref rows (LSM: later shadows earlier)
-    <repo>/chunks/<id>.parquet             chunk payloads (chunk_id, payload binary)
+    <repo>/chunks/<id>.parquet             chunk payloads (chunk_id, payload binary);
+                                           a write_array_df chunk dir also holds its
+                                           rows' manifest columns and is staged as is
     <repo>/txlogs/<id>.parquet             per-commit change log (conflict detection)
-    <repo>/staging/<session>/...           uncommitted manifests (discarded on abort)
+    <repo>/staging/<session>/<id>.parquet  other staged manifest rows (deleted on
+                                           commit or discard)
 
 Manifest row schema (MANIFEST_SCHEMA): chunk refs keyed by stable
 node_id (so `move` never rewrites manifests — same reason icechunk
@@ -399,6 +402,10 @@ def _inspect_parquet_bytes(raw: bytes) -> dict[str, Any]:
 
 
 def _classify_parquet_columns(cols: set) -> str:
+    # payload first: a write_array_df chunk dir also carries the
+    # manifest columns of its rows, but it is chunk data
+    if {"chunk_id", "payload"} <= cols:
+        return "chunk-data"
     if {"node_id", "chunk_key", "chunk_id"} <= cols:
         return "manifest"
     # SUBSET test (manifest already ruled out above): additive nullable
@@ -406,8 +413,6 @@ def _classify_parquet_columns(cols: set) -> str:
     # must not demote the kind to unknown (review r13)
     if {name for name, _ in ddl_fields(TXLOG_SCHEMA)} <= cols:
         return "transaction-log"
-    if {"chunk_id", "payload"} <= cols:
-        return "chunk-data"
     return "unknown"
 
 

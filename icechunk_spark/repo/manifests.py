@@ -121,6 +121,19 @@ def _manifest_out_columns(df: DataFrame) -> list[str]:
     return MANIFEST_COLUMNS + extras
 
 
+def manifest_frame(df: DataFrame, **consts) -> DataFrame:
+    """``df`` in the manifest layout: each ``MANIFEST_SCHEMA`` column,
+    in order, is the literal ``consts[name]``, else ``df``'s column of
+    that name, else NULL; ``df``'s other columns (a chunk dir's
+    ``payload``) follow.  No job."""
+    cols = [
+        (F.lit(consts[name]) if name in consts else F.col(name) if name in df.columns else F.lit(None))
+        .cast(typ).alias(name)
+        for name, typ in ddl_fields(MANIFEST_SCHEMA)
+    ]
+    return df.select(*cols, *[c for c in df.columns if c not in MANIFEST_COLUMNS])
+
+
 def read_manifest_files(
     spark: SparkSession,
     root: str,

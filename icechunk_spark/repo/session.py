@@ -259,12 +259,11 @@ class Session:
         self.session_id = _session_id or new_id()
         # path -> node dict; mutated by node ops
         self._nodes: dict[str, dict[str, Any]] = dict(self._base.nodes)
-        # staging order matters: later entries shadow earlier ones.
-        # ("df", DataFrame) entries stay lazy until commit (one job);
-        # ("file", relpath) entries are durable parquet (ForkSessions
-        # must be picklable, so they always stage eagerly).
-        self._staged: list[tuple[str, Any]] = []
-        self._eager_staging = False
+        # staged items, each ("file", relpath) of manifest-layout
+        # parquet written when it was staged: a write_array_df chunk
+        # dir under chunks/, or a file under staging/.  Order matters:
+        # an item's index is its seq, so later items shadow earlier.
+        self._staged: list[tuple[str, str]] = []
         self._node_ops: list[dict[str, str]] = []  # {op, path, node_id}
         self._chunk_buffer: list[dict[str, Any]] = []  # small set_bytes/virtual writes
         # virtual chunk container scoping (icechunk/src/virtual_chunks.rs):
@@ -308,11 +307,11 @@ class Session:
     # resolved eagerly at unpickle time, and DataFrame APIs fail with a
     # clear error.  The point reads (get_chunk_bytes / chunk_type /
     # ChunkStore.getsize) need no Spark on either side: they resolve
-    # buffer -> staged -> base with pyarrow (``_live_refs``).  Only
-    # ``chunk_coordinates`` (streams from Spark on the driver) and the
-    # buffer flush (pyarrow writes in a task) branch on ``_has_spark``
-    # (reference parity: sessions are pickled into tasks for read
-    # scaling — icechunk-python session.py:39-60).
+    # buffer -> staged -> base with pyarrow (``_live_refs``), and the
+    # buffer flush writes with pyarrow everywhere.  Only
+    # ``chunk_coordinates`` (streams from Spark on the driver) branches
+    # on ``_has_spark`` (reference parity: sessions are pickled into
+    # tasks for read scaling — icechunk-python session.py:39-60).
 
     @property
     def spark(self) -> SparkSession:
@@ -468,9 +467,7 @@ class Session:
         return d
 
     def discard_changes(self) -> None:
-        stage = self._staging_dir()
-        fsio.delete_dir(stage)
-        self._staged.clear()
+        self._drop_staged_files()
         self._node_ops.clear()
         self._chunk_buffer.clear()
         self._nodes = dict(self._base.nodes)
@@ -784,23 +781,18 @@ class Session:
             refs = refs.filter(F.col("node_id") == meta.node_id)
         rel = self._new_chunk_rel()
         encode_array_chunks(
-            src, meta, _dp(self.root, rel), refs,
-            data_root=fmt.data_path(self.root), vcc_map=self._virtual_container_names,
+            src, meta, fmt.data_path(self.root), rel, refs,
+            vcc_map=self._virtual_container_names,
         )
-        staged = staged_manifest_from_chunk_dir(
-            self.spark, _dp(self.root, rel), rel, meta.node_id
-        )
-        self._stage_manifest(staged)
+        self._staged.append(("file", rel))  # the chunk dir holds its manifest rows
 
     def read_array_df(
         self, path: str, slices: list[tuple[int, int]] | None = None
     ) -> DataFrame:
         """Distributed read of an array region as coordinate rows: one
-        Spark job of one stage whose tasks resolve their refs and read
-        the payloads (``decode_chunks_to_rows``).  A lazy
-        ``write_array_df``/``delete_chunks_prefix``/``shift_array`` plan
-        staged since the last read is first written to its staging file
-        (``_ref_layers``): that read takes 2 jobs, later ones 1."""
+        Spark job of one stage whose tasks resolve their refs, staged
+        files included, and read the payloads
+        (``decode_chunks_to_rows``)."""
         meta = self.array_meta(path)
         self._require_regular_grid(meta, "read_array_df")
         rng = slice_chunk_range(meta, slices)
@@ -883,7 +875,7 @@ class Session:
         live = self._resolved_manifest(meta.node_id, None)
         for d, v in enumerate(coord_prefix):
             live = live.filter(F.col(f"c{d}") == int(v))
-        self._stage_manifest(_tombstones(live))
+        self._staged.append(self._write_item(_tombstones(live)))
 
     def set_virtual_ref(
         self,
@@ -1022,7 +1014,7 @@ class Session:
 
     def _live_refs(self, node_id: str, chunk_key: str | None = None) -> list[dict]:
         """Live refs of one node (of one key, or of all keys): no Spark
-        job unless a lazy staged plan must first be written."""
+        job."""
         return mf.live_refs(
             self._ref_layers(node_id, chunk_key), fmt.data_path(self.root), node_id, chunk_key
         )
@@ -1031,10 +1023,8 @@ class Session:
         """``mf.live_refs`` layers, newest first, lazily (a lookup stops
         at the first layer holding its key): the chunk buffer's rows of
         the node (None: every node); staged items by relpath; the base
-        manifests kept for the node and the key or range.  A lazy
-        ``df`` staged item is first written to its staging file, once
-        (``_write_lazy_items``).  ``seq`` carries the layer offsets."""
-        self._write_lazy_items()
+        manifests kept for the node and the key or range.  ``seq``
+        carries the layer offsets."""
         rng = mf.key_chunk_range(chunk_key) if chunk_key is not None else chunk_range
         buffered = [{**e, "seq": _BUFFERED_SEQ + e["seq"]} for e in reversed(self._buffer_entries())]
         yield ("rows", [e for e in buffered if mf.row_matches(e, node_id, chunk_key, rng)])
@@ -1044,20 +1034,9 @@ class Session:
         kept = mf.prune_manifest_paths(self._base.manifests, node_id, summaries, rng)
         yield ("base", kept, {m: summaries[m] for m in kept if m in summaries})
 
-    def _write_lazy_items(self) -> None:
-        """Write each lazy ``df`` staged item to a staging file, in
-        place: it keeps its index, so its seq.  The commit would write
-        it anyway; readers then resolve files only."""
-        for i, (kind, item) in enumerate(self._staged):
-            if kind == "df":
-                rel = self._staging_rel()
-                item.select(*MANIFEST_COLUMNS).write.parquet(_dp(self.root, rel))
-                self._staged[i] = ("file", rel)
-
     def get_chunk_bytes(self, path: str, chunk_key: str) -> bytes | None:
         """One chunk's bytes (read-your-writes), or None: the newest
-        ref (``_point_ref``) and one payload read, no Spark job unless
-        a lazy staged plan is present."""
+        ref (``_point_ref``) and one payload read, no Spark job."""
         meta = self.array_meta(path)
         ref = self._point_ref(meta.node_id, chunk_key)
         if ref is None:
@@ -1097,8 +1076,8 @@ class Session:
         ).withColumn("op", F.lit("set"))
         # vacate every previously occupied position not re-covered:
         # tombstones first, then moved rows (higher staged idx shadows)
-        self._stage_manifest(_tombstones(live))
-        self._stage_manifest(moved.select(*MANIFEST_COLUMNS))
+        self._staged.append(self._write_item(_tombstones(live)))
+        self._staged.append(self._write_item(moved))
 
     def reindex_array(self, array_path: str, forward, backward=None) -> None:
         """Remap chunk coordinates with a Python function — applied
@@ -1170,8 +1149,8 @@ class Session:
                     for i in range(4)
                 ],
             )
-            self._stage_manifest(_tombstones(keys))
-        self._stage_manifest(moved.select(*MANIFEST_COLUMNS))
+            self._staged.append(self._write_item(_tombstones(keys)))
+        self._staged.append(self._write_item(moved))
 
     # --- staging ----------------------------------------------------------
 
@@ -1186,20 +1165,31 @@ class Session:
             pass
         return 512
 
-    def _staging_dir(self) -> str:
-        return _dp(self.root, "staging", self.session_id)
-
     def _staging_rel(self) -> str:
         """A new relpath for a staged item's parquet."""
         return os.path.join("staging", self.session_id, f"{new_id()}.parquet")
 
-    def _stage_manifest(self, df: DataFrame) -> None:
-        if not self._eager_staging:
-            self._staged.append(("df", df))
-            return
+    def _write_item(self, df: DataFrame) -> tuple[str, str]:
+        """A staged item of ``df``'s manifest rows: one job writes them
+        to a new staging file."""
         rel = self._staging_rel()
-        df.write.parquet(_dp(self.root, rel))
-        self._staged.append(("file", rel))
+        df.select(*MANIFEST_COLUMNS).write.parquet(_dp(self.root, rel))
+        return ("file", rel)
+
+    def _drop_staged_files(self) -> None:
+        """Forget the staged items and delete their staging files, with
+        each session dir they leave empty (a merged fork's too).  A
+        chunk dir under ``chunks/`` holds payload: it stays, for the
+        snapshot that lists it or for GC."""
+        dirs = set()
+        for _, rel in self._staged:
+            if rel.startswith("staging/"):
+                fsio.delete_dir(_dp(self.root, rel))
+                dirs.add(os.path.dirname(rel))
+        for d in dirs:
+            if not fsio.list_child_names(_dp(self.root, d)):
+                fsio.delete_dir(_dp(self.root, d))
+        self._staged.clear()
 
     def _flush_chunk_buffer(self) -> None:
         if not self._chunk_buffer:
@@ -1222,25 +1212,15 @@ class Session:
                 rows.append({"chunk_id": chunk_id, "payload": e["inline"]})
                 e.update(chunk_id=chunk_id, file=rel, inline=None)
             refs.append(e)
-        # payloads and an eager session's refs are driver-resident rows:
-        # one pyarrow write each, no Spark job, the same on the driver
-        # and in an executor-side ForkSession (reference
-        # dask.py:store_dask worker shape), where no SparkSession
-        # exists.  A lazy session stages its refs as a LocalRelation,
-        # so it needs a driver.
-        if not self._eager_staging and not self._has_spark:
-            raise RefError(
-                "buffered writes without a SparkSession require a "
-                "ForkSession (eager staging)"
-            )
+        # payloads and refs are driver-resident rows: one pyarrow write
+        # each, no Spark job, the same on the driver and in an
+        # executor-side ForkSession (reference dask.py:store_dask
+        # worker shape), where no SparkSession exists
         if rows:
             _write_parquet_rows(_dp(self.root, rel), rows, fmt.arrow_schema(PAYLOAD_SCHEMA))
-        if self._eager_staging:
-            mrel = self._staging_rel()
-            _write_parquet_rows(_dp(self.root, mrel), refs, fmt.arrow_schema(MANIFEST_SCHEMA))
-            self._staged.append(("file", mrel))
-        else:
-            self._stage_manifest(local_df(self.spark, refs, MANIFEST_SCHEMA))
+        mrel = self._staging_rel()
+        _write_parquet_rows(_dp(self.root, mrel), refs, fmt.arrow_schema(MANIFEST_SCHEMA))
+        self._staged.append(("file", mrel))
         self._chunk_buffer.clear()
 
     def _staged_manifest_df(self) -> DataFrame | None:
@@ -1248,16 +1228,11 @@ class Session:
         index (the intra-commit sub-sequence); None when there are
         none."""
         out = None
-        for i, (kind, item) in enumerate(self._staged):
-            d = self._item_df(kind, item).withColumn("seq", F.lit(i).cast("bigint"))
+        for i, (_, rel) in enumerate(self._staged):
+            d = staged_manifest_from_chunk_dir(self.spark, _dp(self.root, rel))
+            d = d.withColumn("seq", F.lit(i).cast("bigint"))
             out = d if out is None else out.unionByName(d)
         return out
-
-    def _item_df(self, kind: str, item) -> DataFrame:
-        """One staged item as a manifest frame."""
-        if kind == "file":
-            item = self.spark.read.schema(MANIFEST_SCHEMA).parquet(_dp(self.root, item))
-        return item.select(*MANIFEST_COLUMNS)
 
     def _buffer_entries(self) -> list[dict]:
         """The uncommitted ``set_chunk_bytes``/virtual-ref buffer as
@@ -1489,8 +1464,7 @@ class Session:
     def _published(self, snap: SnapshotInfo) -> None:
         """The staged changes now live in ``snap``: it becomes the base
         and the staging state is cleared."""
-        fsio.delete_dir(self._staging_dir())
-        self._staged.clear()
+        self._drop_staged_files()
         self._node_ops.clear()
         self._base = snap
 
@@ -1840,16 +1814,19 @@ class Session:
 
     def _drop_staged_rows(self, node_ids: set[str], chunks: DataFrame | None) -> None:
         """Drop the staged rows of ``node_ids`` and of the (node_id,
-        chunk_key) pairs in ``chunks`` from each staged item in place
-        (lazily).  Items are never merged: an item's list index is its
-        seq, so rows of different items would tie."""
-        for i, (kind, item) in enumerate(self._staged):
-            df = self._item_df(kind, item)
+        chunk_key) pairs in ``chunks`` from each staged item in place:
+        one job writes the rest to a new staging file, and a replaced
+        staging file is deleted.  Items are never merged: an item's
+        list index is its seq, so rows of different items would tie."""
+        for i, (_, rel) in enumerate(self._staged):
+            df = staged_manifest_from_chunk_dir(self.spark, _dp(self.root, rel))
             if node_ids:
                 df = df.filter(~F.col("node_id").isin(sorted(node_ids)))
             if chunks is not None:
                 df = df.join(chunks, ["node_id", "chunk_key"], "left_anti")
-            self._staged[i] = ("df", df)
+            self._staged[i] = self._write_item(df)
+            if rel.startswith("staging/"):
+                fsio.delete_dir(_dp(self.root, rel))
 
     # --- fork/merge (distributed cooperative writes) ----------------------
 
@@ -1921,7 +1898,6 @@ class Session:
         self.session_id = state["session_id"]
         self._nodes = dict(self._base.nodes)
         self._staged = []
-        self._eager_staging = False
         self._node_ops = []
         self._chunk_buffer = []
         self._virtual_containers = state.get("virtual_containers")
@@ -1934,7 +1910,6 @@ class ForkSession(Session):
     def __init__(self, spark, root, snapshot_id, nodes):
         super().__init__(spark, root, snapshot_id, branch=None, read_only=False)
         self._nodes = nodes
-        self._eager_staging = True  # staged parquet survives pickling
 
     def commit(self, *a, **k):  # type: ignore[override]
         raise RefError("ForkSession cannot commit; merge into the parent session")
@@ -1942,8 +1917,8 @@ class ForkSession(Session):
     def __getstate__(self):
         # buffered store-API writes (set_chunk_bytes / set_virtual_ref)
         # must survive the trip back to the coordinator: flush them to
-        # staged parquet first (works with OR without a SparkSession —
-        # executors take the pyarrow path in _flush_chunk_buffer)
+        # staged parquet first (a pyarrow write: works with OR without
+        # a SparkSession)
         self._flush_chunk_buffer()
         return {
             "root": self.root,
@@ -1963,7 +1938,6 @@ class ForkSession(Session):
         self.session_id = state["session_id"]
         self._nodes = state["nodes"]
         self._staged = state["staged"]
-        self._eager_staging = True
         # node ops must survive the executor->coordinator trip or a
         # fork's create_array/delete_node/move is silently dropped by
         # Session.merge (which folds via the op log)
@@ -2000,12 +1974,7 @@ _TOMBSTONE_KEYS = ("node_id", "chunk_key", "c0", "c1", "c2", "c3")
 def _tombstones(keys: DataFrame) -> DataFrame:
     """Tombstone manifest rows (``op='del'``, every ref column NULL)
     for the chunks of ``keys`` (columns node_id, chunk_key, c0..c3)."""
-    fill = {"op": F.lit("del"), "is_virtual": F.lit(False), "seq": F.lit(0)}
-    return keys.select(*[
-        (F.col(name) if name in _TOMBSTONE_KEYS else fill.get(name, F.lit(None)))
-        .cast(typ).alias(name)
-        for name, typ in fmt.ddl_fields(MANIFEST_SCHEMA)
-    ])
+    return mf.manifest_frame(keys.select(*_TOMBSTONE_KEYS), op="del", is_virtual=False, seq=0)
 
 
 def _norm(path: str) -> str:

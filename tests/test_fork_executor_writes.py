@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import pickle
 
-import pytest
-
 from icechunk_spark.distributed import merge_sessions
 from icechunk_spark.repo import Repository
 from icechunk_spark.repo.format import RefError
@@ -54,9 +52,10 @@ def test_fork_buffered_writes_roundtrip_through_executors(spark, tmp_path):
     assert ro.get_chunk_bytes("/a", "3") == b"tiny-inline"
 
 
-def test_lazy_session_refuses_sparkless_buffered_flush(spark, tmp_path, monkeypatch):
-    """A non-eager (plain writable) session cannot stage without a
-    driver — the sparkless path must refuse loudly, not drop writes."""
+def test_plain_session_flushes_buffer_without_spark(spark, tmp_path, monkeypatch):
+    """Every session stages the way a fork does: a plain writable
+    session's buffer flushes to a staging file with pyarrow, so it
+    needs no driver, and the staged write reads back and commits."""
     root = str(tmp_path / "repo2")
     repo = Repository.create(spark, root)
     with repo.transaction(message="init") as s:
@@ -66,9 +65,15 @@ def test_lazy_session_refuses_sparkless_buffered_flush(spark, tmp_path, monkeypa
     from pyspark.sql import SparkSession
 
     w._spark = None
-    monkeypatch.setattr(SparkSession, "getActiveSession", staticmethod(lambda: None))
-    with pytest.raises(RefError, match="ForkSession"):
+    with monkeypatch.context() as m:
+        m.setattr(SparkSession, "getActiveSession", staticmethod(lambda: None))
         w._flush_chunk_buffer()
+        assert not w._chunk_buffer
+        assert [(kind, rel.split("/")[0]) for kind, rel in w._staged] == [("file", "staging")]
+        assert w.get_chunk_bytes("/a", "0") == b"x" * 1024
+    w.spark = spark
+    w.commit("flushed without a driver")
+    assert repo.readonly_session().get_chunk_bytes("/a", "0") == b"x" * 1024
 
 
 def test_fork_node_ops_survive_pickle_and_merge(spark, tmp_path):

@@ -6,6 +6,7 @@ repo's pinned spec version)."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -58,6 +59,16 @@ def test_every_metadata_kind_is_discovered(spark, repo):
 
     tx = repo.inspect_metadata_file(f"txlogs/{tip_id}.parquet")
     assert (tx["kind"], tx["format"]) == ("transaction-log", "parquet")
+
+    # a write_array_df chunk dir carries its rows' manifest columns next
+    # to payload: the dir and its part file are still chunk data, and a
+    # manifest part file is still a manifest
+    chunk_dir = repo.readonly_session().chunk_manifest_df("/a").first()["file"]
+    assert repo.inspect_metadata_file(chunk_dir)["kind"] == "chunk-data"
+    for rel, kind in ((chunk_dir, "chunk-data"), (tip.manifests[0], "manifest")):
+        part = next(p for p in sorted(os.listdir(fmt.data_path(repo.root, rel))) if p.endswith(".parquet"))
+        out = repo.inspect_metadata_file(f"{rel}/{part}")
+        assert (out["kind"], out["format"]) == (kind, "parquet")
 
 
 def test_zlib_snapshots_and_tombstones_and_unknown(spark, tmp_path):

@@ -113,21 +113,21 @@ def test_buffer_and_merged_fork_file_item(repo):
     assert _agree_everywhere(repo.readonly_session()) == 7
 
 
-def test_lazy_write_delete_and_shift_items(spark, repo):
+def test_write_delete_and_shift_items(spark, repo):
     s = repo.writable_session("main")
     s.write_array_df("/h", local_df(
         spark, [{"i0": 4, "i1": j, "value": -1.0 * j} for j in range(6)],
         "i0 bigint, i1 bigint, value double",
     ))
-    assert [kind for kind, _ in s._staged] == ["df"]
+    assert [kind for kind, _ in s._staged] == ["file"]
     assert _agree_everywhere(s) == 9
     s.delete_chunks_prefix("/h", (1,))
     assert _agree_everywhere(s) == 6
     s.shift_array("/h", [0, 1])  # column 2 falls off, column 0 is vacated
-    # the reads above wrote the earlier lazy items to staging files
-    assert [kind for kind, _ in s._staged] == ["file", "file", "df", "df"]
+    # every item is a file from the moment it is staged
+    assert [kind for kind, _ in s._staged] == ["file"] * 4
     assert _agree_everywhere(s) == 4
-    s.commit("lazy plans")
+    s.commit("write, delete and shift")
     assert _agree_everywhere(repo.readonly_session()) == 4
 
 

@@ -264,10 +264,9 @@ def test_cold_read_reread_and_lookup_job_counts(spark, root):
     tiles' refs and read the payloads themselves, so a cold read to the
     noop sink runs exactly 1 job, a reread too (the dedup shuffle, the
     payload scan and the chunk_id join made 3).  Point lookups
-    (get_chunk_bytes, chunk_type, store.getsize) run no job at all when
-    nothing lazy is staged: a read-only session's, and a writable
-    session's whose staged items are files and buffered entries (the
-    Spark point path took 3)."""
+    (get_chunk_bytes, chunk_type, store.getsize) run no job at all: a
+    read-only session's, and a writable session's whose staged items
+    are files and buffered entries (the Spark point path took 3)."""
     from icechunk_spark.repo import ManifestConfig, RepositoryConfig
 
     cfg = RepositoryConfig(manifest=ManifestConfig(splitting={"max_refs_per_manifest": 4}))
@@ -316,23 +315,22 @@ def test_cold_read_reread_and_lookup_job_counts(spark, root):
     assert n == 0, n
     assert box["b"] == [np.full(256, 99.0, "<f8").tobytes(), b"F" * 1024, b"B" * 16]
     assert box["t"] == ["native", "native", "inline"] and box["n"] == [2048, 1024, 16]
-    # a lazy staged plan (write_array_df's chunk-dir scan) costs the
-    # first read one more job: writing it to its staging file
-    lazy = repo.writable_session("main")
-    lazy.write_array_df("/h", local_df(
+    # write_array_df stages its chunk dir as a file item: the read after
+    # it is still one job
+    staged = repo.writable_session("main")
+    staged.write_array_df("/h", local_df(
         spark, [{"i0": 9, "i1": 9, "value": -5.0}], "i0 bigint, i1 bigint, value double"))
-    assert [kind for kind, _ in lazy._staged] == ["df"]
-    assert _jobs(spark, lambda: noop(lazy)) == 2
-    got = lazy.read_array_df("/h", slices=[(9, 10), (8, 11)]).collect()
+    assert [kind for kind, _ in staged._staged] == ["file"]
+    assert _jobs(spark, lambda: noop(staged)) == 1
+    got = staged.read_array_df("/h", slices=[(9, 10), (8, 11)]).collect()
     assert sorted((r["i1"], r["value"]) for r in got) == [(8, 0.0), (9, -5.0), (10, 0.0)]
 
 
-def test_lazy_staged_item_is_written_once(spark, root):
-    """The first reader after a lazy ``write_array_df`` writes the
-    staged plan to its staging file, in place: a lookup then runs 1
-    job (that write) and the next none; a region read runs 2 (the write
-    and the read) and the next 1.  The commit publishes the cells the
-    reads saw."""
+def test_staged_chunk_dir_is_read_without_a_write(spark, root):
+    """``write_array_df`` stages the chunk dir it has just written,
+    which holds its manifest rows: the first lookup after it runs no
+    job and the first region read one, like the next ones.  The commit
+    publishes the cells the reads saw."""
     schema = "i0 bigint, i1 bigint, value double"
     repo = Repository.create(spark, root)
     with repo.transaction(message="base") as s:
@@ -345,11 +343,11 @@ def test_lazy_staged_item_is_written_once(spark, root):
 
     lookup = repo.writable_session("main")
     lookup.write_array_df("/h", local_df(spark, block, schema))
-    assert [kind for kind, _ in lookup._staged] == ["df"]
-    box = {}
-    assert _jobs(spark, lambda: box.update(first=lookup.get_chunk_bytes("/h", "0.0"))) == 1
-    assert _jobs(spark, lambda: box.update(second=lookup.get_chunk_bytes("/h", "0.0"))) == 0
     assert [kind for kind, _ in lookup._staged] == ["file"]
+    assert lookup._staged[0][1].startswith("chunks/")
+    box = {}
+    assert _jobs(spark, lambda: box.update(first=lookup.get_chunk_bytes("/h", "0.0"))) == 0
+    assert _jobs(spark, lambda: box.update(second=lookup.get_chunk_bytes("/h", "0.0"))) == 0
     assert box == {"first": chunk00, "second": chunk00}
 
     read = repo.writable_session("main")
@@ -358,21 +356,20 @@ def test_lazy_staged_item_is_written_once(spark, root):
     def noop():
         read.read_array_df("/h").write.format("noop").mode("overwrite").save()
 
-    assert _jobs(spark, noop) == 2
+    assert _jobs(spark, noop) == 1
     assert _jobs(spark, noop) == 1
     cells = {(r["i0"], r["i1"]): r["value"] for r in read.read_array_df("/h").collect()}
     assert cells == want
-    read.commit("lazy item written by a reader")
+    read.commit("staged chunk dir")
     committed = repo.readonly_session().read_array_df("/h").collect()
     assert {(r["i0"], r["i1"]): r["value"] for r in committed} == want
 
 
-def test_lookups_see_lazy_staged_plans(spark, root):
-    """A driver session's lazy staged plans (write_array_df's chunk-dir
-    scan, delete_chunks_prefix tombstones, shift_array's remap) are
-    written to staging files by the first lookup after them: each
-    lookup sees the newest plan, and agrees with the committed
-    result."""
+def test_lookups_see_staged_write_delete_and_shift(spark, root):
+    """A driver session's staged items (write_array_df's chunk dir,
+    delete_chunks_prefix tombstones, shift_array's remap) are files from
+    the moment they are staged: each lookup sees the newest item, and
+    agrees with the committed result."""
     repo = Repository.create(spark, root)
 
     def full(v):
@@ -387,7 +384,7 @@ def test_lookups_see_lazy_staged_plans(spark, root):
     s.write_array_df("/h", local_df(
         spark, [{"i0": a, "i1": b, "value": 7.0} for a in range(2) for b in range(2)],
         "i0 bigint, i1 bigint, value double"))
-    assert [kind for kind, _ in s._staged] == ["df"]
+    assert [kind for kind, _ in s._staged] == ["file"]
     assert s.get_chunk_bytes("/h", "0.0") == full(7.0)
     assert s.store.getsize("h/c/0/0") == 32
     s.delete_chunks_prefix("/h", (1,))
@@ -397,8 +394,9 @@ def test_lookups_see_lazy_staged_plans(spark, root):
     s.shift_array("/h", [0, 1])  # 0.0 -> 0.1; 0.1 falls off the grid
     want = {"0.0": None, "0.1": full(7.0), "1.0": None, "1.1": None}
     assert {k: s.get_chunk_bytes("/h", k) for k in want} == want
+    assert [kind for kind, _ in s._staged] == ["file"] * 4
     assert list(s.chunk_coordinates("/h")) == [(0, 1)]
-    s.commit("lazy plans")
+    s.commit("staged items")
     ro = repo.readonly_session()
     assert {k: ro.get_chunk_bytes("/h", k) for k in want} == want
 

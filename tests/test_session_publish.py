@@ -9,7 +9,10 @@
   of the same chunk;
 - ``ChunkStore.array_chunk_iterator`` reports the kinds and lengths of
   ``chunk_type`` and ``store.getsize``;
-- a buffered write writes its payloads with pyarrow, not a Spark job.
+- a buffered write writes its payloads with pyarrow, not a Spark job;
+- every staged item is a file from the moment it is staged, so a
+  fork's ``write_array_df`` runs the jobs of a session's, and a
+  commit or a discard deletes the staging files its items name.
 """
 
 from __future__ import annotations
@@ -21,8 +24,10 @@ import uuid
 
 import pytest
 
+from icechunk_spark.engine import local_df
 from icechunk_spark.repo import Repository
 from icechunk_spark.repo import format as fmt
+from icechunk_spark.repo import fsio
 from icechunk_spark.repo import manifests as mf
 from icechunk_spark.repo.session import ChunkType, ConflictSolver
 
@@ -153,3 +158,64 @@ def test_buffered_write_commit_job_count(spark, root):
     s.set_chunk_bytes("/a", "2", W)
     assert _jobs(spark, lambda: s.commit("c")) == 4
     assert repo.readonly_session().get_chunk_bytes("/a", "2") == W
+
+
+def test_fork_write_runs_the_jobs_of_a_session_write(spark, root):
+    """A fork stages ``write_array_df``'s chunk dir as it stands, like a
+    plain session: the same rows cost the same jobs, on a fresh array
+    and in a read-modify-write (a fork re-scanned its chunk dir into a
+    staging copy, one job more)."""
+    repo = Repository.create(spark, root)
+    with repo.transaction(message="arrays") as s:
+        s.create_array("/fresh", shape=[64, 64], chunk_shape=[8, 8])
+        s.create_array("/rmw", shape=[64, 64], chunk_shape=[8, 8])
+        s.write_array_df("/rmw", local_df(
+            spark, [{"i0": i, "i1": j, "value": 1.0} for i in range(64) for j in range(64)],
+            "i0 bigint, i1 bigint, value double"))
+    for path, rows in (
+        ("/fresh", [(i, j) for i in range(64) for j in range(64)]),
+        ("/rmw", [(i, j) for i in range(20, 44) for j in range(20, 44)]),
+    ):
+        df = local_df(
+            spark, [{"i0": i, "i1": j, "value": 2.0} for i, j in rows], "i0 bigint, i1 bigint, value double"
+        )
+        plain = repo.writable_session("main")
+        fork = repo.writable_session("main").fork()
+        n_plain = _jobs(spark, lambda: plain.write_array_df(path, df))
+        n_fork = _jobs(spark, lambda: fork.write_array_df(path, df))
+        assert n_fork == n_plain, (path, n_fork, n_plain)
+        assert fork._staged[0][1].startswith("chunks/")
+        cells = fork.read_array_df(path, slices=[(19, 21), (19, 21)]).collect()
+        got = {(r["i0"], r["i1"]): r["value"] for r in cells}
+        assert got[20, 20] == 2.0 and got[19, 19] == (2.0 if path == "/fresh" else 1.0)
+
+
+def test_commit_and_discard_delete_the_staging_files(spark, root):
+    """The staging files a session's items name are deleted when it
+    publishes or discards — a merged fork's too — and so is each
+    session dir they leave empty; a staged chunk dir under ``chunks/``
+    is payload and stays."""
+    repo = _repo_with_two_chunks(spark, root)
+
+    def staging_dirs():
+        return fsio.list_child_names(fmt.data_path(root, "staging"))
+
+    w = repo.writable_session("main")
+    f = w.fork()
+    f.set_chunk_bytes("/a", "2", W)
+    w.merge(f)
+    w.delete_chunks_prefix("/a", (0,))
+    assert staging_dirs()
+    w.commit("fork and delete")
+    assert staging_dirs() == []
+    assert repo.readonly_session().get_chunk_bytes("/a", "2") == W
+
+    d = repo.writable_session("main")
+    d.set_chunk_bytes("/a", "3", W)
+    d.write_array_df("/a", local_df(spark, [{"i0": i, "value": 0.0} for i in range(4)], "i0 bigint, value double"))
+    chunk_dir = d._staged[-1][1]
+    assert [rel.split("/")[0] for _, rel in d._staged] == ["staging", "chunks"]
+    d.discard_changes()
+    assert staging_dirs() == []
+    assert fsio.exists(fmt.data_path(root, chunk_dir))
+    assert repo.readonly_session().get_chunk_bytes("/a", "3") is None
