@@ -9,8 +9,8 @@ the "pointing data_root at s3a:// is a config change" claim — every
 bulk-plane walk now routes through here instead.
 
 Built on ``pyarrow.fs`` (not the JVM Hadoop FileSystem) deliberately:
-these helpers must also run inside Spark Python workers (GC deletes
-execute per-partition on executors), where there is no JVM gateway.
+these helpers must also run inside Spark Python workers (GC reaps run
+per name in executor tasks), where there is no JVM gateway.
 ``s3a://`` URIs are mapped to pyarrow's ``s3://`` scheme.
 """
 
@@ -226,3 +226,14 @@ def delete_dir(path: str) -> bool:
             return fs.get_file_info(p).type == pafs.FileType.NotFound
         except OSError:
             return False
+
+
+def reap(path: str, cutoff: float, dry_run: bool = False) -> int:
+    """The age-gated delete of every GC reap: 1 when ``path`` was
+    written before ``cutoff`` (epoch seconds) and is now deleted — or,
+    under ``dry_run``, would be — else 0.  A path that vanished, has no
+    timestamp or failed to delete is not counted."""
+    ts = mtime(path)
+    if ts is None or ts >= cutoff:
+        return 0
+    return int(dry_run or delete_dir(path))

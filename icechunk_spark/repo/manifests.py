@@ -36,10 +36,13 @@ reader above):
 with no further Spark job: the driver opens the parquet part files it
 just wrote (pyarrow, through ``fsio._fs_path``) and takes the row
 count and c0..c3 extents from their footers and the distinct payload
-files from their ``file`` column.  A summary's ``files`` may over-list
-but must never under-list, so a summary-based GC can keep exactly the
-files they name; reads take payload files from the refs themselves.
-A commit lists no manifest file its staged rows left empty.
+files from their ``file`` column (``_part_files``).  A summary's
+``files`` may over-list but must never under-list: GC
+(``Repository.garbage_collect``) keeps exactly the chunk files the
+live manifests' summaries name, and reads a live manifest that has no
+summary with the same reader (``payload_files``); reads take payload
+files from the refs themselves.  A commit lists no manifest file its
+staged rows left empty.
 """
 
 from __future__ import annotations
@@ -315,16 +318,12 @@ def _units(spark: SparkSession, data_root: str, sides, node_ids, rng: ChunkRange
     return units
 
 
-def write_manifest(
-    df: DataFrame, root: str, n_files: int = 1
-) -> tuple[list[str], dict[str, dict]]:
-    """Write manifest rows as a new immutable manifest file (dir of
-    parquet parts); returns ``([relpath], {relpath: summary})``."""
+def write_manifest(df: DataFrame, root: str) -> tuple[list[str], dict[str, dict]]:
+    """Write manifest rows as a new immutable manifest file (a dir of
+    one parquet part); returns ``([relpath], {relpath: summary})``."""
     rel = os.path.join("manifests", f"{new_id()}.parquet")
-    out = df.select(*_manifest_out_columns(df))
-    writer = out.repartition(n_files) if n_files else out
     full = data_path(root, rel)
-    writer.write.parquet(full)
+    df.select(*_manifest_out_columns(df)).repartition(1).write.parquet(full)
     # an empty write may leave no part file: the file then has no rows
     return [rel], _known(_written_summaries(full, rel) or {rel: _no_rows()})
 
@@ -333,7 +332,6 @@ def write_manifests(
     df: DataFrame,
     root: str,
     splitting: dict | None = None,
-    n_files: int = 1,
     node_paths: dict[str, str] | None = None,
 ) -> tuple[list[str], dict[str, dict]]:
     """Write manifest rows as one or more immutable manifest files.
@@ -365,7 +363,7 @@ def write_manifests(
     max_refs = splitting.get("max_refs_per_manifest")
     rules = splitting.get("rules")
     if not splitting.get("split_by_array") and max_refs is None and not rules:
-        return write_manifest(df, root, n_files)
+        return write_manifest(df, root)
     base = os.path.join("manifests", f"{new_id()}.parquet")
     out = df.select(*_manifest_out_columns(df)).withColumn("__node", F.col("node_id"))
     if rules and node_paths:
@@ -428,36 +426,56 @@ def _written_summaries(full: str, base: str) -> dict[str, dict | None]:
     """The summary of each manifest file just written under ``full``
     (relpath ``base``), keyed by the leaf dir's relpath (``base`` itself
     for an unsplit write): one recursive listing, then per parquet part
-    its footer (row count, c0..c3 min/max) and the distinct values of
-    its ``file`` column — exactly the payload files its rows name.
-    None for a leaf whose footers lack the coordinate statistics
-    (readers then keep and scan it)."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    fs, p = fsio._fs_path(full.rstrip("/"))
+    its footer (row count, c0..c3 min/max) and its :func:`_part_files`
+    — exactly the payload files its rows name.  None for a leaf whose
+    footers lack the coordinate statistics (readers then keep and scan
+    it)."""
     stats: dict[str, dict | None] = {}
-    files: dict[str, set[str]] = {}
-    for part, _ in fsio.parquet_parts(full):
+    for part, pf in _open_parts(full):
         sub = part.rpartition("/")[0]
         if sub and not all(c.startswith(("__node=", "__split=")) for c in sub.split("/")):
             continue  # not a partition dir of this write
         rel = f"{base}/{sub}" if sub else base
         if stats.setdefault(rel, _no_rows()) is None:
             continue
-        with fs.open_input_file(f"{p}/{part}".rstrip("/")) as f:
-            pf = pq.ParquetFile(f)
-            if not _add_footer(stats[rel], pf.metadata):
-                stats[rel] = None
-                continue
-            seen = files.setdefault(rel, set())
-            for g in range(pf.num_row_groups):  # one row group in memory at a time
-                col = pf.read_row_group(g, columns=["file"], use_threads=False).column(0)
-                seen.update(pc.unique(col).to_pylist())
-    for rel, st in stats.items():
-        if st is not None:
-            st["files"] = sorted(files.get(rel, set()) - {None})
+        if _add_footer(stats[rel], pf.metadata):
+            stats[rel]["files"] = sorted(_part_files(pf).union(stats[rel]["files"]))
+        else:
+            stats[rel] = None
     return stats
+
+
+def _open_parts(full: str):
+    """``(part, pyarrow ParquetFile)`` of each parquet part under
+    ``full`` (``fsio.parquet_parts``), open one at a time."""
+    import pyarrow.parquet as pq
+
+    fs, p = fsio._fs_path(full.rstrip("/"))
+    for part, _ in fsio.parquet_parts(full):
+        with fs.open_input_file(f"{p}/{part}".rstrip("/")) as f:
+            yield part, pq.ParquetFile(f)
+
+
+def _part_files(pf) -> set[str]:
+    """The distinct non-NULL ``file`` values of one open parquet part
+    (a ``pyarrow.parquet.ParquetFile``), one row group in memory at a
+    time: the payload files its rows name."""
+    import pyarrow.compute as pc
+
+    seen: set[str] = set()
+    for g in range(pf.num_row_groups):
+        col = pf.read_row_group(g, columns=["file"], use_threads=False).column(0)
+        seen.update(pc.unique(col.drop_null()).to_pylist())
+    return seen
+
+
+def payload_files(data_root: str, relpath: str) -> list[str]:
+    """The payload files the rows of manifest ``relpath`` name, read
+    from its parquet parts with pyarrow (:func:`_part_files`, the reader
+    that builds a summary's ``files``): the liveness of a manifest that
+    has no summary.  No Spark job; runs on the driver or in a task."""
+    parts = _open_parts(os.path.join(data_root, relpath))
+    return sorted(set().union(*(_part_files(pf) for _, pf in parts)))
 
 
 def _known(summaries: dict[str, dict | None]) -> dict[str, dict]:
@@ -482,6 +500,24 @@ def _add_footer(st: dict, md) -> bool:
             elif cs is None or not cs.has_null_count or cs.null_count != rg.num_rows:
                 return False
     return True
+
+
+def footers_admit(full: str, node_ids: set[str], keys: list[tuple[str, str]]) -> bool:
+    """Whether the parquet footers of the manifest-layout dir ``full``
+    (a staged item) admit a row of a node in ``node_ids`` or of a
+    ``(node_id, chunk_key)`` in ``keys``: the node_id min/max of each
+    row group, and the row count and c0..c3 extents (``_add_footer``)
+    under ``_may_hold``, the test reads prune with.  True whenever the
+    statistics cannot tell.  Footers only, no Spark job."""
+    wanted, st, nodes = set(node_ids) | {n for n, _ in keys}, _no_rows(), set()
+    for _, pf in _open_parts(full):
+        md = pf.metadata
+        if not _add_footer(st, md) or "node_id" not in md.schema.names:
+            return True
+        col = md.schema.names.index("node_id")
+        for cs in (md.row_group(g).column(col).statistics for g in range(md.num_row_groups)):
+            nodes |= {n for n in wanted if cs is None or not cs.has_min_max or cs.min <= n <= cs.max}
+    return bool(nodes & node_ids) or any(n in nodes and _may_hold(st, key_chunk_range(k)) for n, k in keys)
 
 
 def read_manifest_rows_local(

@@ -2,9 +2,10 @@
 
 Mirrors icechunk-python/python/icechunk/repository.py; maintenance
 (garbage_collect / expire_snapshots / rewrite_manifests /
-chunk_storage_stats — icechunk/src/ops/) runs as Spark jobs over the
-manifest tables so none of it ever materializes chunk lists on the
-driver.
+chunk_storage_stats — icechunk/src/ops/) never materializes manifest
+rows on the driver: expiration and GC work from snapshot metadata (the
+manifest summaries) and per-name reaps through ``_map_names``;
+compaction and storage stats are Spark jobs over the manifest tables.
 """
 
 from __future__ import annotations
@@ -36,7 +37,7 @@ from icechunk_spark.repo.admin import (
 from icechunk_spark.repo.errbase import IcechunkError
 from icechunk_spark.repo.format import RefError, SnapshotInfo, new_id
 from icechunk_spark.repo.storage import StorageConflict
-from icechunk_spark.repo.session import ConflictSolver, Diff, Session, VersionSelector
+from icechunk_spark.repo.session import ConflictSolver, Diff, Session, VersionSelector, write_txlog
 
 
 def _resolve_cutoff(older_than_seconds, older_than, now: float, op: str) -> float:
@@ -122,7 +123,7 @@ class CachingConfig:
 @dataclass
 class ManifestConfig:
     """Manifest policies (reference: ManifestConfig).  ``splitting``
-    maps to the split-file count used by write_manifest.
+    is the split policy of write_manifests.
     ``preload_paths`` and ``preload`` (the reference's
     ManifestPreloadConfig) are accepted and persisted for reference
     parity and have no effect: sessions keep no resolved manifests."""
@@ -191,12 +192,11 @@ class RepositoryConfig:
     The Spark-relevant subset of the reference's RepositoryConfig
     (icechunk-python config.py): knobs that change how the data plane
     lays files out, plus compression/caching/manifest/retry policies.
-    Unknown keys round-trip untouched so configs written by newer
-    versions still open.
+    Unknown keys round-trip untouched (``extra``) so configs written by
+    newer versions still open, and so do older ones with the retired
+    ``target_chunk_file_mb`` / ``manifest_split_files`` keys.
     """
 
-    target_chunk_file_mb: int = 64
-    manifest_split_files: int = 1
     inline_chunk_threshold_bytes: int = 512
     # name -> {"url_prefix": ...}; scopes where virtual chunk refs may
     # point (icechunk/src/virtual_chunks.rs VirtualChunkContainer)
@@ -211,8 +211,6 @@ class RepositoryConfig:
     extra: dict[str, Any] | None = None
 
     _KNOWN = (
-        "target_chunk_file_mb",
-        "manifest_split_files",
         "inline_chunk_threshold_bytes",
         "virtual_chunk_containers",
         "compression",
@@ -236,8 +234,6 @@ class RepositoryConfig:
 
     def to_dict(self) -> dict[str, Any]:
         out: dict[str, Any] = {
-            "target_chunk_file_mb": self.target_chunk_file_mb,
-            "manifest_split_files": self.manifest_split_files,
             "inline_chunk_threshold_bytes": self.inline_chunk_threshold_bytes,
             "repo_update_retries": self.repo_update_retries,
             "get_partial_values_concurrency": self.get_partial_values_concurrency,
@@ -265,23 +261,21 @@ class GCSummary:
 
 class _SnapNode(NamedTuple):
     """One vertex of the history graph: what expiration and GC read of
-    a snapshot (never its node table)."""
+    a snapshot (never its node table).  ``summary_files`` maps each
+    listed manifest that has a summary to the payload files it names."""
 
     id: str
     parent_id: str | None
     written_at: float
     pruned_ancestor_tx_logs: tuple[str, ...]
     manifests: tuple[str, ...]
+    summary_files: dict[str, tuple[str, ...]]
 
     @classmethod
     def of(cls, s: SnapshotInfo, include_manifests: bool = True) -> "_SnapNode":
-        return cls(
-            s.id,
-            s.parent_id,
-            s.written_at,
-            tuple(s.pruned_ancestor_tx_logs),
-            tuple(s.manifests) if include_manifests else (),
-        )
+        manifests = tuple(s.manifests) if include_manifests else ()
+        files = {m: tuple(s.manifest_summaries[m]["files"]) for m in manifests if m in s.manifest_summaries}
+        return cls(s.id, s.parent_id, s.written_at, tuple(s.pruned_ancestor_tx_logs), manifests, files)
 
 
 class Repository:
@@ -1263,16 +1257,13 @@ class Repository:
         return sc.parallelize(names, n_parts).map(fn).collect()
 
     def _reap_paths(self, paths: list[str], cutoff: float, dry_run: bool) -> int:
-        """Age-gated delete of a list of files/dirs, counting actual
-        outcomes (only the path NAMES ship to executors)."""
+        """Age-gated delete (``fsio.reap``) of a list of files/dirs,
+        counting actual outcomes (only the path NAMES ship)."""
 
         def _one(path: str) -> int:
             from icechunk_spark.repo import fsio as _fsio
 
-            ts = _fsio.mtime(path)
-            if ts is None or ts >= cutoff:
-                return 0
-            return 1 if (dry_run or _fsio.delete_dir(path)) else 0
+            return _fsio.reap(path, cutoff, dry_run)
 
         return sum(self._map_names(_one, paths))
 
@@ -1347,10 +1338,12 @@ class Repository:
         max_concurrent_manifest_fetches: int = 500,
     ) -> GCSummary:
         """Delete chunk files, manifests, txlogs and snapshots no longer
-        reachable from any ref.  Chunk-file liveness is a Spark
-        anti-join of the file listing against live manifest refs —
-        never a driver-side chunk list (src/ops/gc.rs).  ``dry_run``
-        counts what would be deleted without touching anything.
+        reachable from any ref (src/ops/gc.rs).  A chunk file is live
+        when a live manifest names it: the union of the live
+        manifests' summary ``files``, read with the snapshot graph, and
+        for a live manifest without a summary its ``file`` column
+        (``mf.payload_files``).  ``dry_run`` counts what would be
+        deleted without touching anything.
 
         Dry-run fidelity caveat: a real run shifts the age cutoff by a
         measured storage-clock skew (probe object, PR #2310), but
@@ -1369,19 +1362,18 @@ class Repository:
         delete data a concurrent commit is about to reference.
 
         The history plane has one dispatch (``_map_names``): the
-        snapshot-graph read and the snapshot/txlog, orphan-txlog and
-        dead-manifest reaps run the same per-name function either in a
-        driver loop (short lists, process-local memory:// roots) or as
-        one executor wave over the names — both modes reap exactly the
-        same objects.  The chunk-file shard listing and anti-join is
-        always a Spark job.
+        snapshot-graph read, the snapshot/txlog, orphan-txlog,
+        dead-manifest, chunk-shard and staging reaps, and the read of
+        unsummarized manifests run the same per-name function either in
+        a driver loop (short lists, process-local memory:// roots) or
+        as one executor wave over the names — both modes reap exactly
+        the same objects.  A GC of a small repo runs no Spark job.
 
         ``max_snapshots_in_memory`` / ``max_compressed_manifest_mem_bytes``
         / ``max_concurrent_manifest_fetches`` are accepted for reference
         signature compatibility but are advisory here: the driver holds
-        the snapshot graph (ids, parents, manifest paths) and manifests
-        stream through Spark executor tasks, so driver memory never
-        holds manifest contents regardless of these caps."""
+        the snapshot graph (ids, parents, manifest paths, the payload
+        files their summaries name), never manifest rows."""
         del max_snapshots_in_memory, max_compressed_manifest_mem_bytes
         del max_concurrent_manifest_fetches
         now = time.time() if now is None else now
@@ -1402,12 +1394,6 @@ class Repository:
         # the probe (an audited/frozen store sees zero mutations).
         if not dry_run:
             cutoff += self._storage_clock_skew()
-
-        def _old(path: str) -> bool:
-            ts = fsio.mtime(path)
-            # None = vanished concurrently / store without timestamps:
-            # not ours to count
-            return ts is not None and ts < cutoff
 
         summary = GCSummary()
         # ONE graph read (with manifests) serves both reachability and
@@ -1473,103 +1459,68 @@ class Repository:
         # orphan txlogs: their snapshot file is already gone (expired +
         # reclaimed in an earlier GC) so the reap above never sees them;
         # enumerate txlogs/ directly and apply the same keep rules.
-        all_snap_ids = set(fmt.list_snapshot_ids(self.root))
+        keep_tx = live.keys() | pruned_keep | set(fmt.list_snapshot_ids(self.root))
         orphan_tx = [
-            name
-            for name in fsio.list_child_names(_dp(self.root, "txlogs"))
-            if name.removesuffix(".parquet") not in live
-            and name.removesuffix(".parquet") not in pruned_keep
-            and name.removesuffix(".parquet") not in all_snap_ids
+            _dp(self.root, "txlogs", n)
+            for n in fsio.list_child_names(_dp(self.root, "txlogs"))
+            if n.removesuffix(".parquet") not in keep_tx
         ]
-        summary.txlogs_deleted += self._reap_paths(
-            [_dp(self.root, "txlogs", n) for n in orphan_tx], cutoff, dry_run
-        )
+        summary.txlogs_deleted += self._reap_paths(orphan_tx, cutoff, dry_run)
         # drop unreferenced manifest files.  Liveness is a driver-side
         # set test on top-level NAMES (live_manifests is bounded by the
         # live snapshots' manifest lists, which GC already holds); the
         # age-check + delete of the dead ones goes through _map_names.
-        mdir = _dp(self.root, "manifests")
         live_tops = {m.split("/", 2)[1] for m in live_manifests if m.startswith("manifests/")}
         dead = [
-            f
-            for f in fsio.list_child_names(mdir)
+            _dp(self.root, "manifests", f)
+            for f in fsio.list_child_names(_dp(self.root, "manifests"))
             if f not in live_tops
         ]
-        summary.manifests_deleted += self._reap_paths(
-            [_dp(self.root, "manifests", f) for f in dead], cutoff, dry_run
-        )
-        # Chunk files referenced by no live manifest.  The candidate set
-        # is born DISTRIBUTED: one shallow LIST of chunks/ yields only
-        # the 2-hex shard dirs (<=256 names, spec-v2 layout —
-        # format.chunk_rel) plus any legacy pre-shard flat dirs; each
-        # shard is then listed inside an executor task, so no collection
-        # proportional to chunk-file count ever sits on the driver (at
-        # ~10^8 refs / 100 TB the full name list is gigabytes).  A LIST
-        # is still the source of truth — it sees zero-row or corrupt
-        # chunk dirs a parquet scan would skip, which previously leaked
-        # forever.  Liveness is a Spark anti-join; age-check + delete
-        # run per partition through pyarrow.fs (no JVM in tasks).
-        top_names = fsio.list_child_names(_dp(self.root, "chunks"))
-        shard_names = [n for n in top_names if len(n) == 2]
-        legacy_names = [n for n in top_names if len(n) != 2]
-        data_root = fmt.data_path(self.root)
-        if shard_names or legacy_names:
-            sc = self.spark.sparkContext
+        summary.manifests_deleted += self._reap_paths(dead, cutoff, dry_run)
+        # Chunk files named by no live manifest.  The referenced set is
+        # the union of the live manifests' summary files (exact:
+        # write_manifests builds them from the rows it wrote), plus the
+        # file column of each live manifest without a summary.  Then one
+        # _map_names item per top-level name under chunks/ (the 2-hex
+        # shards of format.chunk_rel, plus any legacy pre-shard flat
+        # dirs), paired with the referenced relpaths inside it only: the
+        # item LISTs its shard — the LIST is the source of truth, it
+        # sees zero-row or corrupt chunk dirs no manifest names — skips
+        # the referenced names and age-checks + deletes the rest, so no
+        # shard's listing sits on the driver.
+        data_root = fmt.data_path(self.root).rstrip("/")
+        summarized = {m: fs for n in live.values() for m, fs in n.summary_files.items()}
 
-            def list_shard(shard: str):
-                from icechunk_spark.repo import fsio as _fsio
+        def _files(rel: str) -> list[str]:
+            from icechunk_spark.repo import manifests as _mf
 
-                base = f"{data_root.rstrip('/')}/chunks/{shard}"
-                for name in _fsio.list_child_names(base):
-                    yield (f"chunks/{shard}/{name}",)
+            return _mf.payload_files(data_root, rel)
 
-            parts = max(1, min(32, len(shard_names)))
-            sharded = sc.parallelize(shard_names, parts).flatMap(list_shard)
-            all_files = self.spark.createDataFrame(sharded, "file string") if shard_names else None
-            if legacy_names:
-                legacy_df = local_df(
-                    self.spark,
-                    [{"file": f"chunks/{n}"} for n in legacy_names],
-                    "file string",
-                )
-                all_files = legacy_df if all_files is None else all_files.union(legacy_df)
-            if live_manifests:
-                referenced = (
-                    mf.read_manifest_files(self.spark, self.root, sorted(live_manifests))
-                    .filter(F.col("file").isNotNull())
-                    .select("file")
-                    .distinct()
-                )
-                doomed = all_files.join(referenced, "file", "left_anti")
-            else:
-                doomed = all_files
+        referenced = {f for fs in summarized.values() for f in fs}
+        for fs in self._map_names(_files, sorted(live_manifests - summarized.keys())):
+            referenced.update(fs)
+        by_top: dict[str, set[str]] = {}
+        for f in referenced:
+            if f.startswith("chunks/"):
+                by_top.setdefault(f.split("/")[1], set()).add(f)
 
-            def delete_batch(rows):
-                # runs inside executors: pyarrow fsio only, no JVM;
-                # count actual outcomes, not attempts
-                from icechunk_spark.repo import fsio as _fsio
+        def _reap_chunks(item: tuple[str, frozenset]) -> int:
+            from icechunk_spark.repo import fsio as _fsio
 
-                n = 0
-                for r in rows:
-                    full = f"{data_root.rstrip('/')}/{r['file']}"
-                    ts = _fsio.mtime(full)
-                    if ts is None or ts >= cutoff:
-                        continue
-                    if dry_run or _fsio.delete_dir(full):
-                        n += 1
-                yield n
+            top, keep = item
+            rels = [f"chunks/{top}"]  # a legacy flat dir is one chunk file
+            if len(top) == 2:
+                shard = f"{data_root}/chunks/{top}"
+                rels = [f"chunks/{top}/{n}" for n in _fsio.list_child_names(shard)]
+            return sum(_fsio.reap(f"{data_root}/{r}", cutoff, dry_run) for r in rels if r not in keep)
 
-            summary.chunk_files_deleted += int(
-                sum(doomed.rdd.mapPartitions(delete_batch).collect())
-            )
-        # orphaned staging dirs (per-session: delete only aged ones —
-        # a fresh staging dir belongs to a live write session)
-        sdir = _dp(self.root, "staging")
-        if not dry_run:
-            for d in fsio.list_child_names(sdir):
-                full = _dp(self.root, "staging", d)
-                if _old(full):
-                    fsio.delete_dir(full)
+        tops = fsio.list_child_names(_dp(self.root, "chunks"))
+        items = [(t, frozenset(by_top.get(t, ()))) for t in tops]
+        summary.chunk_files_deleted += sum(self._map_names(_reap_chunks, items))
+        # aged staging dirs (a fresh one belongs to a live write
+        # session); not counted in the summary
+        staging = fsio.list_child_names(_dp(self.root, "staging"))
+        self._reap_paths([_dp(self.root, "staging", d) for d in staging], cutoff, dry_run)
         if not dry_run:
             self._log_update(
                 {
@@ -1601,6 +1552,9 @@ class Repository:
             raise ValueError(f"invalid commit_method {commit_method!r}")
         gen, tip_id = fmt.branch_tip(self.root, branch)
         tip = fmt.read_snapshot(self.root, tip_id)
+        amend = commit_method == "amend"
+        if amend and tip.parent_id is None:
+            raise RefError("cannot amend the root snapshot; use commit_method='new_commit'")
         # union-schema read (design-docs/015): a future writer's
         # additive nullable manifest columns ride through compaction
         # untouched instead of being dropped with their file
@@ -1618,41 +1572,29 @@ class Repository:
             compacted,
             self.root,
             splitting=cfg.manifest.splitting if cfg.manifest else None,
-            n_files=cfg.manifest_split_files,
             node_paths={n["node_id"]: p for p, n in tip.nodes.items()},
         )
-        if commit_method == "amend" and tip.parent_id is None:
-            raise RefError("cannot amend the root snapshot; use commit_method='new_commit'")
-        if commit_method == "amend":
-            # fold into the tip: same parent/seq/message (unless given),
-            # new manifest list — history length unchanged
-            snap = SnapshotInfo(
-                id=new_id(),
-                parent_id=tip.parent_id,
-                message=message if message != "rewrite manifests" else tip.message,
-                metadata={**tip.metadata, **(metadata or {}), "op": "rewrite_manifests"},
-                written_at=time.time(),
-                seq=tip.seq,
-                manifests=rels,
-                nodes=tip.nodes,
-                manifest_summaries=summaries,
-                pruned_ancestor_tx_logs=list(tip.pruned_ancestor_tx_logs),
-                # design-docs/015: an amend REWRITES the tip — carry a
-                # future writer's unknown fields through untouched
-                extra=dict(tip.extra),
-            )
-        else:
-            snap = SnapshotInfo(
-                id=new_id(),
-                parent_id=tip.id,
-                message=message,
-                metadata={**(metadata or {}), "op": "rewrite_manifests"},
-                written_at=time.time(),
-                seq=tip.seq + 1,
-                manifests=rels,
-                nodes=tip.nodes,
-                manifest_summaries=summaries,
-            )
+        # amend folds into the tip: same parent/seq/message (unless
+        # given), new manifest list — history length unchanged
+        snap = SnapshotInfo(
+            id=new_id(),
+            parent_id=tip.parent_id if amend else tip.id,
+            message=tip.message if amend and message == "rewrite manifests" else message,
+            metadata={**(tip.metadata if amend else {}), **(metadata or {}), "op": "rewrite_manifests"},
+            written_at=time.time(),
+            seq=tip.seq if amend else tip.seq + 1,
+            manifests=rels,
+            nodes=tip.nodes,
+            manifest_summaries=summaries,
+        )
+        if amend:
+            # design-docs/015, 016: an amend REPLACES the tip — carry its
+            # expire carry-list, a future writer's unknown fields and,
+            # as Session.amend does, its txlog (a session based on the
+            # tip's parent must still conflict with it)
+            snap.pruned_ancestor_tx_logs = list(tip.pruned_ancestor_tx_logs)
+            snap.extra = dict(tip.extra)
+            write_txlog(self.spark, self.root, snap.id, None, carry_from=tip.id)
         fmt.write_snapshot(self.root, snap)
         fmt.update_branch(self.root, branch, snap.id, expected_gen=gen)
         self._log_update({"type": "ManifestsRewritten", "branch": branch})

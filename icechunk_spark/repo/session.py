@@ -463,7 +463,10 @@ class Session:
                     d.chunks_written = r["count"]
                 else:
                     d.chunks_deleted = r["count"]
-        d.chunks_written += sum(1 for c in self._chunk_buffer if c["op"] == "set")
+        # the buffer as its flush will stage it: the last op per chunk
+        ops = [e["op"] for e in self._buffer_last()]
+        d.chunks_written += ops.count("set")
+        d.chunks_deleted += len(ops) - ops.count("set")
         return d
 
     def discard_changes(self) -> None:
@@ -1195,17 +1198,10 @@ class Session:
         if not self._chunk_buffer:
             return
         rel = self._new_chunk_rel()
-        # overlay semantics WITHIN the buffer: the last op per chunk key
-        # wins (set-after-delete must resurrect the chunk); manifest seq
-        # can't express intra-buffer order because the whole flush is one
-        # staging item, so collapse before writing
-        last: dict[tuple[str, str], dict] = {}
-        for e in self._buffer_entries():
-            last[(e["node_id"], e["chunk_key"])] = e
         threshold = self._inline_threshold()
         rows = []
         refs = []
-        for e in last.values():
+        for e in self._buffer_last():
             e = {**e, "seq": 0}
             if e["inline"] is not None and len(e["inline"]) > threshold:
                 chunk_id = new_id()
@@ -1233,6 +1229,16 @@ class Session:
             d = d.withColumn("seq", F.lit(i).cast("bigint"))
             out = d if out is None else out.unionByName(d)
         return out
+
+    def _buffer_last(self) -> list[dict]:
+        """The buffer's last entry per (node_id, chunk_key): overlay
+        semantics WITHIN the buffer (set-after-delete must resurrect the
+        chunk).  Manifest seq can't express intra-buffer order because
+        the whole flush is one staging item, so it collapses first."""
+        last: dict[tuple[str, str], dict] = {}
+        for e in self._buffer_entries():
+            last[(e["node_id"], e["chunk_key"])] = e
+        return list(last.values())
 
     def _buffer_entries(self) -> list[dict]:
         """The uncommitted ``set_chunk_bytes``/virtual-ref buffer as
@@ -1440,7 +1446,8 @@ class Session:
             staged = staged.persist()
         try:
             manifests, summaries = self._manifests_after(parent, staged, doc)
-            self._write_txlog(snap_id, staged, carry_from=parent.id if replace else None)
+            carry = parent.id if replace else None
+            write_txlog(self.spark, self.root, snap_id, staged, self._node_ops, carry_from=carry)
         finally:
             if staged is not None:
                 staged.unpersist()  # a cached frame per CAS retry would leak
@@ -1507,48 +1514,6 @@ class Session:
         driver-side metadata (#arrays entries), used by write_manifests
         to evaluate per-array ManifestSplittingConfig rules."""
         return {n["node_id"]: p for p, n in self._nodes.items()}
-
-    def _write_txlog(
-        self, snap_id: str, staged: DataFrame | None, carry_from: str | None = None
-    ) -> None:
-        """Record what this commit changed.  ``staged`` may be None for
-        node-only commits (e.g. a bare delete_node) — those MUST still
-        log their node ops or later sessions can't detect conflicts
-        against them.  ``carry_from`` unions in another snapshot's
-        txlog (amend: the replaced tip's changes are part of ours)."""
-        node_rows = [
-            {"node_id": op["node_id"], "chunk_key": "", "op": f"node_{op['op']}"}
-            for op in self._node_ops
-        ]
-        carry = (
-            _dp(self.root, "txlogs", f"{carry_from}.parquet") if carry_from else None
-        )
-        if carry is not None and not fsio.exists(carry):
-            carry = None
-        if staged is None and not node_rows and carry is None:
-            return
-        out = _dp(self.root, "txlogs", f"{snap_id}.parquet")
-        if staged is None and carry is None:
-            # node-only commit: the rows ARE driver-resident metadata
-            # (self._node_ops, bounded by the tree ops of one txn), so
-            # the txlog is one pyarrow write — same single-part layout
-            # Spark's coalesce(1) produces, zero Spark jobs.  r15: the
-            # Spark form cost ~4.8 s per metadata commit, nearly all of
-            # it scheduling empty python tasks for the RDD-path empty
-            # base frame.
-            _write_parquet_rows(out, node_rows, fmt.arrow_schema(TXLOG_SCHEMA))
-            return
-        parts = []
-        if staged is not None:
-            parts.append(staged.select("node_id", "chunk_key", "op"))
-        if node_rows:
-            parts.append(local_df(self.spark, node_rows, TXLOG_SCHEMA))
-        if carry is not None:
-            parts.append(self.spark.read.schema(TXLOG_SCHEMA).parquet(carry))
-        tx = parts[0]
-        for p in parts[1:]:
-            tx = tx.unionByName(p)
-        tx.coalesce(1).write.parquet(out)
 
     def _txlogs_between(self, old_id: str, new_id_: str) -> list[str]:
         """Snapshot ids on the path new_id_ → ... → old_id (exclusive)."""
@@ -1722,11 +1687,9 @@ class Session:
             # by the conflicts, not by everything we staged.  use_ours
             # drops nothing: our staged rows get a higher seq.
             drop_nodes: set[str] = set()
-            drop_chunks = None
+            drop_chunks: list[tuple[str, str]] = []
             if mode == "use_theirs" and chunk_conflicts:
-                drop_chunks = local_df(
-                    self.spark, chunk_conf.collect(), "node_id string, chunk_key string"
-                )
+                drop_chunks = [(r["node_id"], r["chunk_key"]) for r in chunk_conf.collect()]
             if solver.on_node_conflict == "use_theirs":
                 # their side wins every node conflict; the merge below
                 # then keeps tip's entry (or its absence).  We drop:
@@ -1794,7 +1757,7 @@ class Session:
                                     "node_id": self._nodes[anc]["node_id"],
                                 }
                             )
-            if drop_nodes or drop_chunks is not None:
+            if drop_nodes or drop_chunks:
                 self._drop_staged_rows(drop_nodes, drop_chunks)
         # merge their node table with our ops replayed on top
         merged = dict(tip.nodes)
@@ -1812,18 +1775,24 @@ class Session:
         self._nodes = merged
         self._base = tip
 
-    def _drop_staged_rows(self, node_ids: set[str], chunks: DataFrame | None) -> None:
+    def _drop_staged_rows(self, node_ids: set[str], chunks: list[tuple[str, str]]) -> None:
         """Drop the staged rows of ``node_ids`` and of the (node_id,
-        chunk_key) pairs in ``chunks`` from each staged item in place:
-        one job writes the rest to a new staging file, and a replaced
-        staging file is deleted.  Items are never merged: an item's
-        list index is its seq, so rows of different items would tie."""
+        chunk_key) pairs ``chunks`` from each staged item in place: one
+        job writes the rest of an item to a new staging file, and a
+        replaced staging file is deleted.  An item whose footers admit
+        none of those rows (``mf.footers_admit``) stays as it is, with
+        no job.  Items are never merged: an item's list index is its
+        seq, so rows of different items would tie."""
+        rows = [{"node_id": n, "chunk_key": k} for n, k in chunks]
+        keys = local_df(self.spark, rows, "node_id string, chunk_key string") if rows else None
         for i, (_, rel) in enumerate(self._staged):
+            if not mf.footers_admit(_dp(self.root, rel), node_ids, chunks):
+                continue
             df = staged_manifest_from_chunk_dir(self.spark, _dp(self.root, rel))
             if node_ids:
                 df = df.filter(~F.col("node_id").isin(sorted(node_ids)))
-            if chunks is not None:
-                df = df.join(chunks, ["node_id", "chunk_key"], "left_anti")
+            if keys is not None:
+                df = df.join(keys, ["node_id", "chunk_key"], "left_anti")
             self._staged[i] = self._write_item(df)
             if rel.startswith("staging/"):
                 fsio.delete_dir(_dp(self.root, rel))
@@ -1947,6 +1916,44 @@ class ForkSession(Session):
         self._virtual_authorized = set()
         self._virtual_container_names = None
         self._config_override = None
+
+
+def write_txlog(spark, root: str, snap_id: str, staged: DataFrame | None, node_ops=(), carry_from=None) -> None:
+    """Record what snapshot ``snap_id`` changed: the (node_id,
+    chunk_key, op) rows of ``staged`` and of ``node_ops``.  ``staged``
+    may be None for node-only commits (e.g. a bare delete_node) — those
+    MUST still log their node ops or later sessions can't detect
+    conflicts against them.  ``carry_from`` unions in another
+    snapshot's txlog: a snapshot that REPLACES it (an amend, a
+    ``rewrite_manifests`` amend) carries its changes, or a rebase over
+    the replacement would miss them."""
+    node_rows = [
+        {"node_id": op["node_id"], "chunk_key": "", "op": f"node_{op['op']}"}
+        for op in node_ops
+    ]
+    carry = _dp(root, "txlogs", f"{carry_from}.parquet") if carry_from else None
+    if carry is not None and not fsio.exists(carry):
+        carry = None
+    if staged is None and not node_rows and carry is None:
+        return
+    out = _dp(root, "txlogs", f"{snap_id}.parquet")
+    if staged is None and carry is None:
+        # node-only commit: the rows are driver-resident metadata, so
+        # the txlog is one pyarrow write in the single-part layout of
+        # Spark's coalesce(1), with no Spark job
+        _write_parquet_rows(out, node_rows, fmt.arrow_schema(TXLOG_SCHEMA))
+        return
+    parts = []
+    if staged is not None:
+        parts.append(staged.select("node_id", "chunk_key", "op"))
+    if node_rows:
+        parts.append(local_df(spark, node_rows, TXLOG_SCHEMA))
+    if carry is not None:
+        parts.append(spark.read.schema(TXLOG_SCHEMA).parquet(carry))
+    tx = parts[0]
+    for p in parts[1:]:
+        tx = tx.unionByName(p)
+    tx.coalesce(1).write.parquet(out)
 
 
 def _write_parquet_rows(path: str, rows: list[dict], schema) -> None:

@@ -1,6 +1,6 @@
 """Change-data-capture stream over a repository's transaction-log
 plane: every commit writes an immutable ``txlogs/<snapshot_id>.parquet``
-(repo/session.py:_write_txlog), so Spark's file streaming source turns
+(repo/session.py:write_txlog), so Spark's file streaming source turns
 the txlog directory into a live stream of (node_id, chunk_key, op)
 change records — one micro-batch per new commit, no polling code, no
 extra infrastructure.  This is the read-side twin of

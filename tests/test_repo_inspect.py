@@ -19,13 +19,19 @@ def grid_df(spark, n=8, m=8):
 
 
 def test_config_roundtrip(spark, tmp_path):
+    """A config.json with the retired ``target_chunk_file_mb`` and
+    ``manifest_split_files`` keys still opens: they ride in ``extra``
+    and are written back untouched."""
     repo = Repository.create(spark, str(tmp_path / "r"))
     assert repo.config() == RepositoryConfig()  # defaults when unset
     assert Repository.fetch_config(repo.root) is None
-    cfg = RepositoryConfig(target_chunk_file_mb=128, manifest_split_files=2)
+    old_keys = {"target_chunk_file_mb": 128, "manifest_split_files": 2}
+    cfg = RepositoryConfig.from_dict({"inline_chunk_threshold_bytes": 256, **old_keys})
+    assert cfg.extra == old_keys and cfg.inline_chunk_threshold_bytes == 256
     repo.save_config(cfg)
     assert repo.config() == cfg
     assert Repository.fetch_config(repo.root) == cfg
+    assert {k: repo.config().to_dict()[k] for k in old_keys} == old_keys
     assert repo.spec_version() == 2
 
 

@@ -73,8 +73,9 @@ def test_maintenance_plane_at_2k_commits_50k_chunks(spark, tmp_path, monkeypatch
                 metadata={},
                 written_at=old + i,  # all far behind the expire cutoff
                 seq=tip_snap.seq + 1 + i,
-                # the tip carries the real manifests so GC keeps the
-                # real chunk files live through the anti-join
+                # the tip carries the real manifests (without
+                # summaries) so GC keeps the real chunk files live
+                # through their file column
                 manifests=list(tip_snap.manifests) if i == N_FAB_COMMITS - 1 else [],
                 nodes=dict(tip_snap.nodes),
             ),

@@ -12,7 +12,12 @@
 - a buffered write writes its payloads with pyarrow, not a Spark job;
 - every staged item is a file from the moment it is staged, so a
   fork's ``write_array_df`` runs the jobs of a session's, and a
-  commit or a discard deletes the staging files its items name.
+  commit or a discard deletes the staging files its items name;
+- a rebase rewrites only the staged items whose footers admit a
+  dropped row;
+- a ``rewrite_manifests`` amend carries the replaced tip's txlog, as
+  ``Session.amend`` does, so conflicts against the tip still show;
+- ``status()`` counts the chunk buffer as its flush will stage it.
 """
 
 from __future__ import annotations
@@ -29,7 +34,7 @@ from icechunk_spark.repo import Repository
 from icechunk_spark.repo import format as fmt
 from icechunk_spark.repo import fsio
 from icechunk_spark.repo import manifests as mf
-from icechunk_spark.repo.session import ChunkType, ConflictSolver
+from icechunk_spark.repo.session import ChunkType, ConflictError, ConflictSolver
 
 W = b"W" * 4096
 T = b"T" * 4096
@@ -219,3 +224,84 @@ def test_commit_and_discard_delete_the_staging_files(spark, root):
     assert staging_dirs() == []
     assert fsio.exists(fmt.data_path(root, chunk_dir))
     assert repo.readonly_session().get_chunk_bytes("/a", "3") is None
+
+
+def test_use_theirs_rebase_rewrites_only_the_items_holding_a_dropped_row(spark, root):
+    """The three items of the deleted-chunk scenario: only the item that
+    holds the conflicted chunk ``1`` is rewritten; the other two keep
+    their files.  The use_theirs rebase runs 5 jobs more than the
+    use_ours one, which drops nothing: 3 collect the conflicted keys
+    and 2 rewrite the one item (rewriting all three items ran 9 more)."""
+
+    def staged_rebase(solver):
+        shutil.rmtree(root, ignore_errors=True)
+        repo = _repo_with_two_chunks(spark, root)
+        w = repo.writable_session("main")
+        w.set_chunk_bytes("/a", "0", W)
+        w.delete_chunks_prefix("/a", (0,))
+        w.set_chunk_bytes("/a", "1", W)
+        w._flush_chunk_buffer()
+        with repo.transaction(message="theirs") as t:
+            t.set_chunk_bytes("/a", "1", T)
+        before = list(w._staged)
+        n_jobs = _jobs(spark, lambda: w.rebase(solver))
+        return w, before, n_jobs
+
+    w, before, theirs_jobs = staged_rebase(ConflictSolver(on_chunk_conflict="use_theirs"))
+    assert len(before) == 3
+    assert w._staged[:2] == before[:2]
+    assert w._staged[2] != before[2]
+    assert not fsio.exists(os.path.join(root, before[2][1]))
+    assert w.get_chunk_bytes("/a", "0") is None
+    assert w.get_chunk_bytes("/a", "1") == T
+    _, _, ours_jobs = staged_rebase(ConflictSolver(on_chunk_conflict="use_ours"))
+    assert theirs_jobs == ours_jobs + 5, (theirs_jobs, ours_jobs)
+
+
+def test_footers_admit_tests_nodes_and_keys(spark, root):
+    """``mf.footers_admit`` on a staged item: a dropped node or a
+    dropped key inside its extents admits it; another node, or a key of
+    its node outside its extents, does not."""
+    repo = _repo_with_two_chunks(spark, root)
+    s = repo.writable_session("main")
+    nid = s.array_meta("/a").node_id
+    s.set_chunk_bytes("/a", "2", W)
+    s.set_chunk_bytes("/a", "3", W)
+    s._flush_chunk_buffer()
+    item = os.path.join(root, s._staged[0][1])
+    assert mf.footers_admit(item, {nid}, [])
+    assert mf.footers_admit(item, set(), [(nid, "3")])
+    assert not mf.footers_admit(item, {"other"}, [("other", "2")])
+    assert not mf.footers_admit(item, set(), [(nid, "0"), (nid, "1")])
+
+
+def test_rewrite_manifests_amend_carries_the_tips_txlog(spark, root):
+    """A session based on the tip's parent wrote the chunk the tip
+    wrote.  After ``rewrite_manifests(commit_method="amend")`` replaced
+    the tip, its commit must still conflict (as after ``new_commit``);
+    without the carried txlog it silently overwrote the tip's chunk."""
+    repo = _repo_with_two_chunks(spark, root)
+    stale = repo.writable_session("main")
+    with repo.transaction(message="tip") as t:
+        t.set_chunk_bytes("/a", "1", T)
+    repo.rewrite_manifests(commit_method="amend")
+    stale.set_chunk_bytes("/a", "1", W)
+    with pytest.raises(ConflictError):
+        stale.commit("stale")
+    assert repo.readonly_session().get_chunk_bytes("/a", "1") == T
+
+
+def test_status_is_the_same_before_and_after_the_buffer_flush(spark, root):
+    """``status()`` counts buffered deletes, and counts the buffer as its
+    flush stages it: the last op per chunk."""
+    repo = _repo_with_two_chunks(spark, root)
+    s = repo.writable_session("main")
+    s.delete_chunk("/a", "0")
+    s.set_chunk_bytes("/a", "2", W)
+    s.set_chunk_bytes("/a", "3", W)
+    s.delete_chunk("/a", "3")
+    before = s.status()
+    s._flush_chunk_buffer()
+    after = s.status()
+    assert before == after
+    assert (after.chunks_written, after.chunks_deleted) == (1, 2)
