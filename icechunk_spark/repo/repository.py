@@ -37,7 +37,7 @@ from icechunk_spark.repo.admin import (
 from icechunk_spark.repo.errbase import IcechunkError
 from icechunk_spark.repo.format import RefError, SnapshotInfo, new_id
 from icechunk_spark.repo.storage import StorageConflict
-from icechunk_spark.repo.session import ConflictSolver, Diff, Session, VersionSelector, write_txlog
+from icechunk_spark.repo.session import ConflictSolver, Diff, Session, VersionSelector, txlog_tables, write_txlog
 
 
 def _resolve_cutoff(older_than_seconds, older_than, now: float, op: str) -> float:
@@ -796,29 +796,21 @@ class Repository:
             pruned = fmt.read_snapshot(self.root, snapshot_id).pruned_ancestor_tx_logs
         except RefError:
             pass
-        p = _dp(self.root, "txlogs", f"{snapshot_id}.parquet")
-        if not fsio.exists(p):
-            return {
-                "id": snapshot_id,
-                "chunks_updated": {},
-                "node_ops": [],
-                "pruned_ancestor_tx_logs": pruned,
-            }
-        tx = self.spark.read.schema(fmt.TXLOG_SCHEMA).parquet(p)
-        chunk_rows = (
-            tx.filter(F.col("chunk_key") != "")
-            .groupBy("node_id", "op")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        node_rows = tx.filter(F.col("chunk_key") == "").collect()
+        # pyarrow, no Spark job (a missing log reads as empty): count
+        # chunk ops per node, keep node ops in log order
         chunks: dict[str, dict[str, int]] = {}
-        for r in chunk_rows:
-            chunks.setdefault(r["node_id"], {})[r["op"]] = r["n"]
+        node_ops: list[dict[str, str]] = []
+        for t in txlog_tables([_dp(self.root, "txlogs", f"{snapshot_id}.parquet")]):
+            for r in t.to_pylist():
+                if r["chunk_key"] == "":
+                    node_ops.append({"node_id": r["node_id"], "op": r["op"]})
+                elif r["chunk_key"] is not None:
+                    ops = chunks.setdefault(r["node_id"], {})
+                    ops[r["op"]] = ops.get(r["op"], 0) + 1
         return {
             "id": snapshot_id,
             "chunks_updated": chunks,
-            "node_ops": [{"node_id": r["node_id"], "op": r["op"]} for r in node_rows],
+            "node_ops": node_ops,
             "pruned_ancestor_tx_logs": pruned,
         }
 
@@ -1594,7 +1586,7 @@ class Repository:
             # tip's parent must still conflict with it)
             snap.pruned_ancestor_tx_logs = list(tip.pruned_ancestor_tx_logs)
             snap.extra = dict(tip.extra)
-            write_txlog(self.spark, self.root, snap.id, None, carry_from=tip.id)
+            write_txlog(self.root, snap.id, carry_from=tip.id)
         fmt.write_snapshot(self.root, snap)
         fmt.update_branch(self.root, branch, snap.id, expected_gen=gen)
         self._log_update({"type": "ManifestsRewritten", "branch": branch})

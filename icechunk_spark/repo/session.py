@@ -8,15 +8,20 @@ byte-store facade (store.py).
 Commit protocol (optimistic concurrency, icechunk/src/session.rs):
   1. stage writes (chunk parquet + staged manifest files, node ops)
   2. at commit: if the branch tip moved past our base, detect
-     conflicts by joining our txlog against txlogs of the
-     intervening snapshots; a ConflictSolver resolves or we raise
-  3. write manifest + txlog + snapshot (all immutable files)
+     conflicts by joining our staged chunk keys and node ops against
+     the txlogs of the intervening snapshots; a ConflictSolver
+     resolves or we raise
+  3. write the staged items as new manifest files (one Spark write),
+     then the txlog — those files' (node_id, chunk_key, op) rows plus
+     the node ops, copied with pyarrow — then the snapshot doc (all
+     immutable files)
   4. CAS-advance the branch ref (generation file create-exclusive);
      losing the race re-enters step 2
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import shutil
@@ -455,18 +460,15 @@ class Session:
                 d.deleted_nodes.append(op["path"])
             else:
                 d.updated_nodes.append(op["path"])
-        staged = self._staged_manifest_df()
-        if staged is not None:
-            counts = staged.groupBy("op").count().collect()
-            for r in counts:
-                if r["op"] == "set":
-                    d.chunks_written = r["count"]
-                else:
-                    d.chunks_deleted = r["count"]
-        # the buffer as its flush will stage it: the last op per chunk
-        ops = [e["op"] for e in self._buffer_last()]
-        d.chunks_written += ops.count("set")
-        d.chunks_deleted += len(ops) - ops.count("set")
+        # each chunk once, by its newest op: a later staged item
+        # overrides an earlier one and the buffer overrides them all
+        # (pyarrow, no Spark job)
+        ops: dict[tuple[str, str], str] = {}
+        for t in txlog_tables([_dp(self.root, rel) for _, rel in self._staged]):
+            ops.update(zip(zip(t["node_id"].to_pylist(), t["chunk_key"].to_pylist()), t["op"].to_pylist()))
+        ops.update(((e["node_id"], e["chunk_key"]), e["op"]) for e in self._buffer_entries())
+        d.chunks_written = sum(op == "set" for op in ops.values())
+        d.chunks_deleted = len(ops) - d.chunks_written
         return d
 
     def discard_changes(self) -> None:
@@ -1197,6 +1199,8 @@ class Session:
     def _flush_chunk_buffer(self) -> None:
         if not self._chunk_buffer:
             return
+        import pyarrow as pa
+
         rel = self._new_chunk_rel()
         threshold = self._inline_threshold()
         rows = []
@@ -1212,10 +1216,11 @@ class Session:
         # each, no Spark job, the same on the driver and in an
         # executor-side ForkSession (reference dask.py:store_dask
         # worker shape), where no SparkSession exists
+        payload, manifest = fmt.arrow_schema(PAYLOAD_SCHEMA), fmt.arrow_schema(MANIFEST_SCHEMA)
         if rows:
-            _write_parquet_rows(_dp(self.root, rel), rows, fmt.arrow_schema(PAYLOAD_SCHEMA))
+            _write_parquet_rows(_dp(self.root, rel), [pa.Table.from_pylist(rows, schema=payload)], payload)
         mrel = self._staging_rel()
-        _write_parquet_rows(_dp(self.root, mrel), refs, fmt.arrow_schema(MANIFEST_SCHEMA))
+        _write_parquet_rows(_dp(self.root, mrel), [pa.Table.from_pylist(refs, schema=manifest)], manifest)
         self._staged.append(("file", mrel))
         self._chunk_buffer.clear()
 
@@ -1434,23 +1439,17 @@ class Session:
     ) -> SnapshotInfo:
         """Write the staged changes as a new snapshot on top of
         ``parent`` — the one publish step of commit, flush and amend;
-        no ref moves.  The staged frame is persisted, so one scan feeds
-        the new manifest files (split per the config ``doc``) and the
-        txlog; then the snapshot doc is written.  ``replace`` (amend)
-        makes the snapshot REPLACE ``parent``: it takes ``parent``'s
-        parent and carries its txlog, its expire carry-list and a
-        future writer's unknown fields (design-docs/015, 016)."""
+        no ref moves.  One scan of the staged items writes the new
+        manifest files (split per the config ``doc``); the txlog is
+        copied from those files with pyarrow (``write_txlog``); then the
+        snapshot doc is written.  ``replace`` (amend) makes the snapshot
+        REPLACE ``parent``: it takes ``parent``'s parent and carries its
+        txlog, its expire carry-list and a future writer's unknown
+        fields (design-docs/015, 016)."""
         snap_id = new_id()
-        staged = self._staged_manifest_df()
-        if staged is not None:
-            staged = staged.persist()
-        try:
-            manifests, summaries = self._manifests_after(parent, staged, doc)
-            carry = parent.id if replace else None
-            write_txlog(self.spark, self.root, snap_id, staged, self._node_ops, carry_from=carry)
-        finally:
-            if staged is not None:
-                staged.unpersist()  # a cached frame per CAS retry would leak
+        manifests, summaries, added = self._manifests_after(parent, doc)
+        carry = parent.id if replace else None
+        write_txlog(self.root, snap_id, added, self._node_ops, carry_from=carry)
         snap = SnapshotInfo(
             id=snap_id,
             parent_id=parent.parent_id if replace else parent.id,
@@ -1488,15 +1487,18 @@ class Session:
             self._rebase_onto(tip_id, solver)
 
     def _manifests_after(
-        self, parent: SnapshotInfo, staged: DataFrame | None, doc: dict | None
-    ) -> tuple[list[str], dict[str, dict]]:
+        self, parent: SnapshotInfo, doc: dict | None
+    ) -> tuple[list[str], dict[str, dict], list[str]]:
         """The manifest list and summaries of a snapshot on top of
-        ``parent``: the parent's, plus ``staged`` written as new
-        manifest files (split per the config ``doc``) whose seqs order
-        above every parent row — one write job; the summaries cost no
-        extra job."""
+        ``parent``, and the manifest files it adds: the parent's list,
+        plus the staged items written as new manifest files (split per
+        the config ``doc``) whose seqs order above every parent row —
+        one write job; the summaries cost no extra job.  A file the
+        staged rows left empty (refs == 0) is not added."""
         manifests = list(parent.manifests)
         summaries = dict(parent.manifest_summaries)
+        added: list[str] = []
+        staged = self._staged_manifest_df()
         if staged is not None:
             rels, new = mf.write_manifests(
                 staged.withColumn("seq", F.col("seq") + (parent.seq + 1) * 100_000),
@@ -1504,10 +1506,10 @@ class Session:
                 splitting=((doc or {}).get("manifest") or {}).get("splitting"),
                 node_paths=self._node_paths(),
             )
-            # files the staged rows left empty (refs == 0) are not listed
-            manifests += [m for m in rels if m not in new or new[m]["refs"]]
+            added = [m for m in rels if m not in new or new[m]["refs"]]
             summaries.update(new)
-        return manifests, {m: summaries[m] for m in manifests if m in summaries}
+        manifests += added
+        return manifests, {m: summaries[m] for m in manifests if m in summaries}, added
 
     def _node_paths(self) -> dict[str, str]:
         """node_id -> array path for the session's current node set —
@@ -1568,10 +1570,12 @@ class Session:
             .select("node_id", "chunk_key")
             .distinct()
         )
-        conflicts = [
-            {"kind": "chunk", "node_id": r["node_id"], "chunk_key": r["chunk_key"]}
-            for r in chunk_conf.limit(100).collect()
-        ]
+        # one collect: every conflicted key when use_theirs drops them
+        # below, else a sample; the conflict list holds the first 100
+        if solver is None or solver.on_chunk_conflict != "use_theirs":
+            chunk_conf = chunk_conf.limit(100)
+        conf_keys = [(r["node_id"], r["chunk_key"]) for r in chunk_conf.collect()]
+        conflicts = [{"kind": "chunk", "node_id": n, "chunk_key": k} for n, k in conf_keys[:100]]
         tip = fmt.read_snapshot(self.root, tip_id)
         ours_nodes = {op["node_id"] for op in self._node_ops}
         their_node_rows = theirs.filter(F.col("chunk_key") == "").collect()
@@ -1683,13 +1687,11 @@ class Session:
                 raise ConflictError([c for c in conflicts if c["kind"] == "chunk"])
             # what the resolutions drop from our staged rows, applied in
             # one pass at the end: whole nodes, and (use_theirs) the
-            # conflicted chunk keys, collected once — they are bounded
+            # conflicted chunk keys collected above — they are bounded
             # by the conflicts, not by everything we staged.  use_ours
             # drops nothing: our staged rows get a higher seq.
             drop_nodes: set[str] = set()
-            drop_chunks: list[tuple[str, str]] = []
-            if mode == "use_theirs" and chunk_conflicts:
-                drop_chunks = [(r["node_id"], r["chunk_key"]) for r in chunk_conf.collect()]
+            drop_chunks = conf_keys if mode == "use_theirs" else []
             if solver.on_node_conflict == "use_theirs":
                 # their side wins every node conflict; the merge below
                 # then keeps tip's entry (or its absence).  We drop:
@@ -1918,61 +1920,65 @@ class ForkSession(Session):
         self._config_override = None
 
 
-def write_txlog(spark, root: str, snap_id: str, staged: DataFrame | None, node_ops=(), carry_from=None) -> None:
-    """Record what snapshot ``snap_id`` changed: the (node_id,
-    chunk_key, op) rows of ``staged`` and of ``node_ops``.  ``staged``
-    may be None for node-only commits (e.g. a bare delete_node) — those
-    MUST still log their node ops or later sessions can't detect
-    conflicts against them.  ``carry_from`` unions in another
-    snapshot's txlog: a snapshot that REPLACES it (an amend, a
-    ``rewrite_manifests`` amend) carries its changes, or a rebase over
-    the replacement would miss them."""
+def write_txlog(root: str, snap_id: str, manifests=(), node_ops=(), carry_from=None) -> None:
+    """Record what snapshot ``snap_id`` changed as ``txlogs/<snap_id>.parquet``
+    (one ``TXLOG_SCHEMA`` part), with pyarrow and no Spark job: the
+    (node_id, chunk_key, op) rows of the manifest files the snapshot
+    added (``manifests``, relpaths), one row group at a time; then the
+    txlog of ``carry_from``, a snapshot it REPLACES (an amend, a
+    ``rewrite_manifests`` amend), or a rebase over the replacement would
+    miss its changes; then one ``node_<op>`` row (chunk_key ``""``) per
+    node op — a node-only commit (e.g. a bare delete_node) MUST log
+    these or later sessions can't detect conflicts against it.  A
+    snapshot that changed nothing gets no txlog."""
+    import pyarrow as pa
+
+    schema = fmt.arrow_schema(TXLOG_SCHEMA)
+    sources = [_dp(root, m) for m in manifests]
+    carry = _dp(root, "txlogs", f"{carry_from}.parquet") if carry_from else None
+    if carry is not None and fsio.exists(carry):
+        sources.append(carry)
     node_rows = [
         {"node_id": op["node_id"], "chunk_key": "", "op": f"node_{op['op']}"}
         for op in node_ops
     ]
-    carry = _dp(root, "txlogs", f"{carry_from}.parquet") if carry_from else None
-    if carry is not None and not fsio.exists(carry):
-        carry = None
-    if staged is None and not node_rows and carry is None:
+    if not sources and not node_rows:
         return
-    out = _dp(root, "txlogs", f"{snap_id}.parquet")
-    if staged is None and carry is None:
-        # node-only commit: the rows are driver-resident metadata, so
-        # the txlog is one pyarrow write in the single-part layout of
-        # Spark's coalesce(1), with no Spark job
-        _write_parquet_rows(out, node_rows, fmt.arrow_schema(TXLOG_SCHEMA))
-        return
-    parts = []
-    if staged is not None:
-        parts.append(staged.select("node_id", "chunk_key", "op"))
-    if node_rows:
-        parts.append(local_df(spark, node_rows, TXLOG_SCHEMA))
-    if carry is not None:
-        parts.append(spark.read.schema(TXLOG_SCHEMA).parquet(carry))
-    tx = parts[0]
-    for p in parts[1:]:
-        tx = tx.unionByName(p)
-    tx.coalesce(1).write.parquet(out)
+    nodes = [pa.Table.from_pylist(node_rows, schema=schema)] if node_rows else []
+    _write_parquet_rows(
+        _dp(root, "txlogs", f"{snap_id}.parquet"), itertools.chain(txlog_tables(sources), nodes), schema
+    )
 
 
-def _write_parquet_rows(path: str, rows: list[dict], schema) -> None:
-    """Write rows as a single-part parquet DIRECTORY (the same layout
-    Spark's coalesce(1).write.parquet produces) using only pyarrow —
-    usable inside executors where no SparkSession exists.  The path
-    resolves through fsio._fs_path, which maps Hadoop schemes (s3a://)
-    that pyarrow does not know."""
-    import pyarrow as pa
+def txlog_tables(paths):
+    """The (node_id, chunk_key, op) columns of the parquet parts under
+    each of ``paths`` (manifest files, staged items, txlogs), read with
+    pyarrow one row group at a time (``mf._open_parts``)."""
+    names = [name for name, _ in fmt.ddl_fields(TXLOG_SCHEMA)]
+    for path in paths:
+        for _, pf in mf._open_parts(path):
+            for g in range(pf.num_row_groups):
+                yield pf.read_row_group(g, columns=names, use_threads=False)
+
+
+def _write_parquet_rows(path: str, tables, schema) -> None:
+    """Write a stream of Arrow ``tables`` (each cast to ``schema``) as a
+    single-part parquet DIRECTORY (the layout of Spark's coalesce(1)
+    write) using only pyarrow, one table in memory at a time — usable
+    inside executors where no SparkSession exists.  The part is written
+    under a ``_``-prefixed name, which Spark's file listing,
+    ``fsio.parquet_parts`` and pyarrow datasets all skip, and moved into
+    place once complete, so no reader sees a half-written part.  The
+    path resolves through fsio._fs_path, which maps Hadoop schemes
+    (s3a://) that pyarrow does not know."""
     import pyarrow.parquet as pq
 
     fs, p = fsio._fs_path(path)
     fs.create_dir(p, recursive=True)
-    keyed = [
-        {k: r.get(k) for k in schema.names} for r in rows
-    ]
-    table = pa.Table.from_pylist(keyed, schema=schema)
-    with fs.open_output_stream(f"{p}/part-00000.parquet") as f:
-        pq.write_table(table, f)
+    with fs.open_output_stream(f"{p}/_part-00000.parquet") as f, pq.ParquetWriter(f, schema) as w:
+        for t in tables:
+            w.write_table(t.select(schema.names).cast(schema))
+    fs.move(f"{p}/_part-00000.parquet", f"{p}/part-00000.parquet")
 
 
 _TOMBSTONE_KEYS = ("node_id", "chunk_key", "c0", "c1", "c2", "c3")

@@ -3,7 +3,10 @@ plane: every commit writes an immutable ``txlogs/<snapshot_id>.parquet``
 (repo/session.py:write_txlog), so Spark's file streaming source turns
 the txlog directory into a live stream of (node_id, chunk_key, op)
 change records — one micro-batch per new commit, no polling code, no
-extra infrastructure.  This is the read-side twin of
+extra infrastructure.  ``write_txlog`` writes each log's one part with
+pyarrow under a ``_``-prefixed name, which the file source skips, and
+moves it into place once complete: a trigger never lists a
+half-written log.  This is the read-side twin of
 ``stream_append_to_repo`` (streaming/events.py): that commits each
 micro-batch INTO the repo; this streams each commit OUT.
 

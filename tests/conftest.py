@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -29,6 +30,20 @@ def scaled_examples(n: int) -> int:
     still exercises every strategy branch most runs, and the full
     tier keeps the original depth."""
     return n if FULL_SUITE else max(2, n // 3)
+
+
+def count_jobs(spark, fn):
+    """``(fn(), n)``: what ``fn`` returns and the Spark jobs it
+    launched, counted under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def pytest_configure(config):

@@ -16,6 +16,7 @@ from icechunk_spark.repo import (
     RepositoryConfig,
 )
 from icechunk_spark.repo import format as fmt
+from tests.conftest import count_jobs
 
 
 @pytest.fixture()
@@ -87,28 +88,13 @@ def test_repo_update_retries_bounds_cas_loop(spark, repo, monkeypatch):
     assert calls["n"] == 2
 
 
-def _open_jobs(spark, repo):
-    """A readonly session and the Spark jobs its opening launched."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"open-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        sess = repo.readonly_session()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return sess, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_caching_config_opens_sessions_without_a_job(spark, repo):
     """CachingConfig is accepted for reference parity and has no
     effect: a session opens with no Spark job and resolves the same
     refs on every call."""
     repo.save_config(RepositoryConfig(caching=CachingConfig(num_chunk_refs=10_000)))
     _write_array(repo, spark)
-    sess, jobs = _open_jobs(spark, repo)
+    sess, jobs = count_jobs(spark, repo.readonly_session)
     assert jobs == 0
     first = sess.chunk_manifest_df("/a").collect()
     second = sess.chunk_manifest_df("/a").collect()
@@ -133,7 +119,7 @@ def test_manifest_preload_config_opens_sessions_without_a_job(spark, repo):
         )
     )
     _write_array(repo, spark)
-    sess, jobs = _open_jobs(spark, repo)
+    sess, jobs = count_jobs(spark, repo.readonly_session)
     assert jobs == 0
     assert sorted(r["value"] for r in sess.read_array_df("/a").collect()) == [float(i) for i in range(8)]
     assert sess.get_chunk_bytes("/a", "1") is not None
@@ -142,19 +128,10 @@ def test_manifest_preload_config_opens_sessions_without_a_job(spark, repo):
 def test_manifest_preload_without_caching_runs_no_job(spark, repo):
     """Without caching a preload would resolve a manifest and drop it:
     opening the session skips it and launches no Spark job."""
-    import uuid
-
     repo.save_config(RepositoryConfig(manifest=ManifestConfig(preload_paths=["/a"])))
     _write_array(repo, spark)
-    sc = spark.sparkContext
-    group = f"preload-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        sess = repo.readonly_session()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    sess, jobs = count_jobs(spark, repo.readonly_session)
+    assert jobs == 0
     assert not hasattr(sess, "_manifest_cache")
     assert sorted(r["value"] for r in sess.read_array_df("/a").collect()) == [float(i) for i in range(8)]
 

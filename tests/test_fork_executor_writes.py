@@ -135,11 +135,12 @@ def test_fork_merge_overlap_is_merge_order_wins(spark, tmp_path):
 
 
 def test_pyarrow_parquet_write_maps_hadoop_schemes(tmp_path, monkeypatch):
-    """The pure-pyarrow parquet writer (node-only commit txlogs, the
-    executor-side fork buffer flush) must resolve ``s3a://`` data roots
+    """The pure-pyarrow parquet writer (every txlog, the executor-side
+    fork buffer flush) must resolve ``s3a://`` data roots
     through ``fsio._fs_path``: pyarrow itself rejects the Hadoop scheme.
     The mapping is stubbed onto a local directory so no object store is
     contacted."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
     from pyarrow import fs as pafs
 
@@ -156,16 +157,13 @@ def test_pyarrow_parquet_write_maps_hadoop_schemes(tmp_path, monkeypatch):
         return real(path)
 
     monkeypatch.setattr(fsio, "_fs_path", fake)
-    sess._write_parquet_rows(
-        "s3a://bucket/txlogs/s1.parquet",
-        [{"node_id": "n", "chunk_key": None, "op": "create"}],
-        fmt.arrow_schema(fmt.TXLOG_SCHEMA),
-    )
-    sess._write_parquet_rows(
-        "s3a://bucket/chunks/ab/c1",
-        [{"chunk_id": "c1", "payload": b"xy"}],
-        fmt.arrow_schema(PAYLOAD_SCHEMA),
-    )
+
+    def write(path, rows, ddl):
+        schema = fmt.arrow_schema(ddl)
+        sess._write_parquet_rows(path, [pa.Table.from_pylist(rows, schema=schema)], schema)
+
+    write("s3a://bucket/txlogs/s1.parquet", [{"node_id": "n", "chunk_key": None, "op": "create"}], fmt.TXLOG_SCHEMA)
+    write("s3a://bucket/chunks/ab/c1", [{"chunk_id": "c1", "payload": b"xy"}], PAYLOAD_SCHEMA)
     assert pq.read_table(tmp_path / "txlogs" / "s1.parquet").to_pylist() == [
         {"node_id": "n", "chunk_key": None, "op": "create"}
     ]

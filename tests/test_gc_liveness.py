@@ -12,25 +12,13 @@ from __future__ import annotations
 
 import os
 import time
-import uuid
 
 import pyarrow.parquet as pq
 import pytest
 
 from icechunk_spark.repo import Repository
 from icechunk_spark.repo import format as fmt
-
-
-def _jobs(spark, fn):
-    sc = spark.sparkContext
-    group = f"gc-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+from tests.conftest import count_jobs
 
 
 def _chunk_names(root: str) -> set[str]:
@@ -116,7 +104,7 @@ def test_gc_of_a_small_repo_runs_no_spark_job(spark, tmp_path):
     dead = _dead_dirs(root, 3)
     assert len(fmt.list_snapshot_ids(root)) < Repository._PARALLEL_SNAPSHOT_READ_MIN
     assert len(os.listdir(os.path.join(root, "chunks"))) < Repository._PARALLEL_SNAPSHOT_READ_MIN
-    summary, n_jobs = _jobs(spark, lambda: repo.garbage_collect(older_than_seconds=3_600))
+    summary, n_jobs = count_jobs(spark, lambda: repo.garbage_collect(older_than_seconds=3_600))
     assert n_jobs == 0
     assert summary.chunk_files_deleted == len(dead)
     assert _chunk_names(root) == live

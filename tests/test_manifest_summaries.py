@@ -37,6 +37,7 @@ import icechunk_spark.repo.format as fmt
 from icechunk_spark.engine import local_df
 from icechunk_spark.repo import ConflictSolver, ManifestConfig, Repository, RepositoryConfig
 from icechunk_spark.repo import manifests as mf
+from tests.conftest import count_jobs
 
 SPLITS = {"unsplit": None, "split": {"max_refs_per_manifest": 2}}
 
@@ -340,14 +341,8 @@ def test_one_chunk_read_prunes_files_and_runs_one_job(spark, repo):
     assert len(kept) == 1 < len(node_files)
     layers = list(ro._ref_layers(nid, chunk_range=((0, 0), (0, 0))))
     assert layers[-1][:2] == ("base", kept)
-    sc = spark.sparkContext
-    group = f"read-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        got = _grid(ro, slices=[(0, 2), (0, 2)])
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    got, jobs = count_jobs(spark, lambda: _grid(ro, slices=[(0, 2), (0, 2)]))
+    assert jobs == 1
     assert got == {(0, 0): 0.0, (0, 1): 1.0, (1, 0): 10.0, (1, 1): 11.0}
     assert _grid(ro, slices=[(6, 7), (6, 8)]) == {(6, 6): 1.0, (6, 7): 2.0}
 

@@ -19,6 +19,7 @@ import threading
 import pytest
 
 import icechunk_spark as ics
+from tests.conftest import count_jobs
 
 # Vendored from the reference __init__ (public repo) — the compatibility
 # contract this engine promises.
@@ -567,20 +568,6 @@ def _names(root: str, sub: str) -> set:
     }
 
 
-def _count_jobs(spark, fn):
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"history-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_snapshot_reachability_matches_ancestry(history):
     """_reachable_snapshots (one graph read + _chain per ref) equals the
     ancestry() oracle in both dispatch modes: the tag-only chain is
@@ -603,7 +590,7 @@ def test_expire_matches_ancestry_oracle(spark, history):
     oracle = _parent_map(repo)
     tips = {repo.lookup_branch("main"), repo.lookup_tag("keep")}
     expected = {i for i, p in oracle.items() if p is not None} - tips
-    expired, n_jobs = _count_jobs(spark, lambda: repo.expire_snapshots(older_than_seconds=0))
+    expired, n_jobs = count_jobs(spark, lambda: repo.expire_snapshots(older_than_seconds=0))
     assert expired == expected == {ids[k] for k in ("m1", "m2", "m3", "s1")}
     assert (n_jobs == 0) == (mode == "driver"), n_jobs
     m4, s2 = repo.lookup_snapshot(ids["m4"]), repo.lookup_snapshot(ids["s2"])

@@ -5,8 +5,6 @@ shuffle, window or join; and ``Repository.diff_df`` on the same tiles."""
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 
 import icechunk_spark.repo.format as fmt
@@ -14,6 +12,7 @@ from icechunk_spark import engine
 from icechunk_spark.repo import Repository
 from icechunk_spark.repo import manifests as mf
 from icechunk_spark.repo.repository import ManifestConfig, RepositoryConfig
+from tests.conftest import count_jobs
 
 
 @pytest.fixture
@@ -32,18 +31,6 @@ def repo(spark, tmp_path):
         for i in range(0, 16, 3):
             s.delete_chunk("/a", f"{i}.0")
     return r
-
-
-def _jobs(spark, fn) -> int:
-    sc = spark.sparkContext
-    group = f"resolved-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_tiles_lose_and_duplicate_no_row(spark, repo, monkeypatch):
@@ -77,10 +64,10 @@ def test_tiles_lose_and_duplicate_no_row(spark, repo, monkeypatch):
 def test_resolve_and_diff_are_one_job_without_exchange(spark, repo):
     ro = repo.readonly_session()
     frame = ro.chunk_manifest_df()
-    assert _jobs(spark, lambda: frame.write.format("noop").mode("overwrite").save()) == 1
+    assert count_jobs(spark, lambda: frame.write.format("noop").mode("overwrite").save())[1] == 1
     v1, v2 = [snap.id for snap in repo.ancestry(branch="main")][1::-1]
     diff = repo.diff_df(v1, v2)
-    assert _jobs(spark, lambda: diff.write.format("noop").mode("overwrite").save()) == 1
+    assert count_jobs(spark, lambda: diff.write.format("noop").mode("overwrite").save())[1] == 1
     for df in (frame, diff):
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()

@@ -21,6 +21,7 @@ import pytest
 
 from icechunk_spark.engine import local_df
 from icechunk_spark.repo import Repository
+from tests.conftest import count_jobs
 
 
 @pytest.fixture()
@@ -221,8 +222,9 @@ def test_chunk_with_refs_but_no_rows_gets_no_new_ref(spark, root):
 
 def test_unaligned_write_commit_job_count(spark, root):
     """An unaligned write that partly covers 2x2 chunks, plus its
-    commit, runs the merge inside the encode's one cogroup: at most 8
-    Spark jobs (the coverage aggregate + probe + decode design took 19)."""
+    commit, runs the merge inside the encode's one cogroup: at most 6
+    Spark jobs (the coverage aggregate + probe + decode design took 19;
+    a Spark-written txlog took 2 more)."""
     repo = Repository.create(spark, root)
     schema = "i0 bigint, i1 bigint, value double"
     with repo.transaction(message="v1") as s:
@@ -231,32 +233,15 @@ def test_unaligned_write_commit_job_count(spark, root):
             spark, [{"i0": a, "i1": b, "value": 1.0} for a in range(64) for b in range(64)], schema))
     block = local_df(
         spark, [{"i0": a, "i1": b, "value": 2.0} for a in range(20, 44) for b in range(20, 44)], schema)
-    sc = spark.sparkContext
-    group = f"rmw-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
+
+    def write_and_commit():
         with repo.transaction(message="v2") as s:
             s.write_array_df("/g", block)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert n_jobs <= 8, n_jobs
+
+    _, n_jobs = count_jobs(spark, write_and_commit)
+    assert n_jobs <= 6, n_jobs
     got = repo.readonly_session().read_array_df("/g").groupBy("value").count().collect()
     assert {r["value"]: r["count"] for r in got} == {1.0: 64 * 64 - 24 * 24, 2.0: 24 * 24}
-
-
-def _jobs(spark, fn) -> int:
-    """Spark jobs ``fn`` launches, counted under its own job group."""
-    sc = spark.sparkContext
-    group = f"pin-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_cold_read_reread_and_lookup_job_counts(spark, root):
@@ -284,8 +269,8 @@ def test_cold_read_reread_and_lookup_job_counts(spark, root):
         session.read_array_df("/h", slices=slices).write.format("noop").mode("overwrite").save()
 
     ro = repo.readonly_session()
-    assert _jobs(spark, lambda: noop(ro)) == 1
-    assert _jobs(spark, lambda: noop(ro)) == 1
+    assert count_jobs(spark, lambda: noop(ro))[1] == 1
+    assert count_jobs(spark, lambda: noop(ro))[1] == 1
     got = repo.readonly_session().read_array_df("/h", slices=slices).groupBy("value").count().collect()
     assert {r["value"]: r["count"] for r in got} == {
         0.0: 64, 1.0: 128, 2.0: 64, 4.0: 128, 99.0: 256, 6.0: 128, 8.0: 64, 9.0: 128, 10.0: 64,
@@ -299,7 +284,7 @@ def test_cold_read_reread_and_lookup_job_counts(spark, root):
             n=[session.store.getsize(f"h/c/{i}/{i}") for i in (1, 2, 3)],
         )
 
-    n = _jobs(spark, lambda: lookups(repo.readonly_session()))
+    n = count_jobs(spark, lambda: lookups(repo.readonly_session()))[1]
     assert n == 0, n
     assert box["b"] == [np.full(256, v, "<f8").tobytes() for v in (99.0, 10.0, 15.0)]
     assert box["t"] == ["native"] * 3 and box["n"] == [2048] * 3
@@ -311,7 +296,7 @@ def test_cold_read_reread_and_lookup_job_counts(spark, root):
     w.merge(f)
     w.set_chunk_bytes("/h", "3.3", b"B" * 16)
     assert [kind for kind, _ in w._staged] == ["file"] and w._chunk_buffer
-    n = _jobs(spark, lambda: lookups(w))
+    n = count_jobs(spark, lambda: lookups(w))[1]
     assert n == 0, n
     assert box["b"] == [np.full(256, 99.0, "<f8").tobytes(), b"F" * 1024, b"B" * 16]
     assert box["t"] == ["native", "native", "inline"] and box["n"] == [2048, 1024, 16]
@@ -321,7 +306,7 @@ def test_cold_read_reread_and_lookup_job_counts(spark, root):
     staged.write_array_df("/h", local_df(
         spark, [{"i0": 9, "i1": 9, "value": -5.0}], "i0 bigint, i1 bigint, value double"))
     assert [kind for kind, _ in staged._staged] == ["file"]
-    assert _jobs(spark, lambda: noop(staged)) == 1
+    assert count_jobs(spark, lambda: noop(staged))[1] == 1
     got = staged.read_array_df("/h", slices=[(9, 10), (8, 11)]).collect()
     assert sorted((r["i1"], r["value"]) for r in got) == [(8, 0.0), (9, -5.0), (10, 0.0)]
 
@@ -346,8 +331,8 @@ def test_staged_chunk_dir_is_read_without_a_write(spark, root):
     assert [kind for kind, _ in lookup._staged] == ["file"]
     assert lookup._staged[0][1].startswith("chunks/")
     box = {}
-    assert _jobs(spark, lambda: box.update(first=lookup.get_chunk_bytes("/h", "0.0"))) == 0
-    assert _jobs(spark, lambda: box.update(second=lookup.get_chunk_bytes("/h", "0.0"))) == 0
+    assert count_jobs(spark, lambda: box.update(first=lookup.get_chunk_bytes("/h", "0.0")))[1] == 0
+    assert count_jobs(spark, lambda: box.update(second=lookup.get_chunk_bytes("/h", "0.0")))[1] == 0
     assert box == {"first": chunk00, "second": chunk00}
 
     read = repo.writable_session("main")
@@ -356,8 +341,8 @@ def test_staged_chunk_dir_is_read_without_a_write(spark, root):
     def noop():
         read.read_array_df("/h").write.format("noop").mode("overwrite").save()
 
-    assert _jobs(spark, noop) == 1
-    assert _jobs(spark, noop) == 1
+    assert count_jobs(spark, noop)[1] == 1
+    assert count_jobs(spark, noop)[1] == 1
     cells = {(r["i0"], r["i1"]): r["value"] for r in read.read_array_df("/h").collect()}
     assert cells == want
     read.commit("staged chunk dir")

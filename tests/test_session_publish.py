@@ -35,6 +35,7 @@ from icechunk_spark.repo import format as fmt
 from icechunk_spark.repo import fsio
 from icechunk_spark.repo import manifests as mf
 from icechunk_spark.repo.session import ChunkType, ConflictError, ConflictSolver
+from tests.conftest import count_jobs
 
 W = b"W" * 4096
 T = b"T" * 4096
@@ -141,27 +142,14 @@ def test_chunk_iterator_kinds_match_chunk_type_and_getsize(spark, root):
     check(repo.readonly_session())
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs ``fn`` launches, counted under its own job group."""
-    sc = spark.sparkContext
-    group = f"pin-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_buffered_write_commit_job_count(spark, root):
-    """A driver-side buffered native write plus commit runs 4 jobs, all
-    for the manifest and txlog writes: the payload file is a pyarrow
-    write (as a Spark write it was a fifth job)."""
+    """A driver-side buffered native write plus commit runs 2 jobs, both
+    for the manifest write: the payload file and the txlog are pyarrow
+    writes (as Spark writes they were 3 jobs more)."""
     repo = _repo_with_two_chunks(spark, root)
     s = repo.writable_session("main")
     s.set_chunk_bytes("/a", "2", W)
-    assert _jobs(spark, lambda: s.commit("c")) == 4
+    assert count_jobs(spark, lambda: s.commit("c"))[1] == 2
     assert repo.readonly_session().get_chunk_bytes("/a", "2") == W
 
 
@@ -186,8 +174,8 @@ def test_fork_write_runs_the_jobs_of_a_session_write(spark, root):
         )
         plain = repo.writable_session("main")
         fork = repo.writable_session("main").fork()
-        n_plain = _jobs(spark, lambda: plain.write_array_df(path, df))
-        n_fork = _jobs(spark, lambda: fork.write_array_df(path, df))
+        n_plain = count_jobs(spark, lambda: plain.write_array_df(path, df))[1]
+        n_fork = count_jobs(spark, lambda: fork.write_array_df(path, df))[1]
         assert n_fork == n_plain, (path, n_fork, n_plain)
         assert fork._staged[0][1].startswith("chunks/")
         cells = fork.read_array_df(path, slices=[(19, 21), (19, 21)]).collect()
@@ -229,9 +217,10 @@ def test_commit_and_discard_delete_the_staging_files(spark, root):
 def test_use_theirs_rebase_rewrites_only_the_items_holding_a_dropped_row(spark, root):
     """The three items of the deleted-chunk scenario: only the item that
     holds the conflicted chunk ``1`` is rewritten; the other two keep
-    their files.  The use_theirs rebase runs 5 jobs more than the
-    use_ours one, which drops nothing: 3 collect the conflicted keys
-    and 2 rewrite the one item (rewriting all three items ran 9 more)."""
+    their files.  The use_theirs rebase runs 2 jobs more than the
+    use_ours one, which drops nothing: they rewrite the one item (the
+    conflicted keys come from the one collect that lists the
+    conflicts; rewriting all three items ran 9 more)."""
 
     def staged_rebase(solver):
         shutil.rmtree(root, ignore_errors=True)
@@ -244,7 +233,7 @@ def test_use_theirs_rebase_rewrites_only_the_items_holding_a_dropped_row(spark, 
         with repo.transaction(message="theirs") as t:
             t.set_chunk_bytes("/a", "1", T)
         before = list(w._staged)
-        n_jobs = _jobs(spark, lambda: w.rebase(solver))
+        n_jobs = count_jobs(spark, lambda: w.rebase(solver))[1]
         return w, before, n_jobs
 
     w, before, theirs_jobs = staged_rebase(ConflictSolver(on_chunk_conflict="use_theirs"))
@@ -255,7 +244,7 @@ def test_use_theirs_rebase_rewrites_only_the_items_holding_a_dropped_row(spark, 
     assert w.get_chunk_bytes("/a", "0") is None
     assert w.get_chunk_bytes("/a", "1") == T
     _, _, ours_jobs = staged_rebase(ConflictSolver(on_chunk_conflict="use_ours"))
-    assert theirs_jobs == ours_jobs + 5, (theirs_jobs, ours_jobs)
+    assert theirs_jobs == ours_jobs + 2, (theirs_jobs, ours_jobs)
 
 
 def test_footers_admit_tests_nodes_and_keys(spark, root):
